@@ -64,13 +64,15 @@ object Bench {
     val probeTriggerRatio =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_PROBE_RATIO", "2.5").toDouble
     val refPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF", "tools/bench_reference.json")
-    // the reference run's host speed, for the calibration-normalized total
+    // the reference run's host speed — its closing calibration and, when
+    // recorded, its opening one — for the calibration-normalized total
     // below (independent of the per-query walls, which are sf-gated)
-    val refCalibration: Option[Double] = try {
+    val refCalibration: Option[(Double, Option[Double])] = try {
       val txt = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(refPath)), "UTF-8")
-      """"calibration_sec"\s*:\s*([0-9.eE+-]+)""".r.findFirstMatchIn(txt)
-        .map(_.group(1).toDouble).filter(_ > 0)
+      def field(name: String) = s""""$name"\\s*:\\s*([0-9.eE+-]+)""".r
+        .findFirstMatchIn(txt).map(_.group(1).toDouble).filter(_ > 0)
+      field("calibration_sec").map(_ -> field("opening_calibration_sec"))
     } catch { case _: Throwable => None }
     val reference: Map[String, Double] = try {
       val txt = new String(java.nio.file.Files.readAllBytes(
@@ -185,17 +187,21 @@ object Bench {
       }.mkString("{", ",", "}")
     // Calibration-normalized total (VERDICT r16 #5, additions-only): the
     // raw total times the ratio of the committed reference run's host
-    // speed to THIS run's, where this run's speed is the mean of its
-    // opening and closing calibrations (both ends of the run weigh
-    // equally; a throttle confined to one end normalizes half-way, a
-    // boot-long slowdown normalizes fully). Raw `value` stays untouched —
-    // this is a derived field so a throttled run remains mechanically
-    // comparable across rounds.
-    val calNorm: Option[Double] = refCalibration.map { rc =>
-      total * rc / ((openingCalibration + calibration) / 2.0)
+    // speed to THIS run's. Both sides use ONE estimator: when the
+    // reference records its opening calibration too, each side's speed is
+    // the mean of its opening and closing calibrations (a throttle
+    // confined to one end normalizes half-way, a boot-long slowdown
+    // normalizes fully); otherwise each side's speed is its closing
+    // calibration alone. Raw `value` stays untouched — this is a derived
+    // field so a throttled run remains mechanically comparable across
+    // rounds.
+    val calSpeeds: Option[(Double, Double)] = refCalibration.map {
+      case (refClosing, Some(refOpening)) =>
+        ((refOpening + refClosing) / 2.0, (openingCalibration + calibration) / 2.0)
+      case (refClosing, None) => (refClosing, calibration)
     }
-    val calNormFields = calNorm.fold("") { v =>
-      s""","total_cal_normalized_sec":${r3(v)},"cal_ref_sec":${refCalibration.map(r3).getOrElse(0.0)}"""
+    val calNormFields = calSpeeds.fold("") { case (ref, here) =>
+      s""","total_cal_normalized_sec":${r3(total * ref / here)},"cal_ref_sec":${r3(ref)}"""
     }
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$es,"repeat_spread_gt1p5":$sp,"repeat_walls":$rw,"throttle_probes":$pr,"n_ok":${results.size},"n_err":${errors.size},"sf":"$sfDir","commit":${jq(commit)},"boot_id":${jq(bootId)},"calibration_sec":$calibration,"opening_calibration_sec":${r3(openingCalibration)}$calNormFields,"probe_trigger_ratio":$probeTriggerRatio,"ref_entries":${reference.size},"cpus":${jq(cpus)},"repeats":$repeats}"""
     println(line)

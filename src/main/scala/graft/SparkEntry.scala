@@ -1398,7 +1398,8 @@ object SparkEntry {
     // ── similarity: recall with the multi-table OR-construction ───────────
     // 8 tables × 8 bits × radius-1 probes: mean recall ≈ 0.65 on this corpus
     // (true neighbours at cosine 0.26–0.49) vs 0.08 single-table — measured
-    // by ProbeSrp; candidates stay an equi-join sliver of the corpus.
+    // by a standalone recall probe; candidates stay an equi-join sliver of
+    // the corpus.
     "e5_multitable_recall" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") < 20)
@@ -1532,7 +1533,7 @@ object SparkEntry {
       val corpus = docs.filter(bucket >= 2000)
       val idx = tempLogDir("graftd17")
       // sigBuckets sizes the (band × bucket) partition grid; the dynamic-
-      // partitioned COMMIT costs ~12 ms/dir (ProbeLsh2), so the grid must
+      // partitioned COMMIT costs ~12 ms/dir (measured), so the grid must
       // scale with the corpus — 16 here (64 dirs) for the bench tiers, a
       // few thousand at 100 TB where the commit amortizes over the write
       ops.LshIndex.build(docs.filter(bucket >= 6000), "doc_id", "text", idx,

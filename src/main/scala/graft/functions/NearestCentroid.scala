@@ -18,8 +18,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   *
   * This is the IVF corpus-assignment kernel: the join+window form exchanged
   * and sorted corpus×nlist rows; an `aggregate()` HOF fold is shuffle-free
-  * but interpreted (measured ~1.4× slower than the window at 1M×64,
-  * tools/ProbeIvfAssign); this expression is shuffle-free AND inside
+  * but interpreted (measured ~1.4× slower than the window at 1M×64);
+  * this expression is shuffle-free AND inside
   * whole-stage codegen — assignment becomes a pure scan projection.
   */
 case class NearestCentroid(child: Expression, cents: Array[Array[Double]])

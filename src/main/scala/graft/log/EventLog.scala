@@ -196,16 +196,12 @@ class EventLog(
       else d.withColumn(EventSchema.discColName(k), element_at(col("discriminator"), lit(k)))
     }
 
-  /** Dev-only phase timing for the maintenance paths (`-Dgraft.phaseTiming`):
-    * prints per-phase wall time so slow-query triage attributes seconds to
-    * jobs, not guesses. Free when the property is unset.
+  /** Labels one step of a maintenance protocol: [[EventLog.crashHook]] sees
+    * the label before the step runs (CrashInjectionSpec's kill points).
     */
   @inline private def phase[A](label: String)(f: => A): A = {
     EventLog.crashHook.foreach(_(label))
-    if (EventLog.phaseTiming) {
-      val t0 = System.nanoTime(); val r = f
-      println(f"PHASE $label%-34s ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    } else f
+    f
   }
 
   spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -2178,9 +2174,6 @@ object EventLog {
     * range-scanned many times (catchup replays at 100 TB are IO-bound).
     */
   val Compression = "zstd"
-
-  /** See [[EventLog.phase]] — read once so the hot path costs one static. */
-  private[log] val phaseTiming: Boolean = sys.props.contains("graft.phaseTiming")
 
   /** TEST-ONLY crash injection: when set, called with each maintenance
     * phase label BEFORE the phase runs — a hook that throws simulates a

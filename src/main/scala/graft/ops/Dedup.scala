@@ -519,46 +519,50 @@ object Dedup {
     var sig = (-1L, "")
     var round = 0
     var converged = false
-    while (!converged && round < maxRounds) {
-      // Checkpoint each round (the convergence probe's metrics fire on this
-      // same action, and the next round must not re-derive a growing
-      // lineage) and RELEASE the superseded round's blocks explicitly — the
-      // contraction holds one round's edge set in block storage, not all of
-      // them (Checkpoints contract: the new checkpoint is eager, so the old
-      // frame is fully consumed by the time advance releases it).
-      // Materialize the half-round: lazily fused, smallStar's plan
-      // references largeStar's output through both its join side and its
-      // mins aggregate, so the largeStar join (a full pass over the round's
-      // edge set) would execute TWICE inside one round's action. One extra
-      // driver barrier per round buys largeStar-once — at 100 TB a full
-      // recompute of a billions-of-edges join dwarfs a job launch (r17 opt;
-      // measured on d15/d16 at sf0.1 too). Blocks release right after the
-      // round's checkpoint materializes.
-      val half = largeStar(e).checkpointOwned()
-      val (obs, tap) = signatureObs()
-      e = Checkpoints.advance(e, tap(smallStar(half)))
-      Checkpoints.release(half)
-      val m = obs.get
-      val next = (m("n").asInstanceOf[Long], String.valueOf(m("h")))
-      converged = next == sig
-      sig = next
-      round += 1
-    }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxRounds rounds " +
-        s"(edges=${sig._1}) — the O(log²) bound makes this unreachable for " +
-        "real graphs; refusing to return partially merged components")
-    // observability at scale: round count is the operator's health metric
-    // (shallow near-dup graphs converge in 2-3; growth means chaining)
-    org.slf4j.LoggerFactory.getLogger(getClass).info(
-      s"connectedComponents converged in $round rounds (final edges=${sig._1})")
-    // Star forest → labels: children carry their root, roots carry
-    // themselves; the untouched majority joins back as singletons.
-    val labels = e.select(col("u").as("node"), col("v").as("label"))
-      .union(e.select(col("v").as("node"), col("v").as("label")))
-      .distinct()
-      .checkpointOwned()
-    Checkpoints.release(e) // labels materialized above; the star forest is dead
+    // The live round's edge set is released on EVERY exit — the
+    // non-convergence refusal and a round that throws included — so a
+    // failed contraction leaves no blocks behind either.
+    val labels = try {
+      while (!converged && round < maxRounds) {
+        // Checkpoint each round (the convergence probe's metrics fire on this
+        // same action, and the next round must not re-derive a growing
+        // lineage) and RELEASE the superseded round's blocks explicitly — the
+        // contraction holds one round's edge set in block storage, not all of
+        // them (Checkpoints contract: the new checkpoint is eager, so the old
+        // frame is fully consumed by the time advance releases it).
+        // Materialize the half-round: lazily fused, smallStar's plan
+        // references largeStar's output through both its join side and its
+        // mins aggregate, so the largeStar join (a full pass over the round's
+        // edge set) would execute TWICE inside one round's action. One extra
+        // driver barrier per round buys largeStar-once — at 100 TB a full
+        // recompute of a billions-of-edges join dwarfs a job launch (r17 opt;
+        // measured on d15/d16 at sf0.1 too). Its blocks release once the
+        // round's checkpoint materializes, or when the round throws.
+        val (obs, tap) = signatureObs()
+        e = Checkpoints.withCheckpointed(largeStar(e)) { half =>
+          Checkpoints.advance(e, tap(smallStar(half)))
+        }
+        val m = obs.get
+        val next = (m("n").asInstanceOf[Long], String.valueOf(m("h")))
+        converged = next == sig
+        sig = next
+        round += 1
+      }
+      if (!converged) throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxRounds rounds " +
+          s"(edges=${sig._1}) — the O(log²) bound makes this unreachable for " +
+          "real graphs; refusing to return partially merged components")
+      // observability at scale: round count is the operator's health metric
+      // (shallow near-dup graphs converge in 2-3; growth means chaining)
+      org.slf4j.LoggerFactory.getLogger(getClass).info(
+        s"connectedComponents converged in $round rounds (final edges=${sig._1})")
+      // Star forest → labels: children carry their root, roots carry
+      // themselves; the untouched majority joins back as singletons.
+      e.select(col("u").as("node"), col("v").as("label"))
+        .union(e.select(col("v").as("node"), col("v").as("label")))
+        .distinct()
+        .checkpointOwned()
+    } finally Checkpoints.release(e) // labels materialized; the star forest is dead
     nodes.join(labels, Seq("node"), "left")
       .select(col("node"), coalesce(col("label"), col("node")).as("label"))
   }

@@ -21,13 +21,7 @@ import org.apache.spark.sql.DataFrame
   * order-pinned collect_list via array_sort), so results are unchanged.
   */
 private[graft] object Par {
-  // dev/measurement kill switch (A/B on a host whose speed swings faster
-  // than a bench run): SPARK_GRAFT_FANOUT=off disables fan-out engine-wide
-  private val enabled =
-    !sys.env.get("SPARK_GRAFT_FANOUT").contains("off")
-
   def fanOut(df: DataFrame): DataFrame = {
-    if (!enabled) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
     // planned partition count of the frame as it would execute; for the
     // scan-level frames operators pass here this is the file-split count

@@ -326,7 +326,8 @@ object Similarity {
     * is one [[graft.functions.nearest_centroid]] expression per row — the
     * corpus is scanned, never joined, exchanged, or sorted (the window
     * form shuffled and sorted corpus × nlist rows; an interpreted HOF fold
-    * measured 1.4× slower than even that — tools/ProbeIvfAssign).
+    * measured 1.4× slower than even that at 1M×64; SimExprSpec pins the
+    * kernel's election to the window form's).
     * `nCells > 1` (the query probe side, tiny by contract) keeps the
     * top-cells window.
     */

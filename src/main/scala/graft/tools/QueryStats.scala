@@ -1,20 +1,99 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
+import scala.jdk.CollectionConverters._
 
-/** Deterministic per-query execution census: jobs, stages, tasks, shuffle
-  * bytes, for named queries (or all). Host-noise-immune evidence for plan
-  * work — two runs of the same code produce the same counts, so a
-  * before/after diff here is a real structural change, not CPU weather.
+/** Deterministic per-query execution census — the one instrument main.
+  * Host-noise-immune evidence for plan work: two runs of the same code
+  * produce the same counts, so a before/after diff here is a real
+  * structural change, not CPU weather.
+  *
+  * Per query, one line: wall seconds, jobs, stages, tasks and shuffle
+  * write/read KB of one `noop`-sink execution, then the plan's shape
+  * counts (exchanges, codegen spans, sorts, sortAgg, bcast, smj) read from
+  * the pre-execution `executedPlan` string — the measure behind
+  * PlanShapeSpec's shuffle budgets. Under it, one indented line per Spark
+  * job the query fired: its submit offset from the query's start, its
+  * stage count, and its description (the `spark.job.description`
+  * property, else the final stage's call site — an anonymous job shows a
+  * call site with no `graft` frame).
+  *
+  * A query's full formatted plan needs no main: in a shell,
+  * `SparkEntry.queries(q)(spark, dir).explain("formatted")`.
   *
   * Usage: runMain graft.tools.QueryStats <sfDir> [q1,q2,...]
+  * (`SPARK_GRAFT_CPUS` sets the local core and shuffle-partition count,
+  * default 32).
   */
 object QueryStats {
+  final case class Job(offsetSec: Double, stages: Int, description: String)
+
+  final case class Row(query: String, sec: Double, jobs: Seq[Job], stages: Int,
+      tasks: Long, shuffleWriteBytes: Long, shuffleReadBytes: Long,
+      shape: Seq[(String, Int)])
+
+  /** Shape counters: label → regex over the executedPlan string. */
+  private val ShapeTokens = Seq(
+    "exchanges" -> "Exchange (hash|range|single)",
+    "codegen" -> "\\*\\(\\d+\\)",
+    "sorts" -> "\\bSort\\b",
+    "sortAgg" -> "SortAggregate",
+    "bcast" -> "BroadcastHashJoin",
+    "smj" -> "SortMergeJoin")
+
+  private final case class StageStat(tasks: Int, shuffleWrite: Long, shuffleRead: Long)
+
+  /** Run each named query once (in the given order) through the `noop`
+    * sink and return its census row. The listener is installed for the
+    * call and removed before returning.
+    */
+  def census(spark: SparkSession, dir: String, names: Seq[String]): Seq[Row] = {
+    val jobs = new ConcurrentLinkedQueue[(Long, Int, String)]()
+    val stages = new ConcurrentLinkedQueue[StageStat]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val desc = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .orElse(j.stageInfos.maxByOption(_.stageId).map(_.name)).getOrElse("?")
+        jobs.add((j.time, j.stageInfos.size, desc))
+      }
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+        val m = Option(s.stageInfo.taskMetrics)
+        stages.add(StageStat(s.stageInfo.numTasks,
+          m.fold(0L)(_.shuffleWriteMetrics.bytesWritten),
+          m.fold(0L)(r => r.shuffleReadMetrics.remoteBytesRead +
+            r.shuffleReadMetrics.localBytesRead)))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try names.map { name =>
+      // settle the listener bus so counts attribute to this query
+      Bridge.drainListenerBus(spark)
+      jobs.clear(); stages.clear()
+      val startMs = System.currentTimeMillis()
+      val t0 = System.nanoTime()
+      val df = SparkEntry.queries(name)(spark, dir)
+      val plan = df.queryExecution.executedPlan.toString
+      df.write.format("noop").mode("overwrite").save()
+      val sec = (System.nanoTime() - t0) / 1e9
+      Bridge.drainListenerBus(spark)
+      val js = jobs.asScala.toSeq.map { case (at, n, desc) => Job((at - startMs) / 1e3, n, desc) }
+      val ss = stages.asScala.toSeq
+      System.gc()
+      Row(name, sec, js, ss.size, ss.map(_.tasks.toLong).sum,
+        ss.map(_.shuffleWrite).sum, ss.map(_.shuffleRead).sum,
+        ShapeTokens.map { case (label, re) => label -> re.r.findAllIn(plan).size })
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   def main(args: Array[String]): Unit = {
-    val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val only = if (args.length > 1) Some(args(1).split(",").toSet) else None
+    require(args.nonEmpty, "usage: QueryStats <sfDir> [q1,q2,...]")
+    val dir = args(0)
+    val only = args.lift(1).map(_.split(",").toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -26,39 +105,15 @@ object QueryStats {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    @volatile var jobs = 0L
-    @volatile var stages = 0L
-    @volatile var tasks = 0L
-    @volatile var shufWrite = 0L
-    @volatile var shufRead = 0L
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        stages += 1
-        tasks += s.stageInfo.numTasks
-        Option(s.stageInfo.taskMetrics).foreach { m =>
-          shufWrite += m.shuffleWriteMetrics.bytesWritten
-          shufRead += m.shuffleReadMetrics.remoteBytesRead +
-            m.shuffleReadMetrics.localBytesRead
-        }
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
+    println(f"${"query"}%-28s ${"sec"}%8s ${"jobs"}%6s ${"stages"}%7s ${"tasks"}%7s ${"shW(KB)"}%9s ${"shR(KB)"}%9s  plan shape")
+    names.foreach { name =>
+      // one query at a time, so each line prints as soon as it is measured
+      census(spark, dir, Seq(name)).foreach { r =>
+        val shape = r.shape.map { case (label, n) => s"$label=$n" }.mkString(" ")
+        println(f"${r.query}%-28s ${r.sec}%8.2f ${r.jobs.size}%6d ${r.stages}%7d ${r.tasks}%7d ${r.shuffleWriteBytes / 1024}%9d ${r.shuffleReadBytes / 1024}%9d  $shape")
+        r.jobs.foreach(j => println(f"    +${j.offsetSec}%6.2fs stages=${j.stages}%2d ${j.description}"))
       }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = ()
-    }
-    spark.sparkContext.addSparkListener(listener)
-
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    println(f"${"query"}%-28s ${"sec"}%8s ${"jobs"}%6s ${"stages"}%7s ${"tasks"}%7s ${"shW(KB)"}%9s ${"shR(KB)"}%9s")
-    selected.foreach { case (name, fn) =>
-      // settle listener bus so counts attribute to this query
-      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
-      jobs = 0; stages = 0; tasks = 0; shufWrite = 0; shufRead = 0
-      val t0 = System.nanoTime()
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
-      println(f"$name%-28s $sec%8.2f $jobs%6d $stages%7d $tasks%7d ${shufWrite / 1024}%9d ${shufRead / 1024}%9d")
-      System.gc()
     }
     spark.stop()
   }

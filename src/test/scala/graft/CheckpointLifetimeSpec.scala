@@ -150,6 +150,18 @@ class CheckpointLifetimeSpec extends AnyFunSuite {
     assert((liveIds -- base).isEmpty, "labels must release with the result")
   }
 
+  test("connected components releases its round blocks when it refuses to return unconverged labels") {
+    val s = spark
+    import s.implicits._
+    // the same diameter-9 chain cannot converge in one round
+    val nodes = (0L to 9L).map(Tuple1(_)).toDF("node")
+    val pairs = (0L to 8L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    assertClean("non-convergence refusal") {
+      intercept[IllegalStateException](
+        Dedup.connectedComponents(nodes, pairs, maxRounds = 1))
+    }
+  }
+
   test("dedupSurvivors (both engines) releases its shingle scratch") {
     val s = spark
     val docs = corpusDf(40)

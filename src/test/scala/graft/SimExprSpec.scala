@@ -51,6 +51,35 @@ class SimExprSpec extends AnyFunSuite {
     assert(got(1).get._2 == expect)
   }
 
+  test("nearest_centroid elects the same cell as the (csim desc, cent_id) window, every vector") {
+    import graft.functions.nearest_centroid
+    import graft.ops.Similarity
+    import org.apache.spark.sql.expressions.Window
+    val emb = spark.range(2000L).select($"id".as("vec_id"),
+      array((0 until 16).map(j =>
+        (pmod(xxhash64($"id" * 67 + j), lit(1000)) / 500.0 - 1.0)
+          .cast("float")): _*).as("embedding"))
+    val cents = Similarity.defaultCentroids(emb, "vec_id", "embedding", 8)
+    val vecs = emb.select($"vec_id".as("vid"),
+      Similarity.asDouble($"embedding").as("ve"))
+    // the historical shape: broadcast every centroid, keep row_number 1
+    val w = Window.partitionBy($"vid").orderBy($"csim".desc, $"cent_id")
+    val windowCells = vecs.join(broadcast(cents), lit(true))
+      .withColumn("csim", round(Similarity.cosine($"ve", $"cent"), 6))
+      .withColumn("crn", row_number().over(w))
+      .filter($"crn" === 1)
+      .select($"vid", $"cent_id".as("cw"))
+    // the shipped shape: the kernel over the cent_id-sorted matrix
+    val rows = cents.orderBy($"cent_id").collect()
+    val mat = rows.map(_.getSeq[Double](1).toArray)
+    val ids = array(rows.map(r => lit(r.getLong(0))).toIndexedSeq: _*)
+    val kernelCells = vecs.select($"vid",
+      element_at(ids, nearest_centroid($"ve", mat).getField("idx") + 1).as("ck"))
+    val joined = windowCells.join(kernelCells, Seq("vid"))
+    assert(joined.count() == 2000)
+    assert(joined.filter($"cw" =!= $"ck").count() == 0L)
+  }
+
   test("jaccard_sim: overlap, disjoint, empty") {
     val df = Seq(
       (1, Seq("a", "b", "c"), Seq("b", "c", "d")),  // 2/4
