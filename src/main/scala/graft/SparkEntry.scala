@@ -88,12 +88,24 @@ object SparkEntry {
     // regeneration of a testdata file re-reads its footer instead of
     // validating the stale cached schema — Spark fills columns missing
     // from the file as nulls, so a path-only key would let a rename/drop
-    // slip past the drift guard below (ADVICE r16 fix). One driver-side
-    // getFileStatus per load; the schema job stays eliminated.
-    val st = new org.apache.hadoop.fs.Path(fpath)
-      .getFileSystem(s.sessionState.newHadoopConf())
-      .getFileStatus(new org.apache.hadoop.fs.Path(fpath))
-    val key = s"$fpath@${st.getModificationTime}:${st.getLen}"
+    // slip past the drift guard below (ADVICE r16 fix). A directory's own
+    // status misses an in-place part rewrite (its length is 0 and its mtime
+    // moves only when an entry is added or removed), so a directory table
+    // is keyed by its child count and its newest child's (mtime, length).
+    // The key a load replaces is evicted. One driver-side status call (a
+    // listing for a directory) per load; the schema job stays eliminated.
+    val hp = new org.apache.hadoop.fs.Path(fpath)
+    val fs = hp.getFileSystem(s.sessionState.newHadoopConf())
+    def stampOf(f: org.apache.hadoop.fs.FileStatus) = s"${f.getModificationTime}:${f.getLen}"
+    val st = fs.getFileStatus(hp)
+    val stamp =
+      if (!st.isDirectory) stampOf(st)
+      else {
+        val kids = fs.listStatus(hp)
+        s"${kids.length}/" + kids.maxByOption(k => (k.getModificationTime, k.getLen)).fold("")(stampOf)
+      }
+    val key = s"$fpath@$stamp"
+    schemaCache.keySet.removeIf(k => k.startsWith(s"$fpath@") && k != key)
     val sch = schemaCache.computeIfAbsent(key, _ =>
       org.apache.spark.sql.graftbridge.Bridge.parquetSchemaOf(s, fpath))
     val raw = s.read.schema(sch).parquet(fpath)

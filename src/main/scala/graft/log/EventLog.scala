@@ -300,16 +300,37 @@ class EventLog(
       .drop("bucket")
 
   /** S1: one stream's active events after a version, in version order
-    * (store/postgresql/store.go:423-444). Bucket-pruned point scan.
+    * (store/postgresql/store.go:423-444). Bucket-pruned point scan. The
+    * global `orderBy` plans a range exchange — a sampling job, a map stage
+    * and a result stage — so a caller that collects the stream to fold it
+    * on the driver uses [[collectStream]] instead: the same filter, one job.
     */
   def streamEvents(aggregateId: String, sinceVersion: Int = 0): DataFrame =
+    streamScan(aggregateId, sinceVersion).orderBy(col("aggregate_version"))
+
+  /** The bucket-pruned filter behind [[streamEvents]], unordered. */
+  private def streamScan(aggregateId: String, sinceVersion: Int): DataFrame =
     committedView(eventsWithBucket)
       .filter(col("bucket") === bucketOf(aggregateId) &&
         col("aggregate_id") === aggregateId &&
         col("migration") === 0 &&
         col("aggregate_version") > sinceVersion)
       .drop("bucket")
-      .orderBy(col("aggregate_version"))
+
+  /** S1 as a fold input: `(kind, body, aggregate_version)` of one stream's
+    * active events after `sinceVersion` (and with `id <= untilId` when it is
+    * set), in version order. One single-stage job with no exchange: the
+    * bucket-pruned filter is collected unsorted (the scan keeps its
+    * parallelism) and the rows are sorted by version on the driver, where
+    * the caller folds them anyway.
+    */
+  private[graft] def collectStream(aggregateId: String, sinceVersion: Int = 0,
+      untilId: String = ""): Array[Row] =
+    streamScan(aggregateId, sinceVersion)
+      .filter(if (untilId.isEmpty) lit(true) else col("id") <= untilId)
+      .select("kind", "body", "aggregate_version")
+      .collect()
+      .sortBy(_.getInt(2))
 
   /** S2: latest snapshot of one stream (store/postgresql/store.go:295-323).
     * Bucket-pruned like the event point scan — a point read must never list
@@ -426,7 +447,7 @@ class EventLog(
         withLogLock(path) {
           validateVersions(records, maxVersions(records.map(_.aggregateId).distinct))
           val rows = buildRows(records, nowMs)
-          writeEvents(rows, SaveMode.Append)
+          writeEvents(rows)
           rows.map(_.id)
         }
       case CommitMode.Manifest => appendViaManifest(records, nowMs)
@@ -450,8 +471,12 @@ class EventLog(
         s -> math.max(parquetHeads.getOrElse(s, 0), resvHeads.getOrElse(s, 0))).toMap
       validateVersions(records, heads)
       val rows = buildRows(records, nowMs)
-      val claimed = records.map(r =>
-        r.aggregateId -> (r.expectedVersion, r.expectedVersion + r.details.size)).toMap
+      // validated records of one stream chain, so its reservation is the
+      // union of their ranges
+      val claimed = records.groupMapReduce(_.aggregateId)(r =>
+        (r.expectedVersion, r.expectedVersion + r.details.size)) {
+        case ((lo1, hi1), (lo2, hi2)) => (math.min(lo1, lo2), math.max(hi1, hi2))
+      }
       val claim = CommitClaim(tip + 1, claimed, rows.map(_.id), writerId,
         System.currentTimeMillis(), done = false)
       if (manifest.tryClaim(claim)) {
@@ -465,13 +490,19 @@ class EventLog(
       s"manifest commit for $touched lost ${attempts} claim races — giving up")
   }
 
+  /** The optimistic check: each record must sit on its stream's head. The
+    * heads fold through the records, so a stream that appears twice in one
+    * append must chain onto its earlier record — two records at the same
+    * base would otherwise both pass and store duplicate versions.
+    */
   private def validateVersions(records: Seq[AppendRecord], current: Map[String, Int]): Unit =
-    records.foreach { r =>
-      val cur = current.getOrElse(r.aggregateId, 0)
+    records.foldLeft(current) { (heads, r) =>
+      val cur = heads.getOrElse(r.aggregateId, 0)
       if (cur != r.expectedVersion)
         throw new ConcurrentModificationException(
           s"stream ${r.aggregateId}: expected version ${r.expectedVersion}, log has $cur")
-    }
+      heads.updated(r.aggregateId, cur + r.details.size)
+    }: Unit
 
   private def buildRows(records: Seq[AppendRecord], nowMs: => Long): Seq[EventRow] =
     records.flatMap { r =>
@@ -1793,56 +1824,75 @@ class EventLog(
     * [[ManifestCommitLog.reservedHead]] while their claim lives, and
     * physically deleted before the claim is forgotten. Reading them here
     * would otherwise couple correctness to prune's internal delete ordering.
+    *
+    * One single-stage job with no exchange: each task reduces its split of
+    * the touched buckets to a max per stream, and the driver merges those
+    * few pairs. A `groupBy.agg` would plan a hash exchange (a map job and a
+    * result job) for a result of one row per stream.
     */
   private def maxVersions(aggregateIds: Seq[String],
       refreshed: Boolean = false): Map[String, Int] = {
     if (!exists(eventsPath)) return Map.empty
+    import spark.implicits._
     val buckets = aggregateIds.map(bucketOf).distinct
     committedView(eventsWithBucket, refreshed)
       .filter(col("bucket").isin(buckets: _*) &&
         col("aggregate_id").isin(aggregateIds: _*))
-      .groupBy("aggregate_id")
-      .agg(max("aggregate_version").as("v"))
+      .select("aggregate_id", "aggregate_version")
+      .as[(String, Int)]
+      .mapPartitions(EventLog.maxPerStream)
       .collect()
-      .map(r => r.getString(0) -> r.getInt(1))
-      .toMap
+      .groupMapReduce(_._1)(_._2)(math.max)
   }
 
   private def filterDiscriminator(d: Map[String, String]): Map[String, String] =
     if (discriminatorKeys.isEmpty) d
     else d.view.filterKeys(k => discriminatorKeys.contains(k.toLowerCase)).toMap
 
-  /** Every commit writes EXACTLY ONE id-sorted file per touched bucket (the
-    * `repartition(bucket)` below): live projectors read the log as a file
-    * stream, and a commit scattered over several files per bucket can have
-    * those files straddle micro-batches in arbitrary listing order — the
-    * per-partition monotonic dedup then drops the lower-id rows as late.
-    * One file per bucket per commit makes arrival order per dedup partition
-    * follow id order (files within a commit are disjoint by bucket; across
-    * commits ids grow with commit time). It is also the small-files fix: an
-    * N-task append no longer writes N tiny files into one bucket. The
-    * shuffle this costs carries the BATCH being committed, never the log.
+  /** Every commit writes EXACTLY ONE id-sorted file per touched bucket:
+    * live projectors read the log as a file stream, and a commit scattered
+    * over several files per bucket can have those files straddle
+    * micro-batches in arbitrary listing order — the per-partition monotonic
+    * dedup then drops the lower-id rows as late. One file per bucket per
+    * commit makes arrival order per dedup partition follow id order (files
+    * within a commit are disjoint by bucket; across commits ids grow with
+    * commit time). It is also the small-files fix: an N-task append no
+    * longer writes N tiny files into one bucket.
+    *
+    * A distributed row set gets the layout from `repartition(bucket)`: the
+    * shuffle carries the BATCH being committed, never the log.
     */
   private def bucketed(df: DataFrame): DataFrame =
-    ensureDiscCols(df)
-      .withColumn("bucket", pmod(graft.functions.fnv1a32(col("aggregate_id")), lit(numBuckets)))
+    withBucketCol(df)
       .repartition(col("bucket"))
       .sortWithinPartitions("bucket", "id")
 
-  private def writeEvents(rows: Seq[EventRow], mode: SaveMode): Unit = {
+  /** A batch already held on the driver (a point append) needs no shuffle
+    * for the same layout: as ONE partition sorted by `(bucket, id)` it is
+    * written by one task, which rolls to a new file only when the bucket
+    * changes — one id-sorted file per touched bucket, in one single-stage
+    * job instead of a map job and a write job.
+    */
+  private def bucketedLocal(rows: Seq[EventRow]): DataFrame = {
     import spark.implicits._
-    bucketed(rows.toDS().toDF())
-      .write.mode(mode).partitionBy("bucket")
-      .option("compression", EventLog.Compression)
-      .parquet(eventsPath)
-    graft.sources.GraftMeta.write(spark, eventsPath, numBuckets)
+    withBucketCol(rows.toDS().toDF())
+      .coalesce(1)
+      .sortWithinPartitions("bucket", "id")
   }
+
+  private def withBucketCol(df: DataFrame): DataFrame =
+    ensureDiscCols(df)
+      .withColumn("bucket", pmod(graft.functions.fnv1a32(col("aggregate_id")), lit(numBuckets)))
+
+  private def writeEvents(rows: Seq[EventRow]): Unit = appendLaidOut(bucketedLocal(rows))
 
   /** Distributed append of an already-distributed row set (same layout
     * contract as [[writeEvents]], without a driver round-trip).
     */
-  private def writeEventsDF(df: DataFrame): Unit = {
-    bucketed(df)
+  private def writeEventsDF(df: DataFrame): Unit = appendLaidOut(bucketed(df))
+
+  private def appendLaidOut(laidOut: DataFrame): Unit = {
+    laidOut
       .write.mode(SaveMode.Append).partitionBy("bucket")
       .option("compression", EventLog.Compression)
       .parquet(eventsPath)
@@ -1858,17 +1908,18 @@ class EventLog(
     * Visibility may be out of claim order — harmless, versions are already
     * reserved and readers order by id/version, never by file arrival.
     */
-  private def writeEventsIsolated(rows: Seq[EventRow], token: String): Unit = {
-    import spark.implicits._
-    writeEventsDFIsolated(rows.toDS().toDF(), token)
-  }
+  private def writeEventsIsolated(rows: Seq[EventRow], token: String): Unit =
+    stageAndMove(bucketedLocal(rows), token)
 
   /** DataFrame form of [[writeEventsIsolated]] — the bulk writers' manifest
     * path (claim-scoped staging + per-file moves, no shared `_temporary`).
     */
-  private def writeEventsDFIsolated(df: DataFrame, token: String): Unit = {
+  private def writeEventsDFIsolated(df: DataFrame, token: String): Unit =
+    stageAndMove(bucketed(df), token)
+
+  private def stageAndMove(laidOut: DataFrame, token: String): Unit = {
     val tmpDir = s"$eventsPath/.commit-tmp/$token"
-    bucketed(df)
+    laidOut
       .write.mode(SaveMode.Overwrite).partitionBy("bucket")
       .option("compression", EventLog.Compression)
       .parquet(tmpDir)
@@ -2194,6 +2245,15 @@ object EventLog {
   val KindNoOp = "NoOp"
 
   private val locks = new ConcurrentHashMap[String, Object]()
+
+  /** One partition's `(aggregate_id, version)` rows reduced to the max
+    * version per stream (the map side of `maxVersions`).
+    */
+  private def maxPerStream(it: Iterator[(String, Int)]): Iterator[(String, Int)] = {
+    val heads = scala.collection.mutable.HashMap.empty[String, Int]
+    it.foreach { case (s, v) => if (heads.getOrElse(s, Int.MinValue) < v) heads(s) = v }
+    heads.iterator
+  }
 
   /** The single-writer commit section. Two layers:
     *  - a JVM-level monitor (writers inside one driver serialize cheaply);

@@ -57,11 +57,7 @@ class EventStore[T](
     * consulted (snapshots may postdate the instant).
     */
   def retrieveAt(aggregateId: String, asOfMs: Long): Retrieved[T] = {
-    val bound = graft.core.Ulid.timeMax(asOfMs)
-    val rows = log.streamEvents(aggregateId)
-      .filter(col("id") <= bound)
-      .select("kind", "body", "aggregate_version")
-      .collect()
+    val rows = log.collectStream(aggregateId, untilId = graft.core.Ulid.timeMax(asOfMs))
     if (rows.isEmpty) throw new UnknownAggregateException(aggregateId)
     var state = agg.empty
     var version = 0
@@ -98,7 +94,9 @@ class EventStore[T](
   }
 
   /** Point read of one aggregate: latest snapshot (S2) + active tail events
-    * (S1) folded in version order, with decode-time upcasting (M3).
+    * (S1) folded in version order, with decode-time upcasting (M3). Without
+    * a snapshot on disk this is ONE Spark job with no shuffle: the tail is
+    * collected unsorted and ordered on the driver ([[EventLog.collectStream]]).
     */
   def retrieve(aggregateId: String): Retrieved[T] = {
     val snap = log.latestSnapshot(aggregateId)
@@ -106,9 +104,7 @@ class EventStore[T](
       case Some(s) => (agg.decodeState(s.body), s.aggregate_version)
       case None => (agg.empty, 0)
     }
-    val tail = log.streamEvents(aggregateId, snapVersion)
-      .select("kind", "body", "aggregate_version")
-      .collect()
+    val tail = log.collectStream(aggregateId, snapVersion)
     if (snap.isEmpty && tail.isEmpty) throw new UnknownAggregateException(aggregateId)
     var state = base
     var version = snapVersion

@@ -1,9 +1,10 @@
 package graft.tools
 
 import graft.SparkEntry
-import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graftbridge.Bridge
 import scala.jdk.CollectionConverters._
 
@@ -18,9 +19,12 @@ import scala.jdk.CollectionConverters._
   * the pre-execution `executedPlan` string — the measure behind
   * PlanShapeSpec's shuffle budgets. Under it, one indented line per Spark
   * job the query fired: its submit offset from the query's start, its
-  * stage count, and its description (the `spark.job.description`
-  * property, else the final stage's call site — an anonymous job shows a
-  * call site with no `graft` frame).
+  * stage count, and its description — the `spark.job.description`
+  * property, else the call site of the SQL execution the job belongs to,
+  * else the final stage's call site. AQE submits a query stage's job from
+  * its own pool, so that job's own call site is Spark's
+  * (`withThreadLocalCaptured at CompletableFuture.java`); its execution's
+  * call site names the user frame that started the query instead.
   *
   * A query's full formatted plan needs no main: in a shell,
   * `SparkEntry.queries(q)(spark, dir).explain("formatted")`.
@@ -30,7 +34,8 @@ import scala.jdk.CollectionConverters._
   * default 32).
   */
 object QueryStats {
-  final case class Job(offsetSec: Double, stages: Int, description: String)
+  final case class Job(offsetSec: Double, stages: Int, description: String,
+      executionId: Option[Long])
 
   final case class Row(query: String, sec: Double, jobs: Seq[Job], stages: Int,
       tasks: Long, shuffleWriteBytes: Long, shuffleReadBytes: Long,
@@ -52,14 +57,21 @@ object QueryStats {
     * call and removed before returning.
     */
   def census(spark: SparkSession, dir: String, names: Seq[String]): Seq[Row] = {
-    val jobs = new ConcurrentLinkedQueue[(Long, Int, String)]()
+    val jobs = new ConcurrentLinkedQueue[(Long, Job)]()
     val stages = new ConcurrentLinkedQueue[StageStat]()
+    val executionSites = new ConcurrentHashMap[Long, String]()
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => executionSites.put(s.executionId, s.description)
+        case _ =>
+      }
       override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val desc = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
+        def prop(k: String) = Option(j.properties).flatMap(p => Option(p.getProperty(k)))
+        val execution = prop("spark.sql.execution.id").map(_.toLong)
+        val desc = prop("spark.job.description")
+          .orElse(execution.flatMap(x => Option(executionSites.get(x))))
           .orElse(j.stageInfos.maxByOption(_.stageId).map(_.name)).getOrElse("?")
-        jobs.add((j.time, j.stageInfos.size, desc))
+        jobs.add((j.time, Job(0, j.stageInfos.size, desc, execution)))
       }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
         val m = Option(s.stageInfo.taskMetrics)
@@ -73,7 +85,7 @@ object QueryStats {
     try names.map { name =>
       // settle the listener bus so counts attribute to this query
       Bridge.drainListenerBus(spark)
-      jobs.clear(); stages.clear()
+      jobs.clear(); stages.clear(); executionSites.clear()
       val startMs = System.currentTimeMillis()
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, dir)
@@ -81,7 +93,7 @@ object QueryStats {
       df.write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t0) / 1e9
       Bridge.drainListenerBus(spark)
-      val js = jobs.asScala.toSeq.map { case (at, n, desc) => Job((at - startMs) / 1e3, n, desc) }
+      val js = jobs.asScala.toSeq.map { case (at, j) => j.copy(offsetSec = (at - startMs) / 1e3) }
       val ss = stages.asScala.toSeq
       System.gc()
       Row(name, sec, js, ss.size, ss.map(_.tasks.toLong).sum,

@@ -118,6 +118,38 @@ class HarnessDriftSpec extends AnyFunSuite {
       e.getMessage)
   }
 
+  test("an in-place part rewrite in a directory table re-reads the footer") {
+    val s = spark
+    import s.implicits._
+    // the bytes of a one-part events table whose stream column is `userCol`
+    def partBytes(userCol: String): Array[Byte] = {
+      val tmp = Files.createTempDirectory("graftmemopart").toFile.getAbsolutePath
+      (1 to 5).map(i => (i.toLong, 1700000000000000L + i, 7L, "click", 1.0, "{}"))
+        .toDF("event_id", "us", userCol, "event_type", "value", "props")
+        .withColumn("ts", timestamp_micros(col("us"))).drop("us")
+        .coalesce(1).write.parquet(s"$tmp/t")
+      val f = new java.io.File(s"$tmp/t").listFiles().find(_.getName.endsWith(".parquet")).get
+      Files.readAllBytes(f.toPath)
+    }
+    val dir = Files.createTempDirectory("graftmemo").toFile.getAbsolutePath
+    val table = new java.io.File(s"$dir/events.parquet")
+    assert(table.mkdir())
+    // a bare part file, no checksum sidecar: its bytes can change in place
+    val part = new java.io.File(table, "part-00000.parquet").toPath
+    Files.write(part, partBytes("user_id"))
+    assert(SparkEntry.queries("s1_stream_scan")(spark, dir).count() === 5L)
+
+    // same name, same inode: the directory's own status does not move
+    val dirStamp = table.lastModified()
+    Files.write(part, partBytes("uid"))
+    assert(table.lastModified() === dirStamp)
+    val e = intercept[IllegalStateException] {
+      SparkEntry.queries("s1_stream_scan")(spark, dir).count()
+    }
+    assert(e.getMessage.contains("events.user_id") && e.getMessage.contains("MISSING"),
+      e.getMessage)
+  }
+
   test("timestamp arithmetic (unix_millis log import) works on both vintages") {
     // w7 funnels ts through unix_millis into a bulkImport + rebucket
     // roundtrip — the exact expression the round-7 NTZ drift broke

@@ -23,4 +23,12 @@ class QueryStatsSpec extends AnyFunSuite {
     assert(counts(first) == counts(second))
     assert(first.map(_.shape) == second.map(_.shape))
   }
+
+  test("jobs AQE submits for a query stage carry their SQL execution's call site") {
+    val jobs = QueryStats.census(spark, dir, Seq("q1_pricing_summary", "d15_cc_clusters"))
+      .flatMap(_.jobs).filter(_.executionId.nonEmpty)
+    assert(jobs.size > 1)
+    val anonymous = jobs.filter(_.description.contains("withThreadLocalCaptured"))
+    assert(anonymous.isEmpty, anonymous)
+  }
 }
