@@ -6,8 +6,11 @@ import graft.core.{EventSchema, EventRow, SnapshotRow, Ulid}
 import graft.functions.Fnv1a32
 import java.sql.Timestamp
 import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Dataset, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** One event payload inside an append transaction. */
 case class EventDetail(kind: String, body: String)
@@ -112,7 +115,8 @@ object CompactionLayout {
     * a box predicate over ALL the interleaved dimensions prunes at once —
     * the layout for workloads that mix time-range scans WITH per-stream or
     * attribute slices (Delta/Iceberg `OPTIMIZE ZORDER BY`, re-expressed
-    * over [[graft.ops.Layout.zorderRepartition]]). `dims` must already be
+    * over [[graft.ops.Layout.zorderRepartition]]'s per-group form, one
+    * group per bucket). `dims` must already be
     * integers in `[0, 2^bitsPerDim)` — scale with [[graft.ops.Layout.scaleTo]]
     * / `pmod` (e.g. `ulid_millis(col("id"))` scaled to the log's time range,
     * `pmod(fnv1a32(col("aggregate_id")), 1 << bits)`). `filesPerBucket`
@@ -988,8 +992,7 @@ class EventLog(
     * one bucketed write for any number of streams' snapshots).
     */
   def saveSnapshots(snaps: DataFrame): Unit = {
-    ensureDiscCols(snaps)
-      .withColumn("bucket", pmod(graft.functions.fnv1a32(col("aggregate_id")), lit(numBuckets)))
+    ensureDiscCols(snaps).withColumn("bucket", bucketCol())
       .write.mode(SaveMode.Append).partitionBy("bucket").parquet(snapshotsPath)
     graft.sources.GraftMeta.write(spark, snapshotsPath, numBuckets)
   }
@@ -998,26 +1001,24 @@ class EventLog(
 
   /** M1 Forget/GDPR: scrub event bodies (and snapshot bodies) of one stream
     * for the given kinds, via a user JSON-rewrite function. Copy-on-write of
-    * only the stream's bucket partition (eventstore.go:405-432).
+    * only the stream's bucket partition (eventstore.go:405-432). In
+    * manifest mode both tables' rewrites ride one claim, so a forget is
+    * all-or-nothing; it must not report success over rows it never read,
+    * so it refuses (ConcurrentModificationException naming the holding
+    * claim) while a pending rival rewrite holds either table's files.
     */
   def forget(aggregateId: String, eventKinds: Set[String],
       scrubEvent: String => String, scrubSnapshot: String => String): Unit =
     withLogLock(path) {
-      val b = bucketOf(aggregateId)
       val scrubE = udf(scrubEvent)
-      rewriteBucket(eventsPath, evSchema, b) { df =>
-        df.withColumn("body",
+      val scrubS = udf(scrubSnapshot)
+      rewriteBuckets(Seq(bucketOf(aggregateId)), refuseHeld = true)(
+        TableRewrite(eventsPath, evSchema, _.withColumn("body",
           when(col("aggregate_id") === aggregateId && col("kind").isin(eventKinds.toSeq: _*),
-            scrubE(col("body"))).otherwise(col("body")))
-      }
-      if (exists(snapshotsPath)) {
-        val scrubS = udf(scrubSnapshot)
-        rewriteBucket(snapshotsPath, snSchema, b) { df =>
-          df.withColumn("body",
-            when(col("aggregate_id") === aggregateId, scrubS(col("body")))
-              .otherwise(col("body")))
-        }
-      }
+            scrubE(col("body"))).otherwise(col("body")))),
+        TableRewrite(snapshotsPath, snSchema, _.withColumn("body",
+          when(col("aggregate_id") === aggregateId, scrubS(col("body")))
+            .otherwise(col("body"))))): Unit
     }
 
   /** M2 MigrateInPlaceCopyReplace: for every active stream containing one of
@@ -1215,9 +1216,8 @@ class EventLog(
           }
           val done =
             if (commitMode == CommitMode.Lock) {
-              rewriteBucketsOverwrite(eventsPath, evSchema, buckets.toSeq)(invalidate)
-              if (exists(snapshotsPath))
-                rewriteBucketsOverwrite(snapshotsPath, snSchema, buckets.toSeq)(dropSnapshots)
+              rewriteBuckets(buckets.toSeq)(TableRewrite(eventsPath, evSchema, invalidate),
+                TableRewrite(snapshotsPath, snSchema, dropSnapshots)): Unit
               // ONE append of every fence + migrated copy
               writeEventsDF(plan.select(explode(col("rows")).as("r")).select("r.*"))
               true
@@ -1256,7 +1256,11 @@ class EventLog(
     *    a writer claiming in between takes our claim number and we loop);
     *  - appends landing DURING the staged write keep their files — they are
     *    not in the claim's `replaced` set, and the bounded invalidation
-    *    never flags rows past each stream's planned head.
+    *    never flags rows past each stream's planned head;
+    *  - input files a pending rival rewrite holds are refused, not skipped
+    *    ([[liveFiles]]): skipping them would leave their rows unflagged, so
+    *    the migration throws [[ConcurrentModificationException]] naming the
+    *    holding claim.
     *
     * Reservations ride the claim TSV up to
     * [[ManifestCommitLog.inlineClaimMaxStreams]] streams; beyond that they
@@ -1284,26 +1288,6 @@ class EventLog(
     // every no-commit exit reclaims the staged sidecar (else it would sit as
     // an orphan until prune's staleness sweep)
     def abandon(): Boolean = { sidecar.foreach(s => manifest.dropSidecar(s._1)); false }
-    val conf = spark.sessionState.newHadoopConf()
-
-    // live bucket files (committed, not replaced, not pending) — the same
-    // input rules as rewriteBucketManifest, across the affected bucket set
-    def liveFiles(tablePath: String): Seq[String] = {
-      val tableName = tablePath.substring(tablePath.lastIndexOf('/') + 1)
-      val claims = manifest.cachedClaims()
-      val staleNames = manifest.replacedRelnames()
-      val pendingTokens = claims.filterNot(_.done).map(c => s"c${c.n}-")
-      buckets.flatMap { b =>
-        val bdir = new org.apache.hadoop.fs.Path(s"$tablePath/bucket=$b")
-        val hfs = bdir.getFileSystem(conf)
-        if (!hfs.exists(bdir)) Seq.empty[String]
-        else hfs.listStatus(bdir)
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .filterNot(f => staleNames.contains(s"$tableName/bucket=$b/" + f.getPath.getName) ||
-            pendingTokens.exists(f.getPath.getName.startsWith))
-          .map(_.getPath.toString).toSeq
-      }
-    }
 
     var claimed: Option[CommitClaim] = None
     var eventInputs: Seq[String] = Nil
@@ -1349,8 +1333,12 @@ class EventLog(
           .filter(col("observed") > col("m_v"))
           .limit(1).count() > 0)
       if (stale) return abandon()
-      eventInputs = liveFiles(eventsPath)
-      snapInputs = if (exists(snapshotsPath)) liveFiles(snapshotsPath) else Nil
+      val (evLive, evHeld) = liveFiles(eventsPath, buckets)
+      val (snLive, snHeld) = liveFiles(snapshotsPath, buckets)
+      val held = evHeld ++ snHeld
+      if (held.nonEmpty) { abandon(): Unit; throw heldError(held) }
+      eventInputs = evLive
+      snapInputs = snLive
       val c = CommitClaim(tip + 1, resv, Seq.empty, writerId,
         System.currentTimeMillis(), done = false, CommitClaim.KindRewrite,
         eventInputs ++ snapInputs,
@@ -1367,48 +1355,15 @@ class EventLog(
     val token = s"c${claim.n}"
     if (eventInputs.nonEmpty)
       phase("migrate: stage events rewrite")(
-        stageRewrite(eventsPath, evSchema, eventInputs, token)(invalidate))
+        stageRewrite(eventsPath, evSchema, eventInputs, token, buckets.size)(invalidate))
     if (snapInputs.nonEmpty)
       phase("migrate: stage snapshot rewrite")(
-        stageRewrite(snapshotsPath, snSchema, snapInputs, token)(dropSnapshots))
+        stageRewrite(snapshotsPath, snSchema, snapInputs, token, buckets.size)(dropSnapshots))
     phase("migrate: fence+copy append")(
       writeEventsDFIsolated(plan.select(explode(col("rows")).as("r")).select("r.*"), token))
     phase("migrate: markDone")(
       manifest.markDone(claim.n)) // the atomic swap: old files out, rewrite + fences in
     true
-  }
-
-  /** Rewrite a set of live bucket files under a claim token in ONE job:
-    * read with basePath (keeps the bucket partition column), transform, one
-    * sorted file per bucket (the live-projector ordering invariant), move
-    * into the bucket directories token-prefixed. Staging lives under the
-    * claim's `.commit-tmp/c{N}/` so a condemned claim's prune sweeps it.
-    */
-  private def stageRewrite(tablePath: String,
-      schema: org.apache.spark.sql.types.StructType, inputs: Seq[String],
-      token: String)(f: DataFrame => DataFrame): Unit = {
-    val cur = spark.read.option("basePath", tablePath)
-      .schema(addBucket(schema)).parquet(inputs: _*)
-    val out = f(cur.drop("bucket"))
-      .withColumn("bucket", pmod(graft.functions.fnv1a32(col("aggregate_id")), lit(numBuckets)))
-    val tmpDir = s"$tablePath/.commit-tmp/$token/rw"
-    out.repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "id")
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-      .option("compression", EventLog.Compression)
-      .parquet(tmpDir)
-    val tmp = new org.apache.hadoop.fs.Path(tmpDir)
-    val fs = tmp.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.listStatus(tmp).filter(_.isDirectory).foreach { bdir =>
-      val dest = new org.apache.hadoop.fs.Path(tablePath, bdir.getPath.getName)
-      fs.mkdirs(dest)
-      fs.listStatus(bdir.getPath).filter(_.getPath.getName.endsWith(".parquet"))
-        .foreach { fi =>
-          fs.rename(fi.getPath,
-            new org.apache.hadoop.fs.Path(dest, s"$token-${fi.getPath.getName}")): Unit
-        }
-    }
-    fs.delete(tmp.getParent, true): Unit
   }
 
   /** M4 support: append a `NoOp` fence event to EVERY active stream of one
@@ -1532,62 +1487,25 @@ class EventLog(
     * all) into one sorted file per bucket: restores the ULID sort order that
     * makes parquet min/max skipping effective on time-range scans. On a real
     * deployment this runs incrementally, a bucket subset per maintenance
-    * window — which is why `buckets` is a parameter.
+    * window — which is why `buckets` is a parameter. `maxRecordsPerFile`
+    * (0 = unbounded) splits a hot bucket into scannable units in either
+    * commit mode.
     *
     * `layout` picks the output clustering: [[CompactionLayout.IdSort]]
     * (default, id-range-scan-optimal) or [[CompactionLayout.ZOrder]] for
     * mixed time×attribute workloads — each rewritten bucket's files then
     * cover compact Morton intervals, so both dimensions prune at once. In
-    * Manifest mode the layout runs UNDER the same per-bucket rewrite claims
-    * as plain compaction: appends racing the re-layout commit safely either
-    * side of it (CompactionSpec pins committed-view equality through a
-    * claim-fenced z-order compact).
+    * Manifest mode the layout runs UNDER the same rewrite claim as plain
+    * compaction: appends racing the re-layout commit safely either side of
+    * it (CompactionSpec pins committed-view equality through a claim-fenced
+    * z-order compact). Compaction is optional work, so files a pending
+    * rival rewrite holds are skipped, not refused (see [[rewriteBuckets]]).
     */
   def compact(buckets: Option[Seq[Int]] = None,
       maxRecordsPerFile: Long = 0L,
       layout: CompactionLayout = CompactionLayout.IdSort): Unit = withLogLock(path) {
-    if (!exists(eventsPath)) return
-    if (commitMode == CommitMode.Manifest) {
-      // incremental, append-safe form: file-level rewrite claims — a
-      // single-bucket call keeps the per-bucket maintenance cadence a
-      // 100 TB log schedules (and the rival-compactor no-op semantics);
-      // a multi-bucket call batches the set under ONE claim / read /
-      // partitioned write instead of numBuckets independent
-      // read-rewrite-commit cycles (r16 opt: a full compact was ~3 jobs
-      // × numBuckets, now ~3 total)
-      val bs = buckets.getOrElse((0 until numBuckets).toSeq)
-      if (bs.size == 1)
-        rewriteBucketManifest(eventsPath, evSchema, bs.head, layout)(df => df)
-      else rewriteBucketsManifest(eventsPath, evSchema, bs, layout)(df => df)
-      return
-    }
-    val scoped = buckets match {
-      case Some(bs) => eventsWithBucket.filter(col("bucket").isin(bs: _*))
-      case None => eventsWithBucket
-    }
-    val all = scoped.checkpointOwned() // materialize before overwriting source files
-    val arranged = layout match {
-      case CompactionLayout.IdSort =>
-        all.repartition(numBuckets, col("bucket"))
-          .sortWithinPartitions(col("bucket"), col("id"))
-      case CompactionLayout.ZOrder(dims, bits, files) =>
-        // range-partition on (bucket, zkey): the write's partitionBy splits
-        // by bucket anyway, so each bucket lands as z-interval files
-        all.withColumn("__zkey", graft.ops.Layout.zorderKey(dims, bits))
-          .repartitionByRange(numBuckets * files, col("bucket"), col("__zkey"))
-          .sortWithinPartitions(col("bucket"), col("__zkey"))
-          .drop("__zkey")
-    }
-    arranged
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-      .option("compression", EventLog.Compression)
-      // bound file sizes so a hot bucket still compacts into scannable units
-      .option("maxRecordsPerFile", if (maxRecordsPerFile > 0) maxRecordsPerFile.toString else "0")
-      .parquet(eventsPath)
-    Checkpoints.release(all) // rewrite landed; drop the materialized blocks now
-    // full-table Overwrite deletes the directory, marker included — restore it
-    graft.sources.GraftMeta.invalidate(eventsPath)
-    graft.sources.GraftMeta.write(spark, eventsPath, numBuckets)
+    rewriteBuckets(buckets.getOrElse(0 until numBuckets), layout, maxRecordsPerFile)(
+      TableRewrite(eventsPath, evSchema, identity)): Unit
   }
 
   /** Retention: prune events that are BOTH older than `beforeMs` (by ULID
@@ -1610,7 +1528,6 @@ class EventLog(
   def pruneSnapshotted(beforeMs: Long): Long = withLogLock(path) {
     if (!exists(eventsPath) || !exists(snapshotsPath)) 0L
     else {
-      import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("aggregate_id")).orderBy(col("id").desc)
       val heads = snapshots
         .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
@@ -1630,25 +1547,21 @@ class EventLog(
       // rewrite). heads is unique per stream (rn = 1), so the inner join
       // can't fan out; the per-bucket counts then scope the rewrite to the
       // buckets that actually shrink — an incremental prune after a recent
-      // one rewrites (almost) nothing.
-      val droppedByBucket = committedView(eventsWithBucket)
+      // one rewrites (almost) nothing. Counted per file too: the rewrite
+      // skips files a pending rival rewrite holds, and their rows stay.
+      val doomed = committedView(eventsWithBucket)
+        .withColumn("file", regexp_extract(input_file_name(), "/([^/]+/bucket=[^/]+/[^/]+)$", 1))
         .filter(col("id") < bound)
         .join(heads, col("aggregate_id") === col("p_id"))
         .filter(col("aggregate_version") <= col("p_v"))
-        .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val dropped = droppedByBucket.values.sum
-      if (dropped > 0) {
-        val affected = droppedByBucket.keys.toSeq.sorted
-        if (commitMode == CommitMode.Lock)
-          rewriteBucketsOverwrite(eventsPath, evSchema, affected)(keep)
-        else if (affected.size == 1)
-          rewriteBucketManifest(eventsPath, evSchema, affected.head)(keep)
-        else
-          rewriteBucketsManifest(eventsPath, evSchema, affected)(keep)
-      }
+        .groupBy(col("bucket"), col("file")).agg(count(lit(1)).as("n"))
+        .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
+      val skipped =
+        if (doomed.isEmpty) Set.empty[String]
+        else rewriteBuckets(doomed.map(_._1).distinct.sorted)(
+          TableRewrite(eventsPath, evSchema, keep)).keySet.map(ManifestCommitLog.relname)
       Checkpoints.release(heads) // every rewrite consuming it has run
-      dropped
+      doomed.collect { case (_, file, n) if !skipped.contains(file) => n }.sum
     }
   }
 
@@ -1708,29 +1621,17 @@ class EventLog(
     require(newNumBuckets > 0, "newNumBuckets must be positive")
     require(commitMode == CommitMode.Lock,
       "in-place rebucket is lock-mode only; manifest logs re-bucket by copy + cutover")
-    val conf = spark.sessionState.newHadoopConf()
-    def rewrite(tablePath: String, schema: org.apache.spark.sql.types.StructType): Unit =
-      if (exists(tablePath)) {
-        val tmpDir = s"$tablePath.rebucket-tmp"
-        spark.read.schema(addBucket(schema)).parquet(tablePath)
-          .drop("bucket")
-          .withColumn("bucket",
-            pmod(graft.functions.fnv1a32(col("aggregate_id")), lit(newNumBuckets)))
-          .repartition(newNumBuckets, col("bucket"))
-          .sortWithinPartitions(col("bucket"), col("id"))
-          .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-          .option("compression", EventLog.Compression)
-          .parquet(tmpDir)
-        val src = new org.apache.hadoop.fs.Path(tmpDir)
-        val dst = new org.apache.hadoop.fs.Path(tablePath)
-        val fs = dst.getFileSystem(conf)
+    Seq(eventsPath -> evSchema, snapshotsPath -> snSchema).foreach { case (table, schema) =>
+      val tmp = s"$table.rebucket-tmp"
+      if (copyTable(table, tmp, schema, newNumBuckets)) {
+        val dst = new Path(table)
+        val fs = dst.getFileSystem(spark.sessionState.newHadoopConf())
         fs.delete(dst, true)
-        fs.rename(src, dst): Unit
-        graft.sources.GraftMeta.invalidate(tablePath)
-        graft.sources.GraftMeta.write(spark, tablePath, newNumBuckets)
+        fs.rename(new Path(tmp), dst): Unit
+        graft.sources.GraftMeta.invalidate(table)
+        graft.sources.GraftMeta.write(spark, table, newNumBuckets)
       }
-    rewrite(eventsPath, evSchema)
-    rewrite(snapshotsPath, snSchema)
+    }
     new EventLog(spark, path, newNumBuckets, discriminatorKeys, ulidSeed,
       commitMode, discriminatorPolicy)
   }
@@ -1767,22 +1668,8 @@ class EventLog(
       require(qualified(newPath) != qualified(path),
         s"rebucketCopy needs a fresh destination path (got an alias of the source: $newPath)")
     }
-    def copyTable(tablePath: String, destPath: String,
-        schema: org.apache.spark.sql.types.StructType): Unit =
-      if (exists(tablePath)) {
-        committedView(spark.read.schema(addBucket(schema)).parquet(tablePath))
-          .drop("bucket")
-          .withColumn("bucket",
-            pmod(graft.functions.fnv1a32(col("aggregate_id")), lit(newNumBuckets)))
-          .repartition(newNumBuckets, col("bucket"))
-          .sortWithinPartitions(col("bucket"), col("id"))
-          .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-          .option("compression", EventLog.Compression)
-          .parquet(destPath)
-        graft.sources.GraftMeta.write(spark, destPath, newNumBuckets)
-      }
-    copyTable(eventsPath, s"$newPath/events", evSchema)
-    copyTable(snapshotsPath, s"$newPath/snapshots", snSchema)
+    copyTable(eventsPath, s"$newPath/events", evSchema, newNumBuckets)
+    copyTable(snapshotsPath, s"$newPath/snapshots", snSchema, newNumBuckets)
     new EventLog(spark, newPath, newNumBuckets, discriminatorKeys, ulidSeed,
       commitMode, discriminatorPolicy)
   }
@@ -1791,29 +1678,11 @@ class EventLog(
     * stream (the only one `latestSnapshot` ever serves).
     */
   def compactSnapshots(): Unit = withLogLock(path) {
-    if (!exists(snapshotsPath)) return
-    import org.apache.spark.sql.expressions.Window
+    // bucket-local latest-per-key IS global latest-per-key (aggregate_id
+    // determines the bucket)
     val w = Window.partitionBy(col("aggregate_id")).orderBy(col("id").desc)
-    if (commitMode == CommitMode.Manifest) {
-      // bucket-local latest-per-key IS global latest-per-key (aggregate_id
-      // determines the bucket) — one batched rewrite claim over the bucket
-      // set (append-race-safe exactly as the per-bucket form; r16 opt)
-      rewriteBucketsManifest(snapshotsPath, snSchema, (0 until numBuckets)) { df =>
-        df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
-      }
-      return
-    }
-    val latest = spark.read.schema(addBucket(snSchema)).parquet(snapshotsPath)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn")
-      .checkpointOwned()
-    latest
-      .repartition(numBuckets, col("bucket"))
-      .sortWithinPartitions(col("bucket"), col("id"))
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(snapshotsPath)
-    Checkpoints.release(latest) // rewrite landed; drop the materialized blocks
-    graft.sources.GraftMeta.invalidate(snapshotsPath)
-    graft.sources.GraftMeta.write(spark, snapshotsPath, numBuckets)
+    rewriteBuckets(0 until numBuckets)(TableRewrite(snapshotsPath, snSchema,
+      _.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn"))): Unit
   }
 
   // ── internals ────────────────────────────────────────────────────────────
@@ -1881,8 +1750,23 @@ class EventLog(
   }
 
   private def withBucketCol(df: DataFrame): DataFrame =
-    ensureDiscCols(df)
-      .withColumn("bucket", pmod(graft.functions.fnv1a32(col("aggregate_id")), lit(numBuckets)))
+    ensureDiscCols(df).withColumn("bucket", bucketCol())
+
+  /** The bucket of a row, re-derived from `aggregate_id` — both tables
+    * bucket by its FNV hash.
+    */
+  private def bucketCol(n: Int = numBuckets): Column =
+    pmod(graft.functions.fnv1a32(col("aggregate_id")), lit(n))
+
+  /** The writer of the log's appends, rewrites and copies: bucket
+    * directories, zstd, and `maxRecordsPerFile` (0 = unbounded; the option
+    * is left unset then, so appends write exactly as they always have).
+    */
+  private def partitionedWriter(laidOut: DataFrame,
+      maxRecordsPerFile: Long = 0L): DataFrameWriter[Row] = {
+    val w = laidOut.write.partitionBy("bucket").option("compression", EventLog.Compression)
+    if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile) else w
+  }
 
   private def writeEvents(rows: Seq[EventRow]): Unit = appendLaidOut(bucketedLocal(rows))
 
@@ -1892,10 +1776,7 @@ class EventLog(
   private def writeEventsDF(df: DataFrame): Unit = appendLaidOut(bucketed(df))
 
   private def appendLaidOut(laidOut: DataFrame): Unit = {
-    laidOut
-      .write.mode(SaveMode.Append).partitionBy("bucket")
-      .option("compression", EventLog.Compression)
-      .parquet(eventsPath)
+    partitionedWriter(laidOut).mode(SaveMode.Append).parquet(eventsPath)
     graft.sources.GraftMeta.write(spark, eventsPath, numBuckets)
   }
 
@@ -1903,10 +1784,10 @@ class EventLog(
     * unsafe even with versions reserved — Spark jobs writing one output path
     * share a `_temporary/` staging directory and clobber each other. Each
     * commit therefore writes to its own claim-scoped temp dir (its own
-    * staging) and MOVES the finished part files into the bucket directories;
-    * renames of finished files never conflict, so data writes stay parallel.
-    * Visibility may be out of claim order — harmless, versions are already
-    * reserved and readers order by id/version, never by file arrival.
+    * staging) and MOVES the finished part files into the bucket directories
+    * ([[moveStaged]]). Visibility may be out of claim order — harmless,
+    * versions are already reserved and readers order by id/version, never
+    * by file arrival.
     */
   private def writeEventsIsolated(rows: Seq[EventRow], token: String): Unit =
     stageAndMove(bucketedLocal(rows), token)
@@ -1918,276 +1799,215 @@ class EventLog(
     stageAndMove(bucketed(df), token)
 
   private def stageAndMove(laidOut: DataFrame, token: String): Unit = {
-    val tmpDir = s"$eventsPath/.commit-tmp/$token"
-    laidOut
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-      .option("compression", EventLog.Compression)
-      .parquet(tmpDir)
-    val conf = spark.sessionState.newHadoopConf()
-    val tmp = new org.apache.hadoop.fs.Path(tmpDir)
-    val fs = tmp.getFileSystem(conf)
-    fs.listStatus(tmp).filter(_.isDirectory).foreach { bdir =>
-      val dest = new org.apache.hadoop.fs.Path(eventsPath, bdir.getPath.getName)
-      fs.mkdirs(dest)
-      fs.listStatus(bdir.getPath)
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .foreach { f =>
-          fs.rename(f.getPath, new org.apache.hadoop.fs.Path(dest, s"$token-${f.getPath.getName}")): Unit
-        }
-    }
-    fs.delete(tmp, true)
+    val tmp = s"$eventsPath/.commit-tmp/$token"
+    partitionedWriter(laidOut).mode(SaveMode.Overwrite).parquet(tmp)
+    moveStaged(tmp, eventsPath, token)
     graft.sources.GraftMeta.write(spark, eventsPath, numBuckets)
   }
 
-  /** Copy-on-write rewrite of one bucket. Lock mode overwrites the partition
-    * directory (proven, but unsafe against concurrent appends — which lock
-    * mode serializes anyway). Manifest mode rewrites at FILE granularity
-    * behind a rewrite claim, so appends moving new files into the same
-    * bucket concurrently are never lost. Snapshot-table rewrites always use
-    * the directory form: snapshots are a rebuildable cache, and a racing
-    * saveSnapshot losing is benign (rehydration falls back to events).
+  /** The one stage-and-move step of every manifest write: moves the part
+    * files a bucket-partitioned write staged under `tmp` into `table`'s
+    * bucket directories, each prefixed with the claim `token` (the
+    * committed view's membership key), then drops the staging directory.
+    * Renames of finished files never conflict, so commits stay parallel;
+    * staging lives under the claim's `.commit-tmp/c{N}` so a condemned
+    * claim's prune sweeps it.
     */
-  private def rewriteBucket(tablePath: String, schema: org.apache.spark.sql.types.StructType,
-      bucket: Int)(f: DataFrame => DataFrame): Unit =
-    if (commitMode == CommitMode.Manifest)
-      rewriteBucketManifest(tablePath, schema, bucket)(f)
-    else rewriteBucketOverwrite(tablePath, schema, bucket)(f)
-
-  /** Manifest-mode file-level rewrite (the second half of README roadmap #1):
-    *  1. list the bucket's current files and claim a `rewrite` slot naming
-    *     them — concurrent appends keep committing; their files aren't in
-    *     the replaced set and survive untouched;
-    *  2. write the transformed rows under the claim token (hidden from
-    *     committed readers while the claim is pending);
-    *  3. `markDone` — the single atomic create that flips visibility: new
-    *     files in, replaced files out;
-    *  4. physically delete the replaced files (lazy GC; reads are correct
-    *     even if this never runs).
-    * A crash at any point leaves exactly one version visible.
-    */
-  private def rewriteBucketManifest(tablePath: String,
-      schema: org.apache.spark.sql.types.StructType, bucket: Int,
-      layout: CompactionLayout = CompactionLayout.IdSort)
-      (f: DataFrame => DataFrame): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val bdir = new org.apache.hadoop.fs.Path(s"$tablePath/bucket=$bucket")
-    val hfs = bdir.getFileSystem(conf)
-    if (!hfs.exists(bdir)) return
-    // rewrite only LIVE files: skip files a previous (not-yet-GCed) rewrite
-    // already replaced — copying them back in would resurrect stale rows —
-    // and skip pending claims' files, which are not yet committed. The
-    // input list is recomputed on EVERY claim attempt against the freshly
-    // refreshed chain, and files a PENDING rewrite lists as replaced are
-    // off-limits too: a rival compactor mid-flight (possible after a stale
-    // lock break) must not have its inputs re-read — if it completes, they
-    // are hidden; if it is condemned, a later pass picks them up. Without
-    // both rules a lost race re-reads files the winner just replaced and
-    // commits their rows a second time.
-    var claimed: Option[CommitClaim] = None
-    var attempts = 0
-    var inputs: Seq[String] = Seq.empty
-    while (claimed.isEmpty && attempts < 100) {
-      val tip = manifest.refresh()
-      val chain = manifest.cachedClaims()
-      val staleNames = manifest.replacedRelnames()
-      val pendingRewrites = chain.filterNot(_.done)
-      val pendingTokens = pendingRewrites.map(c => s"c${c.n}-")
-      val pendingReplaced = pendingRewrites
-        .filter(_.kind == CommitClaim.KindRewrite)
-        .flatMap(_.replaced).map(ManifestCommitLog.relname).toSet
-      inputs = hfs.listStatus(bdir)
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .filterNot { f =>
-          val rel = ManifestCommitLog.relname(f.getPath.toString)
-          staleNames.contains(rel) || pendingReplaced.contains(rel) ||
-            pendingTokens.exists(f.getPath.getName.startsWith)
-        }
-        .map(_.getPath.toString).toSeq.sorted
-      if (inputs.isEmpty) return
-      val c = CommitClaim(tip + 1, Map.empty, Seq.empty, writerId,
-        System.currentTimeMillis(), done = false, CommitClaim.KindRewrite, inputs)
-      if (manifest.tryClaim(c)) claimed = Some(c) else attempts += 1
-    }
-    val claim = claimed.getOrElse(
-      throw new IllegalStateException(s"bucket $bucket rewrite lost $attempts claim races"))
-    val cur = spark.read.schema(schema).parquet(inputs: _*)
-    val out = f(cur).checkpointOwned() // materialize before any deletes
-    if (!out.isEmpty) {
-      val tmpDir = s"$tablePath/.commit-tmp/c${claim.n}"
-      val arranged = layout match {
-        case CompactionLayout.IdSort => out.sortWithinPartitions("id")
-        case CompactionLayout.ZOrder(dims, bits, files) =>
-          graft.ops.Layout.zorderRepartition(out, dims, files, bits)
-      }
-      arranged
-        .write.mode(SaveMode.Overwrite)
-        .option("compression", EventLog.Compression).parquet(tmpDir)
-      val tmp = new org.apache.hadoop.fs.Path(tmpDir)
-      hfs.listStatus(tmp).filter(_.getPath.getName.endsWith(".parquet")).foreach { fi =>
-        hfs.rename(fi.getPath,
-          new org.apache.hadoop.fs.Path(bdir, s"c${claim.n}-${fi.getPath.getName}")): Unit
-      }
-      hfs.delete(tmp, true)
-    }
-    manifest.markDone(claim.n) // atomic visibility switch; GC is separate
-    Checkpoints.release(out) // rewrite landed; drop the materialized blocks
-  }
-
-  /** Multi-bucket manifest rewrite under ONE claim: the same live-file
-    * input rules, staged token write and atomic done-flip as
-    * [[rewriteBucketManifest]], but one claim / one read / one partitioned
-    * write covers the whole bucket set (r16 opt). A full-log compact was
-    * previously numBuckets independent claims — numBuckets read-rewrite-
-    * commit cycles (3+ jobs each) where one suffices; per-bucket cadence
-    * remains available to maintenance schedulers by passing single-bucket
-    * sets (the rival-compactor no-op semantics of the single-bucket form
-    * are preserved there). The bucket column is re-derived from
-    * `aggregate_id` (both tables bucket by its FNV hash), so rows land
-    * back in their own directories.
-    *
-    * OPERATIONAL TRADE-OFF (crash-recovery blast radius): batching widens
-    * what one pending claim quarantines. A compactor that dies after
-    * `tryClaim` leaves a single claim whose `replaced` set spans EVERY
-    * batched bucket's live files; later rewrite passes exclude
-    * pendingReplaced inputs, so compaction and retention rewrites stall
-    * across the whole batch until the claim is condemned (prune's
-    * stale-claim path), where the per-bucket form bounded the stall to one
-    * bucket. Readers are never affected (pending claims keep originals
-    * visible), and a full-log compact is an operator-scheduled maintenance
-    * action, so the wider-but-condemnable window is the deliberate price
-    * of the 1-claim batch; schedulers that want a bounded radius pass
-    * bucket subsets (any partition of the bucket set composes — each call
-    * claims only its slice).
-    */
-  private def rewriteBucketsManifest(tablePath: String,
-      schema: org.apache.spark.sql.types.StructType, buckets: Seq[Int],
-      layout: CompactionLayout = CompactionLayout.IdSort)
-      (f: DataFrame => DataFrame): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val hfs = new org.apache.hadoop.fs.Path(tablePath).getFileSystem(conf)
-    var claimed: Option[CommitClaim] = None
-    var attempts = 0
-    var inputs: Seq[String] = Seq.empty
-    while (claimed.isEmpty && attempts < 100) {
-      val tip = manifest.refresh()
-      val chain = manifest.cachedClaims()
-      val staleNames = manifest.replacedRelnames()
-      val pendingRewrites = chain.filterNot(_.done)
-      val pendingTokens = pendingRewrites.map(c => s"c${c.n}-")
-      val pendingReplaced = pendingRewrites
-        .filter(_.kind == CommitClaim.KindRewrite)
-        .flatMap(_.replaced).map(ManifestCommitLog.relname).toSet
-      inputs = buckets.flatMap { b =>
-        val bdir = new org.apache.hadoop.fs.Path(s"$tablePath/bucket=$b")
-        if (!hfs.exists(bdir)) Seq.empty
-        else hfs.listStatus(bdir)
+  private def moveStaged(tmp: String, table: String, token: String): Unit = {
+    val staged = new Path(tmp)
+    val fs = staged.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.listStatus(staged)
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith("bucket="))
+      .foreach { bdir =>
+        val dest = new Path(table, bdir.getPath.getName)
+        fs.mkdirs(dest)
+        fs.listStatus(bdir.getPath)
           .filter(_.getPath.getName.endsWith(".parquet"))
-          .filterNot { fi =>
-            val rel = ManifestCommitLog.relname(fi.getPath.toString)
-            staleNames.contains(rel) || pendingReplaced.contains(rel) ||
-              pendingTokens.exists(fi.getPath.getName.startsWith)
-          }
-          .map(_.getPath.toString)
-      }.sorted
-      if (inputs.isEmpty) return
-      val c = CommitClaim(tip + 1, Map.empty, Seq.empty, writerId,
-        System.currentTimeMillis(), done = false, CommitClaim.KindRewrite, inputs)
-      if (manifest.tryClaim(c)) claimed = Some(c) else attempts += 1
-    }
-    val claim = claimed.getOrElse(throw new IllegalStateException(
-      s"buckets ${buckets.mkString(",")} rewrite lost $attempts claim races"))
-    val cur = spark.read.schema(schema).parquet(inputs: _*)
-    val out = f(cur)
-      .withColumn("bucket",
-        pmod(graft.functions.fnv1a32(col("aggregate_id")), lit(numBuckets)))
-      .checkpointOwned() // materialize before any deletes
-    if (!out.isEmpty) {
-      val tmpDir = s"$tablePath/.commit-tmp/c${claim.n}"
-      val arranged = layout match {
-        case CompactionLayout.IdSort =>
-          out.repartition(numBuckets, col("bucket"))
-            .sortWithinPartitions(col("bucket"), col("id"))
-        case CompactionLayout.ZOrder(dims, bits, files) =>
-          out.withColumn("__zkey", graft.ops.Layout.zorderKey(dims, bits))
-            .repartitionByRange(numBuckets * files, col("bucket"), col("__zkey"))
-            .sortWithinPartitions(col("bucket"), col("__zkey"))
-            .drop("__zkey")
+          .foreach(f => fs.rename(f.getPath, new Path(dest, s"$token-${f.getPath.getName}")): Unit)
       }
-      arranged
-        .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-        .option("compression", EventLog.Compression).parquet(tmpDir)
-      val tmp = new org.apache.hadoop.fs.Path(tmpDir)
-      hfs.listStatus(tmp)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-        .foreach { bdirS =>
-          val dest = new org.apache.hadoop.fs.Path(
-            s"$tablePath/${bdirS.getPath.getName}")
-          hfs.mkdirs(dest)
-          hfs.listStatus(bdirS.getPath)
-            .filter(_.getPath.getName.endsWith(".parquet"))
-            .foreach { fi =>
-              hfs.rename(fi.getPath, new org.apache.hadoop.fs.Path(dest,
-                s"c${claim.n}-${fi.getPath.getName}")): Unit
-            }
+    fs.delete(staged, true): Unit
+  }
+
+  // ── the copy-on-write rewrite kernel ─────────────────────────────────────
+
+  /** One table's share of a [[rewriteBuckets]] call: `f` maps the rows of
+    * the rewritten buckets of `table` (the events or snapshots directory)
+    * to their replacement.
+    */
+  private case class TableRewrite(table: String, schema: StructType,
+      f: DataFrame => DataFrame)
+
+  /** The one copy-on-write rewrite behind forget, migration (Lock leg),
+    * compaction, snapshot compaction and retention: each part's `f` maps
+    * the rows of `buckets` of its table to their replacement, which lands
+    * in the same buckets laid out by [[layOut]]. The only place a rewrite
+    * branches on the commit mode:
+    *  - Lock: per table, read the buckets, apply `f`, checkpoint (the write
+    *    replaces its own source), delete the buckets `f` emptied (dynamic
+    *    overwrite never touches a partition absent from the output), then
+    *    dynamic-overwrite the rest.
+    *  - Manifest: claim ONE `rewrite` slot over every part's [[liveFiles]],
+    *    stage each part's output under the claim token ([[stageRewrite]]),
+    *    then `markDone` — the single atomic switch across all the parts:
+    *    new files in, replaced files out, GC separate ([[gcReplaced]]).
+    *    Appends racing the rewrite keep their files (they are not in the
+    *    claim's replaced set), and a crash at any point leaves exactly one
+    *    version visible.
+    *
+    * Skip versus refuse: files a pending rival rewrite holds are the one
+    * input the two modes can disagree on. Optional work — compaction,
+    * snapshot compaction, retention — skips them (a later pass picks them
+    * up once the rival completes or `manifest.prune` condemns it), and a
+    * bucket set with nothing else live is a no-op; the skipped files are
+    * returned (file → holding claim; always empty under Lock). A rewrite
+    * whose caller relies on it (`refuseHeld`: forget) throws
+    * [[ConcurrentModificationException]] naming the holding claim before
+    * it claims anything, instead of reporting success over rows it never
+    * read.
+    *
+    * One claim covers the whole bucket set, so a rewriter that dies after
+    * claiming quarantines every batched bucket from other rewrites until
+    * prune condemns the claim (readers are never affected); schedulers that
+    * want a smaller radius pass bucket subsets.
+    */
+  private def rewriteBuckets(buckets: Seq[Int],
+      layout: CompactionLayout = CompactionLayout.IdSort, maxRecordsPerFile: Long = 0L,
+      refuseHeld: Boolean = false)(parts: TableRewrite*): Map[String, Long] = {
+    val present = parts.filter(p => exists(p.table))
+    if (buckets.isEmpty || present.isEmpty) return Map.empty
+    if (commitMode == CommitMode.Lock) {
+      present.foreach { case TableRewrite(table, schema, f) =>
+        val source = spark.read.schema(addBucket(schema)).parquet(table)
+          .filter(col("bucket").isin(buckets: _*)).drop("bucket")
+        val populated = Observation()
+        Checkpoints.withCheckpointed(f(source).withColumn("bucket", bucketCol())
+            .observe(populated, collect_set(col("bucket")).as("buckets"))) { out =>
+          val written = populated.get("buckets").asInstanceOf[scala.collection.Seq[Int]].toSet
+          val fs = new Path(table).getFileSystem(spark.sessionState.newHadoopConf())
+          buckets.filterNot(written).foreach(b => fs.delete(new Path(s"$table/bucket=$b"), true))
+          if (written.nonEmpty)
+            partitionedWriter(layOut(out, buckets.size, layout), maxRecordsPerFile)
+              .mode(SaveMode.Overwrite).parquet(table)
         }
-      hfs.delete(tmp, true)
-    }
-    manifest.markDone(claim.n) // atomic visibility switch; GC is separate
-    Checkpoints.release(out) // rewrite landed; drop the materialized blocks
-  }
-
-  /** Multi-bucket copy-on-write rewrite in ONE dynamic-partition-overwrite
-    * job (Lock mode): reads only the affected bucket directories, applies
-    * `f` to the combined logical frame, re-derives the bucket column, and
-    * overwrites exactly the touched partitions. Buckets `f` emptied
-    * entirely are deleted explicitly (dynamic overwrite never touches a
-    * partition absent from the written data).
-    */
-  private def rewriteBucketsOverwrite(tablePath: String,
-      schema: org.apache.spark.sql.types.StructType, buckets: Seq[Int])
-      (f: DataFrame => DataFrame): Unit = if (buckets.nonEmpty) {
-    val cur = spark.read.schema(addBucket(schema)).parquet(tablePath)
-      .filter(col("bucket").isin(buckets: _*))
-      .drop("bucket")
-    val out = f(cur)
-      .withColumn("bucket", pmod(graft.functions.fnv1a32(col("aggregate_id")), lit(numBuckets)))
-      .checkpointOwned() // materialize before overwriting the source files
-    val writtenBuckets = out.select("bucket").distinct()
-      .collect().map(_.getInt(0)).toSet
-    val conf = spark.sessionState.newHadoopConf()
-    buckets.filterNot(writtenBuckets).foreach { b =>
-      val bp = new org.apache.hadoop.fs.Path(s"$tablePath/bucket=$b")
-      bp.getFileSystem(conf).delete(bp, true): Unit
-    }
-    if (writtenBuckets.nonEmpty) {
-      out.sortWithinPartitions(col("bucket"), col("id"))
-        .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-        .option("compression", EventLog.Compression)
-        .parquet(tablePath)
-    }
-    Checkpoints.release(out) // rewrite landed; drop the materialized blocks
-  }
-
-  /** Directory-overwrite rewrite via dynamic partition overwrite — the only
-    * partitions touched on disk are the ones written.
-    */
-  private def rewriteBucketOverwrite(tablePath: String, schema: org.apache.spark.sql.types.StructType,
-      bucket: Int)(f: DataFrame => DataFrame): Unit = {
-    val cur = spark.read.schema(addBucket(schema)).parquet(tablePath)
-      .filter(col("bucket") === bucket)
-      .drop("bucket")
-    val out = f(cur).checkpointOwned() // materialize before overwriting the source files
-    if (out.isEmpty) {
-      // Dynamic partition overwrite never touches partitions absent from the
-      // written data, so an emptied bucket must be removed explicitly.
-      val bp = new org.apache.hadoop.fs.Path(s"$tablePath/bucket=$bucket")
-      bp.getFileSystem(spark.sessionState.newHadoopConf()).delete(bp, true): Unit
+      }
+      Map.empty
     } else {
-      out
-        .withColumn("bucket", lit(bucket))
-        .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(tablePath)
+      var attempts = 0
+      while (attempts < 100) {
+        val tip = manifest.refresh()
+        val live = present.map(p => p -> liveFiles(p.table, buckets))
+        val held = live.flatMap(_._2._2).toMap
+        if (refuseHeld && held.nonEmpty) throw heldError(held)
+        val inputs = live.collect { case (p, (files, _)) if files.nonEmpty => p -> files }
+        if (inputs.isEmpty) return held
+        val claim = CommitClaim(tip + 1, Map.empty, Seq.empty, writerId,
+          System.currentTimeMillis(), done = false, CommitClaim.KindRewrite,
+          inputs.flatMap(_._2))
+        if (manifest.tryClaim(claim)) {
+          inputs.foreach { case (TableRewrite(table, schema, f), files) =>
+            stageRewrite(table, schema, files, s"c${claim.n}", buckets.size, layout,
+              maxRecordsPerFile)(f)
+          }
+          manifest.markDone(claim.n)
+          return held
+        }
+        attempts += 1
+      }
+      throw new IllegalStateException(
+        s"buckets ${buckets.mkString(",")} rewrite lost $attempts claim races")
     }
-    Checkpoints.release(out) // rewrite landed; drop the materialized blocks
+  }
+
+  /** The one input rule of a manifest rewrite, over the chain as the latest
+    * `manifest.refresh()` saw it: the parquet files of `buckets` that are
+    * committed and current. Files a done rewrite replaced are excluded
+    * (copying them back would resurrect stale rows), and so are files
+    * carrying a pending claim's token (not committed yet). Files a rewrite
+    * the cache still calls pending lists as replaced come back apart, as
+    * `held` (file → holding claim): once that rival's done marker shows,
+    * they are hidden and its own output shows, so a rewrite that read them
+    * would commit their rows a second time. Each caller decides whether
+    * held files mean skip or refuse (see [[rewriteBuckets]]).
+    */
+  private def liveFiles(table: String,
+      buckets: Seq[Int]): (Seq[String], Map[String, Long]) = {
+    val pending = manifest.cachedClaims().filterNot(_.done)
+    val tokens = pending.map(c => s"c${c.n}-")
+    val stale = manifest.replacedRelnames()
+    // disk truth, not the cache: the cache remembers claims prune already
+    // condemned, and a condemned rewrite (no trace on disk) holds nothing.
+    // A claim whose fate already reads done still holds: its marker may be
+    // missing (crashed writer) or newer than this refresh, and until the
+    // cache sees it its files stay in `stale`'s blind spot
+    val holder = pending
+      .filter(c => c.kind == CommitClaim.KindRewrite && manifest.status(c.n).isDefined)
+      .flatMap(c => c.replaced.map(p => ManifestCommitLog.relname(p) -> c.n)).toMap
+    val fs = new Path(table).getFileSystem(spark.sessionState.newHadoopConf())
+    val current = buckets.flatMap { b =>
+      val dir = new Path(s"$table/bucket=$b")
+      if (!fs.exists(dir)) Nil
+      else fs.listStatus(dir).toSeq.map(_.getPath)
+        .filter(p => p.getName.endsWith(".parquet") && !tokens.exists(p.getName.startsWith))
+        .map(_.toString)
+        .filterNot(p => stale.contains(ManifestCommitLog.relname(p)))
+    }.sorted
+    val (held, live) = current.partition(p => holder.contains(ManifestCommitLog.relname(p)))
+    (live, held.map(p => p -> holder(ManifestCommitLog.relname(p))).toMap)
+  }
+
+  private def heldError(held: Map[String, Long]): ConcurrentModificationException =
+    new ConcurrentModificationException(
+      s"${held.size} input file(s) held by pending rewrite claim(s) " +
+        held.values.toSeq.distinct.sorted.map(n => s"c$n").mkString(", ") +
+        " — retry once it completes or manifest.prune condemns it")
+
+  /** The manifest half of a rewrite, after the claim: `f` over the live
+    * `inputs`, laid out over `nBuckets` buckets, staged under the claim
+    * `token` and moved into place — hidden from committed readers until the
+    * claim is done. No checkpoint: the inputs stay on disk until GC.
+    */
+  private def stageRewrite(table: String, schema: StructType, inputs: Seq[String],
+      token: String, nBuckets: Int, layout: CompactionLayout = CompactionLayout.IdSort,
+      maxRecordsPerFile: Long = 0L)(f: DataFrame => DataFrame): Unit = {
+    val tmp = s"$table/.commit-tmp/$token"
+    val rows = f(spark.read.schema(schema).parquet(inputs: _*)).withColumn("bucket", bucketCol())
+    partitionedWriter(layOut(rows, nBuckets, layout), maxRecordsPerFile)
+      .mode(SaveMode.Overwrite).parquet(tmp)
+    moveStaged(tmp, table, token)
+  }
+
+  /** How a rewrite arranges `bucket`-carrying rows over `nBuckets` bucket
+    * directories — files per partition decide what a later scan can skip.
+    *  - IdSort: one partition per bucket, sorted by `(bucket, id)` — one
+    *    id-sorted file per bucket (the order live projectors and id-range
+    *    scans rely on).
+    *  - ZOrder: the per-bucket form of
+    *    [[graft.ops.Layout.zorderRepartition]] — at most `filesPerBucket`
+    *    files per bucket, each a contiguous Morton interval, so a bucket
+    *    subset writes no more files than it asks for.
+    */
+  private def layOut(df: DataFrame, nBuckets: Int, layout: CompactionLayout): DataFrame =
+    layout match {
+      case CompactionLayout.IdSort =>
+        df.repartition(nBuckets, col("bucket"))
+          .sortWithinPartitions(col("bucket"), col("id"))
+      case CompactionLayout.ZOrder(dims, bits, files) =>
+        graft.ops.Layout.zorderRepartition(df, col("bucket"), nBuckets, dims, files, bits)
+    }
+
+  /** Copies `table`'s committed rows into `dest` under `nBuckets` buckets,
+    * laid out like a rewrite; false when there is nothing to copy.
+    * Shared by in-place [[rebucket]] (into a temp directory it then swaps
+    * in) and [[rebucketCopy]].
+    */
+  private def copyTable(table: String, dest: String, schema: StructType,
+      nBuckets: Int): Boolean = exists(table) && {
+    val rows = committedView(spark.read.schema(addBucket(schema)).parquet(table))
+      .drop("bucket").withColumn("bucket", bucketCol(nBuckets))
+    partitionedWriter(layOut(rows, nBuckets, CompactionLayout.IdSort))
+      .mode(SaveMode.Overwrite).parquet(dest)
+    graft.sources.GraftMeta.write(spark, dest, nBuckets)
+    true
   }
 
   private def exists(p: String): Boolean = {

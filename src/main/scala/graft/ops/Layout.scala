@@ -81,6 +81,32 @@ object Layout {
       .sortWithinPartitions("__zkey")
       .drop("__zkey")
 
+  /** Per-group form of [[zorderRepartition]], for writers that partition
+    * their output by `group` (one directory per value, `groups` values at
+    * most): each group's rows are cut into `filesPerGroup` equal-width
+    * intervals of the Morton key, taken from its high bits, and
+    * hash-partitioned on `(group, interval)` — one exchange, no sampling
+    * job, at most `filesPerGroup` files per group however many groups the
+    * frame spans (a range over `(group, key)` straddles group edges and
+    * splits one group's interval across two files). With a power-of-two
+    * `filesPerGroup` each interval is an axis-aligned box of the dims, the
+    * tightest envelope a file can have; file sizes follow the data, so a
+    * skewed group writes fewer, larger files rather than more.
+    */
+  private[graft] def zorderRepartition(df: DataFrame, group: Column, groups: Int,
+      dims: Seq[Column], filesPerGroup: Int, bitsPerDim: Int): DataFrame = {
+    val width = dims.size * bitsPerDim
+    // the top `hi` bits (at most 24, so `· filesPerGroup` fits a long)
+    // scaled onto [0, filesPerGroup)
+    val hi = math.min(width, 24)
+    val interval = shiftright(
+      shiftright(col("__zkey"), width - hi) * lit(filesPerGroup.toLong), hi)
+    df.withColumn("__zkey", zorderKey(dims, bitsPerDim))
+      .repartition(groups * filesPerGroup, group, interval)
+      .sortWithinPartitions(group, col("__zkey"))
+      .drop("__zkey")
+  }
+
   /** Per-file min/max envelope of `cols` for a written parquet directory —
     * the same statistics a manifest/footer-based planner prunes on. Used by
     * the layout spec to MEASURE skipping: a file whose envelope misses the

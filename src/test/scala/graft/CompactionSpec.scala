@@ -155,6 +155,24 @@ class CompactionSpec extends AnyFunSuite {
     assert(log.activeEvents.select("aggregate_id").distinct().count() === 400L)
   }
 
+  test("manifest compact honours maxRecordsPerFile") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graftmcompactmax").toFile.getAbsolutePath
+    val log = new EventLog(spark, dir, numBuckets = 4, ulidSeed = Some(95L),
+      commitMode = graft.log.CommitMode.Manifest)
+    val batch = (1 to 400).map(i => (s"s$i", "User", "Evt", s"""{"i":$i}""", 1L))
+      .toDF("aggregate_id", "aggregate_kind", "kind", "body", "seq")
+    log.bulkImport(batch, seqCol = "seq")
+    val dataBefore = log.committedEvents.orderBy("id").collect().toSeq
+    log.compact(maxRecordsPerFile = 50L)
+    val perFile = log.committedEvents.groupBy(input_file_name()).count()
+      .collect().map(_.getLong(1))
+    assert(perFile.sum === 400L)
+    assert(perFile.max <= 50L, s"a compacted file holds ${perFile.max} rows, limit 50")
+    assert(log.committedEvents.orderBy("id").collect().toSeq === dataBefore)
+  }
+
   test("batched multi-bucket manifest compact: ONE claim over the set, content and sort intact") {
     // r16 opt: a full-log manifest compact batches every bucket under one
     // rewrite claim (one read, one partitioned write) instead of numBuckets

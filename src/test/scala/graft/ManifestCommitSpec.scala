@@ -238,6 +238,114 @@ class ManifestCommitSpec extends AnyFunSuite {
     assert(log.streamEvents("prc-a").count() === 2L)
   }
 
+  /** A rival rewriter mid-flight: a PENDING rewrite claim over every file
+    * of `bucket` of `table` — what a compactor that died after claiming
+    * leaves until prune condemns it (24 h by default).
+    */
+  private def plantRivalRewrite(log: EventLog, bucket: Int,
+      table: String = "events"): CommitClaim = {
+    val files = new java.io.File(s"${log.path}/$table/bucket=$bucket").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map("file:" + _.getAbsolutePath).toSeq
+    assert(files.nonEmpty, s"fixture must hold files in $table bucket $bucket")
+    val rival = CommitClaim(log.manifest.refresh() + 1, Map.empty, Seq.empty, "rival",
+      System.currentTimeMillis(), done = false, CommitClaim.KindRewrite, files)
+    assert(log.manifest.tryClaim(rival))
+    rival
+  }
+
+  private def createdStreams(log: EventLog, n: Int): Seq[String] = {
+    val ids = (1 to n).map(i => s"held-$i")
+    ids.foreach(id => log.append(Seq(AppendRecord(id, "Account", 0, Map.empty,
+      Seq(EventDetail("Created", s"""{"owner":"secret-$id"}"""))))))
+    ids
+  }
+
+  test("forget refuses while a pending rival rewrite holds its bucket: bodies unchanged") {
+    val log = newLog(buckets = 2)
+    val victim = createdStreams(log, 8).find(log.bucketOf(_) == 0).get
+    val before = log.committedEvents.orderBy("id").collect().toSeq
+    val rival = plantRivalRewrite(log, bucket = 0)
+    val e = intercept[ConcurrentModificationException] {
+      log.forget(victim, Set("Created"), b => b.replace("secret", "[gone]"), identity)
+    }
+    assert(e.getMessage.contains(s"c${rival.n}"), e.getMessage)
+    assert(log.committedEvents.orderBy("id").collect().toSeq === before)
+    // once prune condemns the dead rival, the same writer's forget proceeds
+    // (its cache still remembers the condemned claim as pending)
+    log.manifest.prune(Map.empty, staleMs = 0L): Unit
+    log.forget(victim, Set("Created"), b => b.replace("secret", "[gone]"), identity)
+    val body = log.committedEvents.filter(col("aggregate_id") === victim)
+      .select("body").head().getString(0)
+    assert(body.contains("[gone]") && !body.contains("secret"), body)
+  }
+
+  test("forget refuses while a rival holds only the snapshot bucket: neither table changes") {
+    // both tables ride one claim, so a refusal on the snapshot side must
+    // not leave the event bodies already scrubbed
+    val log = newLog(buckets = 1)
+    val victim = createdStreams(log, 1).head
+    log.saveSnapshot(graft.core.SnapshotRow("01HXHELDSNAP00000000000001", victim, 1,
+      "Account", s"""{"owner":"secret-$victim"}""", new java.sql.Timestamp(1L), Map.empty))
+    val events = log.committedEvents.orderBy("id").collect().toSeq
+    val snaps = log.snapshots.orderBy("id").collect().toSeq
+    val rival = plantRivalRewrite(log, bucket = 0, table = "snapshots")
+    val e = intercept[ConcurrentModificationException] {
+      log.forget(victim, Set("Created"), _.replace("secret", "[gone]"),
+        _.replace("secret", "[gone]"))
+    }
+    assert(e.getMessage.contains(s"c${rival.n}"), e.getMessage)
+    assert(log.committedEvents.orderBy("id").collect().toSeq === events)
+    assert(log.snapshots.orderBy("id").collect().toSeq === snaps)
+  }
+
+  test("a rival rewrite whose fate reads done but whose marker is missing still holds its files") {
+    // the rival won its done fate and crashed before deriving the v{n}.done
+    // marker: this writer's cache calls it pending while disk says done.
+    // Reading its inputs would commit their rows twice once the marker heals
+    val log = newLog(buckets = 2)
+    createdStreams(log, 8)
+    val before = log.committedEvents.orderBy("id").collect().toSeq
+    val rival = plantRivalRewrite(log, bucket = 0)
+    rival.replaced.foreach { p => // the rival's staged output: a same-rows copy
+      val src = new java.io.File(p.stripPrefix("file:")).toPath
+      Files.copy(src, src.resolveSibling(s"c${rival.n}-${src.getFileName}"))
+    }
+    Files.write(java.nio.file.Paths.get(s"${log.path}/_graft_commit/v${rival.n}.fate"),
+      "done".getBytes("UTF-8"))
+    log.compact()
+    log.manifest.markDone(rival.n) // the idempotent re-call heals the marker
+    assert(log.committedEvents.orderBy("id").collect().toSeq === before)
+  }
+
+  test("retention counts only the rows it dropped when a rival holds a bucket") {
+    val log = newLog(buckets = 2)
+    val store = new graft.store.EventStore(log, AccountType, snapshotThreshold = 3)
+    (1 to 10).foreach { i =>
+      store.create(f"01HXHELDPRUNE${i}%013d", Seq(AccountType.created(10L * i, s"o$i"),
+        AccountType.deposited(1), AccountType.deposited(2)), nowMs = 1700000000000L + i)
+    }
+    plantRivalRewrite(log, bucket = 0)
+    val before = log.activeEvents.count()
+    val dropped = log.pruneSnapshotted(1750000000000L)
+    assert(dropped > 0L, "bucket 1's covered rows are dropped")
+    assert(dropped === before - log.activeEvents.count(),
+      "the held bucket's rows stay, so they are not counted")
+  }
+
+  test("migrate refuses while a pending rival rewrite holds a bucket: view unchanged") {
+    val log = newLog(buckets = 2)
+    createdStreams(log, 8)
+    val before = log.committedEvents.orderBy("id").collect().toSeq
+    val rival = plantRivalRewrite(log, bucket = 0)
+    val e = intercept[ConcurrentModificationException] {
+      log.migrate(1, Set("Created"), evs => Some(evs.map(r => EventDetail("CreatedV2", r.body))))
+    }
+    assert(e.getMessage.contains(s"c${rival.n}"), e.getMessage)
+    assert(log.committedEvents.orderBy("id").collect().toSeq === before)
+    assert(log.manifest.claims().count(_.kind == CommitClaim.KindRewrite) === 1,
+      "the refused migration must not stack a claim over the rival's inputs")
+  }
+
   test("racing deliveries of DIFFERENT batches never regress the ingest ledger") {
     val log = newLog()
     val s = spark

@@ -87,4 +87,35 @@ class ZorderLayoutSpec extends AnyFunSuite {
     assert(zB <= nFiles / 2,
       s"z-order must prune the second dimension too (read $zB/$nFiles)")
   }
+
+  test("z-order compact of a bucket subset writes at most filesPerBucket files per bucket") {
+    val s = spark
+    import s.implicits._
+    val base = 1700000000000L
+    val rows = (1 to 2000).map(i =>
+      (s"z${i % 200}", "User", "Evt", s"""{"i":$i}""", i.toLong, base + i * 60000L))
+      .toDF("aggregate_id", "aggregate_kind", "kind", "body", "seq", "tms")
+    val tDim = Layout.scaleTo(graft.functions.ulid_millis(col("id")),
+      base.toDouble, (base + 2001 * 60000L).toDouble, 8)
+    val hDim = pmod(graft.functions.fnv1a32(col("aggregate_id")), lit(256))
+    val subset = Seq(1, 5)
+    Seq(graft.log.CommitMode.Lock, graft.log.CommitMode.Manifest).foreach { mode =>
+      val dir = Files.createTempDirectory("graftzsubset").toFile.getAbsolutePath
+      val log = new graft.log.EventLog(spark, dir, numBuckets = 8, ulidSeed = Some(96L),
+        commitMode = mode)
+      log.bulkImport(rows, seqCol = "seq", timeCol = Some("tms"))
+      val before = log.committedEvents.orderBy("id").collect().toSeq
+      log.compact(buckets = Some(subset), layout = graft.log.CompactionLayout.ZOrder(
+        Seq(tDim, hDim), bitsPerDim = 8, filesPerBucket = 2))
+      assert(log.committedEvents.orderBy("id").collect().toSeq === before, s"$mode")
+      val files = log.committedEvents
+        .select(pmod(graft.functions.fnv1a32(col("aggregate_id")), lit(8)).as("b"),
+          input_file_name().as("f"))
+        .filter(col("b").isin(subset: _*)).distinct()
+        .collect().groupMap(_.getInt(0))(_.getString(1))
+      assert(files.keySet === subset.toSet, s"$mode")
+      assert(files.values.map(_.size).sum <= 4,
+        s"$mode: 2 buckets x 2 files per bucket, got ${files.view.mapValues(_.size).toMap}")
+    }
+  }
 }
