@@ -58,11 +58,23 @@ object DiscriminatorPolicy {
   val OnRetrieve = "retrieve"
 }
 
-/** How appends exclude each other (reads are identical in both modes):
+/** How writers exclude each other (reads are identical in both modes):
   *  - [[CommitMode.Lock]]: the single-writer lock-file section — correct on
   *    POSIX/HDFS, where atomic create-if-absent is guaranteed;
   *  - [[CommitMode.Manifest]]: the [[ManifestCommitLog]] claim chain — the
   *    object-store-safe protocol whose only primitive is conditional put.
+  *
+  * Every append (`append`, `bulkImport`, `appendBulk`, `appendNoOpFences`)
+  * commits through one kernel in [[EventLog]] and every rewrite through
+  * another; those two are the only places a write branches on the mode.
+  * An append that cannot commit either skips or refuses: a skip is a
+  * successful no-op returning 0 (a redelivered `appendBulk` batch whose
+  * ledger mark is committed), a refusal is
+  * [[ConcurrentModificationException]] (a lost optimistic check, or a
+  * `bulkImport` stream that already exists or is reserved). Ledger rule:
+  * Lock mode writes the ingest ledger file inside the lock after the data;
+  * Manifest mode also carries the mark on the claim, so the dedup and the
+  * commit share the claim's done-flip.
   */
 sealed trait CommitMode
 object CommitMode {
@@ -438,60 +450,24 @@ class EventLog(
 
   /** Append one or more transactions. Returns the assigned event ids.
     *
-    * Single-writer commit section per log path; validates each stream's
-    * current max version against `expectedVersion` and throws
-    * [[ConcurrentModificationException]] on a lost race — the Spark
-    * restatement of the unique-index violation. On a real deployment this
-    * section is the table-format commit (e.g. a transactional manifest);
-    * the validation query prunes to the touched buckets only.
+    * Validates each stream's current head against `expectedVersion` and
+    * throws [[ConcurrentModificationException]] on a lost race — the Spark
+    * restatement of the unique-index violation. The heads come from a
+    * bucket-pruned read of the touched streams only (max'ed with the commit
+    * chain's reservations in Manifest mode); the commit is [[commitAppend]].
     */
-  def append(records: Seq[AppendRecord], nowMs: => Long = System.currentTimeMillis()): Seq[String] =
-    commitMode match {
-      case CommitMode.Lock =>
-        withLogLock(path) {
-          validateVersions(records, maxVersions(records.map(_.aggregateId).distinct))
-          val rows = buildRows(records, nowMs)
-          writeEvents(rows)
-          rows.map(_.id)
-        }
-      case CommitMode.Manifest => appendViaManifest(records, nowMs)
-    }
-
-  /** The claim-chain append (see [[ManifestCommitLog]]): validate against
-    * `max(parquet head, reserved head)`, claim the next manifest slot, write
-    * data only after the claim sticks. A lost claim race retries from a fresh
-    * read of the chain; a conflicting reservation on one of OUR streams
-    * surfaces as [[ConcurrentModificationException]], exactly like the lock
-    * path's lost optimistic check.
-    */
-  private def appendViaManifest(records: Seq[AppendRecord], nowMs: => Long): Seq[String] = {
+  def append(records: Seq[AppendRecord], nowMs: => Long = System.currentTimeMillis()): Seq[String] = {
     val touched = records.map(_.aggregateId).distinct
-    var attempts = 0
-    while (attempts < 100) {
-      val tip = manifest.refresh()
-      val parquetHeads = maxVersions(touched, refreshed = true)
-      val resvHeads = manifest.reservedHeads(touched)
-      val heads = touched.map(s =>
-        s -> math.max(parquetHeads.getOrElse(s, 0), resvHeads.getOrElse(s, 0))).toMap
-      validateVersions(records, heads)
-      val rows = buildRows(records, nowMs)
-      // validated records of one stream chain, so its reservation is the
-      // union of their ranges
-      val claimed = records.groupMapReduce(_.aggregateId)(r =>
-        (r.expectedVersion, r.expectedVersion + r.details.size)) {
-        case ((lo1, hi1), (lo2, hi2)) => (math.min(lo1, lo2), math.max(hi1, hi2))
-      }
-      val claim = CommitClaim(tip + 1, claimed, rows.map(_.id), writerId,
-        System.currentTimeMillis(), done = false)
-      if (manifest.tryClaim(claim)) {
-        writeEventsIsolated(rows, s"c${claim.n}")
-        manifest.markDone(claim.n)
-        return rows.map(_.id)
-      }
-      attempts += 1
+    var rows = Seq.empty[EventRow]
+    commitAppend("append") { chain =>
+      val parquet = maxVersions(touched, refreshed = chain.isDefined)
+      val reserved = chain.fold(Map.empty[String, Int])(_.reservedHeads(touched))
+      validateVersions(records, touched.map(s =>
+        s -> math.max(parquet.getOrElse(s, 0), reserved.getOrElse(s, 0))).toMap)
+      rows = buildRows(records, nowMs)
+      Held(rows)
     }
-    throw new IllegalStateException(
-      s"manifest commit for $touched lost ${attempts} claim races — giving up")
+    rows.map(_.id)
   }
 
   /** The optimistic check: each record must sit on its stream's head. The
@@ -510,10 +486,7 @@ class EventLog(
 
   private def buildRows(records: Seq[AppendRecord], nowMs: => Long): Seq[EventRow] =
     records.flatMap { r =>
-      val disc = discriminatorPolicy match {
-        case Some(p) => p.merge(r.discriminator, DiscriminatorPolicy.OnPersist)
-        case None => filterDiscriminator(r.discriminator)
-      }
+      val disc = persistDisc(r.discriminator)
       r.details.zipWithIndex.map { case (d, i) =>
         EventRow(
           id = gen.next(nowMs),
@@ -530,14 +503,28 @@ class EventLog(
       }
     }
 
+  /** The persist-time discriminator pipeline of every append path: the
+    * policy's merge, or without a policy the declared keys, compared
+    * case-blind on both sides (no declared keys keeps the map whole).
+    */
+  private val persistDisc: Map[String, String] => Map[String, String] = {
+    val keys = discriminatorKeys.map(_.toLowerCase)
+    discriminatorPolicy match {
+      case Some(p) => d => p.merge(d, DiscriminatorPolicy.OnPersist)
+      case None if keys.isEmpty => d => d
+      case None => d => d.view.filterKeys(k => keys.contains(k.toLowerCase)).toMap
+    }
+  }
+
   /** Bulk ingest for backfills and initial loads: append a DataFrame of NEW
     * streams' events in one distributed write. Input columns:
     * `aggregate_id`, `aggregate_kind`, `kind`, `body`, `seqCol` (any
     * per-stream ordering column) and optionally `discriminator`
     * (map<string,string>). Versions are assigned 1..n per stream in seq
-    * order, and event ids come from per-partition monotonic ULID generators
-    * after a repartition+sort on the stream key — so ids increase with
-    * version inside every stream, exactly like transactional appends.
+    * order, and event ids come from per-stream monotonic ULID generators
+    * after a repartition+sort on the stream key ([[mintStreams]]) — so ids
+    * increase with version inside every stream, exactly like transactional
+    * appends.
     *
     * The reference has no bulk path (an import loops `store.Create` one
     * transaction at a time — 10⁸ streams cost 10⁸ round-trips); this is one
@@ -553,152 +540,54 @@ class EventLog(
     * caller guarantees disjointness. The discriminator pipeline (policy
     * merge / legacy key filter) applies per row as in [[append]].
     *
-    * Concurrency: in Lock mode the lock section serializes writers on
-    * shared storage. In Manifest mode the import is CLAIM-FENCED like every
-    * other writer: it reserves `(0, head)` for every imported stream in the
-    * commit chain, so a concurrent `append`/`appendBulk`/`bulkImport`
-    * touching the same stream from another driver either sees the
-    * reservation (and fails its optimistic check) or loses the claim race —
-    * the loser surfaces [[ConcurrentModificationException]], matching the
-    * reference's unique-index guarantee on every write path
-    * (store/postgresql/store.go:702). Reservations ride the claim TSV up to
-    * [[ManifestCommitLog.inlineClaimMaxStreams]] streams; beyond that they
-    * go to a range-sorted parquet SIDECAR and the stream set never touches
-    * the driver — claim file and driver memory stay flat at 10⁸ streams.
-    * `manifest.prune` must not run concurrently with an import (standard
-    * maintenance-window rule).
+    * Concurrency: in Manifest mode the import is CLAIM-FENCED like every
+    * other writer ([[commitAppend]]): it reserves `(0, head)` for every
+    * imported stream, and with `requireNew` a chain reservation on any of
+    * them refuses the import — so a concurrent writer touching the same
+    * stream from another driver either sees the reservation or loses the
+    * claim race, and the loser surfaces [[ConcurrentModificationException]],
+    * matching the reference's unique-index guarantee on every write path
+    * (store/postgresql/store.go:702). `manifest.prune` must not run
+    * concurrently with an import (standard maintenance-window rule).
     */
   def bulkImport(rows: DataFrame, nowMs: Long = System.currentTimeMillis(),
       seqCol: String = "seq", timeCol: Option[String] = None,
-      requireNew: Boolean = true): Long = withBulkWriteGuard {
+      requireNew: Boolean = true): Long = {
     import spark.implicits._
-    val seedBase = ulidSeed
-    val discFn: Map[String, String] => Map[String, String] = discriminatorPolicy match {
-      case Some(p) => d => p.merge(d, DiscriminatorPolicy.OnPersist)
-      case None =>
-        val keys = discriminatorKeys
-        d => if (keys.isEmpty) d
-          else d.view.filterKeys(k => keys.contains(k.toLowerCase)).toMap
-    }
-    var prepared =
-      if (rows.columns.contains("discriminator")) rows
-      else rows.withColumn("discriminator", typedLit(Map.empty[String, String]))
-    prepared = timeCol match {
-      case Some(c) => prepared.withColumn("__ts", col(c).cast("long"))
-      case None => prepared.withColumn("__ts", lit(nowMs))
-    }
-    if (requireNew && exists(eventsPath)) {
-      // semi-join needs no distinct on the (corpus-sized) log side
-      val clash = prepared.select(col("aggregate_id")).distinct()
-        .join(events.select(col("aggregate_id")), Seq("aggregate_id"), "left_semi")
-        .limit(1).as[String].collect()
-      if (clash.nonEmpty) throw new ConcurrentModificationException(
-        s"bulkImport: stream ${clash.head} already exists in the log")
-    }
-    val minted = prepared
-      .repartition(col("aggregate_id"))
-      .sortWithinPartitions(col("aggregate_id"), col(seqCol))
-      .select(col("aggregate_id"), col("aggregate_kind"), col("kind"),
-        col("body"), col("discriminator"), col("__ts"))
-      .as[(String, String, String, String, Map[String, String], Long)]
-      .mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        // One monotonic generator per STREAM (created on stream change; all
-        // rows of a stream are contiguous after the sort): per-stream id
-        // order follows the per-row times without one stream's clock
-        // bumping another's, matching live appends' per-stream monotonicity.
-        var cur: String = null
-        var gen: Ulid.Generator = null
-        var v = 0
-        it.map { case (aggId, aggKind, kind, body, disc, ts) =>
-          if (aggId != cur) {
-            cur = aggId
-            v = 0
-            gen = new Ulid.Generator(seed = seedBase.map(s =>
-              s * 2654435761L + pid * 1000003L +
-                (Fnv1a32.hashString(aggId).toLong << 16) +
-                scala.util.hashing.MurmurHash3.stringHash(aggId)))
-          }
-          v += 1
-          val d = if (disc == null) Map.empty[String, String] else disc
-          EventRow(gen.next(ts), aggId, Fnv1a32.hashString(aggId), v, aggKind,
-            kind, body, discFn(d), new Timestamp(ts), 0, false)
+    val prepared = withDiscMap(rows)
+      .withColumn("__ts", timeCol.fold(lit(nowMs))(c => col(c).cast("long")))
+    val ids = prepared.select(col("aggregate_id"))
+    commitAppend("import",
+      guard = _ => {
+        if (requireNew && exists(eventsPath)) {
+          // semi-join needs no distinct on the (corpus-sized) log side
+          val clash = ids.distinct()
+            .join(events.select(col("aggregate_id")), Seq("aggregate_id"), "left_semi")
+            .limit(1).as[String].collect()
+          if (clash.nonEmpty) throw new ConcurrentModificationException(
+            s"bulkImport: stream ${clash.head} already exists in the log")
         }
-      }
-    // the batch row count rides an `observe` tap on the checkpoint pass —
-    // the former separate count() was a second full pass over the minted
-    // batch (cached, but a pass and a job per import nonetheless; r16 opt)
-    val obsN = org.apache.spark.sql.Observation()
-    val imported = phase("import: checkpoint rows")(
-      minted.observe(obsN, count(lit(1)).as("n")).checkpointOwned())
-    val n = phase("import: count")(obsN.get("n").asInstanceOf[Long])
-    if (n > 0) commitMode match {
-      case CommitMode.Lock => writeEventsDF(imported.toDF())
-      case CommitMode.Manifest =>
-        // versions are assigned 1..k per stream, so the claim reserves
-        // (0, max version) — one aggregation over the materialized rows.
-        // Up to the inline threshold the reservations ride the claim TSV;
-        // beyond it they go to a parquet SIDECAR and the stream set NEVER
-        // touches the driver — the mechanism that keeps a 10⁸-stream
-        // backfill's claim file and driver memory flat.
-        val headsDF = imported.toDF()
-          .groupBy(col("aggregate_id"))
-          .agg(max(col("aggregate_version")).as("head"))
-          .select(col("aggregate_id"), lit(0).as("base"), col("head"))
-        // bounded decision probe: collect at most inlineMax+1 heads — the
-        // common (inline) import pays ONE job and no checkpoint; only a
-        // sidecar-scale import re-evaluates the aggregation for the parquet
-        // write, over the already-checkpointed `imported`, so the recompute
-        // is one in-memory pass
-        val probe = phase("import: heads probe")(
-          headsDF.limit(ManifestCommitLog.inlineClaimMaxStreams + 1).collect())
-        val useSidecar = probe.length > ManifestCommitLog.inlineClaimMaxStreams
-        val inlineStreams =
-          if (useSidecar) Map.empty[String, (Int, Int)]
-          else probe.map(r => r.getString(0) -> (0, r.getInt(2))).toMap
-        val sidecar =
-          if (useSidecar) Some(phase("import: sidecar write")(manifest.writeSidecar(headsDF)))
-          else None
-        var attempts = 0
-        var committed = false
-        while (!committed && attempts < 100) {
-          val tip = manifest.refresh()
-          // a reservation on ANY imported stream means it is not new — the
-          // chain-time twin of the parquet probe above (claims precede data,
-          // so the chain is authoritative for in-flight writers). Driver
-          // fold for small inline-vs-inline checks; one distributed
-          // semi-join when either side is sidecar-scaled.
-          if (requireNew) {
-            val chainHasSidecars = manifest.cachedClaims().exists(_.streamsRef.isDefined)
-            if (useSidecar || chainHasSidecars)
-              phase("import: chain clash join")(manifest.reservationsDF().foreach { resv =>
-                val clash = headsDF.select(col("aggregate_id"))
-                  .join(resv.select(col("aggregate_id")), Seq("aggregate_id"), "left_semi")
-                  .limit(1).collect()
-                if (clash.nonEmpty) throw new ConcurrentModificationException(
-                  s"bulkImport: stream ${clash.head.getString(0)} already reserved in the commit chain")
-              })
-            else
-              manifest.reservedHeads(inlineStreams.keys.toSeq).find(_._2 > 0)
-                .foreach { case (s, _) => throw new ConcurrentModificationException(
-                  s"bulkImport: stream $s already reserved in the commit chain") }
-          }
-          val claim = CommitClaim(tip + 1, inlineStreams, Seq.empty, writerId,
-            System.currentTimeMillis(), done = false,
-            streamsRef = sidecar.map(_._1),
-            refCount = sidecar.map(_._2).getOrElse(0L),
-            refMaxHead = sidecar.map(_._3).getOrElse(0))
-          if (manifest.tryClaim(claim)) {
-            phase("import: bucketed write")(
-              writeEventsDFIsolated(imported.toDF(), s"c${claim.n}"))
-            phase("import: markDone")(manifest.markDone(claim.n))
-            committed = true
-          } else attempts += 1
-        }
-        if (!committed) throw new IllegalStateException(
-          s"bulkImport lost $attempts claim races — giving up")
+        Go
+      },
+      // a reservation on ANY imported stream means it is not new — the
+      // chain-time twin of the parquet probe (claims precede data, so the
+      // chain is authoritative for in-flight writers): a driver lookup for
+      // inline-scale imports, one distributed semi-join past the limit
+      refuse = resv => if (requireNew) {
+        val clash =
+          if (resv.sidecar.isEmpty)
+            manifest.reservedHeads(resv.inline.keys.toSeq).find(_._2 > 0).map(_._1)
+          else phase("import: chain clash join")(manifest.reservationsDF().flatMap(r =>
+            ids.join(r.select(col("aggregate_id")), Seq("aggregate_id"), "left_semi")
+              .limit(1).as[String].collect().headOption))
+        clash.foreach(s => throw new ConcurrentModificationException(
+          s"bulkImport: stream $s already reserved in the commit chain"))
+      }) { _ =>
+      Spread(mintStreams(prepared, seqCol, col("__ts"), lit(0)) { (s, pid, id) =>
+        s * 2654435761L + pid * 1000003L + (Fnv1a32.hashString(id).toLong << 16) +
+          scala.util.hashing.MurmurHash3.stringHash(id)
+      })
     }
-    n
   }
 
   /** Distributed append-at-head: like [[bulkImport]] but for streams that
@@ -708,22 +597,21 @@ class EventLog(
     * authoritative and rows append in `seqCol` order per stream, so there
     * is no optimistic expectedVersion — concurrent interactive writers are
     * excluded by the commit section, exactly the CDC-consumer contract.
-    * `ledgerId`/`batchId` make redelivery idempotent: a batch at or below
-    * the ledger's committed id is skipped whole (the streaming
-    * exactly-once handshake — see [[graft.streaming.StreamAggs.ingestStream]]).
-    * In Manifest mode the ledger mark ALSO rides the commit claim, so the
-    * dedup check and the data commit share the chain's single atomic
-    * done-flip — a crash anywhere leaves the redelivered batch either
-    * skipped (done landed) or the only visible copy (pending claims' files
-    * stay hidden): exactly-once with no window. Lock mode keeps the
-    * file-ledger-after-write ordering and its inherent
-    * crashed-between-write-and-ledger duplicate window.
+    * `ledgerId`/`batchId` (`batchId >= 0`) make redelivery idempotent: a
+    * batch at or below the ledger's committed id is skipped whole (the
+    * streaming exactly-once handshake — see
+    * [[graft.streaming.StreamAggs.ingestStream]]). In Manifest mode the
+    * ledger mark ALSO rides the commit claim, so the dedup check and the
+    * data commit share the chain's single atomic done-flip — a crash
+    * anywhere leaves the redelivered batch either skipped (done landed) or
+    * the only visible copy (pending claims' files stay hidden): exactly-once
+    * with no window. Lock mode keeps the file-ledger-after-write ordering
+    * and its inherent crashed-between-write-and-ledger duplicate window.
     * Returns rows appended (0 on a skipped redelivery).
     *
-    * Concurrency: Lock mode relies on the lock section. Manifest mode is
-    * claim-fenced: heads are computed as `max(parquet head, reserved head)`
-    * from a fresh chain read, the batch claims `(base, newHead)` per touched
-    * stream, and a lost claim race RETRIES from fresh heads (there is no
+    * Concurrency: Manifest mode is claim-fenced ([[commitAppend]]): heads
+    * are `max(parquet head, reserved head)` from a fresh chain read, and a
+    * lost claim race RETRIES from fresh heads (there is no
     * `expectedVersion` to violate — concurrent appenders serialize and
     * versions continue, the CDC-consumer contract), while interactive
     * `append`s racing the same streams fail their optimistic check against
@@ -731,13 +619,14 @@ class EventLog(
     */
   def appendBulk(rows: DataFrame, nowMs: Long = System.currentTimeMillis(),
       seqCol: String = "seq", ledgerId: Option[String] = None,
-      batchId: Long = -1L): Long = withBulkWriteGuard {
+      batchId: Long = -1L): Long = {
+    val mark = ledgerId.filter(_ => batchId >= 0).map(_ -> batchId)
     val hconf = spark.sessionState.newHadoopConf()
-    val ledger = ledgerId.map(id => new org.apache.hadoop.fs.Path(s"$path/_ingest/$id"))
+    val ledger = mark.map { case (id, _) => new Path(s"$path/_ingest/$id") }
     def ledgerFs = ledger.map(_.getFileSystem(hconf))
     // a torn/garbage ledger file (crash mid-write) reads as absent rather
     // than wedging every subsequent batch on a parse error; in manifest mode
-    // the chain mark below still dedups, in lock mode the batch re-appends
+    // the chain mark still dedups, in lock mode the batch re-appends
     // (at-least-once, the pre-ledger contract)
     def readLedger(): Option[Long] = ledger.zip(ledgerFs).collect {
       case (p, f) if f.exists(p) =>
@@ -745,15 +634,13 @@ class EventLog(
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLongOption
         finally in.close()
     }.flatten
-    val committed = readLedger()
     def commitLedger(): Unit = ledger.zip(ledgerFs).foreach { case (p, f) =>
       // NEVER regress: a failover rival may have committed a HIGHER batch
       // while this delivery was stalled — overwriting its mark would re-open
       // the dedup hole the moment the rival's claim is pruned off the chain
       if (!readLedger().exists(_ >= batchId)) {
         // write-temp + swap: the ledger is never observable half-written
-        val tmp = new org.apache.hadoop.fs.Path(p.getParent,
-          s".${p.getName}.tmp.${java.util.UUID.randomUUID()}")
+        val tmp = new Path(p.getParent, s".${p.getName}.tmp.${java.util.UUID.randomUUID()}")
         val out = f.create(tmp, true)
         try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
         f.delete(p, false)
@@ -761,218 +648,112 @@ class EventLog(
           s"could not commit ingest ledger $p") }
       }
     }
-    // Manifest mode also consults the chain: a done claim carrying this
-    // ledger's mark proves the batch committed even if the crash hit between
-    // the done-flip and the ledger-file write — dedup check and commit share
-    // ONE atomic switch, so redelivery is exactly-once with no window (a
-    // crash BEFORE done leaves the staged files permanently hidden, so the
-    // redelivered append is the only visible copy)
-    val chainCommitted =
-      if (commitMode == CommitMode.Manifest && ledgerId.isDefined && batchId >= 0)
-        manifest.claims().filter(c => c.done && c.ledgerId == ledgerId)
-          .map(_.ledgerBatch).maxOption
-      else None
-    if (batchId >= 0 &&
-        (committed.exists(batchId <= _) || chainCommitted.exists(batchId <= _))) 0L
-    else {
-      import spark.implicits._
-      val t = nowMs
-      val seedBase = ulidSeed
-      val discFn: Map[String, String] => Map[String, String] = discriminatorPolicy match {
-        case Some(p) => d => p.merge(d, DiscriminatorPolicy.OnPersist)
-        case None =>
-          val keys = discriminatorKeys
-          d => if (keys.isEmpty) d
-            else d.view.filterKeys(k => keys.contains(k.toLowerCase)).toMap
-      }
-      val withDisc =
-        if (rows.columns.contains("discriminator")) rows
-        else rows.withColumn("discriminator", typedLit(Map.empty[String, String]))
-      // assign ids/versions continuing from the per-stream heads frame
-      // (aggregate_id, __head); materialized once per attempt
-      def buildRows(heads: DataFrame): DataFrame = withDisc
-        .join(heads, Seq("aggregate_id"), "left")
-        .repartition(col("aggregate_id"))
-        .sortWithinPartitions(col("aggregate_id"), col(seqCol))
-        .select(col("aggregate_id"), col("aggregate_kind"), col("kind"),
-          col("body"), col("discriminator"),
-          coalesce(col("__head"), lit(0)).as("__head"))
-        .as[(String, String, String, String, Map[String, String], Int)]
-        .mapPartitions { it =>
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          var cur: String = null
-          var gen: Ulid.Generator = null
-          var v = 0
-          it.map { case (aggId, aggKind, kind, body, disc, head) =>
-            if (aggId != cur) {
-              cur = aggId
-              v = head
-              gen = new Ulid.Generator(seed = seedBase.map(s =>
-                s * 6364136223846793005L + pid * 1000003L + batchId * 31L +
-                  (Fnv1a32.hashString(aggId).toLong << 16) +
-                  scala.util.hashing.MurmurHash3.stringHash(aggId)))
-            }
-            v += 1
-            val d = if (disc == null) Map.empty[String, String] else disc
-            EventRow(gen.next(t), aggId, Fnv1a32.hashString(aggId), v, aggKind,
-              kind, body, discFn(d), new Timestamp(t), 0, false)
-          }
+    var rivalDeadline = -1L
+    val input = withDiscMap(rows)
+    val touched = input.select(col("aggregate_id")).distinct()
+    commitAppend("appendBulk", mark,
+      // The ledger dedup runs after every chain refresh, not once up front:
+      // a pre-check is check-then-act, so two CONCURRENT deliveries of the
+      // same (ledgerId, batchId) — a zombie driver racing its failover
+      // replacement — would both pass it and both win distinct claims. A
+      // rival claim carrying (ledgerId, batch >= batchId) is authoritative:
+      // DONE means the batch is committed (skip; committed-then-pruned is
+      // covered by the restored ledger file), PENDING means the outcome is
+      // undecided — wait for its done-flip or its condemnation rather than
+      // race it to a second append.
+      guard = chain => {
+        val rivals = for {
+          c <- chain.toSeq; (id, b) <- mark.toSeq
+          r <- c.cachedClaims() if r.ledgerId.contains(id) && r.ledgerBatch >= b
+        } yield r
+        // disk-truth for pending rivals: the cache deliberately remembers
+        // PRUNED claims, and a condemned rival (crashed, then pruned) must
+        // not wedge this legitimate redelivery — its staged files are gone,
+        // so re-appending is exactly the recovery path. status() (not the
+        // cached done flag) decides "committed": a rival that won its done
+        // fate and crashed before deriving the marker is committed on disk
+        // even though no listing shows it — and status() is read-only, so
+        // no one heals the marker for us here
+        val live = rivals.flatMap(r => if (r.done) Some(true) else manifest.status(r.n))
+        if (live.contains(true) || readLedger().exists(batchId <= _)) { commitLedger(); End(0) }
+        else if (live.isEmpty) Go
+        else {
+          // a rival that DIED pending stays undecided until prune condemns
+          // it, so fail loudly at the deadline
+          if (rivalDeadline < 0) rivalDeadline = System.currentTimeMillis() + LockAcquireTimeoutMs
+          if (System.currentTimeMillis() > rivalDeadline)
+            throw new IllegalStateException(
+              s"appendBulk: rival delivery of ($ledgerId, $batchId) still " +
+                "pending — undecided in-flight commit (crashed writer?); " +
+                "retry after it completes or manifest.prune condemns it")
+          Wait
         }
-        .checkpointOwned()
-        .toDF()
-      commitMode match {
-        case CommitMode.Lock =>
-          // current head per TOUCHED stream (semi-join prune, then one agg;
-          // stays fully distributed — no driver map of the stream set)
-          val heads =
-            if (!exists(eventsPath)) spark.emptyDataFrame
-              .withColumn("aggregate_id", lit("")).withColumn("__head", lit(0))
-              .limit(0).select(col("aggregate_id"), col("__head"))
-            else events
-              .join(withDisc.select(col("aggregate_id")).distinct(),
-                Seq("aggregate_id"), "left_semi")
-              .groupBy(col("aggregate_id"))
-              .agg(max(col("aggregate_version")).as("__head"))
-          val appended = buildRows(heads)
-          val n = appended.count()
-          if (n > 0) writeEventsDF(appended)
-          commitLedger()
-          n
-        case CommitMode.Manifest =>
-          // Up to the inline threshold the touched set (a micro-batch of
-          // ingest) folds driver-side and reservations ride the claim TSV.
-          // Past it — a backfill-scale redelivery — heads resolve
-          // DISTRIBUTED and reservations go to a parquet sidecar, so the
-          // claim file and driver memory stay flat no matter the batch
-          // (the same mechanism bulkImport/migrate/fences use).
-          val touchedDF = withDisc.select(col("aggregate_id")).distinct()
-          val touchedProbe = touchedDF
-            .limit(ManifestCommitLog.inlineClaimMaxStreams + 1).as[String].collect().toSeq
-          val useSidecar = touchedProbe.length > ManifestCommitLog.inlineClaimMaxStreams
-          val touched = if (useSidecar) Seq.empty else touchedProbe
-          var attempts = 0
-          var result = -1L
-          var rivalDeadline = -1L
-          while (result < 0 && attempts < 100) {
-            val tip = manifest.refresh()
-            // Re-fence the ledger dedup INSIDE the retry loop: the pre-loop
-            // check is check-then-act, so two CONCURRENT deliveries of the
-            // same (ledgerId, batchId) — a zombie driver racing its failover
-            // replacement — would both pass it and both eventually win
-            // distinct claims. After each refresh, a rival claim carrying
-            // (ledgerId, batch >= batchId) is authoritative: DONE means the
-            // batch is committed (skip; also covers committed-then-pruned
-            // via the restored ledger file), PENDING means the outcome is
-            // undecided — wait for its done-flip or its condemnation rather
-            // than racing it to a second append.
-            val rivals =
-              if (ledgerId.isDefined && batchId >= 0)
-                manifest.cachedClaims().filter(c =>
-                  c.ledgerId == ledgerId && c.ledgerBatch >= batchId)
-              else Seq.empty
-            // disk-truth for pending rivals: the cache deliberately remembers
-            // PRUNED claims, and a condemned rival (crashed, then pruned) must
-            // not wedge this legitimate redelivery — its staged files are
-            // gone, so re-appending is exactly the recovery path. status()
-            // (not the cached done flag) decides "committed": a rival that
-            // won its done fate and crashed before deriving the marker is
-            // committed on disk even though no listing shows it — and
-            // status() is read-only, so no one heals the marker for us here
-            val liveRivals = rivals
-              .map(c => if (c.done) (c, Some(true))
-                else (c, manifest.status(c.n)))
-              .filter { case (_, st) => st.isDefined }
-            if (liveRivals.exists(_._2.contains(true)) ||
-                readLedger().exists(batchId <= _)) {
-              commitLedger(); result = 0
-            } else if (liveRivals.nonEmpty) {
-              // the rival's commit is mid-flight (claim up, done not yet) —
-              // wait it out on its own deadline rather than burning claim-
-              // race attempts; a rival that DIED pending stays undecided
-              // until prune condemns it, so fail loudly at the deadline
-              if (rivalDeadline < 0)
-                rivalDeadline = System.currentTimeMillis() + LockAcquireTimeoutMs
-              if (System.currentTimeMillis() > rivalDeadline)
-                throw new IllegalStateException(
-                  s"appendBulk: rival delivery of ($ledgerId, $batchId) still " +
-                    "pending — undecided in-flight commit (crashed writer?); " +
-                    "retry after it completes or manifest.prune condemns it")
-              Thread.sleep(100)
-            } else if (!useSidecar) {
-              val parquetHeads = maxVersions(touched, refreshed = true)
-              val resvHeads = manifest.reservedHeads(touched)
-              val merged = touched.map(s => s ->
-                math.max(parquetHeads.getOrElse(s, 0), resvHeads.getOrElse(s, 0)))
-              val appended = buildRows(merged.toDF("aggregate_id", "__head"))
-              val n = appended.count()
-              if (n == 0) { commitLedger(); result = 0 }
-              else {
-                val newHeads = appended.groupBy(col("aggregate_id"))
-                  .agg(max(col("aggregate_version")).as("h"))
-                  .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-                val base = merged.toMap
-                val claim = CommitClaim(tip + 1,
-                  newHeads.map { case (s, h) => s -> (base.getOrElse(s, 0), h) },
-                  Seq.empty, writerId, System.currentTimeMillis(), done = false,
-                  ledgerId = ledgerId.filter(_ => batchId >= 0), ledgerBatch = batchId)
-                if (manifest.tryClaim(claim)) {
-                  writeEventsDFIsolated(appended, s"c${claim.n}")
-                  manifest.markDone(claim.n)
-                  commitLedger()
-                  result = n
-                } else attempts += 1 // heads may have moved: rebuild from fresh
-                // chain; the abandoned attempt's localCheckpoint blocks are
-                // reclaimed asynchronously by Spark's ContextCleaner once the
-                // frame goes unreachable (races are rare — contention is claims,
-                // not storage)
-              }
-            } else {
-              // sidecar-scale delivery: heads = parquet ⊔ chain reservations,
-              // merged with ONE distributed union+agg — the stream set never
-              // touches the driver
-              val parquetHeadsDF =
-                if (!exists(eventsPath))
-                  spark.emptyDataset[(String, Int)].toDF("aggregate_id", "__h")
-                else committedView(events, refreshed = true)
-                  .join(touchedDF, Seq("aggregate_id"), "left_semi")
-                  .groupBy(col("aggregate_id"))
-                  .agg(max(col("aggregate_version")).as("__h"))
-              val resvHeadsDF = manifest.reservationsDF()
-                .map(_.select(col("aggregate_id"), col("head").as("__h")))
-              val headsDF = resvHeadsDF.fold(parquetHeadsDF)(parquetHeadsDF.unionByName)
-                .groupBy(col("aggregate_id")).agg(max(col("__h")).as("__head"))
-              val merged = touchedDF.join(headsDF, Seq("aggregate_id"), "left")
-                .select(col("aggregate_id"),
-                  coalesce(col("__head"), lit(0)).as("__head"))
-              val appended = buildRows(merged)
-              val n = appended.count()
-              if (n == 0) { commitLedger(); result = 0 }
-              else {
-                // reservations derive from the CHECKPOINTED rows themselves
-                // (base = min version - 1), so the sidecar can never drift
-                // from what was actually minted
-                val sidecarRows = appended.groupBy(col("aggregate_id"))
-                  .agg((min(col("aggregate_version")) - 1).cast("int").as("base"),
-                    max(col("aggregate_version")).as("head"))
-                val sc = manifest.writeSidecar(sidecarRows)
-                val claim = CommitClaim(tip + 1, Map.empty, Seq.empty, writerId,
-                  System.currentTimeMillis(), done = false,
-                  ledgerId = ledgerId.filter(_ => batchId >= 0), ledgerBatch = batchId,
-                  streamsRef = Some(sc._1), refCount = sc._2, refMaxHead = sc._3)
-                if (manifest.tryClaim(claim)) {
-                  writeEventsDFIsolated(appended, s"c${claim.n}")
-                  manifest.markDone(claim.n)
-                  commitLedger()
-                  result = n
-                } else { manifest.dropSidecar(sc._1); attempts += 1 }
-              }
-            }
-          }
-          if (result < 0) throw new IllegalStateException(
-            s"appendBulk lost $attempts claim races — giving up")
-          result
-      }
+      },
+      committed = () => commitLedger()) { chain =>
+      // heads of the TOUCHED streams (semi-join prune, then one agg; stays
+      // fully distributed — no driver map of the stream set), max'ed with
+      // every chain reservation
+      val parquet =
+        if (!exists(eventsPath)) None
+        else Some(committedView(events, refreshed = true)
+          .join(touched, Seq("aggregate_id"), "left_semi")
+          .select(col("aggregate_id"), col("aggregate_version").as("__h")))
+      val reserved = chain.flatMap(_.reservationsDF())
+        .map(_.select(col("aggregate_id"), col("head").as("__h")))
+      val withHeads = (parquet ++ reserved).reduceOption(_ unionByName _)
+        .fold(input.withColumn("__head", lit(null).cast("int")))(heads => input.join(
+          heads.groupBy(col("aggregate_id")).agg(max(col("__h")).as("__head")),
+          Seq("aggregate_id"), "left"))
+      Spread(mintStreams(withHeads, seqCol, lit(nowMs), coalesce(col("__head"), lit(0))) {
+        (s, pid, id) => s * 6364136223846793005L + pid * 1000003L + batchId * 31L +
+          (Fnv1a32.hashString(id).toLong << 16) + scala.util.hashing.MurmurHash3.stringHash(id)
+      })
     }
+  }
+
+  /** Ingest rows with a `discriminator` map column (empty when absent). */
+  private def withDiscMap(rows: DataFrame): DataFrame =
+    if (rows.columns.contains("discriminator")) rows
+    else rows.withColumn("discriminator", typedLit(Map.empty[String, String]))
+
+  /** The per-stream minting of the distributed writers ([[bulkImport]],
+    * [[appendBulk]]): `input`'s rows, shuffled by stream and sorted by
+    * `seqCol`, get versions continuing from the stream's `head` and ids
+    * stamped `ts` (millis) from ONE monotonic generator per stream, created
+    * on stream change (all rows of a stream are contiguous after the sort):
+    * per-stream id order follows the per-row times without one stream's
+    * clock bumping another's, matching live appends' per-stream
+    * monotonicity. Each writer passes its own `seed(ulidSeed, partition,
+    * stream)` mix.
+    */
+  private def mintStreams(input: DataFrame, seqCol: String, ts: Column, head: Column)(
+      seed: (Long, Int, String) => Long): DataFrame = {
+    import spark.implicits._
+    val seedBase = ulidSeed
+    val disc = persistDisc
+    input
+      .repartition(col("aggregate_id"))
+      .sortWithinPartitions(col("aggregate_id"), col(seqCol))
+      .select(col("aggregate_id"), col("aggregate_kind"), col("kind"),
+        col("body"), col("discriminator"), ts, head)
+      .as[(String, String, String, String, Map[String, String], Long, Int)]
+      .mapPartitions { it =>
+        val pid = org.apache.spark.TaskContext.getPartitionId()
+        var cur: String = null
+        var gen: Ulid.Generator = null
+        var v = 0
+        it.map { case (aggId, aggKind, kind, body, d, t, h) =>
+          if (aggId != cur) {
+            cur = aggId
+            v = h
+            gen = new Ulid.Generator(seed = seedBase.map(seed(_, pid, aggId)))
+          }
+          v += 1
+          EventRow(gen.next(t), aggId, Fnv1a32.hashString(aggId), v, aggKind,
+            kind, body, disc(if (d == null) Map.empty else d), new Timestamp(t), 0, false)
+        }
+      }
+      .toDF()
   }
 
   /** The commit chain (lazily materialized; also usable for inspection in
@@ -1219,7 +1000,7 @@ class EventLog(
               rewriteBuckets(buckets.toSeq)(TableRewrite(eventsPath, evSchema, invalidate),
                 TableRewrite(snapshotsPath, snSchema, dropSnapshots)): Unit
               // ONE append of every fence + migrated copy
-              writeEventsDF(plan.select(explode(col("rows")).as("r")).select("r.*"))
+              appendLaidOut(bucketed(plan.select(explode(col("rows")).as("r")).select("r.*")))
               true
             } else migrateCommitManifest(plan, buckets.toSeq, invalidate, dropSnapshots)
           if (done)
@@ -1275,19 +1056,10 @@ class EventLog(
     val headsDF = plan.select(col("aggregateId").as("aggregate_id"),
       col("maxVersion").as("base"),
       (col("maxVersion") + lit(1) + size(col("details"))).cast("int").as("head"))
-    // bounded decision probe (bulkImport's): collect at most inlineMax+1 rows
-    val probe = phase("migrate: heads probe")(
-      headsDF.limit(ManifestCommitLog.inlineClaimMaxStreams + 1).collect())
-    val useSidecar = probe.length > ManifestCommitLog.inlineClaimMaxStreams
-    val resv: Map[String, (Int, Int)] =
-      if (useSidecar) Map.empty
-      else probe.map(r => r.getString(0) -> (r.getInt(1), r.getInt(2))).toMap
-    val sidecar =
-      if (useSidecar) Some(phase("migrate: sidecar write")(manifest.writeSidecar(headsDF)))
-      else None
-    // every no-commit exit reclaims the staged sidecar (else it would sit as
-    // an orphan until prune's staleness sweep)
-    def abandon(): Boolean = { sidecar.foreach(s => manifest.dropSidecar(s._1)); false }
+    val resv = reserve("migrate", headsDF)
+    val useSidecar = resv.sidecar.isDefined
+    // every no-commit exit reclaims the staged sidecar
+    def abandon(): Boolean = { resv.drop(); false }
 
     var claimed: Option[CommitClaim] = None
     var eventInputs: Seq[String] = Nil
@@ -1307,7 +1079,7 @@ class EventLog(
       // the migrated stream set never rides an isin list or a driver map.
       val chainStaleInline = !useSidecar &&
         manifest.cachedClaims().exists(_.streams.exists {
-          case (s, (_, head)) => resv.get(s).exists(_._1 < head)
+          case (s, (_, head)) => resv.inline.get(s).exists(_._1 < head)
         })
       if (chainStaleInline) return abandon()
       // chain + parquet staleness in ONE distributed job: any observed head
@@ -1339,12 +1111,7 @@ class EventLog(
       if (held.nonEmpty) { abandon(): Unit; throw heldError(held) }
       eventInputs = evLive
       snapInputs = snLive
-      val c = CommitClaim(tip + 1, resv, Seq.empty, writerId,
-        System.currentTimeMillis(), done = false, CommitClaim.KindRewrite,
-        eventInputs ++ snapInputs,
-        streamsRef = sidecar.map(_._1),
-        refCount = sidecar.map(_._2).getOrElse(0L),
-        refMaxHead = sidecar.map(_._3).getOrElse(0))
+      val c = resv.claim(tip + 1, CommitClaim.KindRewrite, eventInputs ++ snapInputs)
       if (manifest.tryClaim(c)) claimed = Some(c) else attempts += 1
     }
     val claim = claimed.getOrElse {
@@ -1360,7 +1127,7 @@ class EventLog(
       phase("migrate: stage snapshot rewrite")(
         stageRewrite(snapshotsPath, snSchema, snapInputs, token, buckets.size)(dropSnapshots))
     phase("migrate: fence+copy append")(
-      writeEventsDFIsolated(plan.select(explode(col("rows")).as("r")).select("r.*"), token))
+      stageAndMove(bucketed(plan.select(explode(col("rows")).as("r")).select("r.*")), token))
     phase("migrate: markDone")(
       manifest.markDone(claim.n)) // the atomic swap: old files out, rewrite + fences in
     true
@@ -1373,113 +1140,44 @@ class EventLog(
     * cost the same driver memory as 10 (unlike the reference's paged
     * iteration, store/postgresql/projection_migration.go). Fences bump each
     * stream's version so concurrent writers started before the rebuild lose
-    * their optimistic check (eventstore.go:123-131).
+    * their optimistic check (eventstore.go:123-131). In Manifest mode the
+    * pass is claim-fenced like every append ([[commitAppend]]).
     */
-  def appendNoOpFences(aggregateKind: String, nowMs: => Long = System.currentTimeMillis()): Long =
-    withLogLock(path) {
-      import spark.implicits._
-      val t = nowMs
-      val seedBase = ulidSeed
-      val kind = aggregateKind
-      val noOp = KindNoOp
-      // Heads merge chain reservations with committed parquet maxima in
-      // manifest mode (DISTRIBUTED — the reservation table is chain-sized,
-      // broadcast by Spark; the stream set never touches the driver here),
-      // so a fence can't collide with an in-flight append's reserved slot.
-      def computeFences(): Dataset[EventRow] = {
-        val parquetHeads = activeEvents
-          .filter(col("aggregate_kind") === aggregateKind)
-          .groupBy(col("aggregate_id"))
-          .agg(max(col("aggregate_version")).as("v"),
-            first(col("discriminator")).as("disc"))
-        val merged =
-          if (commitMode == CommitMode.Lock) parquetHeads
-          else manifest.reservationsDF() match {
-            case None => parquetHeads
-            case Some(resv) => parquetHeads
-              .join(resv.select(col("aggregate_id").as("r_id"), col("head"))
-                .groupBy(col("r_id")).agg(max(col("head")).as("r_v")),
-                col("aggregate_id") === col("r_id"), "left")
-              .select(col("aggregate_id"),
-                greatest(col("v"), coalesce(col("r_v"), lit(0))).as("v"),
-                col("disc"))
+  def appendNoOpFences(aggregateKind: String, nowMs: => Long = System.currentTimeMillis()): Long = {
+    import spark.implicits._
+    val t = nowMs
+    val seedBase = ulidSeed
+    val kind = aggregateKind
+    val noOp = KindNoOp
+    commitAppend("fences") { chain =>
+      val parquet = activeEvents
+        .filter(col("aggregate_kind") === aggregateKind)
+        .groupBy(col("aggregate_id"))
+        .agg(max(col("aggregate_version")).as("v"),
+          first(col("discriminator")).as("disc"))
+      // chain reservations merge in DISTRIBUTED (the reservation table is
+      // chain-sized, broadcast by Spark; the stream set never touches the
+      // driver), so a fence can't collide with an in-flight append's slot
+      val heads = chain.flatMap(_.reservationsDF()).fold(parquet)(resv => parquet
+        .join(resv.select(col("aggregate_id").as("r_id"), col("head"))
+          .groupBy(col("r_id")).agg(max(col("head")).as("r_v")),
+          col("aggregate_id") === col("r_id"), "left")
+        .select(col("aggregate_id"),
+          greatest(col("v"), coalesce(col("r_v"), lit(0))).as("v"),
+          col("disc")))
+      Spread(heads
+        .as[(String, Int, Map[String, String])]
+        .mapPartitions { it =>
+          val pid = org.apache.spark.TaskContext.getPartitionId()
+          val pgen = new Ulid.Generator(seed = seedBase.map(s => s * 7368787L + pid))
+          it.map { case (aggId, v, disc) =>
+            EventRow(pgen.next(t), aggId, Fnv1a32.hashString(aggId), v + 1,
+              kind, noOp, "{}", disc, new Timestamp(t), 0, false)
           }
-        merged
-          .as[(String, Int, Map[String, String])]
-          .mapPartitions { it =>
-            val pid = org.apache.spark.TaskContext.getPartitionId()
-            val pgen = new Ulid.Generator(seed = seedBase.map(s => s * 7368787L + pid))
-            it.map { case (aggId, v, disc) =>
-              EventRow(pgen.next(t), aggId, Fnv1a32.hashString(aggId), v + 1,
-                kind, noOp, "{}", disc, new Timestamp(t), 0, false)
-            }
-          }
-          .checkpointOwned() // cut lineage off the files the append lands next to
-      }
-      commitMode match {
-        case CommitMode.Lock =>
-          val fences = computeFences()
-          val n = fences.count()
-          if (n > 0) writeEventsDF(fences.toDF())
-          n
-        case CommitMode.Manifest =>
-          // claim-fenced like every other manifest writer: reserve each
-          // fenced stream's next version so concurrent appends either see
-          // the reservation or lose the claim race; a lost race recomputes
-          // heads from the fresh chain. Reservations ride the claim TSV up
-          // to [[ManifestCommitLog.inlineClaimMaxStreams]] streams; beyond
-          // that they go to a parquet sidecar (the bulkImport mechanism) —
-          // a kind-wide fence pass over 10⁸ streams never folds its stream
-          // set into driver memory.
-          var attempts = 0
-          var res = -1L
-          while (res < 0 && attempts < 100) {
-            val tip = manifest.refresh()
-            val fences = phase("fences: compute+checkpoint")(computeFences())
-            // bounded decision probe (bulkImport's): at most inlineMax+1
-            // fence rows decide inline-vs-sidecar AND become the inline
-            // claim lines — no full count job, no second inline collect; a
-            // sidecar-scale pass gets its exact n from the sidecar write's
-            // own summary
-            val probe = phase("fences: bounded probe")(
-              fences.limit(ManifestCommitLog.inlineClaimMaxStreams + 1).collect())
-            if (probe.isEmpty) res = 0
-            else {
-              val useSidecar = probe.length > ManifestCommitLog.inlineClaimMaxStreams
-              val lines =
-                if (useSidecar) Map.empty[String, (Int, Int)]
-                else probe.map(e =>
-                  e.aggregate_id -> (e.aggregate_version - 1, e.aggregate_version)).toMap
-              val sidecar =
-                if (useSidecar) Some(phase("fences: sidecar write")(manifest.writeSidecar(
-                  fences.toDF().select(col("aggregate_id"),
-                    (col("aggregate_version") - 1).as("base"),
-                    col("aggregate_version").as("head")))))
-                else None
-              val n = sidecar.map(_._2).getOrElse(probe.length.toLong)
-              val c = CommitClaim(tip + 1, lines, Seq.empty, writerId,
-                System.currentTimeMillis(), done = false,
-                streamsRef = sidecar.map(_._1),
-                refCount = sidecar.map(_._2).getOrElse(0L),
-                refMaxHead = sidecar.map(_._3).getOrElse(0))
-              if (manifest.tryClaim(c)) {
-                phase("fences: bucketed write")(
-                  writeEventsDFIsolated(fences.toDF(), s"c${c.n}"))
-                phase("fences: markDone")(manifest.markDone(c.n))
-                res = n
-              } else {
-                // lost the race: the next lap recomputes fences from the
-                // fresh chain — reclaim this attempt's staged sidecar
-                sidecar.foreach(s0 => manifest.dropSidecar(s0._1))
-                attempts += 1
-              }
-            }
-          }
-          if (res < 0) throw new IllegalStateException(
-            s"appendNoOpFences lost $attempts claim races — giving up")
-          res
-      }
+        }
+        .toDF(), onePerStream = true)
     }
+  }
 
   /** Compaction: every append writes new files, so a hot log accumulates
     * small files (the classic small-files problem — fatal at 100 TB where
@@ -1714,10 +1412,6 @@ class EventLog(
       .groupMapReduce(_._1)(_._2)(math.max)
   }
 
-  private def filterDiscriminator(d: Map[String, String]): Map[String, String] =
-    if (discriminatorKeys.isEmpty) d
-    else d.view.filterKeys(k => discriminatorKeys.contains(k.toLowerCase)).toMap
-
   /** Every commit writes EXACTLY ONE id-sorted file per touched bucket:
     * live projectors read the log as a file stream, and a commit scattered
     * over several files per bucket can have those files straddle
@@ -1768,13 +1462,6 @@ class EventLog(
     if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile) else w
   }
 
-  private def writeEvents(rows: Seq[EventRow]): Unit = appendLaidOut(bucketedLocal(rows))
-
-  /** Distributed append of an already-distributed row set (same layout
-    * contract as [[writeEvents]], without a driver round-trip).
-    */
-  private def writeEventsDF(df: DataFrame): Unit = appendLaidOut(bucketed(df))
-
   private def appendLaidOut(laidOut: DataFrame): Unit = {
     partitionedWriter(laidOut).mode(SaveMode.Append).parquet(eventsPath)
     graft.sources.GraftMeta.write(spark, eventsPath, numBuckets)
@@ -1789,15 +1476,6 @@ class EventLog(
     * versions are already reserved and readers order by id/version, never
     * by file arrival.
     */
-  private def writeEventsIsolated(rows: Seq[EventRow], token: String): Unit =
-    stageAndMove(bucketedLocal(rows), token)
-
-  /** DataFrame form of [[writeEventsIsolated]] — the bulk writers' manifest
-    * path (claim-scoped staging + per-file moves, no shared `_temporary`).
-    */
-  private def writeEventsDFIsolated(df: DataFrame, token: String): Unit =
-    stageAndMove(bucketed(df), token)
-
   private def stageAndMove(laidOut: DataFrame, token: String): Unit = {
     val tmp = s"$eventsPath/.commit-tmp/$token"
     partitionedWriter(laidOut).mode(SaveMode.Overwrite).parquet(tmp)
@@ -1826,6 +1504,165 @@ class EventLog(
           .foreach(f => fs.rename(f.getPath, new Path(dest, s"$token-${f.getPath.getName}")): Unit)
       }
     fs.delete(staged, true): Unit
+  }
+
+  // ── the append-commit kernel ─────────────────────────────────────────────
+
+  /** One append attempt's rows: held on the driver (a point append) or
+    * distributed (checkpointed by [[commitAppend]], released on every
+    * exit). `onePerStream`: at most one row per stream, so the claim's
+    * reservations are a projection of the rows, not an aggregation.
+    */
+  private sealed trait Batch
+  private case class Held(rows: Seq[EventRow]) extends Batch
+  private case class Spread(rows: DataFrame, onePerStream: Boolean = false) extends Batch
+
+  /** An append guard's verdict: mint and commit, end the append with `n`
+    * rows, or wait a lap (a rival's fate is still undecided).
+    */
+  private sealed trait Gate
+  private case object Go extends Gate
+  private case object Wait extends Gate
+  private case class End(n: Long) extends Gate
+
+  /** A claim's version reservations, `(base, head]` per stream: inline
+    * claim lines, or a staged parquet sidecar `(name, count, max head)`.
+    */
+  private case class Reservation(inline: Map[String, (Int, Int)],
+      sidecar: Option[(String, Long, Int)] = None) {
+    def claim(n: Long, kind: String = CommitClaim.KindAppend, replaced: Seq[String] = Nil,
+        eventIds: Seq[String] = Nil, mark: Option[(String, Long)] = None): CommitClaim =
+      CommitClaim(n, inline, eventIds, writerId, System.currentTimeMillis(), done = false,
+        kind, replaced, mark.map(_._1), mark.fold(-1L)(_._2),
+        sidecar.map(_._1), sidecar.fold(0L)(_._2), sidecar.fold(0)(_._3))
+
+    /** Reclaims the sidecar of a claim that never won (else it would sit
+      * as an orphan until prune's staleness sweep).
+      */
+    def drop(): Unit = sidecar.foreach(s => manifest.dropSidecar(s._1))
+  }
+
+  /** The one reservation step of every claim that reserves versions: a
+    * bounded probe collects at most `inlineMax + 1` rows of `streams`
+    * `(aggregate_id, base, head)`. Up to the limit they ride the claim TSV;
+    * past it they go to a range-sorted parquet SIDECAR and the stream set
+    * never touches the driver — claim file and driver memory stay flat at
+    * 10⁸ streams.
+    */
+  private def reserve(op: String, streams: DataFrame): Reservation = {
+    val limit = ManifestCommitLog.inlineClaimMaxStreams
+    val probe = phase(s"$op: heads probe")(streams.limit(limit + 1).collect())
+    if (probe.length <= limit)
+      Reservation(probe.map(r => r.getString(0) -> (r.getInt(1), r.getInt(2))).toMap)
+    else Reservation(Map.empty, Some(phase(s"$op: sidecar write")(manifest.writeSidecar(streams))))
+  }
+
+  /** The one commit of every append — [[append]], [[bulkImport]],
+    * [[appendBulk]] and [[appendNoOpFences]] — and the only place an append
+    * branches on the commit mode. `mint(chain)` resolves the heads its rows
+    * continue from (committed parquet, max'ed with the chain's reservations
+    * when there is a chain) and mints them.
+    *  - Lock: inside the log lock, mint once and append: one id-sorted file
+    *    per touched bucket ([[bucketedLocal]] for held rows, [[bucketed]]
+    *    for distributed ones). The commit chain is never touched.
+    *  - Manifest: at most 100 attempts, each: refresh the chain, mint,
+    *    [[reserve]], claim the next slot, stage and move the rows under the
+    *    claim token, `markDone`. A lost claim race retries from fresh heads.
+    *    No lock: serializing writers through a JVM monitor would hide
+    *    exactly the cross-driver races (rival redeliveries, concurrent
+    *    imports) the chain must fence — the chain is the commit section.
+    *
+    * `guard` runs before minting (per attempt, after the refresh; once
+    * under the lock in Lock mode) and may end the append or wait a lap;
+    * `refuse` runs before claiming and throws to refuse it. Skip versus
+    * refuse: a guard's `End` is a successful no-op (a redelivered batch),
+    * a refusal is [[ConcurrentModificationException]] (a stream that must
+    * be new is not). Every exit that does not win a claim drops the
+    * attempt's sidecar, and every exit releases its checkpoint.
+    * `committed` runs once the rows are committed or the mint made none;
+    * `mark` is the ingest-ledger mark the claim carries. Returns the rows
+    * committed. Crash-hook labels are `"<op>: <step>"`.
+    */
+  private def commitAppend(op: String, mark: Option[(String, Long)] = None,
+      guard: Option[ManifestCommitLog] => Gate = _ => Go,
+      refuse: Reservation => Unit = _ => (),
+      committed: () => Unit = () => ())(mint: Option[ManifestCommitLog] => Batch): Long = {
+    // the batch and its row count; a distributed batch's count rides an
+    // `observe` tap on its checkpoint pass (no separate count job)
+    def minted[A](batch: Batch)(body: (Batch, Long) => A): A = batch match {
+      case Held(rows) => body(batch, rows.size.toLong)
+      case Spread(df, one) =>
+        val obs = Observation()
+        val cp = phase(s"$op: checkpoint rows")(
+          df.observe(obs, count(lit(1)).as("n")).checkpointOwned())
+        try body(Spread(cp, one), phase(s"$op: count")(obs.get("n").asInstanceOf[Long]))
+        finally Checkpoints.release(cp)
+    }
+    def laidOut(batch: Batch): DataFrame = batch match {
+      case Held(rows) => bucketedLocal(rows)
+      case Spread(df, _) => bucketed(df)
+    }
+    // reservations derive from the minted rows themselves (base = min
+    // version - 1), so a claim can never drift from what it writes
+    def reservation(batch: Batch): Reservation = batch match {
+      case Held(rows) => Reservation(rows.groupMapReduce(_.aggregate_id)(r =>
+        (r.aggregate_version - 1, r.aggregate_version)) {
+        case ((b1, h1), (b2, h2)) => (math.min(b1, b2), math.max(h1, h2))
+      })
+      case Spread(df, true) => reserve(op, df.select(col("aggregate_id"),
+        (col("aggregate_version") - 1).as("base"), col("aggregate_version").as("head")))
+      case Spread(df, false) => reserve(op, df.groupBy(col("aggregate_id"))
+        .agg((min(col("aggregate_version")) - 1).as("base"),
+          max(col("aggregate_version")).as("head")))
+    }
+    if (commitMode == CommitMode.Lock) withLogLock(path) {
+      guard(None) match {
+        case End(n) => n
+        case _ =>
+          val n = minted(mint(None)) { (batch, n) =>
+            if (n > 0) phase(s"$op: bucketed write")(appendLaidOut(laidOut(batch)))
+            n
+          }
+          committed()
+          n
+      }
+    } else {
+      var attempts = 0
+      while (attempts < 100) {
+        val tip = manifest.refresh()
+        guard(Some(manifest)) match {
+          case End(n) => return n
+          case Wait => Thread.sleep(100)
+          case Go =>
+            // Some(n) once committed, None on a lost claim race
+            val outcome = minted(mint(Some(manifest))) { (batch, n) =>
+              if (n == 0) Some(0L)
+              else {
+                val resv = reservation(batch)
+                var claimed = false
+                try {
+                  refuse(resv)
+                  val claim = resv.claim(tip + 1, mark = mark, eventIds = batch match {
+                    case Held(rows) => rows.map(_.id)
+                    case _ => Nil
+                  })
+                  claimed = manifest.tryClaim(claim)
+                  if (claimed) {
+                    phase(s"$op: bucketed write")(stageAndMove(laidOut(batch), s"c${claim.n}"))
+                    phase(s"$op: markDone")(manifest.markDone(claim.n))
+                  }
+                } finally if (!claimed) resv.drop()
+                if (claimed) Some(n) else None
+              }
+            }
+            outcome match {
+              case Some(n) => committed(); return n
+              case None => attempts += 1
+            }
+        }
+      }
+      throw new IllegalStateException(s"$op lost $attempts claim races — giving up")
+    }
   }
 
   // ── the copy-on-write rewrite kernel ─────────────────────────────────────
@@ -2018,15 +1855,6 @@ class EventLog(
 
   private def withLogLock[A](path: String)(f: => A): A =
     EventLog.withLogLock(path, spark.sessionState.newHadoopConf())(f)
-
-  /** Bulk writers serialize through the lock ONLY in Lock mode. In Manifest
-    * mode they are claim-fenced like [[append]] — serializing them through a
-    * JVM monitor would hide exactly the cross-driver races (rival
-    * redeliveries, concurrent imports) the chain must fence, and the chain,
-    * not the lock, is the commit section on object stores.
-    */
-  private def withBulkWriteGuard[A](f: => A): A =
-    if (commitMode == CommitMode.Lock) withLogLock(path)(f) else f
 
   private def addBucket(s: org.apache.spark.sql.types.StructType) =
     s.add("bucket", org.apache.spark.sql.types.IntegerType, nullable = true)

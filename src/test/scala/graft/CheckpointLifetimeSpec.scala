@@ -1,6 +1,6 @@
 package graft
 
-import graft.log.EventLog
+import graft.log.{AppendRecord, CommitClaim, CommitMode, ConcurrentModificationException, EventDetail, EventLog}
 import graft.ops.{Dedup, LshIndex, PhashIndex}
 import graft.store.EventStore
 import java.nio.file.Files
@@ -190,5 +190,35 @@ class CheckpointLifetimeSpec extends AnyFunSuite {
     }
     assertClean("pruneSnapshotted")(
       log.pruneSnapshotted(System.currentTimeMillis() + 60000))
+  }
+
+  test("the append writers release their minted batch in both commit modes, refusals included") {
+    val s = spark
+    import s.implicits._
+    def rows(prefix: String, n: Int) =
+      (1 to n).map(i => (s"$prefix-${i % 4}", "Account", "Deposited", s"""{"i":$i}""", i))
+        .toDF("aggregate_id", "aggregate_kind", "kind", "body", "seq")
+    Seq(CommitMode.Lock, CommitMode.Manifest).foreach { mode =>
+      val dir = Files.createTempDirectory("ckappend").toFile.getAbsolutePath
+      val log = new EventLog(spark, dir, numBuckets = 2, ulidSeed = Some(78L), commitMode = mode)
+      log.append(Seq(AppendRecord("seed-0", "Account", 0, Map.empty,
+        Seq(EventDetail("Created", "{}")))))
+      assertClean(s"bulkImport ($mode)")(assert(log.bulkImport(rows("imp", 8)) === 8L))
+      assertClean(s"appendBulk ($mode)")(
+        assert(log.appendBulk(rows("imp", 6), ledgerId = Some("ck"), batchId = 1L) === 6L))
+      assertClean(s"appendNoOpFences ($mode)")(assert(log.appendNoOpFences("Account") === 5L))
+      assertClean(s"refused bulkImport ($mode)")(
+        intercept[ConcurrentModificationException](log.bulkImport(rows("imp", 2))))
+    }
+    // a refusal AFTER minting: another driver's pending reservation on the
+    // imported stream (the parquet probe cannot see it, the chain refuses)
+    val dir = Files.createTempDirectory("ckrefuse").toFile.getAbsolutePath
+    val log = new EventLog(spark, dir, numBuckets = 2, ulidSeed = Some(79L),
+      commitMode = CommitMode.Manifest)
+    log.manifest.refresh(): Unit
+    assert(log.manifest.tryClaim(CommitClaim(1L, Map("held-0" -> (0, 3)), Seq.empty,
+      "other-driver", System.currentTimeMillis(), done = false)))
+    assertClean("bulkImport refused by a chain reservation")(
+      intercept[ConcurrentModificationException](log.bulkImport(rows("held", 4))))
   }
 }

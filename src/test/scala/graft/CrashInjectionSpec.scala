@@ -162,4 +162,86 @@ class CrashInjectionSpec extends AnyFunSuite {
       EventLog.crashHook = None
     }
   }
+
+  // a ledgered appendBulk's labels, in protocol order (all run at inlineMax 0)
+  private val bulkPoints = Seq(
+    "appendBulk: checkpoint rows", "appendBulk: count", "appendBulk: heads probe",
+    "appendBulk: sidecar write", "appendBulk: bucketed write", "appendBulk: markDone")
+
+  test("a ledgered appendBulk writer dies at every step: redelivery lands exactly once") {
+    val s = spark
+    import s.implicits._
+    sys.props("graft.bulkClaim.inlineMax") = "0"
+    try {
+      bulkPoints.foreach { point =>
+        val dir = Files.createTempDirectory("graftcrashbulk").toFile.getAbsolutePath
+        val log = newLog(dir, 65L)
+        (1 to 4).foreach(i => log.append(Seq(AppendRecord(s"ab-$i", "Account", 0,
+          Map.empty, Seq(EventDetail("Created", "{}"))))))
+        val batch = (1 to 12).map(i => (s"ab-${i % 4 + 1}", "Account", "Deposited",
+            s"""{"i":$i}""", i.toLong))
+          .toDF("aggregate_id", "aggregate_kind", "kind", "body", "seq")
+        def deliver(l: EventLog) = l.appendBulk(batch, ledgerId = Some("cdc"), batchId = 3L)
+
+        val seen = crashAt(point)(deliver(log))
+        assert(seen.contains(point),
+          s"phase '$point' never fired — label drift in EventLog?")
+
+        val fresh = newLog(dir, 66L)
+        fresh.manifest.prune(Map.empty, staleMs = 0L): Unit
+        def deposits = fresh.committedEvents.filter(col("kind") === "Deposited")
+        // every crash point precedes markDone: nothing of the batch is visible
+        assert(deposits.count() === 0L, s"crash at '$point' leaked a partial batch")
+
+        // redelivery lands exactly once; a second redelivery is a no-op
+        assert(deliver(fresh) === 12L, s"redelivery after '$point' must append the batch")
+        assert(deliver(fresh) === 0L)
+        assert(deposits.count() === 12L)
+        val all = fresh.committedEvents
+        assert(all.select("aggregate_id", "aggregate_version").distinct().count() === all.count())
+        assert(all.select("id").distinct().count() === all.count())
+      }
+    } finally {
+      sys.props.remove("graft.bulkClaim.inlineMax"): Unit
+      EventLog.crashHook = None
+    }
+  }
+
+  private val fencePoints = Seq(
+    "fences: checkpoint rows", "fences: count", "fences: heads probe",
+    "fences: sidecar write", "fences: bucketed write", "fences: markDone")
+
+  test("a NoOp fence pass dies at every step: no fence or one per stream, never a partial pass") {
+    sys.props("graft.bulkClaim.inlineMax") = "0"
+    try {
+      fencePoints.foreach { point =>
+        val dir = Files.createTempDirectory("graftcrashfence").toFile.getAbsolutePath
+        val log = newLog(dir, 67L)
+        val streams = (1 to 6).map(i => s"nf-$i")
+        streams.foreach(id => log.append(Seq(AppendRecord(id, "Account", 0,
+          Map.empty, Seq(EventDetail("Created", "{}"))))))
+
+        val seen = crashAt(point)(log.appendNoOpFences("Account"))
+        assert(seen.contains(point),
+          s"phase '$point' never fired — label drift in EventLog?")
+
+        val fresh = newLog(dir, 68L)
+        fresh.manifest.prune(Map.empty, staleMs = 0L): Unit
+        def fenced = fresh.activeEvents.filter(col("kind") === EventLog.KindNoOp)
+          .groupBy("aggregate_id").count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        val afterCrash = fenced
+        assert(afterCrash.isEmpty || afterCrash === streams.map(_ -> 1L).toMap,
+          s"crash at '$point' left a partial fence pass: $afterCrash")
+
+        if (afterCrash.isEmpty) assert(fresh.appendNoOpFences("Account") === 6L)
+        assert(fenced === streams.map(_ -> 1L).toMap, s"retry after '$point'")
+        val all = fresh.committedEvents
+        assert(all.select("aggregate_id", "aggregate_version").distinct().count() === all.count())
+      }
+    } finally {
+      sys.props.remove("graft.bulkClaim.inlineMax"): Unit
+      EventLog.crashHook = None
+    }
+  }
 }

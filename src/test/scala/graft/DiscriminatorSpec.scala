@@ -1,6 +1,6 @@
 package graft
 
-import graft.log.{DiscriminatorPolicy, EventLog}
+import graft.log.{AppendRecord, CommitMode, DiscriminatorPolicy, EventDetail, EventLog}
 import graft.store.EventStore
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
@@ -82,5 +82,29 @@ class DiscriminatorSpec extends AnyFunSuite {
     val d = log.activeEvents.select(col("discriminator")).head()
       .getAs[Map[String, String]]("discriminator")
     assert(d == Map("tenant" -> "hook-persist", "region" -> "eu"))
+  }
+
+  test("a declared key with upper-case letters is kept by every append path") {
+    val s = spark
+    import s.implicits._
+    Seq(CommitMode.Lock, CommitMode.Manifest).foreach { mode =>
+      val dir = Files.createTempDirectory("graftdisccase").toFile.getAbsolutePath
+      val log = new EventLog(spark, dir, numBuckets = 4, discriminatorKeys = Set("Tenant"),
+        ulidSeed = Some(10L), commitMode = mode)
+      val disc = Map("Tenant" -> "acme", "rogue" -> "1")
+      log.append(Seq(AppendRecord("dc-append", "Account", 0, disc,
+        Seq(EventDetail("Created", "{}")))))
+      def batch(id: String) = Seq((id, "Account", "Created", "{}", 1, disc))
+        .toDF("aggregate_id", "aggregate_kind", "kind", "body", "seq", "discriminator")
+      assert(log.bulkImport(batch("dc-import")) === 1L)
+      assert(log.appendBulk(batch("dc-bulk")) === 1L)
+      val stored = log.activeEvents.select("aggregate_id", "discriminator", "disc_Tenant")
+        .collect().map(r => r.getString(0) -> (r.getMap[String, String](1).toMap, r.getString(2)))
+        .toMap
+      Seq("dc-append", "dc-import", "dc-bulk").foreach { id =>
+        assert(stored(id) === (Map("Tenant" -> "acme") -> "acme"),
+          s"$mode $id: the declared key must survive the persist filter, the undeclared one not")
+      }
+    }
   }
 }

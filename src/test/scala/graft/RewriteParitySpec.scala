@@ -113,4 +113,52 @@ class RewriteParitySpec extends AnyFunSuite {
       }
     }
   }
+
+  private def appendView(log: EventLog) = log.committedEvents
+    .select("aggregate_id", "aggregate_version", "kind", "body", "discriminator", "migration")
+    .orderBy("aggregate_id", "aggregate_version").collect().toSeq
+
+  test("every append writer leaves identical committed rows in Lock and Manifest mode") {
+    val s = spark
+    import s.implicits._
+    val imported = (1 to 6).flatMap(i => (1 to 3).map(k => (f"new-$i%02d", "User",
+        if (k == 1) "Created" else "Renamed", s"""{"i":$i,"k":$k}""", k.toLong,
+        Map("tenant" -> s"t${i % 2}"))))
+      .toDF("aggregate_id", "aggregate_kind", "kind", "body", "seq", "discriminator")
+    // continues four fixture streams and one imported stream, opens one more
+    val batch = (streams.take(4).map(_ -> "Account") ++ Seq("new-02" -> "User",
+        "fresh-01" -> "Account")).zipWithIndex
+      .flatMap { case ((id, kind), i) =>
+        (1 to 2).map(k => (id, kind, "Deposited", s"""{"i":$i,"k":$k}""", k.toLong))
+      }
+      .toDF("aggregate_id", "aggregate_kind", "kind", "body", "seq")
+    def deliver(log: EventLog, at: Long) =
+      log.appendBulk(batch, nowMs = at, ledgerId = Some("parity"), batchId = 1L)
+    val appendSteps = Seq[(String, EventLog => Long, Long)](
+      ("bulkImport", _.bulkImport(imported, nowMs = t0 + 4 * hour), 18L),
+      ("appendBulk", deliver(_, t0 + 5 * hour), 12L),
+      ("redelivery", deliver(_, t0 + 6 * hour), 0L),
+      ("appendNoOpFences", _.appendNoOpFences("Account", nowMs = t0 + 7 * hour), 13L))
+    // the default limit keeps every reservation inline; 0 sends each bulk
+    // writer down its sidecar leg
+    Seq("default" -> None, "0" -> Some("0")).foreach { case (label, inlineMax) =>
+      inlineMax.foreach(sys.props("graft.bulkClaim.inlineMax") = _)
+      try {
+        val lock = fixture(CommitMode.Lock)
+        val manifest = fixture(CommitMode.Manifest)
+        appendSteps.foreach { case (name, run, n) =>
+          Seq(lock, manifest).foreach(log => assert(run(log) === n, s"$name (inlineMax $label)"))
+          assert(appendView(lock) === appendView(manifest),
+            s"$name (inlineMax $label): committed rows diverge")
+          for ((log, mode) <- Seq(lock -> "Lock", manifest -> "Manifest");
+               (id, rs) <- log.committedEvents.select("aggregate_id", "aggregate_version", "id")
+                 .collect().groupBy(_.getString(0))) {
+            val ids = rs.sortBy(_.getInt(1)).map(_.getString(2)).toSeq
+            assert(ids === ids.sorted.distinct,
+              s"$name ($mode, inlineMax $label): ids of $id do not ascend with version")
+          }
+        }
+      } finally sys.props.remove("graft.bulkClaim.inlineMax"): Unit
+    }
+  }
 }
