@@ -1220,8 +1220,7 @@ object SparkEntry {
     //    engine side runs the full trained lifecycle (Lloyd books over the
     //    corpus, build, code-only pre-rank, rescore); the oracle is the
     //    exact top-k SQL. Recall QUALITY of trained books is the
-    //    PipelineScaleSmoke floor; their plumbing correctness is gated
-    //    here.
+    //    `Scale ann` floor; their plumbing correctness is gated here.
     "e16_pqk_ann" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val idx = tempLogDir("grafte16")

@@ -726,7 +726,7 @@ object LshIndex {
         // full-grid (or past-cap) probes: a literal filter enumerating
         // every partition is strictly worse than no filter — it taxes the
         // planner and the file-listing without skipping anything (measured
-        // on PhashIndexScaleSmoke's 5k-probe × 256-bucket grid)
+        // on a 5k-probe × 256-bucket grid: git show aab9049:src/main/scala/graft/tools/PhashIndexScaleSmoke.scala)
         org.slf4j.LoggerFactory.getLogger(getClass).info(
           s"index probe touches > $pruneCap buckets; scanning the grid")
         idx

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   *
   * The ad-hoc image near-dup ([[Multimodal.phashNearDupPairs]], oracle
   * `mm6`) re-DECODES and re-hashes the whole image corpus per run — at
-  * 100 TB the decode (measured ~8.5 µs/image, MultimodalScaleSmoke) plus
+  * 100 TB the decode (~8.5 µs/image; `Scale linearity` times it) plus
   * the corpus-×-corpus self-join is the dominant cost even though a hash
   * is 16 bytes. This module persists the hashes once; every subsequent
   * screening batch decodes ONLY ITSELF and joins the persisted table.

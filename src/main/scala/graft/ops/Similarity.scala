@@ -158,7 +158,7 @@ object Similarity {
     * score is monotone in the approximated inner product, the standard
     * SQ-ANN trade: ~1/4 the memory bandwidth of float scan at a small recall
     * cost (measured recall@5 vs the exact inner-product ranking at 1M
-    * synthetic 64-dim vectors in tools/PipelineScaleSmoke).
+    * synthetic 64-dim vectors in `graft.tools.Scale ann`).
     * Output: qid, vec_id, qscore, rn.
     */
   def sqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
@@ -1784,8 +1784,8 @@ object Similarity {
     * on clustered corpora (the 1M-vector smoke needed rerank=64 to reach
     * its recall floor); Lloyd means minimize within-cell variance, which is
     * exactly the ADC approximation error, so trained books buy the same
-    * recall at a fraction of the exact-rescore slack — measured in
-    * PipelineScaleSmoke (k-means at rerank=16 ≥ seeded at rerank=64). Keep
+    * recall at a fraction of the exact-rescore slack — `Scale ann` floors
+    * k-means against seeded books at equal rerank (16 and 64). Keep
     * the seeded path for the DuckDB-oracle queries (e12/e13 pin it); this
     * one is graded by recall floors.
     *

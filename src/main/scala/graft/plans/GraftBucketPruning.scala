@@ -14,7 +14,9 @@ import org.apache.spark.sql.types.IntegerType
   * `_graft_meta.json` layout marker and (b) exposes the physical `bucket`
   * partition column, conjoin the implied `bucket = pmod(fnv1a32(id), n)`
   * predicate. FileSourceStrategy then classifies it as a partition filter and
-  * the scan lists one bucket directory instead of the whole log.
+  * prunes the scan's files to one bucket. The pruning runs after the
+  * relation's file index has listed the whole log, so the listing still
+  * grows with the log (the frame's `inputFiles` covers every file).
   *
   * Idempotent (derived conjuncts already present are never re-added), so it
   * is safe in a fixpoint batch. Register at session build via

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Persistent scale-tier generator: synthesize the full bench table set at
@@ -28,11 +27,7 @@ object GenScaleTier {
     require(args.length >= 2, "usage: GenScaleTier <baseDir> <outDir> [factor]")
     val (base, out) = (args(0), args(1))
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Scale.session("graft-genscaletier")
 
     def n(table: String): Long =
       spark.read.parquet(s"$base/$table.parquet").count() * factor

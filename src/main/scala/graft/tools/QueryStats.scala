@@ -106,15 +106,7 @@ object QueryStats {
     require(args.nonEmpty, "usage: QueryStats <sfDir> [q1,q2,...]")
     val dir = args(0)
     val only = args.lift(1).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-querystats")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Scale.session("graft-querystats")
     spark.sparkContext.setLogLevel("ERROR")
 
     val names = SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))

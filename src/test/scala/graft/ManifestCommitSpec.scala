@@ -75,7 +75,8 @@ class ManifestCommitSpec extends AnyFunSuite {
 
   test("racing writers commit safely: every commit lands, claims stay unique") {
     // 4 writers: 2-writer contention failed to surface the local-rename
-    // overwrite bug that 4-writer contention caught in ScaleSmoke — the
+    // overwrite bug that 4-writer contention caught in the retired
+    // ScaleSmoke (git show aab9049:src/main/scala/graft/tools/ScaleSmoke.scala) — the
     // claim primitive must be atomic-exclusive, and this is its fence
     val writers = 4
     val rounds = 3

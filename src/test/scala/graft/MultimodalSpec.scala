@@ -683,6 +683,20 @@ class MultimodalSpec extends AnyFunSuite {
     assert(pol.getString(5) === "quarantine:gif-unknown-frames")
   }
 
+  test("routeIntake is one partition-local pass: a scanned intake routes with zero exchanges") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("routeplan").toFile.getAbsolutePath
+    val rows = (0L until 8L).map(i => (i, longText(i.toInt)))
+    Multimodal.synthImages(packed(rows), format = "png").select(col("media_id"), col("img").as("content"))
+      .unionByName(Seq((100L, "no container".getBytes("UTF-8"))).toDF("media_id", "content"))
+      .write.parquet(s"$dir/in")
+    val routed = Multimodal.routeIntake(spark.read.parquet(s"$dir/in"), "content")
+    val plan = routed.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), plan)
+    assert(routed.count() == 9L)
+  }
+
   test("routeIntake: animated GIFs are DECIDED video (policy v3); v2 history reproducible") {
     val s = spark
     import s.implicits._

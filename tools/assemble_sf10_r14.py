@@ -17,7 +17,8 @@ out = {
              "d17/d18 (LSH build+ingest+forget) and e11/e13 (IVF-SQ8/PQ ANN) "
              "at sf0.1/sf1/sf10, one boot per tier after a /tmp sweep; plus "
              "the ownership/pending-build protocol exercised at sf10 "
-             "(IndexProtocolSmoke)"),
+             "(IndexProtocolSmoke, now fenced by IndexLifecycleSpec; "
+             "git show aab9049:src/main/scala/graft/tools/IndexProtocolSmoke.scala)"),
     "commit": b10.get("commit"),
     "calibration_sec": {"sf01": b01.get("calibration_sec"),
                         "sf1": b1.get("calibration_sec"),

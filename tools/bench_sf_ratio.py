@@ -3,7 +3,8 @@
 tier) per query: emit a combined artifact with per-query times and ratios,
 sorted by ratio descending, and flag queries whose scale-up exceeds the
 bound (default: data factor x 1.4 shuffle/scheduling slack — the
-BenchScaleSmoke linearity fence applied to the full query set).
+linearity fence of the retired BenchScaleSmoke,
+git show aab9049:src/main/scala/graft/tools/BenchScaleSmoke.scala, applied to the full query set).
 
 usage: bench_sf_ratio.py <base.json> <scaled.json> <out.json> [factor]
 """
