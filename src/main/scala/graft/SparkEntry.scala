@@ -1139,7 +1139,8 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val idx = tempLogDir("grafte21")
       ops.Similarity.buildIvfIndex(emb.filter(pmod(col("vec_id"), lit(2)) === 0),
-        "vec_id", "embedding", idx, nlist = 8, depth = Some(16))
+        "vec_id", "embedding", idx, nlist = 8,
+        codec = ops.Similarity.IvfCodec.Raw(depth = Some(16)))
       ops.Similarity.appendToIvfIndex(s, idx,
         emb.filter(pmod(col("vec_id"), lit(2)) === 1), "vec_id", "embedding")
       val queries = emb.filter(col("vec_id") < 20)
@@ -1226,9 +1227,9 @@ object SparkEntry {
       val idx = tempLogDir("grafte16")
       val books = ops.Similarity.pqCodebooksKmeans(emb,
         "vec_id", "embedding", m = 8, kc = 16, iters = 4)
-      ops.Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", idx,
-        nlist = 8, m = 8, kc = 16, codebooks = Some(books))
-      ops.Similarity.ivfPqTopKIndexed(s, idx,
+      ops.Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx, nlist = 8,
+        codec = ops.Similarity.IvfCodec.Pq(m = 8, kc = 16, codebooks = Some(books)))
+      ops.Similarity.ivfProbe(s, idx,
         emb.filter(col("vec_id").between(100, 109)),
         "vec_id", "embedding", k = 3, nprobe = 8, rerank = 1000000)
     }),
@@ -1248,9 +1249,9 @@ object SparkEntry {
     "e17_semdedup_screen" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val idx = tempLogDir("grafte17")
-      ops.Similarity.buildIvfSqIndex(
+      ops.Similarity.buildIvfIndex(
         emb.filter(pmod(col("vec_id"), lit(2)) === 0),
-        "vec_id", "embedding", idx, nlist = 8)
+        "vec_id", "embedding", idx, nlist = 8, codec = ops.Similarity.IvfCodec.Sq())
       ops.Similarity.semScreen(s, idx,
         emb.filter(pmod(col("vec_id"), lit(2)) === 1 && col("vec_id") < 200),
         "vec_id", "embedding", threshold = 0.3, nprobe = 8, rerank = 1000000)
@@ -1272,11 +1273,12 @@ object SparkEntry {
     "e18_ivf_forget" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val idx = tempLogDir("grafte18")
-      ops.Similarity.buildIvfSqIndex(emb, "vec_id", "embedding", idx, nlist = 8)
+      ops.Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx, nlist = 8,
+        codec = ops.Similarity.IvfCodec.Sq())
       ops.Similarity.forgetFromIvfIndex(s, idx,
         emb.filter(pmod(col("vec_id"), lit(3)) === 0).select(col("vec_id")),
         "vec_id")
-      ops.Similarity.ivfSqTopKIndexed(s, idx,
+      ops.Similarity.ivfProbe(s, idx,
         emb.filter(col("vec_id").between(100, 109)),
         "vec_id", "embedding", k = 3, nprobe = 8, rerank = 1000000)
     }),
@@ -1298,11 +1300,12 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val idx = tempLogDir("grafte11")
       val cents = ops.Similarity.defaultCentroids(emb, "vec_id", "embedding", 8)
-      ops.Similarity.buildIvfSqIndex(emb.filter(pmod(col("vec_id"), lit(2)) === 0),
-        "vec_id", "embedding", idx, nlist = 8, centroids = Some(cents))
-      ops.Similarity.appendToIvfSqIndex(s, idx,
+      ops.Similarity.buildIvfIndex(emb.filter(pmod(col("vec_id"), lit(2)) === 0),
+        "vec_id", "embedding", idx, nlist = 8, centroids = Some(cents),
+        codec = ops.Similarity.IvfCodec.Sq())
+      ops.Similarity.appendToIvfIndex(s, idx,
         emb.filter(pmod(col("vec_id"), lit(2)) === 1), "vec_id", "embedding")
-      ops.Similarity.ivfSqTopKIndexed(s, idx,
+      ops.Similarity.ivfProbe(s, idx,
         emb.filter(col("vec_id").between(100, 109)),
         "vec_id", "embedding", k = 3, nprobe = 2, rerank = 4)
     }),
@@ -1318,12 +1321,12 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val idx = tempLogDir("grafte15")
       val cents = ops.Similarity.defaultCentroids(emb, "vec_id", "embedding", 8)
-      ops.Similarity.buildIvfSqIndex(emb.filter(pmod(col("vec_id"), lit(2)) === 0),
+      ops.Similarity.buildIvfIndex(emb.filter(pmod(col("vec_id"), lit(2)) === 0),
         "vec_id", "embedding", idx, nlist = 8, centroids = Some(cents),
-        normalize = true)
-      ops.Similarity.appendToIvfSqIndex(s, idx,
+        codec = ops.Similarity.IvfCodec.Sq(normalize = true))
+      ops.Similarity.appendToIvfIndex(s, idx,
         emb.filter(pmod(col("vec_id"), lit(2)) === 1), "vec_id", "embedding")
-      ops.Similarity.ivfSqTopKIndexed(s, idx,
+      ops.Similarity.ivfProbe(s, idx,
         emb.filter(col("vec_id").between(100, 109)),
         "vec_id", "embedding", k = 3, nprobe = 2, rerank = 4)
     }),
@@ -1337,12 +1340,12 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val idx = tempLogDir("grafte13")
       val cents = ops.Similarity.defaultCentroids(emb, "vec_id", "embedding", 8)
-      ops.Similarity.buildIvfPqIndex(emb.filter(pmod(col("vec_id"), lit(2)) === 0),
-        "vec_id", "embedding", idx, nlist = 8, m = 8, kc = 16,
-        centroids = Some(cents))
-      ops.Similarity.appendToIvfPqIndex(s, idx,
+      ops.Similarity.buildIvfIndex(emb.filter(pmod(col("vec_id"), lit(2)) === 0),
+        "vec_id", "embedding", idx, nlist = 8, centroids = Some(cents),
+        codec = ops.Similarity.IvfCodec.Pq(m = 8, kc = 16))
+      ops.Similarity.appendToIvfIndex(s, idx,
         emb.filter(pmod(col("vec_id"), lit(2)) === 1), "vec_id", "embedding")
-      ops.Similarity.ivfPqTopKIndexed(s, idx,
+      ops.Similarity.ivfProbe(s, idx,
         emb.filter(col("vec_id").between(100, 109)),
         "vec_id", "embedding", k = 3, nprobe = 2, rerank = 4)
     }),

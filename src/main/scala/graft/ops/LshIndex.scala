@@ -129,7 +129,7 @@ object LshIndex {
   /** Build and persist the index over `corpus`. Overwrites any previous
     * index at `path` (including pending ingest and its replay markers —
     * a rebuild starts the streaming story from scratch, same contract as
-    * [[Similarity.buildIvfIndex]]). Like the IVF builds, NOT
+    * [[Similarity.buildIvfIndex]]). Like the IVF build, NOT
     * reader-concurrent (it rewrites `sigs/` in place) and not silently
     * crash-recoverable: a build that dies mid-way leaves the mutation
     * fence held, so every subsequent mutator refuses until the operator

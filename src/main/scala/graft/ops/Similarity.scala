@@ -270,9 +270,13 @@ object Similarity {
     // matrix anyway, and sharing it gives the probe side its truncation
     // depth driver-side at no extra job (r17 opt)
     val pre = collectCentroids(cents)
-    ivfTopKJoin(
-      assignCells(corpus, idCol, vecCol, cents, "vec_id", "ce", 1, Some(pre)),
-      assignCells(queries, idCol, vecCol, cents, "qid", "qe", nprobe, Some(pre)), k)
+    // equi-join on the cell key, exact cosine inside the candidate sliver
+    rankWithin(assignCells(corpus, idCol, vecCol, cents, "vec_id", "ce", 1, Some(pre))
+        .join(broadcast(assignCells(queries, idCol, vecCol, cents, "qid", "qe",
+          nprobe, Some(pre))), Seq("cell"))
+        .filter(col("vec_id") =!= col("qid"))
+        .withColumn("sim", exactSim), "sim", ascending = false, k)
+      .select("qid", "vec_id", "sim", "rn")
   }
 
 
@@ -318,6 +322,12 @@ object Similarity {
     (ids, mat)
   }
 
+  /** The nearest centroid's id: the codegen'd kernel's 0-based winner
+    * looked up in the cent_id-sorted id array.
+    */
+  private def cellOf(v: Column, ids: Column, mat: Array[Array[Double]]): Column =
+    element_at(ids, graft.functions.nearest_centroid(v, mat).getField("idx") + 1)
+
   /** Assign each vector to its `nCells` nearest centroid cells.
     *
     * `nCells == 1` (the CORPUS side: ivfTopK, buildIvfIndex,
@@ -345,9 +355,7 @@ object Similarity {
       val (ids, mat) = pre.getOrElse(collectCentroids(cents))
       df.select(col(idCol).as(outId),
           asDouble(slice(col(vecCol), 1, mat(0).length)).as(outVec))
-        .select(col(outId), col(outVec),
-          element_at(ids, graft.functions.nearest_centroid(col(outVec), mat)
-            .getField("idx") + 1).as("cell"))
+        .select(col(outId), col(outVec), cellOf(col(outVec), ids, mat).as("cell"))
     } else {
       // the matryoshka truncation depth (all centroids share the dims)
       // resolves DRIVER-SIDE at zero jobs — from the caller's collected
@@ -378,20 +386,6 @@ object Similarity {
         .filter(col("crn") <= nCells)
         .select(col(outId), col(outVec), col("cent_id").as("cell"))
     }
-  }
-
-  /** Probe assigned corpus cells with assigned query cells: equi-join on the
-    * cell key, exact cosine inside the candidate sliver, per-query top-k.
-    */
-  private def ivfTopKJoin(corpusCells: DataFrame, queryCells: DataFrame,
-      k: Int): DataFrame = {
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
-    corpusCells.join(broadcast(queryCells), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("sim", round(cosine(col("qe"), col("ce")), 6))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-      .select("qid", "vec_id", "sim", "rn")
   }
 
   // ── index mutation fence ──────────────────────────────────────────────
@@ -582,19 +576,22 @@ object Similarity {
     }
   }
 
-  /** A from-scratch build over a previously-reclustered path resets the
-    * geometry history: without this, the fresh legacy-layout write would be
-    * INVISIBLE behind the old version markers. Build-time only (inside the
-    * build's mutation fence).
+  /** A from-scratch build over a previous index resets its geometry
+    * history — without this, the fresh legacy-layout write would be
+    * INVISIBLE behind the old version markers — and deletes every codec's
+    * parameter files, so a rebuild with another codec never reads back as
+    * the old one. Build-time only (inside the build's mutation fence, after
+    * its pending-build marker).
     */
-  private def clearGeometryVersions(spark: org.apache.spark.sql.SparkSession,
+  private def clearPreviousBuild(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(root)) fs.listStatus(root).foreach { st =>
       val n = st.getPath.getName
       if (n.startsWith("_geom.") || n.startsWith("cells@") ||
-        n.startsWith("centroids@")) fs.delete(st.getPath, true): Unit
+        n.startsWith("centroids@") || codecParamFiles.contains(n))
+        fs.delete(st.getPath, true): Unit
     }
   }
 
@@ -632,225 +629,237 @@ object Similarity {
     }
   }
 
-  /** Build and PERSIST an IVF index: `path/centroids` (nlist rows) and
-    * `path/cells` (one row per corpus vector, parquet PARTITIONED BY the
-    * cell id). This is the production similarity shape at 100 TB — the
-    * corpus is assigned once, queries only ever read the `nprobe` cell
-    * partitions they hash to (the cell partition column turns the probe's
-    * equi-join into parquet partition pruning), and new vectors append
-    * incrementally without touching existing cells. Centroids default to
-    * the deterministic first-nlist seed; pass [[kmeansCentroids]] (trained
-    * on a sample) for refined cells.
+  // ── persisted IVF index: one codec, one build, one append, one probe ──
+
+  /** How a persisted IVF index stores its vectors — chosen ONCE at build
+    * ([[buildIvfIndex]]'s `codec`) and read back from the index's own
+    * parameter files by every append and probe, so no caller repeats the
+    * choice. A codec owns three things: its build-time parameter files,
+    * the zero-shuffle encode projection (cell plus codes) and the probe's
+    * pre-rank score with its sort direction. Every layout shares the cell
+    * table `(vec_id, ce, [codes], cell)` PARTITIONED BY cell and the
+    * `centroids` table; the codec adds at most one code column and its
+    * parameter files. Coarse centroids and every codec parameter FREEZE at
+    * build, so appended assignments and codes stay comparable with the
+    * build (the e11/e13 oracles re-derive them from the even half only).
     */
-  /** `depth` (matryoshka/MRL truncation — the [[matryoshkaRecall]] e20
-    * decision table's consumer): store only each vector's leading `depth`
-    * components. Centroids and cell rows persist truncated — a depth-16
-    * index over 64-dim embeddings is 4× smaller and its probes score 4×
-    * fewer multiplies — and the depth travels as the CENTROID
-    * dimensionality itself, so every probe and append auto-truncates its
-    * vectors to the stored prefix (no side metadata). Cosine
-    * self-normalizes per prefix, so truncation is a pure slice.
+  sealed trait IvfCodec {
+    /** The vectors entering build, append and probe (before assignment). */
+    private[Similarity] def prepare(df: DataFrame, vecCol: String): DataFrame = df
+    /** The build's centroid frame as persisted. */
+    private[Similarity] def centroidsOf(cents: DataFrame): DataFrame = cents
+    /** Write the parameter files at build; the codec as persisted. */
+    private[Similarity] def persist(corpus: DataFrame, idCol: String,
+        vecCol: String, path: String): IvfCodec = this
+    /** `(vec_id, ce, [codes], cell)` in ONE zero-shuffle projection: the
+      * cell is the codegen'd nearest-centroid kernel, the codes the codec's
+      * transform of the same scanned row — the corpus is never shuffled.
+      */
+    private[Similarity] def encode(df: DataFrame, idCol: String, vecCol: String,
+        cents: DataFrame, path: String): DataFrame
+    /** The probe side `(qid, cell, …)` with the query's pre-rank key. */
+    private[Similarity] def probeKeys(q: DataFrame, path: String): DataFrame
+    /** The columns of a cell scan the pre-rank reads. */
+    private[Similarity] def codes(cells: DataFrame): DataFrame
+    private[Similarity] def score: Column
+    private[Similarity] def ascending: Boolean = false
+  }
+
+  object IvfCodec {
+    /** Float vectors only; the probe is the exact in-cell cosine scan.
+      * `depth` (matryoshka/MRL truncation — the [[matryoshkaRecall]] e20
+      * decision table's consumer) stores only each vector's leading `depth`
+      * components: centroids and cell rows persist truncated — a depth-16
+      * index over 64-dim embeddings is 4× smaller and its probes score 4×
+      * fewer multiplies — and the depth travels as the CENTROID
+      * dimensionality itself, so every probe and append auto-truncates its
+      * vectors to the stored prefix (no side metadata). Cosine
+      * self-normalizes per prefix, so truncation is a pure slice.
+      */
+    final case class Raw(depth: Option[Int] = None) extends IvfCodec {
+      depth.foreach(d => require(d > 0, s"depth must be positive, got $d"))
+      override private[Similarity] def centroidsOf(cents: DataFrame) =
+        depth.fold(cents)(d => cents.withColumn("cent", slice(col("cent"), 1, d)))
+      private[Similarity] def encode(df: DataFrame, idCol: String, vecCol: String,
+          cents: DataFrame, path: String) =
+        assignCells(df, idCol, vecCol, cents, "vec_id", "ce", 1)
+      private[Similarity] def probeKeys(q: DataFrame, path: String) = q
+      private[Similarity] def codes(cells: DataFrame) =
+        cells.select(col("vec_id"), col("ce"), col("cell"))
+      private[Similarity] def score = exactSim
+    }
+
+    /** Signed-symmetric SQ8 (the FAISS IVF-SQ design, public technique): an
+      * int8 code column `cq` and the global scale at `path/sq_scale`. The
+      * probe's in-cell scan reads the codes only (4× fewer bytes than
+      * float32) and pre-ranks by the integer dot product.
+      *
+      * `normalize = true` L2-normalizes vectors BEFORE the scale/codes: the
+      * int8 dot product then approximates COSINE, not the inner product, so
+      * on corpora with varying vector norms the pre-rank can no longer be
+      * crowded by large-norm vectors with mediocre angles (the final metric
+      * is cosine either way — the flag only changes what the compressed
+      * pre-rank preserves). The flag persists at `path/sq_meta`; appends and
+      * probes normalize their side too.
+      */
+    final case class Sq(normalize: Boolean = false) extends IvfCodec {
+      override private[Similarity] def prepare(df: DataFrame, vecCol: String) =
+        if (normalize) withNormalized(df, vecCol) else df
+      override private[Similarity] def persist(corpus: DataFrame, idCol: String,
+          vecCol: String, path: String) = {
+        val spark = corpus.sparkSession
+        import spark.implicits._
+        sqScale(sqBounds(corpus, vecCol)).write.mode("overwrite")
+          .parquet(s"$path/sq_scale")
+        Seq(normalize).toDF("normalized").write.mode("overwrite")
+          .parquet(s"$path/sq_meta")
+        this
+      }
+      // the scale is read back from its persisted row even at build: the
+      // one source of truth every append and probe reads
+      private def scale(spark: org.apache.spark.sql.SparkSession, path: String) =
+        broadcast(readSmall(spark, s"$path/sq_scale"))
+      private[Similarity] def encode(df: DataFrame, idCol: String, vecCol: String,
+          cents: DataFrame, path: String) = {
+        val (ids, mat) = collectCentroids(cents)
+        df.crossJoin(scale(df.sparkSession, path))
+          .select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("ce"), col("__s"))
+          .select(col("vec_id"), col("ce"),
+            transform(sqLevels(col("ce"), col("__s")), x => x.cast("tinyint")).as("cq"),
+            cellOf(col("ce"), ids, mat).as("cell"))
+      }
+      private[Similarity] def probeKeys(q: DataFrame, path: String) =
+        q.crossJoin(scale(q.sparkSession, path))
+          .select(col("qid"), col("qe"), col("cell"),
+            sqLevels(col("qe"), col("__s")).as("qq"))
+      private[Similarity] def codes(cells: DataFrame) = cells.select(col("vec_id"),
+        transform(col("cq"), x => x.cast("long")).as("cq"), col("cell"))
+      private[Similarity] def score = aggregate(
+        zip_with(col("cq"), col("qq"), (a, b) => a * b), lit(0L), (acc, x) => acc + x)
+    }
+
+    /** Product quantization (the FAISS IVF-PQ design): `m` one-byte codes
+      * per vector in a `code` column (8 B/vector at the defaults — 32× less
+      * than float32) and the codebooks at `path/books`, seeded from the
+      * build corpus unless `codebooks` is given ([[pqCodebooksKmeans]] for
+      * trained books). The probe scans the codes only and pre-ranks by ADC
+      * table-lookup sums, ascending.
+      */
+    final case class Pq(m: Int = 8, kc: Int = 16,
+        codebooks: Option[Array[Array[Array[Double]]]] = None) extends IvfCodec {
+      private def books = codebooks.getOrElse(
+        throw new IllegalStateException("PQ codebooks are resolved at build"))
+      override private[Similarity] def persist(corpus: DataFrame, idCol: String,
+          vecCol: String, path: String) = {
+        val b = codebooks.getOrElse(pqCodebooks(corpus, idCol, vecCol, m, kc))
+        writeBooks(corpus.sparkSession, b, s"$path/books")
+        copy(codebooks = Some(b))
+      }
+      private[Similarity] def encode(df: DataFrame, idCol: String, vecCol: String,
+          cents: DataFrame, path: String) = {
+        val (ids, mat) = collectCentroids(cents)
+        val v = asDouble(col(vecCol))
+        df.select(col(idCol).as("vec_id"), v.as("ce"),
+          graft.functions.pq_codes(v, books).as("code"), cellOf(v, ids, mat).as("cell"))
+      }
+      private[Similarity] def probeKeys(q: DataFrame, path: String) =
+        q.select(col("qid"), col("cell"), pqQueryTable(col("qe"), books).as("qt"))
+      private[Similarity] def codes(cells: DataFrame) =
+        cells.select(col("vec_id"), col("code"), col("cell"))
+      private[Similarity] def score = pqAdcDist(col("code"), col("qt"))
+      override private[Similarity] def ascending = true
+    }
+  }
+
+  /** Every codec's parameter files: a rebuild deletes them all, so a
+    * rebuild with a different codec never leaves the old one's behind for
+    * [[ivfIndexCodec]] to read.
+    */
+  private val codecParamFiles = Seq("books", "sq_scale", "sq_meta")
+
+  /** The codec a persisted index was built with, from its parameter files
+    * (`books` → PQ, `sq_scale` → SQ8, neither → float). Read once per entry
+    * point, after its geometry snapshot (which refuses a half-written build).
+    */
+  private def ivfIndexCodec(spark: org.apache.spark.sql.SparkSession,
+      path: String): IvfCodec = {
+    val conf = spark.sessionState.newHadoopConf()
+    def has(sub: String) = {
+      val p = new org.apache.hadoop.fs.Path(s"$path/$sub")
+      p.getFileSystem(conf).exists(p)
+    }
+    if (has("books")) {
+      val b = readBooks(spark, s"$path/books")
+      IvfCodec.Pq(b.length, b(0).length, Some(b))
+    } else if (has("sq_scale")) IvfCodec.Sq(normalize = has("sq_meta") && {
+      // indexes written before the flag existed read as un-normalized; ONLY
+      // absence maps to false — a corrupt flag file propagates from the
+      // parquet reader, because treating a normalized index as raw would
+      // write un-normalized vectors and codes into it: a permanent,
+      // unsignalled recall loss instead of a retryable error
+      val (schema, rows) = org.apache.spark.sql.graftbridge.Bridge
+        .localParquetRows(spark, s"$path/sq_meta")
+      !rows.isEmpty && rows.get(0).getBoolean(schema.fieldIndex("normalized"))
+    })
+    else IvfCodec.Raw()
+  }
+
+  /** The exact similarity every probe ranks its final top-k by. */
+  private def exactSim: Column = round(cosine(col("qe"), col("ce")), 6)
+
+  /** Build and PERSIST an IVF index: `path/centroids` (nlist rows), the
+    * codec's parameter files, and `path/cells` (one row per corpus vector,
+    * parquet PARTITIONED BY the cell id). This is the production
+    * similarity shape at 100 TB — the corpus is assigned once, queries only
+    * ever read the `nprobe` cell partitions they hash to (the cell
+    * partition column turns the probe's equi-join into parquet partition
+    * pruning), and new vectors append incrementally without touching
+    * existing cells. Centroids default to the deterministic first-nlist
+    * seed; pass [[kmeansCentroids]] (trained on a sample) for refined
+    * cells. `codec` picks the layout ([[IvfCodec]]); a rebuild at the same
+    * path first deletes the previous build's geometry versions, ingest
+    * state and every codec's parameter files.
     */
   def buildIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
       path: String, nlist: Int = 8,
       centroids: Option[DataFrame] = None,
-      depth: Option[Int] = None): Unit =
+      codec: IvfCodec = IvfCodec.Raw()): Unit =
     withIndexMutation(corpus.sparkSession, path, "buildIvfIndex") {
-      depth.foreach(d => require(d > 0, s"depth must be positive, got $d"))
-      IndexLifecycle.beginBuild(corpus.sparkSession, path)
-      IndexLifecycle.clearIngestState(corpus.sparkSession, path)
-      clearGeometryVersions(corpus.sparkSession, path)
-      val src = depth.fold(corpus)(d =>
-        corpus.withColumn(vecCol, slice(col(vecCol), 1, d)))
-      val cents0 = centroids.getOrElse(defaultCentroids(src, idCol, vecCol, nlist))
-      val cents = depth.fold(cents0)(d =>
-        cents0.withColumn("cent", slice(col("cent"), 1, d)))
+      val spark = corpus.sparkSession
+      IndexLifecycle.beginBuild(spark, path)
+      IndexLifecycle.clearIngestState(spark, path)
+      clearPreviousBuild(spark, path)
+      val src = codec.prepare(corpus, vecCol)
+      val cents = codec.centroidsOf(
+        centroids.getOrElse(defaultCentroids(src, idCol, vecCol, nlist)))
       cents.write.mode("overwrite").parquet(s"$path/centroids")
-      assignCells(src, idCol, vecCol, cents, "vec_id", "ce", 1)
+      codec.persist(src, idCol, vecCol, path)
+        .encode(src, idCol, vecCol, cents, path)
         .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
-      IndexLifecycle.endBuild(corpus.sparkSession, path)
+      IndexLifecycle.endBuild(spark, path)
     }
 
-  /** Incrementally index a new vector batch: assign against the PERSISTED
-    * centroids (so assignments agree with the build) and append to the cell
-    * table — existing cell files are never rewritten, the ingest-side cost
-    * is one broadcast join + one partitioned append per batch.
+  /** A batch encoded against the index's PERSISTED centroids and codec
+    * parameters (both frozen at build): the one encode every append runs.
+    * Values outside an SQ8 build range clamp to ±127, exactly what the
+    * probe-side quantizer does.
+    */
+  private def encodeBatch(spark: org.apache.spark.sql.SparkSession, path: String,
+      g: GeomSnapshot, batch: DataFrame, idCol: String, vecCol: String): DataFrame = {
+    val codec = ivfIndexCodec(spark, path)
+    codec.encode(codec.prepare(batch, vecCol), idCol, vecCol,
+      readSmall(spark, g.centroids), path)
+  }
+
+  /** Incrementally index a new vector batch into the main cell table —
+    * existing cell files are never rewritten; the ingest-side cost is one
+    * zero-shuffle encode + one partitioned append per batch.
     */
   def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, idCol: String, vecCol: String): Unit =
     withIndexMutation(spark, path, "appendToIvfIndex") {
       val g = snapshotGeometry(spark, path)
-      val cents = readSmall(spark, g.centroids)
-      assignCells(batch, idCol, vecCol, cents, "vec_id", "ce", 1)
-        .write.mode("append").partitionBy("cell").parquet(g.cells)
-    }
-
-  /** ANN top-k against a persisted index: queries assign to their `nprobe`
-    * cells against the loaded centroids, then probe the cell table — the
-    * broadcast equi-join on the PARTITION column lets dynamic partition
-    * pruning skip every unprobed cell's files, so query cost scales with
-    * `nprobe / nlist` of the corpus, not the corpus.
-    */
-  def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      nprobe: Int = 2, excludeBatch: Option[Long] = None): DataFrame = {
-    val g = snapshotGeometry(spark, path)
-    val cents = readSmall(spark, g.centroids)
-    val q = assignCells(queries, idCol, vecCol, cents, "qid", "qe", nprobe)
-    val base = spark.read.parquet(g.cells)
-      .select(col("vec_id"), col("ce"), col("cell"))
-    // ingested-but-uncompacted vectors are probe-visible here too (per-side
-    // join under the final window, matching ivfSqTopKIndexed's shape)
-    ingestCells(spark, path, excludeBatch) match {
-      case None => ivfTopKJoin(base, q, k)
-      case Some(i) =>
-        val w = Window.partitionBy(col("qid"))
-          .orderBy(col("sim").desc, col("vec_id"))
-        def scoredOf(df: DataFrame) = df.join(broadcast(q), Seq("cell"))
-          .filter(col("vec_id") =!= col("qid"))
-          .withColumn("sim", round(cosine(col("qe"), col("ce")), 6))
-          .select(col("qid"), col("vec_id"), col("sim"))
-        scoredOf(base)
-          .unionByName(scoredOf(i.select(col("vec_id"), col("ce"), col("cell"))))
-          .withColumn("rn", row_number().over(w).cast("long"))
-          .filter(col("rn") <= k)
-          .select("qid", "vec_id", "sim", "rn")
-    }
-  }
-
-  /** The uncompressed-index twin of [[appendBatchToIvfSqIndex]]: an
-    * IDEMPOTENT per-micro-batch append into `path/ingest` partitioned by
-    * `(b=batchId, cell)` with dynamic overwrite, against the FROZEN
-    * build-time centroids. Same layout, same [[compactIvfIngest]] fold,
-    * same folded-batch replay guard — a user who starts on the plain float
-    * index ([[buildIvfIndex]]) and later migrates to SQ8/PQ never changes
-    * ingestion topology, only the build call.
-    */
-  def appendBatchToIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: DataFrame, idCol: String, vecCol: String,
-      batchId: Long, owner: Option[String] = None): Unit =
-    withIndexMutation(spark, path, s"appendBatchToIvfIndex b=$batchId",
-        reclaimSameOp = true) {
-      IndexLifecycle.checkOwner(spark, path, owner)
-      if (batchFolded(spark, path, batchId)) ()
-      else {
-        IndexLifecycle.guardBatchId(spark, path, batchId)
-        val cents = readSmall(spark, snapshotGeometry(spark, path).centroids)
-        assignCells(batch, idCol, vecCol, cents, "vec_id", "ce", 1)
-          .withColumn("b", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("b", "cell").parquet(s"$path/ingest")
-      }
-    }
-
-  /** Assign + quantize in ONE zero-shuffle projection: the cell id is the
-    * codegen'd nearest-centroid kernel, the SQ8 code is the level transform,
-    * both over the same scanned row (the scale is one broadcast row). This
-    * is the IVF-SQ build/append scan — corpus touched once, never joined.
-    */
-  private def assignCellsSq(df: DataFrame, idCol: String, vecCol: String,
-      cents: DataFrame, scale: DataFrame): DataFrame = {
-    val (ids, mat) = collectCentroids(cents)
-    df.crossJoin(broadcast(scale))
-      .select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("ce"), col("__s"))
-      .select(col("vec_id"), col("ce"),
-        transform(sqLevels(col("ce"), col("__s")), x => x.cast("tinyint")).as("cq"),
-        element_at(ids, graft.functions.nearest_centroid(col("ce"), mat)
-          .getField("idx") + 1).as("cell"))
-  }
-
-  /** Replace `vecCol` with its L2-normalized copy (zero vectors stay zero).
-    * The norm is computed ONCE into a sibling column, so the per-element
-    * divide stays O(d), not O(d²) of a nested re-aggregation.
-    */
-  private def withNormalized(df: DataFrame, vecCol: String): DataFrame =
-    df.withColumn("__nrm", sqrt(aggregate(
-        transform(asDouble(col(vecCol)), x => x * x),
-        lit(0d), (a, x) => a + x)))
-      .withColumn(vecCol, transform(asDouble(col(vecCol)),
-        x => when(col("__nrm") === 0d, lit(0d)).otherwise(x / col("__nrm"))))
-      .drop("__nrm")
-
-  /** Build and persist an IVF-SQ8 index (the FAISS IVF-SQ design, public
-    * technique): like [[buildIvfIndex]] plus a signed-symmetric SQ8 code
-    * column `cq` (int8) in the cell table and the global scale at
-    * `path/sq_scale`. At 100 TB this is the serving shape that fixes
-    * [[ivfTopKIndexed]]'s remaining cost: the probe's in-cell scan reads the
-    * int8 code column (4× fewer bytes than float32) and ranks by integer
-    * dot product; the float column is touched only to exact-rescore the
-    * top `rerank·k` candidates. Scale and centroids both FREEZE at build
-    * time so appended codes/assignments stay comparable with the build.
-    *
-    * `normalize = true` L2-normalizes vectors BEFORE the scale/codes: the
-    * raw int8 dot product then approximates COSINE, not the inner product,
-    * so on corpora with varying vector norms the pre-rank can no longer be
-    * crowded by large-norm vectors with mediocre angles (the final metric
-    * is cosine either way — the flag only changes what the compressed
-    * pre-rank preserves). The flag persists at `path/sq_meta`; append and
-    * probe read it back, so callers set it ONCE at build.
-    */
-  def buildIvfSqIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      path: String, nlist: Int = 8,
-      centroids: Option[DataFrame] = None,
-      normalize: Boolean = false): Unit =
-    withIndexMutation(corpus.sparkSession, path, "buildIvfSqIndex") {
-      IndexLifecycle.beginBuild(corpus.sparkSession, path)
-      IndexLifecycle.clearIngestState(corpus.sparkSession, path)
-      clearGeometryVersions(corpus.sparkSession, path)
-      val spark = corpus.sparkSession
-      val c = if (normalize) withNormalized(corpus, vecCol) else corpus
-      val cents = centroids.getOrElse(defaultCentroids(c, idCol, vecCol, nlist))
-      cents.write.mode("overwrite").parquet(s"$path/centroids")
-      sqScale(sqBounds(c, vecCol)).write.mode("overwrite")
-        .parquet(s"$path/sq_scale")
-      import spark.implicits._
-      Seq(normalize).toDF("normalized").write.mode("overwrite")
-        .parquet(s"$path/sq_meta")
-      // read the scale back: the persisted row is the single source of truth
-      // the append/probe paths will read, so the build assigns from it too
-      val scale = readSmall(spark, s"$path/sq_scale")
-      assignCellsSq(c, idCol, vecCol, cents, scale)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
-      IndexLifecycle.endBuild(spark, path)
-    }
-
-  /** The build-time normalize flag of a persisted IVF-SQ index; indexes
-    * written before the flag existed read as un-normalized. ONLY absence of
-    * the meta file maps to false — any other failure (transient filesystem
-    * error, corrupt file) propagates, because silently treating a
-    * normalized index as raw would write un-normalized vectors and codes
-    * into it: a permanent, unsignalled recall degradation instead of a
-    * retryable error.
-    */
-  private def sqNormalized(spark: org.apache.spark.sql.SparkSession,
-      path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/sq_meta")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // one-row flag table, read driver-side with no Spark job (r17 opt);
-    // corruption still propagates from the parquet reader — only absence
-    // maps to false, per the contract above
-    fs.exists(p) && {
-      val (schema, rows) =
-        org.apache.spark.sql.graftbridge.Bridge.localParquetRows(spark, p.toString)
-      val i = schema.fieldIndex("normalized")
-      !rows.isEmpty && rows.get(0).getBoolean(i)
-    }
-  }
-
-  /** Incrementally index a batch into an IVF-SQ index: assignments against
-    * the persisted centroids AND codes against the persisted scale (both
-    * frozen at build — the agreement contract [[appendToIvfIndex]] keeps
-    * for cells extends to the quantized domain). Values outside the build
-    * range clamp to ±127, exactly what the probe-side quantizer does.
-    */
-  def appendToIvfSqIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      batch: DataFrame, idCol: String, vecCol: String): Unit =
-    withIndexMutation(spark, path, "appendToIvfSqIndex") {
-      val g = snapshotGeometry(spark, path)
-      val cents = readSmall(spark, g.centroids)
-      val scale = readSmall(spark, s"$path/sq_scale")
-      val b = if (sqNormalized(spark, path)) withNormalized(batch, vecCol) else batch
-      assignCellsSq(b, idCol, vecCol, cents, scale)
+      encodeBatch(spark, path, g, batch, idCol, vecCol)
         .write.mode("append").partitionBy("cell").parquet(g.cells)
     }
 
@@ -864,26 +873,119 @@ object Similarity {
     * that left a partial first attempt visible. Probes read
     * `cells ∪ ingest` (each side pruned independently);
     * [[compactIvfIngest]] folds the side area back into the main table
-    * as pure file moves.
+    * as pure file moves. Every layout ingests the same way, so migrating
+    * an index to another codec changes only the build call.
     */
-  def appendBatchToIvfSqIndex(spark: org.apache.spark.sql.SparkSession,
+  def appendBatchToIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, batch: DataFrame, idCol: String, vecCol: String,
       batchId: Long, owner: Option[String] = None): Unit =
-    withIndexMutation(spark, path, s"appendBatchToIvfSqIndex b=$batchId",
+    withIndexMutation(spark, path, s"appendBatchToIvfIndex b=$batchId",
         reclaimSameOp = true) {
       IndexLifecycle.checkOwner(spark, path, owner)
-      if (batchFolded(spark, path, batchId)) ()
-      else {
+      if (!batchFolded(spark, path, batchId)) {
         IndexLifecycle.guardBatchId(spark, path, batchId)
-        val cents = readSmall(spark, snapshotGeometry(spark, path).centroids)
-        val scale = readSmall(spark, s"$path/sq_scale")
-        val b = if (sqNormalized(spark, path)) withNormalized(batch, vecCol) else batch
-        assignCellsSq(b, idCol, vecCol, cents, scale)
+        encodeBatch(spark, path, snapshotGeometry(spark, path), batch, idCol, vecCol)
           .withColumn("b", lit(batchId))
           .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
           .partitionBy("b", "cell").parquet(s"$path/ingest")
       }
     }
+
+  /** The EXACT probe of a persisted index, on any layout: queries assign to
+    * their `nprobe` cells against the loaded centroids, then probe the cell
+    * table's float column — the broadcast equi-join on the PARTITION column
+    * lets dynamic partition pruning skip every unprobed cell's files, so
+    * query cost scales with `nprobe / nlist` of the corpus, not the corpus.
+    * The reference [[ivfProbe]]'s compressed pre-rank is measured against.
+    */
+  def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
+      queries: DataFrame, idCol: String, vecCol: String, k: Int,
+      nprobe: Int = 2, excludeBatch: Option[Long] = None): DataFrame =
+    probeIndex(spark, path, queries, idCol, vecCol, k, nprobe, 1, excludeBatch,
+      exact = true)
+
+  /** ANN top-k against a persisted index through the codec it was built
+    * with (the Scala twin of SQL `ivf_probe`). On a float index it is
+    * [[ivfTopKIndexed]]. On SQ8/PQ, probed cells are scanned in the
+    * COMPRESSED domain (codes only — the narrow read is the bandwidth win)
+    * and pre-ranked by the codec's score; the top `rerank·k` candidates per
+    * query are exact-rescored with the float column (read pruned to probed
+    * cells via the same dynamic partition pruning, then cut to the
+    * candidate sliver by the broadcast join before any cosine is computed).
+    * Output `(qid, vec_id, sim, rn)` — exact cosines; with `rerank·k ≥` the
+    * probed cells' population the result is IDENTICAL to the exact probe —
+    * pinned by SkewTextOpsSpec ("IVF-SQ8 index: exhaustive rerank equals
+    * the float probe", and its PQ twin).
+    */
+  def ivfProbe(spark: org.apache.spark.sql.SparkSession, path: String,
+      queries: DataFrame, idCol: String, vecCol: String, k: Int,
+      nprobe: Int = 2, rerank: Int = 4,
+      excludeBatch: Option[Long] = None): DataFrame =
+    probeIndex(spark, path, queries, idCol, vecCol, k, nprobe, rerank,
+      excludeBatch, exact = false)
+
+  /** Per-query top-`n` of `df` by `score` (ties by vec_id), as `rn`. */
+  private def rankWithin(df: DataFrame, score: String, ascending: Boolean,
+      n: Long): DataFrame = {
+    val o = if (ascending) col(score).asc else col(score).desc
+    df.withColumn("rn", row_number()
+        .over(Window.partitionBy(col("qid")).orderBy(o, col("vec_id"))).cast("long"))
+      .filter(col("rn") <= n)
+  }
+
+  /** The one probe: `exact` forces the float scorer on any layout. */
+  private def probeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+      queries: DataFrame, idCol: String, vecCol: String, k: Int, nprobe: Int,
+      rerank: Int, excludeBatch: Option[Long], exact: Boolean): DataFrame = {
+    val g = snapshotGeometry(spark, path)
+    val codec = if (exact) IvfCodec.Raw() else ivfIndexCodec(spark, path)
+    // probe side (tiny by contract): nprobe cells + the codec's query key.
+    // A normalized SQ8 index quantizes normalized queries; the exact
+    // rescore below is norm-invariant and reads the raw query
+    val keys = codec.probeKeys(assignCells(codec.prepare(queries, vecCol), idCol,
+      vecCol, readSmall(spark, g.centroids), "qid", "qe", nprobe), path)
+    // the streaming-ingest side area (if any) joins as a SEPARATE scan and
+    // unions AFTER the per-side broadcast join, so both scans keep their own
+    // partition pruning on the cell key (a join does not push through a
+    // Union, so pruning a pre-union scan would be lost)
+    val ing = ingestCells(spark, path, excludeBatch)
+    def scan(side: DataFrame => DataFrame): DataFrame = {
+      val main = side(spark.read.parquet(g.cells))
+      ing.fold(main)(i => main.unionByName(side(i)))
+    }
+    val scored = scan(df => codec.codes(df).join(broadcast(keys), Seq("cell"))
+      .filter(col("vec_id") =!= col("qid"))
+      .withColumn("score", codec.score)
+      .select(col("qid"), col("vec_id"), col("cell"), col("score")))
+    val top = codec match {
+      case _: IvfCodec.Raw => rankWithin(scored, "score", ascending = false, k)
+      case _ =>
+        require(rerank >= 1, "rerank must be >= 1")
+        // the candidate sliver carries KEYS ONLY (qid, vec_id, cell) — the
+        // query vector would otherwise ride the broadcast rerank·k times per
+        // query; it rejoins below from the one-row-per-query frame instead
+        val cand = rankWithin(scored, "score", codec.ascending, k.toLong * rerank)
+          .select(col("qid"), col("vec_id"), col("cell"))
+        val qvecs = queries.select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qe"))
+        rankWithin(scan(_.select(col("vec_id"), col("ce"), col("cell"))
+            .join(broadcast(cand), Seq("cell", "vec_id")))
+          .join(broadcast(qvecs), Seq("qid"))
+          .withColumn("score", exactSim), "score", ascending = false, k)
+    }
+    top.select(col("qid"), col("vec_id"), col("score").as("sim"), col("rn"))
+  }
+
+  /** Replace `vecCol` with its L2-normalized copy (zero vectors stay zero).
+    * The norm is computed ONCE into a sibling column, so the per-element
+    * divide stays O(d), not O(d²) of a nested re-aggregation.
+    */
+  private def withNormalized(df: DataFrame, vecCol: String): DataFrame =
+    df.withColumn("__nrm", sqrt(aggregate(
+        transform(asDouble(col(vecCol)), x => x * x),
+        lit(0d), (a, x) => a + x)))
+      .withColumn(vecCol, transform(asDouble(col(vecCol)),
+        x => when(col("__nrm") === 0d, lit(0d)).otherwise(x / col("__nrm"))))
+      .drop("__nrm")
 
   /** Has [[compactIvfIngest]] already folded this batchId into the main
     * cell table? The replay guard: a stream can crash with batch N written
@@ -1079,101 +1181,9 @@ object Similarity {
       .withColumn("nprobe", lit(np))
   }
 
-  /** ANN top-k against a persisted IVF-SQ8 index: queries assign to their
-    * `nprobe` cells and quantize against the persisted scale; probed cells
-    * are scanned in the COMPRESSED domain (int8 codes only — the narrow
-    * read is the 4× bandwidth win), ranked by the signed integer dot
-    * product; the top `rerank·k` candidates per query are exact-rescored
-    * with the float column (read pruned to probed cells via the same
-    * dynamic partition pruning as the code scan, then cut to the candidate
-    * sliver by the broadcast join before any cosine is computed). Output
-    * `(qid, vec_id, sim, rn)` — exact cosines, same shape as
-    * [[ivfTopKIndexed]]; with `rerank·k ≥` the probed cells' population the
-    * result is IDENTICAL to the float probe (every candidate is rescored) —
-    * pinned by SkewTextOpsSpec ("IVF-SQ8 index: exhaustive rerank equals the
-    * float probe"), with the even-half scale-freeze contract verified
-    * end-to-end by the e11_ivfsq_ann DuckDB oracle.
-    */
-  def ivfSqTopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      nprobe: Int = 2, rerank: Int = 4,
-      excludeBatch: Option[Long] = None): DataFrame = {
-    require(rerank >= 1, "rerank must be >= 1")
-    val g = snapshotGeometry(spark, path)
-    val cents = readSmall(spark, g.centroids)
-    val scale = readSmall(spark, s"$path/sq_scale")
-    // a normalized index quantizes normalized queries (the persisted flag,
-    // set once at build); cosine rescoring below is norm-invariant, so the
-    // flag only affects the compressed-domain pre-rank
-    val qin = if (sqNormalized(spark, path)) withNormalized(queries, vecCol)
-      else queries
-    // probe side (tiny by contract): nprobe cells + quantized query codes
-    val q = assignCells(qin, idCol, vecCol, cents, "qid", "qe", nprobe)
-      .crossJoin(broadcast(scale))
-      .select(col("qid"), col("qe"), col("cell"),
-        sqLevels(col("qe"), col("__s")).as("qq"))
-    // the streaming-ingest side area (if any) joins as a SEPARATE scan
-    // and unions AFTER the per-side broadcast join, so both scans keep
-    // their own partition pruning on the cell key (a join does not push
-    // through a Union, so pruning a pre-union scan would be lost)
-    val ing = ingestCells(spark, path, excludeBatch)
-    // compressed-domain scoring scan: codes + id + cell only
-    def codesOf(df: DataFrame) = df
-      .select(col("vec_id"), transform(col("cq"), x => x.cast("long")).as("cq"),
-        col("cell"))
-    val wq = Window.partitionBy(col("qid")).orderBy(col("qscore").desc, col("vec_id"))
-    // the candidate sliver carries KEYS ONLY (qid, vec_id, cell) — the
-    // query vector would otherwise ride the broadcast rerank·k times per
-    // query; it rejoins below from the one-row-per-query frame instead
-    def scoredOf(df: DataFrame) = codesOf(df).join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("qscore",
-        aggregate(zip_with(col("cq"), col("qq"), (a, b) => a * b),
-          lit(0L), (acc, x) => acc + x))
-      .select(col("qid"), col("vec_id"), col("cell"), col("qscore"))
-    val scored = ing.map(i => scoredOf(spark.read.parquet(g.cells))
-        .unionByName(scoredOf(i)))
-      .getOrElse(scoredOf(spark.read.parquet(g.cells)))
-    val cand = scored
-      .withColumn("crn", row_number().over(wq))
-      .filter(col("crn") <= k.toLong * rerank)
-      .select(col("qid"), col("vec_id"), col("cell"))
-    val qvecs = queries.select(col(idCol).as("qid"),
-      asDouble(col(vecCol)).as("qe"))
-    // exact rescoring of the candidate sliver
-    def rescoredOf(df: DataFrame) = df
-      .select(col("vec_id"), col("ce"), col("cell"))
-      .join(broadcast(cand), Seq("cell", "vec_id"))
-    val rescored = ing.map(i => rescoredOf(spark.read.parquet(g.cells))
-        .unionByName(rescoredOf(i)))
-      .getOrElse(rescoredOf(spark.read.parquet(g.cells)))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
-    rescored
-      .join(broadcast(qvecs), Seq("qid"))
-      .withColumn("sim", round(cosine(col("qe"), col("ce")), 6))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-      .select("qid", "vec_id", "sim", "rn")
-  }
-
-  /** The persisted layout of an IVF-family index: `"pq"` (codebooks at
-    * `books`), `"sq"` (scale at `sq_scale`) or `"float"` — set once at
-    * build; consumers route probes and ingest appends on it so an index
-    * migrated to a compressed layout never changes their topology.
-    */
-  def ivfIndexLayout(spark: org.apache.spark.sql.SparkSession,
-      path: String): String = {
-    val conf = spark.sessionState.newHadoopConf()
-    def has(sub: String) = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      p.getFileSystem(conf).exists(p)
-    }
-    if (has("books")) "pq" else if (has("sq_scale")) "sq" else "float"
-  }
-
   /** Semantic (embedding) near-duplicate screen of a batch against a
     * persisted IVF-family index — the SemDeDup decision: each batch vector
-    * probes for its top-1 accepted neighbor (layout-routed; compressed
+    * probes for its top-1 accepted neighbor ([[ivfProbe]]: compressed
     * layouts pre-rank compressed and exact-rescore, so the decision metric
     * is exact cosine on every layout) and a neighbor at `sim ≥ threshold`
     * marks it a near-duplicate. Output per batch row: `(id, is_new,
@@ -1189,14 +1199,8 @@ object Similarity {
       batch: DataFrame, idCol: String, vecCol: String, threshold: Double,
       nprobe: Int = 2, rerank: Int = 4,
       excludeBatch: Option[Long] = None): DataFrame = {
-    val top1 = ivfIndexLayout(spark, path) match {
-      case "pq" => ivfPqTopKIndexed(spark, path, batch, idCol, vecCol,
-        k = 1, nprobe, rerank, excludeBatch)
-      case "sq" => ivfSqTopKIndexed(spark, path, batch, idCol, vecCol,
-        k = 1, nprobe, rerank, excludeBatch)
-      case _ => ivfTopKIndexed(spark, path, batch, idCol, vecCol,
-        k = 1, nprobe, excludeBatch)
-    }
+    val top1 = ivfProbe(spark, path, batch, idCol, vecCol, k = 1, nprobe,
+      rerank, excludeBatch)
     batch.select(col(idCol))
       .join(broadcast(top1.filter(col("sim") >= threshold)
         .select(col("qid").as(idCol), col("vec_id").as("match_id"),
@@ -1258,8 +1262,7 @@ object Similarity {
       // columns (the same codegen kernel assignCells uses)
       val (ids, mat) = collectCentroids(cents)
       full.drop("cell")
-        .withColumn("cell", element_at(ids,
-          graft.functions.nearest_centroid(col("ce"), mat).getField("idx") + 1))
+        .withColumn("cell", cellOf(col("ce"), ids, mat))
         .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells@$next")
     }
   }
@@ -1622,8 +1625,7 @@ object Similarity {
       val (ids, mat) = collectCentroids(cents)
       val assigned = corpus
         .select(col(idCol).as("rid"), asDouble(col(vecCol)).as("v"))
-        .withColumn("cent_id", element_at(ids,
-          graft.functions.nearest_centroid(col("v"), mat).getField("idx") + 1))
+        .withColumn("cent_id", cellOf(col("v"), ids, mat))
       cents = assigned
         .select(col("cent_id"), posexplode(col("v")).as(Seq("dim", "x")))
         .groupBy(col("cent_id"), col("dim")).agg(avg(col("x")).as("m"))
@@ -1963,143 +1965,5 @@ object Similarity {
     val out = Array.ofDim[Array[Double]](m, kc)
     rows.foreach { case (s, c, v) => out(s)(c) = v }
     out
-  }
-
-  /** Build and persist an IVF-PQ index (the full FAISS IVF-PQ serving
-    * shape, public design): `path/centroids` (coarse cells), `path/books`
-    * (PQ codebooks, seeded from the build corpus), and `path/cells` — one
-    * row per vector `(vec_id, ce, code, cell)` PARTITIONED BY cell. The
-    * probe scans only its probed cells' `code` column (8 B/vector at the
-    * defaults — 32× less than float32, the shape that serves ANN over a
-    * corpus even the SQ8 index cannot hold in cache), pre-ranks by ADC
-    * table lookups, and exact-rescored the top `rerank·k` with the float
-    * column. Coarse centroids AND codebooks freeze at build time — the
-    * same agreement contract as [[buildIvfSqIndex]].
-    */
-  def buildIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      path: String, nlist: Int = 8, m: Int = 8, kc: Int = 16,
-      centroids: Option[DataFrame] = None,
-      codebooks: Option[Array[Array[Array[Double]]]] = None): Unit =
-    withIndexMutation(corpus.sparkSession, path, "buildIvfPqIndex") {
-      IndexLifecycle.beginBuild(corpus.sparkSession, path)
-      IndexLifecycle.clearIngestState(corpus.sparkSession, path)
-      clearGeometryVersions(corpus.sparkSession, path)
-      val spark = corpus.sparkSession
-      val cents = centroids.getOrElse(defaultCentroids(corpus, idCol, vecCol, nlist))
-      cents.write.mode("overwrite").parquet(s"$path/centroids")
-      val books = codebooks.getOrElse(pqCodebooks(corpus, idCol, vecCol, m, kc))
-      writeBooks(spark, books, s"$path/books")
-      assignCellsPq(corpus, idCol, vecCol, cents, books)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
-      IndexLifecycle.endBuild(spark, path)
-    }
-
-  /** Assign + PQ-encode in ONE zero-shuffle projection (the IVF-SQ build
-    * scan's PQ twin): cell id from the codegen nearest-centroid kernel,
-    * code from the literal-codebook argmins, both over the same row.
-    */
-  private def assignCellsPq(df: DataFrame, idCol: String, vecCol: String,
-      cents: DataFrame, books: Array[Array[Array[Double]]]): DataFrame = {
-    val (ids, mat) = collectCentroids(cents)
-    val v = asDouble(col(vecCol))
-    df.select(col(idCol).as("vec_id"), v.as("ce"),
-      graft.functions.pq_codes(v, books).as("code"),
-      element_at(ids, graft.functions.nearest_centroid(v, mat)
-        .getField("idx") + 1).as("cell"))
-  }
-
-  /** Incrementally index a batch: assignments against the persisted coarse
-    * centroids, codes against the persisted codebooks — both frozen at
-    * build, so appended rows stay comparable with the build.
-    */
-  def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      batch: DataFrame, idCol: String, vecCol: String): Unit =
-    withIndexMutation(spark, path, "appendToIvfPqIndex") {
-      val g = snapshotGeometry(spark, path)
-      val cents = readSmall(spark, g.centroids)
-      val books = readBooks(spark, s"$path/books")
-      assignCellsPq(batch, idCol, vecCol, cents, books)
-        .write.mode("append").partitionBy("cell").parquet(g.cells)
-    }
-
-  /** The IVF-PQ twin of [[appendBatchToIvfSqIndex]]: an IDEMPOTENT
-    * per-micro-batch append into `path/ingest` partitioned by
-    * `(b=batchId, cell)` with dynamic overwrite — crash-replay rewrites
-    * exactly its own partitions. Same layout, so the same
-    * [[compactIvfIngest]] folds it back as pure file moves.
-    */
-  def appendBatchToIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: DataFrame, idCol: String, vecCol: String,
-      batchId: Long, owner: Option[String] = None): Unit =
-    withIndexMutation(spark, path, s"appendBatchToIvfPqIndex b=$batchId",
-        reclaimSameOp = true) {
-      IndexLifecycle.checkOwner(spark, path, owner)
-      if (batchFolded(spark, path, batchId)) ()
-      else {
-        IndexLifecycle.guardBatchId(spark, path, batchId)
-        val cents = readSmall(spark, snapshotGeometry(spark, path).centroids)
-        val books = readBooks(spark, s"$path/books")
-        assignCellsPq(batch, idCol, vecCol, cents, books)
-          .withColumn("b", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("b", "cell").parquet(s"$path/ingest")
-      }
-    }
-
-  /** ANN top-k against a persisted IVF-PQ index: queries assign to `nprobe`
-    * cells and precompute their ADC tables against the persisted codebooks;
-    * probed cells are scanned CODE-ONLY (dynamic partition pruning on the
-    * cell key, 8 B/vector), pre-ranked by table-lookup sums, and the top
-    * `rerank·k` candidates are exact-rescored with the float column (same
-    * candidate-sliver broadcast shape as [[ivfSqTopKIndexed]]). Output
-    * `(qid, vec_id, sim, rn)` — exact cosines; with `rerank·k ≥` the probed
-    * cells' population the result is IDENTICAL to the float probe — pinned
-    * by SkewTextOpsSpec ("IVF-PQ index: exhaustive rerank equals the float
-    * probe").
-    */
-  def ivfPqTopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      nprobe: Int = 2, rerank: Int = 4,
-      excludeBatch: Option[Long] = None): DataFrame = {
-    require(rerank >= 1, "rerank must be >= 1")
-    val g = snapshotGeometry(spark, path)
-    val cents = readSmall(spark, g.centroids)
-    val books = readBooks(spark, s"$path/books")
-    // probe side (tiny by contract): nprobe cells + the ADC tables
-    val q = assignCells(queries, idCol, vecCol, cents, "qid", "qe", nprobe)
-      .select(col("qid"), col("cell"),
-        pqQueryTable(col("qe"), books).as("qt"))
-    // streaming-ingest side area joins as its own scan (per-side DPP, as
-    // in ivfSqTopKIndexed — a join does not push through a Union)
-    val ing = ingestCells(spark, path, excludeBatch)
-    def scoredOf(df: DataFrame) = df
-      .select(col("vec_id"), col("code"), col("cell"))
-      .join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("qdist", pqAdcDist(col("code"), col("qt")))
-      .select(col("qid"), col("vec_id"), col("cell"), col("qdist"))
-    val scored = ing.map(i => scoredOf(spark.read.parquet(g.cells))
-        .unionByName(scoredOf(i)))
-      .getOrElse(scoredOf(spark.read.parquet(g.cells)))
-    val wq = Window.partitionBy(col("qid")).orderBy(col("qdist").asc, col("vec_id"))
-    val cand = scored
-      .withColumn("crn", row_number().over(wq))
-      .filter(col("crn") <= k.toLong * rerank)
-      .select(col("qid"), col("vec_id"), col("cell"))
-    val qvecs = queries.select(col(idCol).as("qid"),
-      asDouble(col(vecCol)).as("qe"))
-    def rescoredOf(df: DataFrame) = df
-      .select(col("vec_id"), col("ce"), col("cell"))
-      .join(broadcast(cand), Seq("cell", "vec_id"))
-    val rescored = ing.map(i => rescoredOf(spark.read.parquet(g.cells))
-        .unionByName(rescoredOf(i)))
-      .getOrElse(rescoredOf(spark.read.parquet(g.cells)))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
-    rescored
-      .join(broadcast(qvecs), Seq("qid"))
-      .withColumn("sim", round(cosine(col("qe"), col("ce")), 6))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-      .select("qid", "vec_id", "sim", "rn")
   }
 }

@@ -92,20 +92,15 @@ object SqlOps {
         asStr(es(2), "lsh_candidates", 2), asStr(es(3), "lsh_candidates", 3))
     }
 
-    // layout-routed ANN probe of a persisted IVF-family index — the same
-    // routing indexAtIngest uses, so a SQL caller probes float/SQ8/PQ
+    // ANN probe of a persisted IVF index through the codec it was built
+    // with (Similarity.ivfProbe), so a SQL caller probes float/SQ8/PQ
     // indexes through ONE name with identical output shape
     tvf("ivf_probe", Seq(7)) { es =>
       val (path, view) = (asStr(es(0), "ivf_probe", 0), asStr(es(1), "ivf_probe", 1))
       val (id, vec) = (asStr(es(2), "ivf_probe", 2), asStr(es(3), "ivf_probe", 3))
       val (k, nprobe, rerank) = (asInt(es(4), "ivf_probe", 4),
         asInt(es(5), "ivf_probe", 5), asInt(es(6), "ivf_probe", 6))
-      val q = spark.table(view)
-      Similarity.ivfIndexLayout(spark, path) match {
-        case "pq" => Similarity.ivfPqTopKIndexed(spark, path, q, id, vec, k, nprobe, rerank)
-        case "sq" => Similarity.ivfSqTopKIndexed(spark, path, q, id, vec, k, nprobe, rerank)
-        case _ => Similarity.ivfTopKIndexed(spark, path, q, id, vec, k, nprobe)
-      }
+      Similarity.ivfProbe(spark, path, spark.table(view), id, vec, k, nprobe, rerank)
     }
 
     // semantic near-dup screen of a batch view (Similarity.semScreen)

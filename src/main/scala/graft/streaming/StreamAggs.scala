@@ -513,37 +513,21 @@ object StreamAggs {
   }
 
   /** ANN index maintenance at ingest: every micro-batch of embedding rows
-    * appends into a persisted IVF-SQ8 index built beforehand with
-    * [[graft.ops.Similarity.buildIvfSqIndex]] — the continuous-ingest leg
-    * of the index lifecycle (build → ingest → probe → compact →
-    * recluster). Each batch lands via
-    * [[graft.ops.Similarity.appendBatchToIvfSqIndex]]: assignment against
-    * the frozen build-time centroids, codes against the frozen scale, the
-    * write an IDEMPOTENT dynamic overwrite of the batch's own
-    * `b=batchId` partitions — a crash-replayed micro-batch rewrites
+    * appends into a persisted IVF index built beforehand with
+    * [[graft.ops.Similarity.buildIvfIndex]] (any codec) — the
+    * continuous-ingest leg of the index lifecycle (build → ingest → probe →
+    * compact → recluster). Each batch lands via
+    * [[graft.ops.Similarity.appendBatchToIvfIndex]]: assignment against the
+    * frozen build-time centroids, codes against the frozen codec
+    * parameters, the write an IDEMPOTENT dynamic overwrite of the batch's
+    * own `b=batchId` partitions — a crash-replayed micro-batch rewrites
     * exactly itself, so the index never double-counts a vector. Probes
-    * ([[graft.ops.Similarity.ivfSqTopKIndexed]]) see ingested vectors
-    * immediately (main ∪ ingest, both sides pruned);
+    * ([[graft.ops.Similarity.ivfProbe]]) see ingested vectors immediately
+    * (main ∪ ingest, both sides pruned);
     * [[graft.ops.Similarity.compactIvfIngest]] folds the side area back
     * on the maintenance cadence.
-    */
-  /** Layout-routed ingest append ([[graft.ops.Similarity.ivfIndexLayout]]):
-    * set once at build, so migrating an index to a compressed layout never
-    * changes the ingestion topology.
-    */
-  private def appendBatchRouted(s: SparkSession, idxPath: String,
-      batch: DataFrame, idCol: String, vecCol: String, batchId: Long,
-      owner: Option[String]): Unit =
-    graft.ops.Similarity.ivfIndexLayout(s, idxPath) match {
-      case "pq" => graft.ops.Similarity.appendBatchToIvfPqIndex(s,
-        idxPath, batch, idCol, vecCol, batchId, owner)
-      case "sq" => graft.ops.Similarity.appendBatchToIvfSqIndex(s,
-        idxPath, batch, idCol, vecCol, batchId, owner)
-      case _ => graft.ops.Similarity.appendBatchToIvfIndex(s,
-        idxPath, batch, idCol, vecCol, batchId, owner)
-    }
-
-  /** `owner` (pass the query's CHECKPOINT LOCATION): registers ingest
+    *
+    * `owner` (pass the query's CHECKPOINT LOCATION): registers ingest
     * ownership on the first batch and refuses a different stream's appends
     * — the silent b=partition collision two streams sharing one index
     * would otherwise suffer ([[graft.ops.IndexLifecycle.assertOwner]]).
@@ -552,8 +536,8 @@ object StreamAggs {
   def indexAtIngest(stream: DataFrame, idxPath: String, idCol: String,
       vecCol: String, owner: Option[String] = None): DataStreamWriter[Row] =
     stream.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      appendBatchRouted(batch.sparkSession, idxPath, batch.toDF(), idCol,
-        vecCol, batchId, owner)
+      graft.ops.Similarity.appendBatchToIvfIndex(batch.sparkSession, idxPath,
+        batch.toDF(), idCol, vecCol, batchId, owner)
     }
 
   /** SELF-GROWING semantic (embedding) dedup over a persisted IVF-family
@@ -563,7 +547,7 @@ object StreamAggs {
     * `sink`, and the ACCEPTED vectors append into the index as the batch's
     * own idempotent `b=batchId` partitions — later batches dedup against
     * everything accepted before them. Works over all three persisted
-    * layouts (float / SQ8 / PQ) through the same routing as
+    * layouts (float / SQ8 / PQ) through the same codec-reading verbs as
     * [[indexAtIngest]]; compressed layouts pre-rank compressed and
     * exact-rescore, so the DECISION metric is exact cosine either way
     * (`rerank` sizes the rescore sliver exactly as in the probes).
@@ -592,7 +576,8 @@ object StreamAggs {
         sink(verdicts, batchId)
         val accepted = batch.toDF().join(
           verdicts.filter(col("is_new")).select(idCol), Seq(idCol), "semi")
-        appendBatchRouted(s, idxPath, accepted, idCol, vecCol, batchId, owner)
+        graft.ops.Similarity.appendBatchToIvfIndex(s, idxPath, accepted, idCol,
+          vecCol, batchId, owner)
       }
     }
 

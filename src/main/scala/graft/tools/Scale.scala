@@ -444,22 +444,22 @@ object Scale {
     val (evens, odds) = (emb.filter(col("vec_id") % 2 === 0), emb.filter(col("vec_id") % 2 === 1))
     def pqIndex(name: String, books: Option[Array[Array[Array[Double]]]]) = s"$root/$name".tap(path =>
       run.step(s"$name build") {
-        Similarity.buildIvfPqIndex(evens, "vec_id", "embedding", path, 64, 8, 16, Some(cents), books)
-        Similarity.appendToIvfPqIndex(spark, path, odds, "vec_id", "embedding")
+        Similarity.buildIvfIndex(evens, "vec_id", "embedding", path, 64, Some(cents),
+          Similarity.IvfCodec.Pq(8, 16, books))
+        Similarity.appendToIvfIndex(spark, path, odds, "vec_id", "embedding")
       })
     def probe(idx: String, queries: DataFrame, rerank: Int, which: String = "first 16") =
       run.step(s"${idx.split('/').last} probe top-5 of the $which (nprobe 8, rerank $rerank)") {
-        (if (idx.contains("-pq")) Similarity.ivfPqTopKIndexed(spark, idx, queries, "vec_id",
-          "embedding", k = 5, nprobe = 8, rerank = rerank)
-        else Similarity.ivfSqTopKIndexed(spark, idx, queries, "vec_id", "embedding",
-          k = 5, nprobe = 8, rerank = rerank)).localCheckpoint()
+        Similarity.ivfProbe(spark, idx, queries, "vec_id", "embedding",
+          k = 5, nprobe = 8, rerank = rerank).localCheckpoint()
       }
     def float(idx: String, queries: DataFrame) = Similarity.ivfTopKIndexed(spark, idx, queries,
       "vec_id", "embedding", k = 5, nprobe = 8).localCheckpoint()
     val sqIdx = s"$root/ivf-sq8"
     run.step("ivf-sq8 build") {
-      Similarity.buildIvfSqIndex(evens, "vec_id", "embedding", sqIdx, 64, Some(cents))
-      Similarity.appendToIvfSqIndex(spark, sqIdx, odds, "vec_id", "embedding")
+      Similarity.buildIvfIndex(evens, "vec_id", "embedding", sqIdx, 64, Some(cents),
+        Similarity.IvfCodec.Sq())
+      Similarity.appendToIvfIndex(spark, sqIdx, odds, "vec_id", "embedding")
     }
     val floatQ16 = float(sqIdx, q16) // the PQ indexes share these cells
     val sqp = probe(sqIdx, q16, 4)

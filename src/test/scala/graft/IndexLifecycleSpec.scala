@@ -69,12 +69,12 @@ class IndexLifecycleSpec extends AnyFunSuite {
 
     // ── IVF family (same protocol, same refusal, same repair) ──
     val ivf = s"$dir/ivf"
-    Similarity.buildIvfSqIndex(emb(0L until 30L), "vec_id", "embedding", ivf,
-      nlist = 4)
-    Similarity.appendBatchToIvfSqIndex(s, ivf, emb(Seq(100L), 8), "vec_id",
+    Similarity.buildIvfIndex(emb(0L until 30L), "vec_id", "embedding", ivf,
+      nlist = 4, codec = Similarity.IvfCodec.Sq())
+    Similarity.appendBatchToIvfIndex(s, ivf, emb(Seq(100L), 8), "vec_id",
       "embedding", 5L)
     Similarity.compactIvfIngest(s, ivf)
-    Similarity.appendBatchToIvfSqIndex(s, ivf, emb(Seq(101L), 9), "vec_id",
+    Similarity.appendBatchToIvfIndex(s, ivf, emb(Seq(101L), 9), "vec_id",
       "embedding", 7L)
     Similarity.compactIvfIngest(s, ivf)
     assert(!Similarity.batchFolded(s, ivf, 5L) && Similarity.batchFolded(s, ivf, 7L))
@@ -82,7 +82,7 @@ class IndexLifecycleSpec extends AnyFunSuite {
       Similarity.resolvedTablePath(s, ivf, "cells")).count()
     val beforeIvf = cellCount()
     val eIvf = intercept[IllegalStateException] {
-      Similarity.appendBatchToIvfSqIndex(s, ivf, emb(Seq(102L), 10), "vec_id",
+      Similarity.appendBatchToIvfIndex(s, ivf, emb(Seq(102L), 10), "vec_id",
         "embedding", 3L)
     }
     assert(eIvf.getMessage.contains("resetIngestFolded"))
@@ -94,7 +94,7 @@ class IndexLifecycleSpec extends AnyFunSuite {
     assert(shape(eLsh.getMessage) === shape(eIvf.getMessage),
       "the two families' refusals must be identical up to the path")
     Similarity.resetIngestFolded(s, ivf)
-    Similarity.appendBatchToIvfSqIndex(s, ivf, emb(Seq(102L), 10), "vec_id",
+    Similarity.appendBatchToIvfIndex(s, ivf, emb(Seq(102L), 10), "vec_id",
       "embedding", 0L)
     Similarity.compactIvfIngest(s, ivf)
     assert(cellCount() === beforeIvf + 1)
@@ -115,10 +115,11 @@ class IndexLifecycleSpec extends AnyFunSuite {
       Similarity.geomResolutions.get() - b
     }
     val sq = s"$dir/sq"
-    Similarity.buildIvfSqIndex(corpus, "vec_id", "embedding", sq, nlist = 4)
+    Similarity.buildIvfIndex(corpus, "vec_id", "embedding", sq, nlist = 4,
+      codec = Similarity.IvfCodec.Sq())
     // recluster once so the index is on VERSIONED geometry (the raced state)
     Similarity.reclusterIvfIndex(s, sq, nlist = 4)
-    assert(resolutions(Similarity.ivfSqTopKIndexed(s, sq, queries, "vec_id",
+    assert(resolutions(Similarity.ivfProbe(s, sq, queries, "vec_id",
       "embedding", k = 3, nprobe = 2, rerank = 4).collect(): Unit) === 1L)
     assert(resolutions(Similarity.ivfIndexHealth(s, sq).collect(): Unit) === 1L)
 
@@ -128,10 +129,21 @@ class IndexLifecycleSpec extends AnyFunSuite {
       "embedding", k = 3, nprobe = 2).collect(): Unit) === 1L)
 
     val pq = s"$dir/pq"
-    Similarity.buildIvfPqIndex(corpus, "vec_id", "embedding", pq, nlist = 4,
-      m = 4, kc = 8)
-    assert(resolutions(Similarity.ivfPqTopKIndexed(s, pq, queries, "vec_id",
+    Similarity.buildIvfIndex(corpus, "vec_id", "embedding", pq, nlist = 4,
+      codec = Similarity.IvfCodec.Pq(m = 4, kc = 8))
+    assert(resolutions(Similarity.ivfProbe(s, pq, queries, "vec_id",
       "embedding", k = 3, nprobe = 2, rerank = 4).collect(): Unit) === 1L)
+
+    // the routed probe and both appends resolve once on every layout, the
+    // persisted codec read alongside the snapshot
+    for ((idx, i) <- Seq(sq, fl, pq).zipWithIndex) {
+      assert(resolutions(Similarity.ivfProbe(s, idx, queries, "vec_id",
+        "embedding", k = 3, nprobe = 2, rerank = 4).collect(): Unit) === 1L)
+      assert(resolutions(Similarity.appendToIvfIndex(s, idx,
+        emb(Seq(200L + i), seed = 17), "vec_id", "embedding")) === 1L)
+      assert(resolutions(Similarity.appendBatchToIvfIndex(s, idx,
+        emb(Seq(300L + i), seed = 19), "vec_id", "embedding", 0L)) === 1L)
+    }
   }
 
   test("state-version completeness survives marksuccessfuljobs=false (own commit marker)") {
@@ -222,34 +234,34 @@ class IndexLifecycleSpec extends AnyFunSuite {
 
     // IVF twin — identical refusal up to the path
     val ivf = s"$dir/ivf"
-    Similarity.buildIvfSqIndex(emb(0L until 30L), "vec_id", "embedding", ivf,
-      nlist = 4)
-    Similarity.appendBatchToIvfSqIndex(s, ivf, emb(Seq(100L), 8), "vec_id",
+    Similarity.buildIvfIndex(emb(0L until 30L), "vec_id", "embedding", ivf,
+      nlist = 4, codec = Similarity.IvfCodec.Sq())
+    Similarity.appendBatchToIvfIndex(s, ivf, emb(Seq(100L), 8), "vec_id",
       "embedding", 0L, owner = Some("chk://stream-a"))
     val e2 = intercept[IllegalStateException](
-      Similarity.appendBatchToIvfSqIndex(s, ivf, emb(Seq(200L), 9), "vec_id",
+      Similarity.appendBatchToIvfIndex(s, ivf, emb(Seq(200L), 9), "vec_id",
         "embedding", 0L, owner = Some("chk://stream-b")))
     def shape(m: String) = m.replaceAll(s"index at \\S+:", "index at <path>:")
     assert(shape(e1.getMessage) === shape(e2.getMessage))
     Similarity.rebindIngestOwner(s, ivf, "chk://stream-b")
-    Similarity.appendBatchToIvfSqIndex(s, ivf, emb(Seq(200L), 9), "vec_id",
+    Similarity.appendBatchToIvfIndex(s, ivf, emb(Seq(200L), 9), "vec_id",
       "embedding", 0L, owner = Some("chk://stream-b"))
 
     // a from-scratch REBUILD restarts the streaming story: stale ingest,
     // fold markers and ownership all cleared (previously the IVF builds
     // left a stale ingest side area unioning into probes — r13 fix)
-    Similarity.appendBatchToIvfSqIndex(s, ivf, emb(Seq(300L), 10), "vec_id",
+    Similarity.appendBatchToIvfIndex(s, ivf, emb(Seq(300L), 10), "vec_id",
       "embedding", 1L, owner = Some("chk://stream-b"))
     assert(new java.io.File(s"$ivf/ingest").exists())
-    Similarity.buildIvfSqIndex(emb(0L until 30L), "vec_id", "embedding", ivf,
-      nlist = 4)
+    Similarity.buildIvfIndex(emb(0L until 30L), "vec_id", "embedding", ivf,
+      nlist = 4, codec = Similarity.IvfCodec.Sq())
     assert(!new java.io.File(s"$ivf/ingest").exists() &&
       !new java.io.File(s"$ivf/ingest_owner").exists(),
       "rebuild must clear stale ingest state")
     assert(s.read.parquet(Similarity.resolvedTablePath(s, ivf, "cells"))
       .count() === 30L, "probes after rebuild see exactly the new corpus")
     // the new story accepts a fresh owner from batch 0
-    Similarity.appendBatchToIvfSqIndex(s, ivf, emb(Seq(400L), 11), "vec_id",
+    Similarity.appendBatchToIvfIndex(s, ivf, emb(Seq(400L), 11), "vec_id",
       "embedding", 0L, owner = Some("chk://stream-c"))
   }
 
@@ -301,8 +313,8 @@ class IndexLifecycleSpec extends AnyFunSuite {
     LshIndex.build(docs(0L until 20L, "corpus"), "doc_id", "text", lsh,
       sigBuckets = 8)
     val ivf = s"$dir/ivf"
-    Similarity.buildIvfSqIndex(emb(0L until 30L), "vec_id", "embedding", ivf,
-      nlist = 4)
+    Similarity.buildIvfIndex(emb(0L until 30L), "vec_id", "embedding", ivf,
+      nlist = 4, codec = Similarity.IvfCodec.Sq())
     // completed builds leave no marker: everything works
     assert(LshIndex.screen(s, lsh, docs(0L until 20L, "corpus"),
       docs(Seq(100L), "b"), "doc_id", "text", 0.5).count() === 1)
@@ -318,11 +330,11 @@ class IndexLifecycleSpec extends AnyFunSuite {
       LshIndex.reshard(s, lsh, newSigBuckets = 16))
     val eLsh4 = intercept[IllegalStateException](LshIndex.compactIngest(s, lsh))
     val eIvf = intercept[IllegalStateException](
-      Similarity.ivfSqTopKIndexed(s, ivf, emb(Seq(100L), 8), "vec_id",
+      Similarity.ivfProbe(s, ivf, emb(Seq(100L), 8), "vec_id",
         "embedding", k = 3).collect())
     val eIvf2 = intercept[IllegalStateException](Similarity.ivfIndexHealth(s, ivf))
     val eIvf3 = intercept[IllegalStateException](
-      Similarity.appendToIvfSqIndex(s, ivf, emb(Seq(100L), 8), "vec_id", "embedding"))
+      Similarity.appendToIvfIndex(s, ivf, emb(Seq(100L), 8), "vec_id", "embedding"))
     // the fenced COMPACT verbs refuse too (the IVF one via its geometry
     // snapshot, the LSH one explicitly) — but only when there is pending
     // ingest to fold, so plant one batch behind each marker... the marker
@@ -341,8 +353,8 @@ class IndexLifecycleSpec extends AnyFunSuite {
     // the named repair works: re-running the build clears the marker
     LshIndex.build(docs(0L until 20L, "corpus"), "doc_id", "text", lsh,
       sigBuckets = 8)
-    Similarity.buildIvfSqIndex(emb(0L until 30L), "vec_id", "embedding", ivf,
-      nlist = 4)
+    Similarity.buildIvfIndex(emb(0L until 30L), "vec_id", "embedding", ivf,
+      nlist = 4, codec = Similarity.IvfCodec.Sq())
     assert(LshIndex.screen(s, lsh, docs(0L until 20L, "corpus"),
       docs(Seq(100L), "b"), "doc_id", "text", 0.5).count() === 1)
     assert(Similarity.ivfIndexHealth(s, ivf).count() === 4)

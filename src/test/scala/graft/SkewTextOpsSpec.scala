@@ -751,7 +751,8 @@ class SkewTextOpsSpec extends AnyFunSuite {
     val idx = java.nio.file.Files.createTempDirectory("graftmrl")
       .toFile.getAbsolutePath
     graft.ops.Similarity.buildIvfIndex(emb.filter(col("vec_id") % 2 === 0),
-      "vec_id", "embedding", idx, nlist = 6, depth = Some(depth))
+      "vec_id", "embedding", idx, nlist = 6,
+      codec = graft.ops.Similarity.IvfCodec.Raw(depth = Some(depth)))
     // appends AUTO-truncate to the stored dimensionality (the depth rides
     // the centroid geometry — no side metadata)
     graft.ops.Similarity.appendToIvfIndex(s, idx,
@@ -838,14 +839,15 @@ class SkewTextOpsSpec extends AnyFunSuite {
     val cents = graft.ops.Similarity.defaultCentroids(emb, "vec_id", "embedding", 6)
     // build on evens, append odds: scale AND centroids freeze at build, so
     // odd vectors quantize (and clamp) against the even-half scale
-    graft.ops.Similarity.buildIvfSqIndex(emb.filter(col("vec_id") % 2 === 0),
-      "vec_id", "embedding", idx, nlist = 6, centroids = Some(cents))
-    graft.ops.Similarity.appendToIvfSqIndex(s, idx,
+    graft.ops.Similarity.buildIvfIndex(emb.filter(col("vec_id") % 2 === 0),
+      "vec_id", "embedding", idx, nlist = 6, centroids = Some(cents),
+      codec = graft.ops.Similarity.IvfCodec.Sq())
+    graft.ops.Similarity.appendToIvfIndex(s, idx,
       emb.filter(col("vec_id") % 2 === 1), "vec_id", "embedding")
     // rerank·k ≥ the full corpus ⇒ every in-cell candidate is exact-rescored
     // and the compressed-domain pre-rank cannot evict anything: the output
     // must be IDENTICAL to the float probe over the same index
-    val sq = graft.ops.Similarity.ivfSqTopKIndexed(s, idx, queries,
+    val sq = graft.ops.Similarity.ivfProbe(s, idx, queries,
       "vec_id", "embedding", k = 4, nprobe = 2, rerank = 100)
     val float = graft.ops.Similarity.ivfTopKIndexed(s, idx, queries,
       "vec_id", "embedding", k = 4, nprobe = 2)
@@ -856,7 +858,7 @@ class SkewTextOpsSpec extends AnyFunSuite {
     // at a REALISTIC rerank the output is still exact cosines of surviving
     // candidates: every row must appear in the float probe's full ranking
     // with the same similarity (the pre-rank selects, never rescores)
-    val tight = graft.ops.Similarity.ivfSqTopKIndexed(s, idx, queries,
+    val tight = graft.ops.Similarity.ivfProbe(s, idx, queries,
       "vec_id", "embedding", k = 4, nprobe = 2, rerank = 3)
     val fullRank = graft.ops.Similarity.ivfTopKIndexed(s, idx, queries,
       "vec_id", "embedding", k = 1000, nprobe = 2)
@@ -888,21 +890,21 @@ class SkewTextOpsSpec extends AnyFunSuite {
     val idx = java.nio.file.Files.createTempDirectory("graftivfpq")
       .toFile.getAbsolutePath
     val cents = graft.ops.Similarity.defaultCentroids(emb, "vec_id", "embedding", 6)
-    graft.ops.Similarity.buildIvfPqIndex(emb.filter(col("vec_id") % 2 === 0),
-      "vec_id", "embedding", idx, nlist = 6, m = 4, kc = 8,
-      centroids = Some(cents))
-    graft.ops.Similarity.appendToIvfPqIndex(s, idx,
+    graft.ops.Similarity.buildIvfIndex(emb.filter(col("vec_id") % 2 === 0),
+      "vec_id", "embedding", idx, nlist = 6,
+      centroids = Some(cents), codec = graft.ops.Similarity.IvfCodec.Pq(m = 4, kc = 8))
+    graft.ops.Similarity.appendToIvfIndex(s, idx,
       emb.filter(col("vec_id") % 2 === 1), "vec_id", "embedding")
     // rerank·k ≥ the corpus ⇒ every in-cell candidate is exact-rescored:
     // the ADC pre-rank cannot evict anything, output == the float probe
-    val pq = graft.ops.Similarity.ivfPqTopKIndexed(s, idx, queries,
+    val pq = graft.ops.Similarity.ivfProbe(s, idx, queries,
       "vec_id", "embedding", k = 4, nprobe = 2, rerank = 100)
     val float = graft.ops.Similarity.ivfTopKIndexed(s, idx, queries,
       "vec_id", "embedding", k = 4, nprobe = 2)
     assert(pq.orderBy("qid", "rn").collect().toSeq ===
       float.orderBy("qid", "rn").collect().toSeq)
     // realistic rerank: exact cosines of surviving candidates only
-    val tight = graft.ops.Similarity.ivfPqTopKIndexed(s, idx, queries,
+    val tight = graft.ops.Similarity.ivfProbe(s, idx, queries,
       "vec_id", "embedding", k = 4, nprobe = 2, rerank = 3)
     assert(tight.count() === 5 * 4)
     assert(tight.join(
@@ -946,9 +948,9 @@ class SkewTextOpsSpec extends AnyFunSuite {
     def top1(normalize: Boolean): Long = {
       val idx = java.nio.file.Files.createTempDirectory("graftsqnorm")
         .toFile.getAbsolutePath
-      graft.ops.Similarity.buildIvfSqIndex(rows, "vec_id", "embedding", idx,
-        nlist = 1, normalize = normalize)
-      graft.ops.Similarity.ivfSqTopKIndexed(s, idx, q, "vec_id", "embedding",
+      graft.ops.Similarity.buildIvfIndex(rows, "vec_id", "embedding", idx,
+        nlist = 1, codec = graft.ops.Similarity.IvfCodec.Sq(normalize = normalize))
+      graft.ops.Similarity.ivfProbe(s, idx, q, "vec_id", "embedding",
         k = 1, nprobe = 1, rerank = 2).collect()(0).getLong(1)
     }
     // raw inner-product pre-rank: rerank·k = 2 slots fill with decoys
@@ -962,13 +964,13 @@ class SkewTextOpsSpec extends AnyFunSuite {
     // a LARGE-norm query in the same direction)
     val idx2 = java.nio.file.Files.createTempDirectory("graftsqnorm2")
       .toFile.getAbsolutePath
-    graft.ops.Similarity.buildIvfSqIndex(rows, "vec_id", "embedding", idx2,
-      nlist = 1, normalize = true)
-    graft.ops.Similarity.appendToIvfSqIndex(s, idx2,
+    graft.ops.Similarity.buildIvfIndex(rows, "vec_id", "embedding", idx2,
+      nlist = 1, codec = graft.ops.Similarity.IvfCodec.Sq(normalize = true))
+    graft.ops.Similarity.appendToIvfIndex(s, idx2,
       Seq((10L, vec(5 -> 0.25))).toDF("vec_id", "embedding"),
       "vec_id", "embedding")
     val bigQ = Seq((20L, vec(5 -> 40.0))).toDF("vec_id", "embedding")
-    val got = graft.ops.Similarity.ivfSqTopKIndexed(s, idx2, bigQ,
+    val got = graft.ops.Similarity.ivfProbe(s, idx2, bigQ,
       "vec_id", "embedding", k = 1, nprobe = 1, rerank = 2).collect()
     assert(got.length === 1 && got(0).getLong(1) === 10L,
       s"appended normalized vector must top its direction: ${got.mkString}")

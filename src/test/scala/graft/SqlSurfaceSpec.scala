@@ -121,14 +121,14 @@ class SqlSurfaceSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(5)
     val emb = (0L until 60L).map(i => (i, Array.fill(8)(rnd.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding")
-    graft.ops.Similarity.buildIvfSqIndex(emb, "vec_id", "embedding",
-      s"$dir/ivf", nlist = 4)
+    graft.ops.Similarity.buildIvfIndex(emb, "vec_id", "embedding",
+      s"$dir/ivf", nlist = 4, codec = graft.ops.Similarity.IvfCodec.Sq())
     emb.filter(col("vec_id") < 3).createOrReplaceTempView("sqlops_queries")
     val probed = s.sql(
       s"""SELECT qid, vec_id, sim, rn
          |FROM ivf_probe('$dir/ivf', 'sqlops_queries', 'vec_id', 'embedding', 3, 2, 4)
          |ORDER BY qid, rn""".stripMargin).collect()
-    val apiProbe = graft.ops.Similarity.ivfSqTopKIndexed(s, s"$dir/ivf",
+    val apiProbe = graft.ops.Similarity.ivfProbe(s, s"$dir/ivf",
         emb.filter(col("vec_id") < 3), "vec_id", "embedding", k = 3,
         nprobe = 2, rerank = 4)
       .orderBy("qid", "rn").collect()
@@ -191,9 +191,9 @@ class SqlSurfaceSpec extends AnyFunSuite {
         (i, Array.fill(8)(rnd.nextGaussian().toFloat))).toDF("vec_id", "embedding")
       val extra = Seq((100L, Array.fill(8)(0.25f))).toDF("vec_id", "embedding")
       Seq("a", "b").foreach { t =>
-        graft.ops.Similarity.buildIvfSqIndex(emb, "vec_id", "embedding",
-          s"$dir/ivf_$t", nlist = 4)
-        graft.ops.Similarity.appendBatchToIvfSqIndex(s, s"$dir/ivf_$t", extra,
+        graft.ops.Similarity.buildIvfIndex(emb, "vec_id", "embedding",
+          s"$dir/ivf_$t", nlist = 4, codec = graft.ops.Similarity.IvfCodec.Sq())
+        graft.ops.Similarity.appendBatchToIvfIndex(s, s"$dir/ivf_$t", extra,
           "vec_id", "embedding", 0L)
       }
       graft.ops.Similarity.compactIvfIngest(s, s"$dir/ivf_a")

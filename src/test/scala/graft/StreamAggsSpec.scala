@@ -506,19 +506,19 @@ class StreamAggsSpec extends AnyFunSuite {
     val queries = all.take(5).toDF("vec_id", "embedding")
 
     // twin index: same build, the two batches appended the batch way
-    graft.ops.Similarity.buildIvfSqIndex(base, "vec_id", "embedding",
-      s"$dir/twin", nlist = 5)
-    graft.ops.Similarity.appendToIvfSqIndex(s, s"$dir/twin",
+    graft.ops.Similarity.buildIvfIndex(base, "vec_id", "embedding",
+      s"$dir/twin", nlist = 5, codec = graft.ops.Similarity.IvfCodec.Sq())
+    graft.ops.Similarity.appendToIvfIndex(s, s"$dir/twin",
       b1.toDF("vec_id", "embedding"), "vec_id", "embedding")
-    graft.ops.Similarity.appendToIvfSqIndex(s, s"$dir/twin",
+    graft.ops.Similarity.appendToIvfIndex(s, s"$dir/twin",
       b2.toDF("vec_id", "embedding"), "vec_id", "embedding")
-    val want = graft.ops.Similarity.ivfSqTopKIndexed(s, s"$dir/twin",
+    val want = graft.ops.Similarity.ivfProbe(s, s"$dir/twin",
       queries, "vec_id", "embedding", k = 4, nprobe = 2, rerank = 3)
       .orderBy("qid", "rn").collect().toSeq
 
     // streamed index: identical build, batches arrive as micro-batches
-    graft.ops.Similarity.buildIvfSqIndex(base, "vec_id", "embedding",
-      s"$dir/idx", nlist = 5)
+    graft.ops.Similarity.buildIvfIndex(base, "vec_id", "embedding",
+      s"$dir/idx", nlist = 5, codec = graft.ops.Similarity.IvfCodec.Sq())
     b1.toDF("vec_id", "embedding").write.parquet(s"$dir/in")
     val q = StreamAggs.indexAtIngest(
         s.readStream.schema("vec_id long, embedding array<float>")
@@ -531,7 +531,7 @@ class StreamAggsSpec extends AnyFunSuite {
       b2.toDF("vec_id", "embedding").write.mode("append").parquet(s"$dir/in")
       q.processAllAvailable()
     } finally q.stop()
-    def probe() = graft.ops.Similarity.ivfSqTopKIndexed(s, s"$dir/idx",
+    def probe() = graft.ops.Similarity.ivfProbe(s, s"$dir/idx",
       queries, "vec_id", "embedding", k = 4, nprobe = 2, rerank = 3)
     assert(probe().orderBy("qid", "rn").collect().toSeq === want,
       "probe over main ∪ ingest must equal the batch-append twin")
@@ -541,7 +541,7 @@ class StreamAggsSpec extends AnyFunSuite {
     assert(before === 300L, s"every vector exactly once, got $before")
     // crash-replay: foreachBatch redelivers a batch under its old batchId —
     // the dynamic overwrite of b=<id> must leave the index unchanged
-    graft.ops.Similarity.appendBatchToIvfSqIndex(s, s"$dir/idx",
+    graft.ops.Similarity.appendBatchToIvfIndex(s, s"$dir/idx",
       b2.toDF("vec_id", "embedding"), "vec_id", "embedding", batchId = 1L)
     assert(indexRows() === before, "replayed batch must not duplicate rows")
     assert(probe().orderBy("qid", "rn").collect().toSeq === want)
@@ -604,13 +604,14 @@ class StreamAggsSpec extends AnyFunSuite {
     val b1 = all.filter(_._1 % 3 == 1).toDF("vec_id", "embedding")
     val b2 = all.filter(_._1 % 3 == 2).toDF("vec_id", "embedding")
     val idx = s"$dir/idx"
-    graft.ops.Similarity.buildIvfSqIndex(base, "vec_id", "embedding", idx, nlist = 4)
-    graft.ops.Similarity.appendBatchToIvfSqIndex(s, idx, b1, "vec_id", "embedding", 0L)
+    graft.ops.Similarity.buildIvfIndex(base, "vec_id", "embedding", idx, nlist = 4,
+      codec = graft.ops.Similarity.IvfCodec.Sq())
+    graft.ops.Similarity.appendBatchToIvfIndex(s, idx, b1, "vec_id", "embedding", 0L)
     // compact runs while the stream is down, batch 0's checkpoint uncommitted
     graft.ops.Similarity.compactIvfIngest(s, idx)
     assert(s.read.parquet(s"$idx/cells").count() === 60L)
     // restart: foreachBatch redelivers batch 0 — the marker makes it a no-op
-    graft.ops.Similarity.appendBatchToIvfSqIndex(s, idx, b1, "vec_id", "embedding", 0L)
+    graft.ops.Similarity.appendBatchToIvfIndex(s, idx, b1, "vec_id", "embedding", 0L)
     assert(!new java.io.File(s"$idx/ingest").exists(),
       "a folded batch's replay must not rewrite the ingest area")
     graft.ops.Similarity.compactIvfIngest(s, idx)
@@ -620,7 +621,7 @@ class StreamAggsSpec extends AnyFunSuite {
     assert(s.read.parquet(s"$idx/cells").count() === 60L)
     // the NEXT real batch appends normally, and folding it prunes the
     // dead b=0 marker (only the latest batch can ever be replayed)
-    graft.ops.Similarity.appendBatchToIvfSqIndex(s, idx, b2, "vec_id", "embedding", 1L)
+    graft.ops.Similarity.appendBatchToIvfIndex(s, idx, b2, "vec_id", "embedding", 1L)
     assert(s.read.parquet(s"$idx/ingest").count() === 30L)
     graft.ops.Similarity.compactIvfIngest(s, idx)
     assert(s.read.parquet(s"$idx/cells").count() === 90L)
@@ -629,11 +630,11 @@ class StreamAggsSpec extends AnyFunSuite {
     assert(markers === Seq("b=1"), s"stale markers must prune, got $markers")
     // the PQ twin shares the guard
     val pq = s"$dir/pq"
-    graft.ops.Similarity.buildIvfPqIndex(base, "vec_id", "embedding", pq,
-      nlist = 4, m = 4, kc = 8)
-    graft.ops.Similarity.appendBatchToIvfPqIndex(s, pq, b1, "vec_id", "embedding", 0L)
+    graft.ops.Similarity.buildIvfIndex(base, "vec_id", "embedding", pq,
+      nlist = 4, codec = graft.ops.Similarity.IvfCodec.Pq(m = 4, kc = 8))
+    graft.ops.Similarity.appendBatchToIvfIndex(s, pq, b1, "vec_id", "embedding", 0L)
     graft.ops.Similarity.compactIvfIngest(s, pq)
-    graft.ops.Similarity.appendBatchToIvfPqIndex(s, pq, b1, "vec_id", "embedding", 0L)
+    graft.ops.Similarity.appendBatchToIvfIndex(s, pq, b1, "vec_id", "embedding", 0L)
     graft.ops.Similarity.compactIvfIngest(s, pq)
     assert(s.read.parquet(s"$pq/cells").count() === 60L,
       "PQ ingest replay after compact must not duplicate vectors")
@@ -689,18 +690,19 @@ class StreamAggsSpec extends AnyFunSuite {
     val all = (0L until 90L).map(i => (i, Array.fill(8)(rnd.nextGaussian().toFloat)))
     val emb = all.toDF("vec_id", "embedding").localCheckpoint()
     val idx = s"$dir/idx"
-    graft.ops.Similarity.buildIvfSqIndex(
-      emb.filter(col("vec_id") < 70), "vec_id", "embedding", idx, nlist = 4)
+    graft.ops.Similarity.buildIvfIndex(
+      emb.filter(col("vec_id") < 70), "vec_id", "embedding", idx, nlist = 4,
+      codec = graft.ops.Similarity.IvfCodec.Sq())
     val queries = emb.filter(col("vec_id") < 3)
     // a reader over the VERSIONED geometry planned before the forget keeps
     // its snapshot (same contract as recluster). Planned before the ingest
     // batch lands: a reader whose plan unions the pending ingest side area
     // is outside the snapshot contract — folds MOVE those files (the
     // documented maintenance-cadence rule for compaction).
-    val preProbe = graft.ops.Similarity.ivfSqTopKIndexed(s, idx, queries,
+    val preProbe = graft.ops.Similarity.ivfProbe(s, idx, queries,
       "vec_id", "embedding", k = 4, nprobe = 4, rerank = 100)
     val preWant = preProbe.orderBy("qid", "rn").collect().toSeq
-    graft.ops.Similarity.appendBatchToIvfSqIndex(s, idx,
+    graft.ops.Similarity.appendBatchToIvfIndex(s, idx,
       emb.filter(col("vec_id") >= 70).toDF(), "vec_id", "embedding", 1L)
     // victims straddle the main table and the ingest side area
     val victims = Seq(5L, 6L, 7L, 80L, 81L)
@@ -711,7 +713,7 @@ class StreamAggsSpec extends AnyFunSuite {
       "a reader planned before the forget must keep its snapshot")
     // full probe + exhaustive rerank == the exact scan over SURVIVORS:
     // no victim may surface, no survivor may be lost
-    val post = graft.ops.Similarity.ivfSqTopKIndexed(s, idx, queries,
+    val post = graft.ops.Similarity.ivfProbe(s, idx, queries,
       "vec_id", "embedding", k = 4, nprobe = 4, rerank = 1000)
     val exact = graft.ops.Similarity.cosineTopK(
       all.filterNot(v => victims.contains(v._1)).toDF("vec_id", "embedding"),
@@ -735,7 +737,8 @@ class StreamAggsSpec extends AnyFunSuite {
     val emb = (0L until 60L).map(i => (i, Array.fill(8)(rnd.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding").localCheckpoint()
     val idx = s"$dir/idx"
-    graft.ops.Similarity.buildIvfSqIndex(emb, "vec_id", "embedding", idx, nlist = 4)
+    graft.ops.Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx, nlist = 4,
+      codec = graft.ops.Similarity.IvfCodec.Sq())
     val before = s.read.parquet(s"$idx/cells").count()
     // an in-flight (or crashed) mutator holds the fence: every mutating
     // entry point must fail fast instead of interleaving into lost vectors
@@ -748,18 +751,18 @@ class StreamAggsSpec extends AnyFunSuite {
       graft.ops.Similarity.reclusterIvfIndex(s, idx, nlist = 4)
     }
     intercept[java.util.ConcurrentModificationException] {
-      graft.ops.Similarity.appendToIvfSqIndex(s, idx, emb.limit(1),
+      graft.ops.Similarity.appendToIvfIndex(s, idx, emb.limit(1),
         "vec_id", "embedding")
     }
     intercept[java.util.ConcurrentModificationException] {
-      graft.ops.Similarity.appendBatchToIvfSqIndex(s, idx, emb.limit(1),
+      graft.ops.Similarity.appendBatchToIvfIndex(s, idx, emb.limit(1),
         "vec_id", "embedding", 7L)
     }
     assert(s.read.parquet(s"$idx/cells").count() === before,
       "a fenced-out mutator must leave the index untouched")
     // the holder crashed: the operator breaks the fence, mutation resumes
     assert(graft.ops.Similarity.breakIndexMutation(s, idx))
-    graft.ops.Similarity.appendToIvfSqIndex(s, idx,
+    graft.ops.Similarity.appendToIvfIndex(s, idx,
       Seq((100L, Array.fill(8)(0.5f))).toDF("vec_id", "embedding"),
       "vec_id", "embedding")
     assert(s.read.parquet(s"$idx/cells").count() === before + 1)
@@ -786,12 +789,12 @@ class StreamAggsSpec extends AnyFunSuite {
     // replay IS the dead holder's retry — idempotent content), but a fence
     // from a DIFFERENT op identity still refuses
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$idx/_mutating"),
-      "appendBatchToIvfSqIndex b=9 pid=99999 at=crashed".getBytes("UTF-8"))
+      "appendBatchToIvfIndex b=9 pid=99999 at=crashed".getBytes("UTF-8"))
     intercept[java.util.ConcurrentModificationException] {
-      graft.ops.Similarity.appendBatchToIvfSqIndex(s, idx, emb.limit(1),
+      graft.ops.Similarity.appendBatchToIvfIndex(s, idx, emb.limit(1),
         "vec_id", "embedding", 10L) // different batch — might be alive
     }
-    graft.ops.Similarity.appendBatchToIvfSqIndex(s, idx, emb.limit(1),
+    graft.ops.Similarity.appendBatchToIvfIndex(s, idx, emb.limit(1),
       "vec_id", "embedding", 9L) // the replay of the crashed batch
     assert(!new java.io.File(s"$idx/_mutating").exists(),
       "the reclaimed fence must be released after the replay")
@@ -953,8 +956,8 @@ class StreamAggsSpec extends AnyFunSuite {
     val emb = (0L until 40L).map(i => (i, Array.fill(8)(rnd.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding")
     val idx = s"$dir/idx"
-    graft.ops.Similarity.buildIvfSqIndex(emb, "vec_id", "embedding", idx,
-      nlist = 4, normalize = true)
+    graft.ops.Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx,
+      nlist = 4, codec = graft.ops.Similarity.IvfCodec.Sq(normalize = true))
     // corrupt the flag file: reads must PROPAGATE (a swallowed error would
     // silently append raw vectors into a normalized index — permanent,
     // unsignalled recall loss)
@@ -965,12 +968,12 @@ class StreamAggsSpec extends AnyFunSuite {
     rm(meta)
     java.nio.file.Files.write(meta.toPath, "not parquet".getBytes("UTF-8"))
     intercept[Exception] {
-      graft.ops.Similarity.appendToIvfSqIndex(s, idx, emb.limit(2),
+      graft.ops.Similarity.appendToIvfIndex(s, idx, emb.limit(2),
         "vec_id", "embedding")
     }
     // ABSENCE stays benign: an index written before the flag existed is raw
     assert(meta.delete())
-    graft.ops.Similarity.appendToIvfSqIndex(s, idx, emb.limit(2),
+    graft.ops.Similarity.appendToIvfIndex(s, idx, emb.limit(2),
       "vec_id", "embedding")
   }
 
@@ -1036,16 +1039,16 @@ class StreamAggsSpec extends AnyFunSuite {
     val b1 = all.filter(_._1 % 2 == 1)
     val queries = all.take(4).toDF("vec_id", "embedding")
 
-    graft.ops.Similarity.buildIvfPqIndex(base, "vec_id", "embedding",
-      s"$dir/twin", nlist = 5, m = 4, kc = 8)
-    graft.ops.Similarity.appendToIvfPqIndex(s, s"$dir/twin",
+    graft.ops.Similarity.buildIvfIndex(base, "vec_id", "embedding",
+      s"$dir/twin", nlist = 5, codec = graft.ops.Similarity.IvfCodec.Pq(m = 4, kc = 8))
+    graft.ops.Similarity.appendToIvfIndex(s, s"$dir/twin",
       b1.toDF("vec_id", "embedding"), "vec_id", "embedding")
-    val want = graft.ops.Similarity.ivfPqTopKIndexed(s, s"$dir/twin",
+    val want = graft.ops.Similarity.ivfProbe(s, s"$dir/twin",
       queries, "vec_id", "embedding", k = 3, nprobe = 2, rerank = 4)
       .orderBy("qid", "rn").collect().toSeq
 
-    graft.ops.Similarity.buildIvfPqIndex(base, "vec_id", "embedding",
-      s"$dir/idx", nlist = 5, m = 4, kc = 8)
+    graft.ops.Similarity.buildIvfIndex(base, "vec_id", "embedding",
+      s"$dir/idx", nlist = 5, codec = graft.ops.Similarity.IvfCodec.Pq(m = 4, kc = 8))
     b1.toDF("vec_id", "embedding").write.parquet(s"$dir/in")
     // the SAME indexAtIngest entry as the SQ8 test: it must detect the PQ
     // layout (books present) and encode with the persisted codebooks
@@ -1056,12 +1059,12 @@ class StreamAggsSpec extends AnyFunSuite {
       .option("checkpointLocation", s"$dir/chk")
       .trigger(Trigger.ProcessingTime("100 milliseconds")).start()
     try q.processAllAvailable() finally q.stop()
-    def probe() = graft.ops.Similarity.ivfPqTopKIndexed(s, s"$dir/idx",
+    def probe() = graft.ops.Similarity.ivfProbe(s, s"$dir/idx",
       queries, "vec_id", "embedding", k = 3, nprobe = 2, rerank = 4)
     assert(probe().orderBy("qid", "rn").collect().toSeq === want,
       "PQ probe over main ∪ ingest must equal the batch-append twin")
     // replay no-op, then compact (same generic file-move fold as SQ8)
-    graft.ops.Similarity.appendBatchToIvfPqIndex(s, s"$dir/idx",
+    graft.ops.Similarity.appendBatchToIvfIndex(s, s"$dir/idx",
       b1.toDF("vec_id", "embedding"), "vec_id", "embedding", batchId = 0L)
     assert(s.read.parquet(s"$dir/idx/ingest").count() === 100L)
     graft.ops.Similarity.compactIvfIngest(s, s"$dir/idx")
@@ -1075,7 +1078,7 @@ class StreamAggsSpec extends AnyFunSuite {
     // the rewrite (codes depend on the frozen books, not the centroids)
     val extra = (300L until 320L).map(i =>
       (i, Array.fill(16)(rnd.nextGaussian().toFloat)))
-    graft.ops.Similarity.appendBatchToIvfPqIndex(s, s"$dir/idx",
+    graft.ops.Similarity.appendBatchToIvfIndex(s, s"$dir/idx",
       extra.toDF("vec_id", "embedding"), "vec_id", "embedding", batchId = 1L)
     graft.ops.Similarity.reclusterIvfIndex(s, s"$dir/idx", nlist = 5)
     assert(!new java.io.File(s"$dir/idx/ingest").exists(),
@@ -1087,7 +1090,7 @@ class StreamAggsSpec extends AnyFunSuite {
     // the compressed probe still serves: a full probe (every cell,
     // exhaustive rerank) must equal the exact cosine scan — any dropped
     // code column or stale assignment breaks this identity
-    val fullProbe = graft.ops.Similarity.ivfPqTopKIndexed(s, s"$dir/idx",
+    val fullProbe = graft.ops.Similarity.ivfProbe(s, s"$dir/idx",
       queries, "vec_id", "embedding", k = 3, nprobe = 5, rerank = 100)
     val exact = graft.ops.Similarity.cosineTopK(
       (all ++ extra).toDF("vec_id", "embedding"), queries,
@@ -1107,8 +1110,9 @@ class StreamAggsSpec extends AnyFunSuite {
     val corpus = (0 until 8).map(i => (i.toLong, oneHot(i)))
     corpus.toDF("vec_id", "embedding")
       .write.parquet(s"$dir/corpus")
-    graft.ops.Similarity.buildIvfSqIndex(s.read.parquet(s"$dir/corpus"),
-      "vec_id", "embedding", s"$dir/idx", nlist = 4)
+    graft.ops.Similarity.buildIvfIndex(s.read.parquet(s"$dir/corpus"),
+      "vec_id", "embedding", s"$dir/idx", nlist = 4,
+      codec = graft.ops.Similarity.IvfCodec.Sq())
 
     val flat = Array.fill(8)(0.3535f)                      // cos ≈ .35 vs any e_i
     val flatTwin = flat.updated(0, 0.36f)                  // cos ≈ 1 vs flat
