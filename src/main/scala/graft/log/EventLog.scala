@@ -7,7 +7,8 @@ import graft.functions.Fnv1a32
 import java.sql.Timestamp
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Dataset, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, DataFrameWriter, Dataset, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -227,7 +228,12 @@ class EventLog(
 
   // ── reads ────────────────────────────────────────────────────────────────
 
-  /** Full envelope incl. the physical bucket partition column. */
+  /** Full envelope incl. the physical bucket partition column: the whole
+    * log, so its file index lists every bucket directory (a Spark job of
+    * its own above 32 directories). Whole-log readers and rewrites start
+    * here; the point reads (a stream's events, the version check of an
+    * append, the latest snapshot) read only their buckets ([[pointScan]]).
+    */
   def eventsWithBucket: DataFrame =
     if (!exists(eventsPath)) emptyEvents(withBucket = true)
     else spark.read.schema(addBucket(evSchema)).parquet(eventsPath)
@@ -316,54 +322,56 @@ class EventLog(
       .drop("bucket")
 
   /** S1: one stream's active events after a version, in version order
-    * (store/postgresql/store.go:423-444). Bucket-pruned point scan. The
-    * global `orderBy` plans a range exchange — a sampling job, a map stage
-    * and a result stage — so a caller that collects the stream to fold it
-    * on the driver uses [[collectStream]] instead: the same filter, one job.
+    * (store/postgresql/store.go:423-444). A point scan of the stream's
+    * bucket directory ([[pointScan]]). The global `orderBy` plans a range
+    * exchange — a sampling job, a map stage and a result stage — so a
+    * caller that collects the stream to fold it on the driver uses
+    * [[collectStream]] instead: the same filter, one job.
     */
   def streamEvents(aggregateId: String, sinceVersion: Int = 0): DataFrame =
-    streamScan(aggregateId, sinceVersion).orderBy(col("aggregate_version"))
+    streamScan(aggregateId, sinceVersion).getOrElse(emptyEvents(withBucket = false))
+      .orderBy(col("aggregate_version"))
 
-  /** The bucket-pruned filter behind [[streamEvents]], unordered. */
-  private def streamScan(aggregateId: String, sinceVersion: Int): DataFrame =
-    committedView(eventsWithBucket)
-      .filter(col("bucket") === bucketOf(aggregateId) &&
-        col("aggregate_id") === aggregateId &&
+  /** The point-scan filter behind [[streamEvents]], unordered; None when
+    * the stream's bucket directory does not exist.
+    */
+  private def streamScan(aggregateId: String, sinceVersion: Int): Option[DataFrame] =
+    pointScan(eventsPath, evSchema, Seq(bucketOf(aggregateId))).map(_
+      .filter(col("aggregate_id") === aggregateId &&
         col("migration") === 0 &&
         col("aggregate_version") > sinceVersion)
-      .drop("bucket")
+      .drop("bucket"))
 
   /** S1 as a fold input: `(kind, body, aggregate_version)` of one stream's
     * active events after `sinceVersion` (and with `id <= untilId` when it is
-    * set), in version order. One single-stage job with no exchange: the
-    * bucket-pruned filter is collected unsorted (the scan keeps its
-    * parallelism) and the rows are sorted by version on the driver, where
-    * the caller folds them anyway.
+    * set), in version order. One single-stage job with no exchange, and
+    * none when the stream's bucket directory does not exist: the point scan
+    * is collected unsorted (the scan keeps its parallelism) and the rows
+    * are sorted by version on the driver, where the caller folds them
+    * anyway.
     */
   private[graft] def collectStream(aggregateId: String, sinceVersion: Int = 0,
       untilId: String = ""): Array[Row] =
-    streamScan(aggregateId, sinceVersion)
+    streamScan(aggregateId, sinceVersion).fold(Array.empty[Row])(_
       .filter(if (untilId.isEmpty) lit(true) else col("id") <= untilId)
       .select("kind", "body", "aggregate_version")
       .collect()
-      .sortBy(_.getInt(2))
+      .sortBy(_.getInt(2)))
 
   /** S2: latest snapshot of one stream (store/postgresql/store.go:295-323).
-    * Bucket-pruned like the event point scan — a point read must never list
-    * more than one partition directory.
+    * A point scan like the event one: the read lists the stream's one
+    * bucket directory, never another partition directory.
     */
   def latestSnapshot(aggregateId: String): Option[SnapshotRow] = {
     import spark.implicits._
-    if (!exists(snapshotsPath)) return None
-    committedView(spark.read.schema(addBucket(snSchema)).parquet(snapshotsPath))
-      .filter(col("bucket") === bucketOf(aggregateId) &&
-        col("aggregate_id") === aggregateId)
+    pointScan(snapshotsPath, snSchema, Seq(bucketOf(aggregateId))).flatMap(_
+      .filter(col("aggregate_id") === aggregateId)
       .drop("bucket")
       .orderBy(col("id").desc)
       .limit(1)
       .as[SnapshotRow]
       .collect()
-      .headOption
+      .headOption)
   }
 
   /** S3: global `(after, until]` keyset range scan in ULID order
@@ -764,17 +772,20 @@ class EventLog(
   private val writerId =
     java.lang.management.ManagementFactory.getRuntimeMXBean.getName // pid@host
 
+  /** One snapshot, written by the held writer ([[writeHeld]]): one file
+    * in the stream's bucket directory, with no Spark job.
+    */
   def saveSnapshot(snap: SnapshotRow): Unit = {
     import spark.implicits._
-    saveSnapshots(Seq(snap).toDS().toDF())
+    writeHeld("snapshot", snapshotsPath, Seq(snap).toDS().toDF())
   }
 
-  /** Distributed snapshot append (same layout contract as [[saveSnapshot]];
-    * one bucketed write for any number of streams' snapshots).
+  /** Distributed snapshot append (same layout and codec as
+    * [[saveSnapshot]]; one bucketed Spark write for any number of streams'
+    * snapshots).
     */
   def saveSnapshots(snaps: DataFrame): Unit = {
-    ensureDiscCols(snaps).withColumn("bucket", bucketCol())
-      .write.mode(SaveMode.Append).partitionBy("bucket").parquet(snapshotsPath)
+    partitionedWriter(withBucketCol(snaps)).mode(SaveMode.Append).parquet(snapshotsPath)
     graft.sources.GraftMeta.write(spark, snapshotsPath, numBuckets)
   }
 
@@ -1399,17 +1410,38 @@ class EventLog(
     */
   private def maxVersions(aggregateIds: Seq[String],
       refreshed: Boolean = false): Map[String, Int] = {
-    if (!exists(eventsPath)) return Map.empty
     import spark.implicits._
-    val buckets = aggregateIds.map(bucketOf).distinct
-    committedView(eventsWithBucket, refreshed)
-      .filter(col("bucket").isin(buckets: _*) &&
-        col("aggregate_id").isin(aggregateIds: _*))
-      .select("aggregate_id", "aggregate_version")
-      .as[(String, Int)]
-      .mapPartitions(EventLog.maxPerStream)
-      .collect()
-      .groupMapReduce(_._1)(_._2)(math.max)
+    pointScan(eventsPath, evSchema, aggregateIds.map(bucketOf), refreshed)
+      .fold(Map.empty[String, Int])(_
+        .filter(col("aggregate_id").isin(aggregateIds: _*))
+        .select("aggregate_id", "aggregate_version")
+        .as[(String, Int)]
+        .mapPartitions(EventLog.maxPerStream)
+        .collect()
+        .groupMapReduce(_._1)(_._2)(math.max))
+  }
+
+  /** The scan of a point read: only the `bucket=k` directories of
+    * `buckets`, with the table root as `basePath` so `bucket` still reads
+    * as a column, through [[committedView]]. Its listing covers those
+    * directories and never the whole table, so it does not grow with the
+    * bucket count or with other buckets' files. None when none of the
+    * directories exists.
+    * A directory deleted under the read (a Lock rewrite deletes the buckets
+    * it empties) drops out of it instead of failing it with
+    * `PATH_NOT_FOUND`.
+    */
+  private def pointScan(table: String, schema: StructType, buckets: Seq[Int],
+      refreshed: Boolean = false): Option[DataFrame] = {
+    val dirs = buckets.distinct.sorted.map(b => s"$table/bucket=$b")
+      .filter(d => logFs.exists(new Path(d)))
+    if (dirs.isEmpty) None
+    else try Some(committedView(spark.read.schema(addBucket(schema))
+      .option("basePath", table).parquet(dirs: _*), refreshed))
+    catch {
+      case e: AnalysisException if e.getCondition == "PATH_NOT_FOUND" =>
+        pointScan(table, schema, buckets, refreshed)
+    }
   }
 
   /** Every commit writes EXACTLY ONE id-sorted file per touched bucket:
@@ -1430,17 +1462,35 @@ class EventLog(
       .repartition(col("bucket"))
       .sortWithinPartitions("bucket", "id")
 
-  /** A batch already held on the driver (a point append) needs no shuffle
-    * for the same layout: as ONE partition sorted by `(bucket, id)` it is
-    * written by one task, which rolls to a new file only when the bucket
-    * changes — one id-sorted file per touched bucket, in one single-stage
-    * job instead of a map job and a write job.
+  /** The held writer: a batch already on the driver (a point append's rows,
+    * a snapshot) gets the same layout with no Spark job and no shuffle.
+    * [[withBucketCol]] is evaluated locally (the plan is a local table
+    * scan), and each touched bucket's rows, sorted by id, are written as
+    * one file through Spark's parquet writer on the driver — the footer a
+    * Spark write of the same rows gets — into a hidden staging directory
+    * under the table's `.commit-tmp`: the claim's `c{N}` when `token` is
+    * set (Manifest), a fresh `held-<uuid>` otherwise. [[moveStaged]] then
+    * renames the files into their `bucket=k` directories, prefixed with the
+    * token when there is one. A crash before the move leaves only hidden
+    * staging, which no reader lists: a condemned claim's prune sweeps its
+    * `c{N}`, and a later unclaimed held write of the table sweeps a
+    * `held-<uuid>` older than [[EventLog.StaleLockMs]] (no live write takes
+    * that long). Crash-hook labels: `"<op>: held write"`, `"<op>: held move"`.
     */
-  private def bucketedLocal(rows: Seq[EventRow]): DataFrame = {
-    import spark.implicits._
-    withBucketCol(rows.toDS().toDF())
-      .coalesce(1)
-      .sortWithinPartitions("bucket", "id")
+  private def writeHeld(op: String, table: String, rows: DataFrame,
+      token: Option[String] = None): Unit = {
+    val tmp = s"$table/.commit-tmp"
+    val staging = s"$tmp/${token.getOrElse(s"held-${java.util.UUID.randomUUID()}")}"
+    phase(s"$op: held write")(Bridge.writeLocalPartitioned(spark, withBucketCol(rows), "bucket",
+      "id", staging, Map("compression" -> EventLog.Compression)))
+    phase(s"$op: held move")(moveStaged(staging, table, token.fold("")(_ + "-")))
+    graft.sources.GraftMeta.write(spark, table, numBuckets)
+    if (token.isEmpty) {
+      val staleBefore = System.currentTimeMillis() - EventLog.StaleLockMs
+      logFs.listStatus(new Path(tmp))
+        .filter(d => d.getPath.getName.startsWith("held-") && d.getModificationTime < staleBefore)
+        .foreach(d => logFs.delete(d.getPath, true): Unit)
+    }
   }
 
   private def withBucketCol(df: DataFrame): DataFrame =
@@ -1479,19 +1529,20 @@ class EventLog(
   private def stageAndMove(laidOut: DataFrame, token: String): Unit = {
     val tmp = s"$eventsPath/.commit-tmp/$token"
     partitionedWriter(laidOut).mode(SaveMode.Overwrite).parquet(tmp)
-    moveStaged(tmp, eventsPath, token)
+    moveStaged(tmp, eventsPath, s"$token-")
     graft.sources.GraftMeta.write(spark, eventsPath, numBuckets)
   }
 
-  /** The one stage-and-move step of every manifest write: moves the part
-    * files a bucket-partitioned write staged under `tmp` into `table`'s
-    * bucket directories, each prefixed with the claim `token` (the
-    * committed view's membership key), then drops the staging directory.
-    * Renames of finished files never conflict, so commits stay parallel;
-    * staging lives under the claim's `.commit-tmp/c{N}` so a condemned
-    * claim's prune sweeps it.
+  /** The one stage-and-move step of every manifest write and of the held
+    * writer: moves the part files staged under `tmp` in `bucket=k`
+    * directories into `table`'s bucket directories, each name prefixed
+    * with `prefix` (`c{N}-`, the claim token that is the committed view's
+    * membership key; empty for an unclaimed held write), then drops the
+    * staging directory. Renames of finished files never conflict, so
+    * commits stay parallel; a claim's staging lives under its
+    * `.commit-tmp/c{N}` so a condemned claim's prune sweeps it.
     */
-  private def moveStaged(tmp: String, table: String, token: String): Unit = {
+  private def moveStaged(tmp: String, table: String, prefix: String): Unit = {
     val staged = new Path(tmp)
     val fs = staged.getFileSystem(spark.sessionState.newHadoopConf())
     fs.listStatus(staged)
@@ -1501,7 +1552,7 @@ class EventLog(
         fs.mkdirs(dest)
         fs.listStatus(bdir.getPath)
           .filter(_.getPath.getName.endsWith(".parquet"))
-          .foreach(f => fs.rename(f.getPath, new Path(dest, s"$token-${f.getPath.getName}")): Unit)
+          .foreach(f => fs.rename(f.getPath, new Path(dest, prefix + f.getPath.getName)): Unit)
       }
     fs.delete(staged, true): Unit
   }
@@ -1562,9 +1613,12 @@ class EventLog(
     * branches on the commit mode. `mint(chain)` resolves the heads its rows
     * continue from (committed parquet, max'ed with the chain's reservations
     * when there is a chain) and mints them.
-    *  - Lock: inside the log lock, mint once and append: one id-sorted file
-    *    per touched bucket ([[bucketedLocal]] for held rows, [[bucketed]]
-    *    for distributed ones). The commit chain is never touched.
+    * Either way a commit adds one id-sorted file per touched bucket: held
+    * rows through the held writer ([[writeHeld]]: no Spark job, so a
+    * one-record Lock `append` is its one version-check job), distributed
+    * rows through a Spark write of [[bucketed]].
+    *  - Lock: inside the log lock, mint once and append. The commit chain
+    *    is never touched.
     *  - Manifest: at most 100 attempts, each: refresh the chain, mint,
     *    [[reserve]], claim the next slot, stage and move the rows under the
     *    claim token, `markDone`. A lost claim race retries from fresh heads.
@@ -1598,9 +1652,13 @@ class EventLog(
         try body(Spread(cp, one), phase(s"$op: count")(obs.get("n").asInstanceOf[Long]))
         finally Checkpoints.release(cp)
     }
-    def laidOut(batch: Batch): DataFrame = batch match {
-      case Held(rows) => bucketedLocal(rows)
-      case Spread(df, _) => bucketed(df)
+    // the write step; `token` is the claim's in Manifest mode
+    def write(batch: Batch, token: Option[String]): Unit = batch match {
+      case Held(rows) =>
+        import spark.implicits._
+        writeHeld(op, eventsPath, rows.toDS().toDF(), token)
+      case Spread(df, _) => phase(s"$op: bucketed write")(
+        token.fold(appendLaidOut(bucketed(df)))(stageAndMove(bucketed(df), _)))
     }
     // reservations derive from the minted rows themselves (base = min
     // version - 1), so a claim can never drift from what it writes
@@ -1620,7 +1678,7 @@ class EventLog(
         case End(n) => n
         case _ =>
           val n = minted(mint(None)) { (batch, n) =>
-            if (n > 0) phase(s"$op: bucketed write")(appendLaidOut(laidOut(batch)))
+            if (n > 0) write(batch, None)
             n
           }
           committed()
@@ -1648,7 +1706,7 @@ class EventLog(
                   })
                   claimed = manifest.tryClaim(claim)
                   if (claimed) {
-                    phase(s"$op: bucketed write")(stageAndMove(laidOut(batch), s"c${claim.n}"))
+                    write(batch, Some(s"c${claim.n}"))
                     phase(s"$op: markDone")(manifest.markDone(claim.n))
                   }
                 } finally if (!claimed) resv.drop()
@@ -1810,7 +1868,7 @@ class EventLog(
     val rows = f(spark.read.schema(schema).parquet(inputs: _*)).withColumn("bucket", bucketCol())
     partitionedWriter(layOut(rows, nBuckets, layout), maxRecordsPerFile)
       .mode(SaveMode.Overwrite).parquet(tmp)
-    moveStaged(tmp, table, token)
+    moveStaged(tmp, table, s"$token-")
   }
 
   /** How a rewrite arranges `bucket`-carrying rows over `nBuckets` bucket
@@ -1852,6 +1910,8 @@ class EventLog(
     val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
     fs.exists(hp) && fs.listStatus(hp).nonEmpty
   }
+
+  private lazy val logFs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
   private def withLogLock[A](path: String)(f: => A): A =
     EventLog.withLogLock(path, spark.sessionState.newHadoopConf())(f)

@@ -9,14 +9,18 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.types.IntegerType
 
 /** Optimizer rule for the V1 parquet read path (`spark.read.parquet` over a
-  * graft log directory, which is how [[graft.log.EventLog]] itself reads):
-  * whenever a filter pins `aggregate_id` over a relation that (a) carries the
+  * graft log directory): SQL readers and whole-log readers — `EventLog`'s
+  * `events`/`activeEvents` views and the SQL views over them. Whenever a
+  * filter pins `aggregate_id` over a relation that (a) carries the
   * `_graft_meta.json` layout marker and (b) exposes the physical `bucket`
   * partition column, conjoin the implied `bucket = pmod(fnv1a32(id), n)`
   * predicate. FileSourceStrategy then classifies it as a partition filter and
   * prunes the scan's files to one bucket. The pruning runs after the
   * relation's file index has listed the whole log, so the listing still
   * grows with the log (the frame's `inputFiles` covers every file).
+  * `EventLog`'s own point reads (a stream's events, its version check, its
+  * latest snapshot) do not rely on this rule: they read only the stream's
+  * `bucket=k` directory, so they list nothing else.
   *
   * Idempotent (derived conjuncts already present are never re-added), so it
   * is safe in a fixpoint batch. Register at session build via

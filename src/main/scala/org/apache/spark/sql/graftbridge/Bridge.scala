@@ -260,4 +260,41 @@ object Bridge {
     }
     (sparkSchema, out)
   }
+
+  /** Writes a driver-local frame ON THE DRIVER through Spark's own parquet
+    * writer (`ParquetFileFormat.prepareWrite`'s `OutputWriter`, the object a
+    * write task uses), so the files' footers — schema, row metadata, codec —
+    * are the ones a Spark write of the same frame gets, with no job: the
+    * frame's plan is evaluated locally (a `LocalTableScanExec` runs none).
+    * One file per value of the int column `partCol`, its rows ascending in
+    * the string column `sortCol`, at `dir/<partCol>=<v>/part-…parquet`;
+    * `partCol` is not stored in the file, as in a partitioned Spark write.
+    */
+  def writeLocalPartitioned(spark: org.apache.spark.sql.SparkSession,
+      df: org.apache.spark.sql.DataFrame, partCol: String, sortCol: String,
+      dir: String, options: Map[String, String]): Unit = {
+    import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
+    val plan = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+      .queryExecution.executedPlan
+    val output = plan.output
+    val partIdx = output.indexWhere(_.name == partCol)
+    val sortIdx = output.indexWhere(_.name == sortCol)
+    val dataCols = output.filterNot(_.name == partCol)
+    val dataSchema = org.apache.spark.sql.catalyst.types.DataTypeUtils.fromAttributes(dataCols)
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      spark.sessionState.newHadoopConfWithOptions(options))
+    val factory = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .prepareWrite(spark, job, options, dataSchema)
+    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
+    val toData = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(dataCols, output)
+    plan.executeCollect().groupBy(_.getInt(partIdx)).foreach { case (v, rows) =>
+      val file = new org.apache.hadoop.fs.Path(s"$dir/$partCol=$v",
+        s"part-00000-${java.util.UUID.randomUUID()}.c000${factory.getFileExtension(ctx)}")
+      val writer = factory.newInstance(file.toString, dataSchema, ctx)
+      try rows.sortWith((a, b) => a.getUTF8String(sortIdx).compareTo(b.getUTF8String(sortIdx)) < 0)
+        .foreach(r => writer.write(toData(r)))
+      finally writer.close()
+    }
+  }
 }

@@ -1,15 +1,20 @@
 package graft
 
+import graft.core.SnapshotRow
 import graft.log.{AppendRecord, CommitMode, EventDetail, EventLog}
+import graft.streaming.{ProjMessage, Projector}
+import java.io.File
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.collection.mutable.ArrayBuffer
 
 /** Crash-injection harness for the manifest commit protocol: kill a writer
   * at EVERY step of claim→stage→sidecar→done (via the phase hook — one
   * enumerated point per scenario, stronger than sampling), recover with a
   * fresh writer (prune, the cadence any rival runs), and assert the
-  * protocol's recovery invariants at each point:
+  * protocol's recovery invariants at each point (the held writer of point
+  * appends and snapshots is killed at its steps in both commit modes):
   *   - single fate: the committed view equals the pre-crash state OR the
   *     fully-applied state, never a partial mix;
   *   - no lost rows: every original row stays present through crash,
@@ -242,6 +247,108 @@ class CrashInjectionSpec extends AnyFunSuite {
     } finally {
       sys.props.remove("graft.bulkClaim.inlineMax"): Unit
       EventLog.crashHook = None
+    }
+  }
+
+  private def rec(id: String, v: Int, body: String) =
+    AppendRecord(id, "Account", v, Map.empty, Seq(EventDetail("Created", body)))
+
+  /** Every file under `dir`, recursively, hidden ones included. */
+  private def allFiles(dir: String): Seq[File] = {
+    def walk(f: File): Seq[File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
+    walk(new File(dir))
+  }
+
+  // the held writer's labels in a Manifest point append, in protocol order
+  private val heldPoints = Seq("append: held write", "append: held move", "append: markDone")
+
+  test("a Manifest point append dies at every held-writer step: no row shows, prune sweeps it") {
+    heldPoints.foreach { point =>
+      val dir = Files.createTempDirectory("graftcrashheld").toFile.getAbsolutePath
+      val log = newLog(dir, 69L)
+      log.append(Seq(rec("hm-1", 0, "{}")))
+      val before = log.committedEvents.orderBy("id").collect().toSeq
+      // several buckets in one commit
+      val batch = (2 to 9).map(i => rec(s"hm-$i", 0, s"""{"i":$i}"""))
+      assert(batch.map(r => log.bucketOf(r.aggregateId)).distinct.size >= 3)
+
+      val seen = crashAt(point)(log.append(batch))
+      assert(seen.contains(point), s"phase '$point' never fired — label drift in EventLog?")
+      val fresh = newLog(dir, 70L)
+      assert(fresh.committedEvents.orderBy("id").collect().toSeq === before,
+        s"crash at '$point' leaked rows of an undone claim")
+
+      fresh.manifest.prune(Map.empty, staleMs = 0L): Unit
+      val staged = allFiles(s"$dir/events/.commit-tmp")
+      assert(staged.isEmpty, s"prune left the staging of '$point': $staged")
+      assert(spark.read.parquet(s"$dir/events").count() === before.size.toLong,
+        s"prune left token files of the claim that died at '$point'")
+
+      // a new process reads the heads from the data (the pruning writer's
+      // cache keeps the condemned reservation): the retry commits at v1
+      val retry = newLog(dir, 71L)
+      retry.append(batch): Unit
+      assert(retry.committedEvents.count() === 1L + batch.size)
+      assert(retry.committedEvents.select("aggregate_id", "aggregate_version").distinct()
+        .count() === 1L + batch.size)
+    }
+  }
+
+  test("a Lock point append dies before its move: only hidden staging, no reader lists it") {
+    Seq("append: held write", "append: held move").foreach { point =>
+      val dir = Files.createTempDirectory("graftcrashlock").toFile.getAbsolutePath
+      val log = new EventLog(spark, dir, numBuckets = 4, ulidSeed = Some(71L))
+      log.append(Seq(rec("lk-1", 0, "{}")))
+      val buf = ArrayBuffer[ProjMessage]()
+      val q = new Projector(log, "heldcrash", s"$dir/projector", partitions = 2)
+        .live(ds => buf.synchronized { buf ++= ds.collect(); () })
+      try {
+        q.processAllAvailable()
+        assert(buf.map(_.aggregate_id).toSeq == Seq("lk-1"))
+        val batch = Seq(rec("lk-2", 0, "{}"), rec("lk-3", 0, "{}"), rec("lk-4", 0, "{}"))
+
+        val seen = crashAt(point)(log.append(batch))
+        assert(seen.contains(point), s"phase '$point' never fired — label drift in EventLog?")
+        val staged = allFiles(s"$dir/events/.commit-tmp").filter(_.getName.endsWith(".parquet"))
+        if (point == "append: held move") assert(staged.size === 3, s"staged files: $staged")
+        else assert(staged.isEmpty)
+        assert(log.events.count() === 1L && log.activeEvents.count() === 1L,
+          s"crash at '$point' made staged rows visible")
+        q.processAllAvailable()
+        assert(buf.map(_.aggregate_id).toSeq == Seq("lk-1"),
+          s"the live projector delivered staged rows after '$point'")
+
+        // the lock was released: the retry commits, and is delivered once;
+        // it sweeps the dead write's staging once that is stale
+        new File(s"$dir/events/.commit-tmp").listFiles().foreach(_.setLastModified(0L))
+        log.append(batch): Unit
+        q.processAllAvailable()
+        assert(log.activeEvents.count() === 4L)
+        assert(buf.map(_.aggregate_id).sorted.toSeq == Seq("lk-1", "lk-2", "lk-3", "lk-4"))
+        assert(allFiles(s"$dir/events/.commit-tmp").isEmpty, "stale staging must be swept")
+      } finally q.stop()
+    }
+  }
+
+  test("a snapshot save dies at every held-writer step: the previous snapshot stays latest") {
+    Seq(CommitMode.Lock, CommitMode.Manifest).foreach { mode =>
+      Seq("snapshot: held write", "snapshot: held move").foreach { point =>
+        val dir = Files.createTempDirectory("graftcrashsnap").toFile.getAbsolutePath
+        val log = new EventLog(spark, dir, numBuckets = 4, ulidSeed = Some(73L), commitMode = mode)
+        val first = SnapshotRow("01H0000000000000000000000A", "sn-1", 2, "Account", "2",
+          new java.sql.Timestamp(1700000000000L), Map.empty)
+        val second = first.copy(id = "01H0000000000000000000000B", aggregate_version = 5, body = "5")
+        log.saveSnapshot(first)
+
+        val seen = crashAt(point)(log.saveSnapshot(second))
+        assert(seen.contains(point), s"phase '$point' never fired — label drift in EventLog?")
+        assert(log.latestSnapshot("sn-1").contains(first), s"$mode, '$point'")
+        assert(log.snapshots.count() === 1L)
+
+        log.saveSnapshot(second)
+        assert(log.latestSnapshot("sn-1").contains(second), s"$mode retry after '$point'")
+      }
     }
   }
 }

@@ -19,9 +19,9 @@ import org.scalatest.funsuite.AnyFunSuite
 class PointPathSpec extends AnyFunSuite {
   private def spark = SparkTestSession.spark
 
-  private def newLog(mode: CommitMode): EventLog = {
+  private def newLog(mode: CommitMode, buckets: Int = 4): EventLog = {
     val dir = Files.createTempDirectory("graftpoint").toFile.getAbsolutePath
-    new EventLog(spark, dir, numBuckets = 4, ulidSeed = Some(31L), commitMode = mode)
+    new EventLog(spark, dir, numBuckets = buckets, ulidSeed = Some(31L), commitMode = mode)
   }
 
   private def rec(id: String, v: Int, n: Int = 1) =
@@ -64,20 +64,29 @@ class PointPathSpec extends AnyFunSuite {
     }
   }
 
-  test("retrieve runs one job, a one-record Lock append two, update three; none shuffles") {
+  /** Asserts the point path's job counts on `log`'s streams `a`, `b`, `c`
+    * (each at version 1): retrieve one job, a one-record Lock append one,
+    * update two, and no shuffle bytes.
+    */
+  private def assertPointJobs(log: EventLog, store: EventStore[Account],
+      a: String, b: String, c: String): Unit = {
+    val (retrieveJobs, retrieveShuffle) = jobsOf(assert(store.retrieve(a).version == 1))
+    assert(retrieveJobs == 1, "retrieve: one scan of the stream's bucket, sorted on the driver")
+    val (appendJobs, appendShuffle) = jobsOf(log.append(Seq(rec(b, 1))))
+    assert(appendJobs == 1, "append: one version-check job; the held write runs none")
+    val (updateJobs, updateShuffle) =
+      jobsOf(store.update(c)(_ => Seq(AccountType.deposited(5))))
+    assert(updateJobs == 2, "update: retrieve + append")
+    assert(retrieveShuffle == 0L && appendShuffle == 0L && updateShuffle == 0L,
+      s"shuffle bytes: retrieve $retrieveShuffle, append $appendShuffle, update $updateShuffle")
+  }
+
+  test("retrieve runs one job, a one-record Lock append one, update two; none shuffles") {
     val log = newLog(CommitMode.Lock)
     val store = new EventStore(log, AccountType)
     (1 to 4).foreach(i => store.create(s"pp-$i", Seq(AccountType.created(10, "o"))))
 
-    val (retrieveJobs, retrieveShuffle) = jobsOf(assert(store.retrieve("pp-1").version == 1))
-    assert(retrieveJobs == 1, "retrieve: one bucket-pruned scan, sorted on the driver")
-    val (appendJobs, appendShuffle) = jobsOf(log.append(Seq(rec("pp-2", 1))))
-    assert(appendJobs == 2, "append: one version-check job plus one write job")
-    val (updateJobs, updateShuffle) =
-      jobsOf(store.update("pp-3")(_ => Seq(AccountType.deposited(5))))
-    assert(updateJobs == 3, "update: retrieve + append")
-    assert(retrieveShuffle == 0L && appendShuffle == 0L && updateShuffle == 0L,
-      s"shuffle bytes: retrieve $retrieveShuffle, append $appendShuffle, update $updateShuffle")
+    assertPointJobs(log, store, "pp-1", "pp-2", "pp-3")
 
     // the driver-side sort still folds in version order
     (1 to 12).foreach(i => log.append(Seq(rec("pp-4", i, 1))))
@@ -89,7 +98,34 @@ class PointPathSpec extends AnyFunSuite {
 
   private def partFiles(log: EventLog, bucket: Int): Set[String] =
     Option(new File(s"${log.path}/events/bucket=$bucket").listFiles())
-      .fold(Set.empty[String])(_.filter(_.getName.endsWith(".parquet")).map(_.getPath).toSet)
+      .fold(Set.empty[String])(_.filter(f => f.getName.endsWith(".parquet") &&
+        !f.getName.startsWith(".")).map(_.getPath).toSet)
+
+  // From 64 buckets up a whole-log listing (more than Spark's 32-path
+  // parallel-discovery threshold) is a Spark job of its own; a point op
+  // lists only its bucket, so its job counts do not depend on the layout.
+  Seq(4, 64, 128).foreach { buckets =>
+    test(s"$buckets buckets: point job counts are the 4-bucket ones; a retrieve reads only its bucket") {
+      val log = newLog(CommitMode.Lock, buckets)
+      val store = new EventStore(log, AccountType)
+      // one multi-record append populates most buckets
+      val ids = (0 until 3 * buckets).map(i => s"wide-$i")
+      log.append(ids.map(id => AppendRecord(id, "Account", 0, Map.empty,
+        Seq(AccountType.created(10, "o")))))
+      val populated = (0 until buckets).count(b => partFiles(log, b).nonEmpty)
+      if (buckets >= 64) assert(populated > 32,
+        s"fixture must populate more buckets than the parallel-discovery threshold, got $populated")
+
+      assertPointJobs(log, store, ids(0), ids(1), ids(2))
+
+      // the relation behind a retrieve covers its own bucket's files only
+      ids.take(3).foreach { id =>
+        val own = partFiles(log, log.bucketOf(id))
+        val read = log.streamEvents(id).inputFiles.map(f => new java.net.URI(f).getPath).toSet
+        assert(read.nonEmpty && read == own, s"$id reads $read, its bucket holds $own")
+      }
+    }
+  }
 
   Seq(CommitMode.Lock, CommitMode.Manifest).foreach { mode =>
     test(s"$mode: one append over 3+ buckets adds one id-sorted file per touched bucket") {
@@ -108,10 +144,17 @@ class PointPathSpec extends AnyFunSuite {
         val want = if (touched(b)) 1 else 0
         assert(added.size == want, s"bucket $b: $want new file(s) expected, got $added")
         added.foreach { f =>
+          // the held writer's file, renamed in under the claim token in Manifest mode
+          val name = new File(f).getName
+          assert(name.matches((if (mode == CommitMode.Manifest) "c\\d+-" else "") +
+            "part-.*\\.zstd\\.parquet"), name)
           val fileIds = spark.read.parquet(f).select("id").collect().map(_.getString(0)).toSeq
-          assert(fileIds.nonEmpty && fileIds == fileIds.sorted, s"$f is not id-sorted")
+          assert(fileIds.size == ids.count(log.bucketOf(_) == b) * 3)
+          assert(fileIds == fileIds.sorted, s"$f is not id-sorted")
         }
       }
+      val staging = Option(new File(s"${log.path}/events/.commit-tmp").listFiles()).toSeq.flatten
+      assert(staging.isEmpty, s"staging left behind: $staging")
       assert(log.activeEvents.count() == 1L + 12 * 3)
     }
 
@@ -139,5 +182,23 @@ class PointPathSpec extends AnyFunSuite {
       if (mode == CommitMode.Manifest)
         assert(log.manifest.reservedHead("s1") == 4)
     }
+  }
+
+  test("a point read of a bucket directory a Lock rewrite deleted reads empty") {
+    val log = newLog(CommitMode.Lock)
+    val store = new EventStore(log, AccountType, snapshotThreshold = 1)
+    val solo = "solo-0"
+    store.create(solo, Seq(AccountType.created(10, "o")))
+    val soloDir = new File(s"${log.path}/events/bucket=${log.bucketOf(solo)}")
+    assert(soloDir.isDirectory)
+
+    // retention drops every event the snapshot covers; the rewrite deletes
+    // the bucket directory it emptied
+    assert(log.pruneSnapshotted(System.currentTimeMillis() + 86400000L) == 1L)
+    assert(!soloDir.exists(), "the emptied bucket directory is deleted")
+    assert(log.streamEvents(solo).count() == 0L)
+    assert(log.collectStream(solo).isEmpty)
+    val got = store.retrieve(solo)
+    assert(got.version == 1 && got.state.balance == 10 && got.eventsSinceSnapshot == 0)
   }
 }
