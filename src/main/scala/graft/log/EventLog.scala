@@ -65,9 +65,9 @@ object DiscriminatorPolicy {
   *  - [[CommitMode.Manifest]]: the [[ManifestCommitLog]] claim chain — the
   *    object-store-safe protocol whose only primitive is conditional put.
   *
-  * Every append (`append`, `bulkImport`, `appendBulk`, `appendNoOpFences`)
-  * commits through one kernel in [[EventLog]] and every rewrite through
-  * another; those two are the only places a write branches on the mode.
+  * Every write — the appends (`append`, `bulkImport`, `appendBulk`,
+  * `appendNoOpFences`), the rewrites and migration — commits through one
+  * section in [[EventLog]], the only place a write branches on the mode.
   * An append that cannot commit either skips or refuses: a skip is a
   * successful no-op returning 0 (a redelivered `appendBulk` batch whose
   * ledger mark is committed), a refusal is
@@ -76,6 +76,14 @@ object DiscriminatorPolicy {
   * Lock mode writes the ingest ledger file inside the lock after the data;
   * Manifest mode also carries the mark on the claim, so the dedup and the
   * commit share the claim's done-flip.
+  *
+  * Lock stays the default by measurement: on the `serve` benchmark (4
+  * cores, 5 alternating untraced pairs, seeds 51–55, the default switched
+  * on a scratch copy), medians with quartiles, Lock → Manifest: `ops_per_s`
+  * 8.52 (8.46–8.70) → 7.37 (7.33–7.42), `latency_ms` 518 (511–534) → 632
+  * (627–634), `cpu_ms_per_op` 375 (367–384) → 469 (467–473), `setup_s`
+  * 6.94 (6.79–6.96) → 7.41 (7.13–7.77); Lock was better in 5 of 5 pairs on
+  * the first three, 0 failed operations on either side.
   */
 sealed trait CommitMode
 object CommitMode {
@@ -220,8 +228,6 @@ class EventLog(
     EventLog.crashHook.foreach(_(label))
     f
   }
-
-  spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
   def bucketOf(aggregateId: String): Int =
     Math.floorMod(Fnv1a32.hashString(aggregateId), numBuckets)
@@ -575,7 +581,7 @@ class EventLog(
           if (clash.nonEmpty) throw new ConcurrentModificationException(
             s"bulkImport: stream ${clash.head} already exists in the log")
         }
-        Go
+        None
       },
       // a reservation on ANY imported stream means it is not new — the
       // chain-time twin of the parquet probe (claims precede data, so the
@@ -683,8 +689,10 @@ class EventLog(
         // even though no listing shows it — and status() is read-only, so
         // no one heals the marker for us here
         val live = rivals.flatMap(r => if (r.done) Some(true) else manifest.status(r.n))
-        if (live.contains(true) || readLedger().exists(batchId <= _)) { commitLedger(); End(0) }
-        else if (live.isEmpty) Go
+        if (live.contains(true) || readLedger().exists(batchId <= _)) {
+          commitLedger()
+          Some(Done(0L))
+        } else if (live.isEmpty) None
         else {
           // a rival that DIED pending stays undecided until prune condemns
           // it, so fail loudly at the deadline
@@ -694,7 +702,7 @@ class EventLog(
               s"appendBulk: rival delivery of ($ledgerId, $batchId) still " +
                 "pending — undecided in-flight commit (crashed writer?); " +
                 "retry after it completes or manifest.prune condemns it")
-          Wait
+          Some(Wait)
         }
       },
       committed = () => commitLedger()) { chain =>
@@ -804,7 +812,7 @@ class EventLog(
     withLogLock(path) {
       val scrubE = udf(scrubEvent)
       val scrubS = udf(scrubSnapshot)
-      rewriteBuckets(Seq(bucketOf(aggregateId)), refuseHeld = true)(
+      rewriteBuckets("forget", Seq(bucketOf(aggregateId)), refuseHeld = true)(
         TableRewrite(eventsPath, evSchema, _.withColumn("body",
           when(col("aggregate_id") === aggregateId && col("kind").isin(eventKinds.toSeq: _*),
             scrubE(col("body"))).otherwise(col("body")))),
@@ -862,6 +870,22 @@ class EventLog(
     * default candidates-distinct + semi-join shape that keeps a SELECTIVE
     * migration's shuffle bounded by the candidate sliver. Wrong-direction
     * hints are never incorrect, only slower.
+    *
+    * The commit is ONE [[rewriteBuckets]] call: the invalidation rewrite,
+    * the snapshot drops and the fence+copy append land together. Under a
+    * chain they ride ONE rewrite claim whose `done` marker is the single
+    * visibility switch (readers never see history flagged away with the
+    * copies not yet visible; store/postgresql/events_migration.go:90-206),
+    * fenced against concurrent appends:
+    *  - it RESERVES `(head, head+1+copies)` for every migrated stream, so
+    *    interactive `append`s lose their optimistic check and `appendBulk`
+    *    continues past the fence — never a version collision;
+    *  - before claiming, [[migrationStale]] checks the plan against the
+    *    chain and the committed heads; a stream that moved re-plans (at
+    *    most 5 plans);
+    *  - appends landing DURING the staged write keep their files, and the
+    *    bounded invalidation never flags rows past a planned head;
+    *  - files a pending rival rewrite holds are refused, not skipped.
     */
   def migrateDistributed(revision: Int, targetKinds: Set[String],
       handler: Seq[EventRow] => Option[Seq[EventDetail]],
@@ -974,25 +998,20 @@ class EventLog(
 
         // emptiness falls out of the bucket-set collect below — no separate
         // isEmpty job
-        val ids0 = plan.select(col("aggregateId").as("m_id"),
+        val ids = plan.select(col("aggregateId").as("m_id"),
           col("maxVersion").as("m_maxv"),
           pmod(graft.functions.fnv1a32(col("aggregateId")), lit(nb)).as("m_bucket"))
-        val buckets0 = phase("migrate: bucket-set collect")(
-          ids0.select("m_bucket").distinct().as[Int].collect().sorted)
-        if (buckets0.isEmpty)
+        val buckets = phase("migrate: bucket-set collect")(
+          ids.select("m_bucket").distinct().as[Int].collect().sorted.toSeq)
+        if (buckets.isEmpty)
           result = Some(spark.emptyDataset[MigratedStream])
         else {
-          // 3. ONE invalidation rewrite over the affected bucket SET: flag old
-          // rows via a join against the migrated stream ids, BOUNDED by each
-          // stream's planned head — rows a concurrent bulk appender lands
-          // past our reservation are post-migration events and must never be
-          // flagged. Lock mode rewrites all touched buckets in a single
-          // dynamic-partition-overwrite job; manifest mode stages the
-          // rewrite AND the fence+copy append under ONE rewrite claim whose
-          // done-flip swaps the whole migration in atomically (see
-          // [[migrateCommitManifest]]).
-          val ids = ids0
-          val buckets = buckets0
+          // 4. ONE rewrite over the affected bucket SET: flag old rows via a
+          // join against the migrated stream ids, BOUNDED by each stream's
+          // planned head (rows a concurrent bulk appender lands past our
+          // reservation are post-migration events and must never be
+          // flagged), drop their snapshots, and append every fence + copy
+          // under the same commit
           val invalidate: DataFrame => DataFrame = { df =>
             val allIds = ids.select("m_id", "m_maxv")
             df.join(allIds, df("aggregate_id") === allIds("m_id"), "left")
@@ -1006,15 +1025,15 @@ class EventLog(
             val allIds = ids.select("m_id")
             df.join(allIds, df("aggregate_id") === allIds("m_id"), "left_anti")
           }
-          val done =
-            if (commitMode == CommitMode.Lock) {
-              rewriteBuckets(buckets.toSeq)(TableRewrite(eventsPath, evSchema, invalidate),
-                TableRewrite(snapshotsPath, snSchema, dropSnapshots)): Unit
-              // ONE append of every fence + migrated copy
-              appendLaidOut(bucketed(plan.select(explode(col("rows")).as("r")).select("r.*")))
-              true
-            } else migrateCommitManifest(plan, buckets.toSeq, invalidate, dropSnapshots)
-          if (done)
+          val appended = Appended(plan.select(explode(col("rows")).as("r")).select("r.*"),
+            // (aggregate_id, base = head at plan time, head = base + 1 fence + copies)
+            plan.select(col("aggregateId").as("aggregate_id"), col("maxVersion").as("base"),
+              (col("maxVersion") + lit(1) + size(col("details"))).cast("int").as("head")),
+            migrationStale(plan, buckets))
+          val committed = rewriteBuckets("migrate", buckets, refuseHeld = true,
+            appended = Some(appended))(TableRewrite(eventsPath, evSchema, invalidate),
+            TableRewrite(snapshotsPath, snSchema, dropSnapshots)).isDefined
+          if (committed)
             result = Some(plan.map(p => MigratedStream(p.aggregateId,
               p.maxVersion + 1 + p.details.size, p.rows.last.id, p.details,
               p.discriminator)))
@@ -1030,118 +1049,40 @@ class EventLog(
       result.get
     }
 
-  /** Manifest-mode migration commit: the entire migration — invalidation
-    * rewrite of the affected buckets, snapshot drops AND the fence+copy
-    * append — rides ONE rewrite claim, so its `done` marker is the single
-    * atomic visibility switch. Readers never observe the intermediate state
-    * the reference's per-stream transactions also forbid (history flagged
-    * away, copies not yet visible; store/postgresql/events_migration.go:90-206).
-    *
-    * Concurrent-append fencing (the all-writers unique-index parity):
-    *  - the claim RESERVES `(head, head+1+copies)` for every migrated
-    *    stream, so interactive `append`s lose their optimistic check and
-    *    `appendBulk` continues past the fence — never a version collision;
-    *  - before claiming, the plan is validated against fresh committed heads
-    *    and chain reservations; any stream whose head moved since the plan
-    *    was computed makes this return false and the caller RE-PLANS from
-    *    the new state (claim-number density closes the validate→claim gap:
-    *    a writer claiming in between takes our claim number and we loop);
-    *  - appends landing DURING the staged write keep their files — they are
-    *    not in the claim's `replaced` set, and the bounded invalidation
-    *    never flags rows past each stream's planned head;
-    *  - input files a pending rival rewrite holds are refused, not skipped
-    *    ([[liveFiles]]): skipping them would leave their rows unflagged, so
-    *    the migration throws [[ConcurrentModificationException]] naming the
-    *    holding claim.
-    *
-    * Reservations ride the claim TSV up to
-    * [[ManifestCommitLog.inlineClaimMaxStreams]] streams; beyond that they
-    * go to the range-sorted parquet sidecar (the bulkImport mechanism) and
-    * the migrated stream set never touches the driver — a 10⁸-stream
-    * migration costs the same driver memory as 10.
+  /** Migration's check before its claim: whether a stream of `plan` moved
+    * past its plan-time head (a chain reservation or a committed row in the
+    * affected `buckets` past it), so the caller re-plans. Claim-number
+    * density closes the check→claim gap: a writer claiming in between takes
+    * the claim's number and the attempt loses its race. An inline-scale
+    * plan folds the chain's inline lines driver-side first; then chain and
+    * parquet heads meet in ONE distributed existence probe (reservationsDF
+    * covers inline and sidecar lines alike), so the migrated stream set
+    * never rides an isin list or a driver map.
     */
-  private def migrateCommitManifest(plan: Dataset[MigrationPlan], buckets: Seq[Int],
-      invalidate: DataFrame => DataFrame,
-      dropSnapshots: DataFrame => DataFrame): Boolean = {
-    // (aggregate_id, base = head at plan time, head = base + 1 fence + copies)
-    val headsDF = plan.select(col("aggregateId").as("aggregate_id"),
-      col("maxVersion").as("base"),
-      (col("maxVersion") + lit(1) + size(col("details"))).cast("int").as("head"))
-    val resv = reserve("migrate", headsDF)
-    val useSidecar = resv.sidecar.isDefined
-    // every no-commit exit reclaims the staged sidecar
-    def abandon(): Boolean = { resv.drop(); false }
-
-    var claimed: Option[CommitClaim] = None
-    var eventInputs: Seq[String] = Nil
-    var snapInputs: Seq[String] = Nil
-    // each planned stream's (id, head-at-plan) — shared by both distributed
-    // staleness probes below
-    val planned = plan.select(col("aggregateId").as("m_id"),
-      col("maxVersion").as("m_v"))
-    var attempts = 0
-    while (claimed.isEmpty && attempts < 100) {
-      val tip = manifest.refresh()
-      // chain staleness: any reservation past a planned stream's base means
-      // an append committed (or is in flight) beyond the plan's snapshot.
-      // An inline-scale plan folds inline chain lines driver-side; a
-      // sidecar-scale plan (or a chain carrying sidecars) is compared in
-      // ONE distributed join — reservationsDF covers both line kinds, so
-      // the migrated stream set never rides an isin list or a driver map.
-      val chainStaleInline = !useSidecar &&
-        manifest.cachedClaims().exists(_.streams.exists {
-          case (s, (_, head)) => resv.inline.get(s).exists(_._1 < head)
-        })
-      if (chainStaleInline) return abandon()
-      // chain + parquet staleness in ONE distributed job: any observed head
-      // (a chain reservation's, or a committed row's version in the affected
-      // buckets) past a planned stream's plan-time head means an append
-      // committed or is in flight beyond the plan's snapshot. Existence of
-      // ANY such row is the predicate, so no per-stream aggregation is
-      // needed, and the migrated stream set never rides an isin list or a
-      // driver map — reservationsDF covers inline and sidecar lines alike.
+  private def migrationStale(plan: Dataset[MigrationPlan], buckets: Seq[Int])(
+      resv: Reservation): Boolean = {
+    val chainStaleInline = resv.sidecar.isEmpty &&
+      manifest.cachedClaims().exists(_.streams.exists {
+        case (s, (_, head)) => resv.inline.get(s).exists(_._1 < head)
+      })
+    chainStaleInline || {
+      val planned = plan.select(col("aggregateId").as("m_id"), col("maxVersion").as("m_v"))
       val chainHeads =
-        if (useSidecar || manifest.cachedClaims().exists(_.streamsRef.isDefined))
+        if (resv.sidecar.isDefined || manifest.cachedClaims().exists(_.streamsRef.isDefined))
           manifest.reservationsDF().map(_.select(col("aggregate_id"),
             col("head").cast("int").as("observed")))
         else None
-      // refreshed = true: the loop top just paid manifest.refresh(), skip
-      // the repeat chain listing inside the read filter
+      // refreshed = true: the attempt just paid manifest.refresh(), skip the
+      // repeat chain listing inside the read filter
       val parquetHeads = committedView(eventsWithBucket, refreshed = true)
         .filter(col("bucket").isin(buckets: _*))
         .select(col("aggregate_id"), col("aggregate_version").as("observed"))
-      val stale = phase("migrate: staleness probe")(
+      phase("migrate: staleness probe")(
         chainHeads.fold(parquetHeads)(parquetHeads.unionByName(_))
           .join(planned, col("aggregate_id") === col("m_id"))
           .filter(col("observed") > col("m_v"))
           .limit(1).count() > 0)
-      if (stale) return abandon()
-      val (evLive, evHeld) = liveFiles(eventsPath, buckets)
-      val (snLive, snHeld) = liveFiles(snapshotsPath, buckets)
-      val held = evHeld ++ snHeld
-      if (held.nonEmpty) { abandon(): Unit; throw heldError(held) }
-      eventInputs = evLive
-      snapInputs = snLive
-      val c = resv.claim(tip + 1, CommitClaim.KindRewrite, eventInputs ++ snapInputs)
-      if (manifest.tryClaim(c)) claimed = Some(c) else attempts += 1
     }
-    val claim = claimed.getOrElse {
-      abandon(): Unit
-      throw new IllegalStateException(
-        s"migration rewrite lost $attempts claim races — giving up")
-    }
-    val token = s"c${claim.n}"
-    if (eventInputs.nonEmpty)
-      phase("migrate: stage events rewrite")(
-        stageRewrite(eventsPath, evSchema, eventInputs, token, buckets.size)(invalidate))
-    if (snapInputs.nonEmpty)
-      phase("migrate: stage snapshot rewrite")(
-        stageRewrite(snapshotsPath, snSchema, snapInputs, token, buckets.size)(dropSnapshots))
-    phase("migrate: fence+copy append")(
-      stageAndMove(bucketed(plan.select(explode(col("rows")).as("r")).select("r.*")), token))
-    phase("migrate: markDone")(
-      manifest.markDone(claim.n)) // the atomic swap: old files out, rewrite + fences in
-    true
   }
 
   /** M4 support: append a `NoOp` fence event to EVERY active stream of one
@@ -1213,7 +1154,7 @@ class EventLog(
   def compact(buckets: Option[Seq[Int]] = None,
       maxRecordsPerFile: Long = 0L,
       layout: CompactionLayout = CompactionLayout.IdSort): Unit = withLogLock(path) {
-    rewriteBuckets(buckets.getOrElse(0 until numBuckets), layout, maxRecordsPerFile)(
+    rewriteBuckets("compact", buckets.getOrElse(0 until numBuckets), layout, maxRecordsPerFile)(
       TableRewrite(eventsPath, evSchema, identity)): Unit
   }
 
@@ -1222,7 +1163,9 @@ class EventLog(
     * snapshot's) — the only form of event-log TTL that keeps every fold
     * reproducible: `retrieve` and the stitched rehydration
     * ([[graft.store.EventStore.rehydrateAllStitched]]) read snapshot + tail
-    * and never miss pruned prefixes. Un-snapshotted streams are untouched.
+    * and never miss pruned prefixes. Un-snapshotted streams are untouched,
+    * and each stream keeps its newest event even when its snapshot covers
+    * it: appends read a stream's version from its events ([[maxVersions]]).
     * One multi-bucket copy-on-write rewrite (join against the snapshot
     * heads), scoped to the buckets that actually shrink; invalidated audit
     * rows below the covered version age out under the same rule — that is
@@ -1237,24 +1180,30 @@ class EventLog(
   def pruneSnapshotted(beforeMs: Long): Long = withLogLock(path) {
     if (!exists(eventsPath) || !exists(snapshotsPath)) 0L
     else {
-      val w = Window.partitionBy(col("aggregate_id")).orderBy(col("id").desc)
+      // each snapshotted stream's latest snapshot version p_v and event
+      // head p_h, in ONE aggregation over both tables (one exchange)
       val heads = snapshots
-        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select(col("aggregate_id").as("p_id"), col("aggregate_version").as("p_v"))
+        .select(col("aggregate_id"), col("id"), col("aggregate_version"),
+          lit(null).cast("int").as("ev"))
+        .unionByName(committedView(events).select(col("aggregate_id"), lit(null).cast("string")
+          .as("id"), lit(null).cast("int").as("aggregate_version"), col("aggregate_version").as("ev")))
+        .groupBy(col("aggregate_id").as("p_id"))
+        .agg(max_by(col("aggregate_version"), col("id")).as("p_v"), max(col("ev")).as("p_h"))
+        .filter(col("p_v").isNotNull)
         .checkpointOwned() // consumed by the rewrite below
       val bound = Ulid.timeOnly(beforeMs)
       val keep: DataFrame => DataFrame = { df =>
         df.join(heads, df("aggregate_id") === heads("p_id"), "left")
-          .filter(col("p_id").isNull ||
-            col("aggregate_version") > col("p_v") || col("id") >= bound)
-          .drop("p_id", "p_v")
+          .filter(col("p_id").isNull || col("aggregate_version") > col("p_v") ||
+            col("id") >= bound || col("aggregate_version") === col("p_h"))
+          .drop("p_id", "p_v", "p_h")
       }
       // Count the doomed rows per bucket with ONE scan whose `id < bound`
       // predicate pushes to parquet (min/max skipping prunes every young
       // file — at scale this reads the old sliver, where the former
       // before/after bracketing counted the FULL table twice on top of the
-      // rewrite). heads is unique per stream (rn = 1), so the inner join
-      // can't fan out; the per-bucket counts then scope the rewrite to the
+      // rewrite). heads has one row per stream, so the inner join can't
+      // fan out; the per-bucket counts then scope the rewrite to the
       // buckets that actually shrink — an incremental prune after a recent
       // one rewrites (almost) nothing. Counted per file too: the rewrite
       // skips files a pending rival rewrite holds, and their rows stay.
@@ -1262,13 +1211,14 @@ class EventLog(
         .withColumn("file", regexp_extract(input_file_name(), "/([^/]+/bucket=[^/]+/[^/]+)$", 1))
         .filter(col("id") < bound)
         .join(heads, col("aggregate_id") === col("p_id"))
-        .filter(col("aggregate_version") <= col("p_v"))
+        .filter(col("aggregate_version") <= col("p_v") && col("aggregate_version") < col("p_h"))
         .groupBy(col("bucket"), col("file")).agg(count(lit(1)).as("n"))
         .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
       val skipped =
         if (doomed.isEmpty) Set.empty[String]
-        else rewriteBuckets(doomed.map(_._1).distinct.sorted)(
-          TableRewrite(eventsPath, evSchema, keep)).keySet.map(ManifestCommitLog.relname)
+        else rewriteBuckets("retention", doomed.map(_._1).distinct.sorted)(
+          TableRewrite(eventsPath, evSchema, keep)).fold(Set.empty[String])(
+          _.keySet.map(ManifestCommitLog.relname))
       Checkpoints.release(heads) // every rewrite consuming it has run
       doomed.collect { case (_, file, n) if !skipped.contains(file) => n }.sum
     }
@@ -1390,7 +1340,7 @@ class EventLog(
     // bucket-local latest-per-key IS global latest-per-key (aggregate_id
     // determines the bucket)
     val w = Window.partitionBy(col("aggregate_id")).orderBy(col("id").desc)
-    rewriteBuckets(0 until numBuckets)(TableRewrite(snapshotsPath, snSchema,
+    rewriteBuckets("compactSnapshots", 0 until numBuckets)(TableRewrite(snapshotsPath, snSchema,
       _.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn"))): Unit
   }
 
@@ -1512,24 +1462,24 @@ class EventLog(
     if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile) else w
   }
 
-  private def appendLaidOut(laidOut: DataFrame): Unit = {
-    partitionedWriter(laidOut).mode(SaveMode.Append).parquet(eventsPath)
-    graft.sources.GraftMeta.write(spark, eventsPath, numBuckets)
-  }
-
-  /** Manifest-mode data write: concurrent `.parquet(eventsPath)` appends are
-    * unsafe even with versions reserved — Spark jobs writing one output path
-    * share a `_temporary/` staging directory and clobber each other. Each
-    * commit therefore writes to its own claim-scoped temp dir (its own
-    * staging) and MOVES the finished part files into the bucket directories
-    * ([[moveStaged]]). Visibility may be out of claim order — harmless,
-    * versions are already reserved and readers order by id/version, never
-    * by file arrival.
+  /** The Spark write of a distributed batch: [[bucketed]] rows into the
+    * events table. Without a token (Lock) it appends in place. With a claim
+    * token (Manifest) it writes to the claim's own `.commit-tmp/<token>` and
+    * moves the part files in ([[moveStaged]]): concurrent appends to one
+    * output path would share Spark's `_temporary/` staging and clobber each
+    * other, even with versions reserved. Visibility may then be out of
+    * claim order — harmless, versions are already reserved and readers
+    * order by id/version, never by file arrival.
     */
-  private def stageAndMove(laidOut: DataFrame, token: String): Unit = {
-    val tmp = s"$eventsPath/.commit-tmp/$token"
-    partitionedWriter(laidOut).mode(SaveMode.Overwrite).parquet(tmp)
-    moveStaged(tmp, eventsPath, s"$token-")
+  private def writeBucketed(rows: DataFrame, token: Option[String]): Unit = {
+    val w = partitionedWriter(bucketed(rows))
+    token match {
+      case None => w.mode(SaveMode.Append).parquet(eventsPath)
+      case Some(t) =>
+        val tmp = s"$eventsPath/.commit-tmp/$t"
+        w.mode(SaveMode.Overwrite).parquet(tmp)
+        moveStaged(tmp, eventsPath, s"$t-")
+    }
     graft.sources.GraftMeta.write(spark, eventsPath, numBuckets)
   }
 
@@ -1557,24 +1507,16 @@ class EventLog(
     fs.delete(staged, true): Unit
   }
 
-  // ── the append-commit kernel ─────────────────────────────────────────────
+  // ── the commit section ───────────────────────────────────────────────────
 
-  /** One append attempt's rows: held on the driver (a point append) or
-    * distributed (checkpointed by [[commitAppend]], released on every
-    * exit). `onePerStream`: at most one row per stream, so the claim's
-    * reservations are a projection of the rows, not an aggregation.
+  /** An attempt's verdict in [[commitSection]]: end the section with `a`
+    * (committed, nothing to commit, or a skip), wait a lap (a rival's fate
+    * is still undecided), or retry after a lost claim race.
     */
-  private sealed trait Batch
-  private case class Held(rows: Seq[EventRow]) extends Batch
-  private case class Spread(rows: DataFrame, onePerStream: Boolean = false) extends Batch
-
-  /** An append guard's verdict: mint and commit, end the append with `n`
-    * rows, or wait a lap (a rival's fate is still undecided).
-    */
-  private sealed trait Gate
-  private case object Go extends Gate
-  private case object Wait extends Gate
-  private case class End(n: Long) extends Gate
+  private sealed trait Step[+A]
+  private case class Done[+A](a: A) extends Step[A]
+  private case object Wait extends Step[Nothing]
+  private case object Lost extends Step[Nothing]
 
   /** A claim's version reservations, `(base, head]` per stream: inline
     * claim lines, or a staged parquet sidecar `(name, count, max head)`.
@@ -1586,59 +1528,124 @@ class EventLog(
       CommitClaim(n, inline, eventIds, writerId, System.currentTimeMillis(), done = false,
         kind, replaced, mark.map(_._1), mark.fold(-1L)(_._2),
         sidecar.map(_._1), sidecar.fold(0L)(_._2), sidecar.fold(0)(_._3))
-
-    /** Reclaims the sidecar of a claim that never won (else it would sit
-      * as an orphan until prune's staleness sweep).
-      */
-    def drop(): Unit = sidecar.foreach(s => manifest.dropSidecar(s._1))
   }
 
-  /** The one reservation step of every claim that reserves versions: a
-    * bounded probe collects at most `inlineMax + 1` rows of `streams`
-    * `(aggregate_id, base, head)`. Up to the limit they ride the claim TSV;
-    * past it they go to a range-sorted parquet SIDECAR and the stream set
-    * never touches the driver — claim file and driver memory stay flat at
-    * 10⁸ streams.
+  /** One attempt of [[commitSection]] for `op`. `chain` is the commit chain
+    * as this attempt refreshed it (Manifest); None under the lock.
     */
-  private def reserve(op: String, streams: DataFrame): Reservation = {
-    val limit = ManifestCommitLog.inlineClaimMaxStreams
-    val probe = phase(s"$op: heads probe")(streams.limit(limit + 1).collect())
-    if (probe.length <= limit)
-      Reservation(probe.map(r => r.getString(0) -> (r.getInt(1), r.getInt(2))).toMap)
-    else Reservation(Map.empty, Some(phase(s"$op: sidecar write")(manifest.writeSidecar(streams))))
+  private final class Attempt(op: String, tip: Option[Long]) {
+    val chain: Option[ManifestCommitLog] = tip.map(_ => manifest)
+    private var sidecar: Option[String] = None
+    private var won = false
+
+    /** The one reservation step of every claim that reserves versions: a
+      * bounded probe collects at most `inlineMax + 1` rows of `streams`
+      * `(aggregate_id, base, head)`. Up to the limit they ride the claim TSV;
+      * past it they go to a range-sorted parquet SIDECAR and the stream set
+      * never touches the driver — claim file and driver memory stay flat at
+      * 10⁸ streams. An attempt that does not win its claim drops the
+      * sidecar (else it would sit as an orphan until prune's sweep).
+      */
+    def reserve(streams: DataFrame): Reservation = {
+      val limit = ManifestCommitLog.inlineClaimMaxStreams
+      val probe = phase(s"$op: heads probe")(streams.limit(limit + 1).collect())
+      if (probe.length <= limit)
+        Reservation(probe.map(r => r.getString(0) -> (r.getInt(1), r.getInt(2))).toMap)
+      else {
+        val written = phase(s"$op: sidecar write")(manifest.writeSidecar(streams))
+        sidecar = Some(written._1)
+        Reservation(Map.empty, Some(written))
+      }
+    }
+
+    /** Commits the attempt's writes; false on a lost claim race.
+      *  - Lock: `stage(None)`.
+      *  - Manifest: claims slot `tip + 1` with `claim(slot)`, stages under
+      *    the claim token `c{N}`, then `"<op>: markDone"` — the single
+      *    atomic switch. `claim` runs only here, so the reservation step
+      *    and the checks before the claim go in it.
+      */
+    def commit(claim: Long => CommitClaim)(stage: Option[String] => Unit): Boolean =
+      tip match {
+        case None => stage(None); true
+        case Some(t) =>
+          val c = claim(t + 1)
+          won = manifest.tryClaim(c)
+          if (won) {
+            stage(Some(s"c${c.n}"))
+            phase(s"$op: markDone")(manifest.markDone(c.n))
+          }
+          won
+      }
+
+    def close(): Unit = if (!won) sidecar.foreach(manifest.dropSidecar)
   }
+
+  /** The one commit section of every write — appends ([[commitAppend]]) and
+    * rewrites ([[rewriteBuckets]], migration included) — and the only place
+    * a write branches on the commit mode:
+    *  - Lock: run the attempt once inside the log lock. The lock is
+    *    re-entrant, so maintenance callers that already hold it enter
+    *    directly. The commit chain is never touched.
+    *  - Manifest: at most 100 attempts, each: refresh the chain, run the
+    *    attempt, whose [[Attempt.commit]] claims the next slot, stages
+    *    under the claim token and marks it done. A lost claim race retries
+    *    from the fresh chain. No lock: serializing writers through a JVM
+    *    monitor would hide exactly the cross-driver races (rival
+    *    redeliveries, concurrent imports) the chain must fence — the chain
+    *    is the commit section.
+    * Every exit that does not win a claim drops the attempt's sidecar.
+    * Crash-hook labels are `"<op>: <step>"`.
+    */
+  private def commitSection[A](op: String)(attempt: Attempt => Step[A]): A = {
+    val lock = commitMode == CommitMode.Lock
+    def run(): A = {
+      var lost = 0
+      while (lost < 100) {
+        val s = new Attempt(op, if (lock) None else Some(manifest.refresh()))
+        val step = try attempt(s) finally s.close()
+        step match {
+          case Done(a) => return a
+          case Wait => Thread.sleep(100)
+          case Lost => lost += 1
+        }
+      }
+      throw new IllegalStateException(s"$op lost $lost claim races — giving up")
+    }
+    if (lock) withLogLock(path)(run()) else run()
+  }
+
+  // ── the append kernel ────────────────────────────────────────────────────
+
+  /** One append attempt's rows: held on the driver (a point append) or
+    * distributed (checkpointed by [[commitAppend]], released on every
+    * exit). `onePerStream`: at most one row per stream, so the claim's
+    * reservations are a projection of the rows, not an aggregation.
+    */
+  private sealed trait Batch
+  private case class Held(rows: Seq[EventRow]) extends Batch
+  private case class Spread(rows: DataFrame, onePerStream: Boolean = false) extends Batch
 
   /** The one commit of every append — [[append]], [[bulkImport]],
-    * [[appendBulk]] and [[appendNoOpFences]] — and the only place an append
-    * branches on the commit mode. `mint(chain)` resolves the heads its rows
-    * continue from (committed parquet, max'ed with the chain's reservations
-    * when there is a chain) and mints them.
-    * Either way a commit adds one id-sorted file per touched bucket: held
-    * rows through the held writer ([[writeHeld]]: no Spark job, so a
+    * [[appendBulk]] and [[appendNoOpFences]] — through [[commitSection]].
+    * `mint(chain)` resolves the heads its rows continue from (committed
+    * parquet, max'ed with the chain's reservations when there is a chain)
+    * and mints them. A commit adds one id-sorted file per touched bucket:
+    * held rows through the held writer ([[writeHeld]]: no Spark job, so a
     * one-record Lock `append` is its one version-check job), distributed
-    * rows through a Spark write of [[bucketed]].
-    *  - Lock: inside the log lock, mint once and append. The commit chain
-    *    is never touched.
-    *  - Manifest: at most 100 attempts, each: refresh the chain, mint,
-    *    [[reserve]], claim the next slot, stage and move the rows under the
-    *    claim token, `markDone`. A lost claim race retries from fresh heads.
-    *    No lock: serializing writers through a JVM monitor would hide
-    *    exactly the cross-driver races (rival redeliveries, concurrent
-    *    imports) the chain must fence — the chain is the commit section.
+    * rows through [[writeBucketed]]. Under a chain the claim reserves the
+    * minted versions and carries the held rows' ids and `mark`, the
+    * ingest-ledger mark.
     *
-    * `guard` runs before minting (per attempt, after the refresh; once
-    * under the lock in Lock mode) and may end the append or wait a lap;
-    * `refuse` runs before claiming and throws to refuse it. Skip versus
-    * refuse: a guard's `End` is a successful no-op (a redelivered batch),
-    * a refusal is [[ConcurrentModificationException]] (a stream that must
-    * be new is not). Every exit that does not win a claim drops the
-    * attempt's sidecar, and every exit releases its checkpoint.
-    * `committed` runs once the rows are committed or the mint made none;
-    * `mark` is the ingest-ledger mark the claim carries. Returns the rows
-    * committed. Crash-hook labels are `"<op>: <step>"`.
+    * `guard` runs first in every attempt and may end the append (a
+    * successful no-op: a redelivered batch) or wait a lap; `refuse` runs
+    * before claiming and throws to refuse it (a stream that must be new is
+    * not). Every exit releases the attempt's checkpoint. `committed` runs
+    * once the rows are committed or the mint made none. Returns the rows
+    * committed.
     */
   private def commitAppend(op: String, mark: Option[(String, Long)] = None,
-      guard: Option[ManifestCommitLog] => Gate = _ => Go,
+      guard: Option[ManifestCommitLog] => Option[Step[Long]] = _ => None,
       refuse: Reservation => Unit = _ => (),
       committed: () => Unit = () => ())(mint: Option[ManifestCommitLog] => Batch): Long = {
     // the batch and its row count; a distributed batch's count rides an
@@ -1657,69 +1664,33 @@ class EventLog(
       case Held(rows) =>
         import spark.implicits._
         writeHeld(op, eventsPath, rows.toDS().toDF(), token)
-      case Spread(df, _) => phase(s"$op: bucketed write")(
-        token.fold(appendLaidOut(bucketed(df)))(stageAndMove(bucketed(df), _)))
+      case Spread(df, _) => phase(s"$op: bucketed write")(writeBucketed(df, token))
     }
     // reservations derive from the minted rows themselves (base = min
     // version - 1), so a claim can never drift from what it writes
-    def reservation(batch: Batch): Reservation = batch match {
+    def reservation(s: Attempt, batch: Batch): Reservation = batch match {
       case Held(rows) => Reservation(rows.groupMapReduce(_.aggregate_id)(r =>
         (r.aggregate_version - 1, r.aggregate_version)) {
         case ((b1, h1), (b2, h2)) => (math.min(b1, b2), math.max(h1, h2))
       })
-      case Spread(df, true) => reserve(op, df.select(col("aggregate_id"),
+      case Spread(df, true) => s.reserve(df.select(col("aggregate_id"),
         (col("aggregate_version") - 1).as("base"), col("aggregate_version").as("head")))
-      case Spread(df, false) => reserve(op, df.groupBy(col("aggregate_id"))
+      case Spread(df, false) => s.reserve(df.groupBy(col("aggregate_id"))
         .agg((min(col("aggregate_version")) - 1).as("base"),
           max(col("aggregate_version")).as("head")))
     }
-    if (commitMode == CommitMode.Lock) withLogLock(path) {
-      guard(None) match {
-        case End(n) => n
-        case _ =>
-          val n = minted(mint(None)) { (batch, n) =>
-            if (n > 0) write(batch, None)
-            n
-          }
-          committed()
-          n
-      }
-    } else {
-      var attempts = 0
-      while (attempts < 100) {
-        val tip = manifest.refresh()
-        guard(Some(manifest)) match {
-          case End(n) => return n
-          case Wait => Thread.sleep(100)
-          case Go =>
-            // Some(n) once committed, None on a lost claim race
-            val outcome = minted(mint(Some(manifest))) { (batch, n) =>
-              if (n == 0) Some(0L)
-              else {
-                val resv = reservation(batch)
-                var claimed = false
-                try {
-                  refuse(resv)
-                  val claim = resv.claim(tip + 1, mark = mark, eventIds = batch match {
-                    case Held(rows) => rows.map(_.id)
-                    case _ => Nil
-                  })
-                  claimed = manifest.tryClaim(claim)
-                  if (claimed) {
-                    write(batch, Some(s"c${claim.n}"))
-                    phase(s"$op: markDone")(manifest.markDone(claim.n))
-                  }
-                } finally if (!claimed) resv.drop()
-                if (claimed) Some(n) else None
-              }
-            }
-            outcome match {
-              case Some(n) => committed(); return n
-              case None => attempts += 1
-            }
-        }
-      }
-      throw new IllegalStateException(s"$op lost $attempts claim races — giving up")
+    commitSection(op) { s =>
+      guard(s.chain).getOrElse(minted(mint(s.chain)) { (batch, n) =>
+        val won = n == 0 || s.commit { slot =>
+          val resv = reservation(s, batch)
+          refuse(resv)
+          resv.claim(slot, mark = mark, eventIds = batch match {
+            case Held(rows) => rows.map(_.id)
+            case _ => Nil
+          })
+        }(write(batch, _))
+        if (won) { committed(); Done(n) } else Lost
+      })
     }
   }
 
@@ -1730,86 +1701,100 @@ class EventLog(
     * to their replacement.
     */
   private case class TableRewrite(table: String, schema: StructType,
-      f: DataFrame => DataFrame)
+      f: DataFrame => DataFrame) {
+    def name: String = if (table == eventsPath) "events" else "snapshot"
+  }
 
-  /** The one copy-on-write rewrite behind forget, migration (Lock leg),
-    * compaction, snapshot compaction and retention: each part's `f` maps
-    * the rows of `buckets` of its table to their replacement, which lands
-    * in the same buckets laid out by [[layOut]]. The only place a rewrite
-    * branches on the commit mode:
-    *  - Lock: per table, read the buckets, apply `f`, checkpoint (the write
-    *    replaces its own source), delete the buckets `f` emptied (dynamic
-    *    overwrite never touches a partition absent from the output), then
-    *    dynamic-overwrite the rest.
-    *  - Manifest: claim ONE `rewrite` slot over every part's [[liveFiles]],
-    *    stage each part's output under the claim token ([[stageRewrite]]),
-    *    then `markDone` — the single atomic switch across all the parts:
-    *    new files in, replaced files out, GC separate ([[gcReplaced]]).
-    *    Appends racing the rewrite keep their files (they are not in the
-    *    claim's replaced set), and a crash at any point leaves exactly one
-    *    version visible.
+  /** Rows a rewrite appends under its own commit — migration's fences and
+    * copies: `heads` `(aggregate_id, base, head)` are their version
+    * reservations, and `stale` is the check before the claim (true: a
+    * stream moved past the plan, so the caller re-plans).
+    */
+  private case class Appended(rows: DataFrame, heads: DataFrame,
+      stale: Reservation => Boolean)
+
+  /** The one copy-on-write rewrite behind forget, migration, compaction,
+    * snapshot compaction and retention, committed through
+    * [[commitSection]]: each part's `f` maps the rows of `buckets` of its
+    * table to their replacement, which lands in the same buckets laid out
+    * by [[layOut]]; `appended` rows (migration's) land with them.
+    *  - Lock: per table, [[rewriteInPlace]]; then the appended rows.
+    *  - Manifest: claim ONE `rewrite` slot over every part's [[liveFiles]]
+    *    (and the appended rows' versions, after their `stale` check), stage
+    *    each part ([[stageRewrite]]) and the appended rows under the claim
+    *    token, then `markDone` — the single atomic switch: new files in,
+    *    replaced files out, GC separate ([[gcReplaced]]). Appends racing
+    *    the rewrite keep their files, and a crash at any point leaves
+    *    exactly one version visible.
+    * Crash-hook labels: `"<op>: stage <table> rewrite"`, `"<op>: fence+copy
+    * append"`, and under a chain the reservation's and `"<op>: markDone"`.
     *
     * Skip versus refuse: files a pending rival rewrite holds are the one
     * input the two modes can disagree on. Optional work — compaction,
     * snapshot compaction, retention — skips them (a later pass picks them
-    * up once the rival completes or `manifest.prune` condemns it), and a
-    * bucket set with nothing else live is a no-op; the skipped files are
-    * returned (file → holding claim; always empty under Lock). A rewrite
-    * whose caller relies on it (`refuseHeld`: forget) throws
+    * up), and a bucket set with nothing else live is a no-op; the skipped
+    * files are returned (file → holding claim; empty under Lock). A rewrite
+    * whose caller relies on it (`refuseHeld`: forget, migration) throws
     * [[ConcurrentModificationException]] naming the holding claim before
-    * it claims anything, instead of reporting success over rows it never
-    * read.
+    * it claims anything. None when `appended`'s check asked for a re-plan.
     *
     * One claim covers the whole bucket set, so a rewriter that dies after
     * claiming quarantines every batched bucket from other rewrites until
     * prune condemns the claim (readers are never affected); schedulers that
     * want a smaller radius pass bucket subsets.
     */
-  private def rewriteBuckets(buckets: Seq[Int],
+  private def rewriteBuckets(op: String, buckets: Seq[Int],
       layout: CompactionLayout = CompactionLayout.IdSort, maxRecordsPerFile: Long = 0L,
-      refuseHeld: Boolean = false)(parts: TableRewrite*): Map[String, Long] = {
+      refuseHeld: Boolean = false, appended: Option[Appended] = None)(
+      parts: TableRewrite*): Option[Map[String, Long]] = {
     val present = parts.filter(p => exists(p.table))
-    if (buckets.isEmpty || present.isEmpty) return Map.empty
-    if (commitMode == CommitMode.Lock) {
-      present.foreach { case TableRewrite(table, schema, f) =>
-        val source = spark.read.schema(addBucket(schema)).parquet(table)
-          .filter(col("bucket").isin(buckets: _*)).drop("bucket")
-        val populated = Observation()
-        Checkpoints.withCheckpointed(f(source).withColumn("bucket", bucketCol())
-            .observe(populated, collect_set(col("bucket")).as("buckets"))) { out =>
-          val written = populated.get("buckets").asInstanceOf[scala.collection.Seq[Int]].toSet
-          val fs = new Path(table).getFileSystem(spark.sessionState.newHadoopConf())
-          buckets.filterNot(written).foreach(b => fs.delete(new Path(s"$table/bucket=$b"), true))
-          if (written.nonEmpty)
-            partitionedWriter(layOut(out, buckets.size, layout), maxRecordsPerFile)
-              .mode(SaveMode.Overwrite).parquet(table)
-        }
-      }
-      Map.empty
-    } else {
-      var attempts = 0
-      while (attempts < 100) {
-        val tip = manifest.refresh()
+    if (buckets.isEmpty || present.isEmpty) return Some(Map.empty)
+    commitSection(op) { s =>
+      // each part's inputs: under a chain its live files, with the files a
+      // pending rival rewrite holds apart; under the lock its whole buckets
+      val (inputs, held) = s.chain.fold((present.map(_ -> Seq.empty[String]),
+          Map.empty[String, Long])) { _ =>
         val live = present.map(p => p -> liveFiles(p.table, buckets))
-        val held = live.flatMap(_._2._2).toMap
-        if (refuseHeld && held.nonEmpty) throw heldError(held)
-        val inputs = live.collect { case (p, (files, _)) if files.nonEmpty => p -> files }
-        if (inputs.isEmpty) return held
-        val claim = CommitClaim(tip + 1, Map.empty, Seq.empty, writerId,
-          System.currentTimeMillis(), done = false, CommitClaim.KindRewrite,
-          inputs.flatMap(_._2))
-        if (manifest.tryClaim(claim)) {
-          inputs.foreach { case (TableRewrite(table, schema, f), files) =>
-            stageRewrite(table, schema, files, s"c${claim.n}", buckets.size, layout,
-              maxRecordsPerFile)(f)
-          }
-          manifest.markDone(claim.n)
-          return held
-        }
-        attempts += 1
+        (live.collect { case (p, (files, _)) if files.nonEmpty => p -> files },
+          live.flatMap(_._2._2).toMap)
       }
-      throw new IllegalStateException(
-        s"buckets ${buckets.mkString(",")} rewrite lost $attempts claim races")
+      if (refuseHeld && held.nonEmpty) throw heldError(held)
+      def stage(token: Option[String]): Unit = {
+        inputs.foreach { case (part, files) =>
+          phase(s"$op: stage ${part.name} rewrite")(token.fold(
+            rewriteInPlace(part, buckets, layout, maxRecordsPerFile))(
+            stageRewrite(part, files, _, buckets.size, layout, maxRecordsPerFile)))
+        }
+        appended.foreach(a => phase(s"$op: fence+copy append")(writeBucketed(a.rows, token)))
+      }
+      val resv = for (a <- appended; _ <- s.chain) yield s.reserve(a.heads)
+      if (inputs.isEmpty && appended.isEmpty) Done(Some(held))
+      else if (appended.zip(resv).exists { case (a, r) => a.stale(r) }) Done(None)
+      else if (s.commit(resv.getOrElse(Reservation(Map.empty))
+          .claim(_, CommitClaim.KindRewrite, inputs.flatMap(_._2)))(stage)) Done(Some(held))
+      else Lost
+    }
+  }
+
+  /** The Lock half of a rewrite: `f` over the part's `buckets`,
+    * checkpointed (the write replaces its own source). The buckets `f`
+    * emptied are deleted, because a dynamic overwrite never touches a
+    * partition absent from its output; the rest are dynamic-overwritten.
+    */
+  private def rewriteInPlace(part: TableRewrite, buckets: Seq[Int],
+      layout: CompactionLayout, maxRecordsPerFile: Long): Unit = {
+    val TableRewrite(table, schema, f) = part
+    val source = spark.read.schema(addBucket(schema)).parquet(table)
+      .filter(col("bucket").isin(buckets: _*)).drop("bucket")
+    val populated = Observation()
+    Checkpoints.withCheckpointed(f(source).withColumn("bucket", bucketCol())
+        .observe(populated, collect_set(col("bucket")).as("buckets"))) { out =>
+      val written = populated.get("buckets").asInstanceOf[scala.collection.Seq[Int]].toSet
+      buckets.filterNot(written).foreach(b => logFs.delete(new Path(s"$table/bucket=$b"), true))
+      if (written.nonEmpty)
+        partitionedWriter(layOut(out, buckets.size, layout), maxRecordsPerFile)
+          .option("partitionOverwriteMode", "dynamic")
+          .mode(SaveMode.Overwrite).parquet(table)
     }
   }
 
@@ -1861,9 +1846,9 @@ class EventLog(
     * `token` and moved into place — hidden from committed readers until the
     * claim is done. No checkpoint: the inputs stay on disk until GC.
     */
-  private def stageRewrite(table: String, schema: StructType, inputs: Seq[String],
-      token: String, nBuckets: Int, layout: CompactionLayout = CompactionLayout.IdSort,
-      maxRecordsPerFile: Long = 0L)(f: DataFrame => DataFrame): Unit = {
+  private def stageRewrite(part: TableRewrite, inputs: Seq[String], token: String,
+      nBuckets: Int, layout: CompactionLayout, maxRecordsPerFile: Long): Unit = {
+    val TableRewrite(table, schema, f) = part
     val tmp = s"$table/.commit-tmp/$token"
     val rows = f(spark.read.schema(schema).parquet(inputs: _*)).withColumn("bucket", bucketCol())
     partitionedWriter(layOut(rows, nBuckets, layout), maxRecordsPerFile)
@@ -1954,6 +1939,9 @@ object EventLog {
 
   private val locks = new ConcurrentHashMap[String, Object]()
 
+  /** The qualified log paths whose commit lock this thread holds. */
+  private val held = ThreadLocal.withInitial[java.util.Set[String]](() => new java.util.HashSet[String]())
+
   /** One partition's `(aggregate_id, version)` rows reduced to the max
     * version per stream (the map side of `maxVersions`).
     */
@@ -1974,6 +1962,8 @@ object EventLog {
     *    on HDFS). Stale locks (holder died) are broken after
     *    [[StaleLockMs]]. On object stores without atomic create, use
     *    manifest mode — the claim chain IS the commit section there.
+    * Re-entrant: a thread that already holds the lock runs `f` at once, so
+    * a maintenance op holding it can commit through the commit section.
     */
   private[log] def withLogLock[A](path: String,
       conf: org.apache.hadoop.conf.Configuration)(f: => A): A = {
@@ -1982,6 +1972,8 @@ object EventLog {
     // qualify so two EventLog instances addressing the same directory
     // through different spellings share one commit section
     val qualified = fs.makeQualified(root)
+    val holds = held.get()
+    if (holds.contains(qualified.toString)) return f
     val lock = locks.computeIfAbsent(qualified.toString, _ => new Object)
     lock.synchronized {
       val lockFile = new org.apache.hadoop.fs.Path(qualified, ".graft.commit.lock")
@@ -2083,7 +2075,11 @@ object EventLog {
           } else Thread.sleep(20)
         }
       }
-      try f finally { fs.delete(lockFile, false): Unit }
+      holds.add(qualified.toString)
+      try f finally {
+        holds.remove(qualified.toString)
+        fs.delete(lockFile, false): Unit
+      }
     }
   }
 }

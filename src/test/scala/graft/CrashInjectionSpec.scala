@@ -331,6 +331,41 @@ class CrashInjectionSpec extends AnyFunSuite {
     }
   }
 
+  test("a Manifest compaction or forget dies at markDone: the pre-rewrite rows stay, prune sweeps them") {
+    Seq("compact", "forget").foreach { op =>
+      val dir = Files.createTempDirectory("graftcrashrw").toFile.getAbsolutePath
+      val log = newLog(dir, 75L)
+      // two files in every touched bucket, and a body forget scrubs
+      (1 to 6).foreach(i => log.append(Seq(rec(s"rw-$i", 0, s"""{"secret":$i}"""))))
+      (1 to 6).foreach(i => log.append(Seq(rec(s"rw-$i", 1, "{}"))))
+      val before = log.committedEvents.orderBy("id").collect().toSeq
+      def rewrite(l: EventLog): Unit =
+        if (op == "compact") l.compact()
+        else l.forget("rw-1", Set("Created"), _ => "{}", _ => "{}")
+
+      val point = s"$op: markDone"
+      val seen = crashAt(point)(rewrite(log))
+      assert(seen.contains(point), s"phase '$point' never fired — label drift in EventLog?")
+      assert(seen.contains(s"$op: stage events rewrite"))
+      val fresh = newLog(dir, 76L)
+      assert(fresh.committedEvents.orderBy("id").collect().toSeq === before,
+        s"'$point': the undone rewrite's rows must stay hidden")
+
+      fresh.manifest.prune(Map.empty, staleMs = 0L): Unit
+      assert(allFiles(s"$dir/events/.commit-tmp").isEmpty, s"'$point' left staging")
+      assert(spark.read.parquet(s"$dir/events").count() === before.size.toLong,
+        s"prune left token files of the rewrite that died at '$point'")
+      assert(fresh.committedEvents.orderBy("id").collect().toSeq === before)
+
+      // the retried rewrite commits
+      rewrite(fresh)
+      assert(fresh.committedEvents.count() === before.size.toLong)
+      if (op == "forget")
+        assert(fresh.committedEvents.filter(col("aggregate_id") === "rw-1" &&
+          col("body").contains("secret")).count() === 0L)
+    }
+  }
+
   test("a snapshot save dies at every held-writer step: the previous snapshot stays latest") {
     Seq(CommitMode.Lock, CommitMode.Manifest).foreach { mode =>
       Seq("snapshot: held write", "snapshot: held move").foreach { point =>

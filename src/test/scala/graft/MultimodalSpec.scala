@@ -1091,4 +1091,17 @@ class MultimodalSpec extends AnyFunSuite {
         || r.startsWith("quarantine:"), s"route must be a known family: $r")
     }
   }
+
+  test("persistRouted replaces the whole table in a session that holds an EventLog") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graftrouted").toFile.getAbsolutePath
+    // an event log in the session must leave its partitioned overwrites alone
+    new graft.log.EventLog(spark, s"$dir/log", numBuckets = 2)
+    val path = s"$dir/routed"
+    Multimodal.persistRouted(Seq(("a", "image"), ("b", "audio")).toDF("id", "route"), path)
+    Multimodal.persistRouted(Seq(("c", "video")).toDF("id", "route"), path)
+    assert(spark.read.parquet(path).select("id").as[String].collect().toSeq == Seq("c"),
+      "the second call's routes only")
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.log.{AppendRecord, CommitMode, ConcurrentModificationException, EventLog}
+import graft.log.{AppendRecord, CommitMode, ConcurrentModificationException, EventDetail, EventLog}
 import graft.store.EventStore
 import java.io.File
 import java.nio.file.Files
@@ -189,16 +189,15 @@ class PointPathSpec extends AnyFunSuite {
     val store = new EventStore(log, AccountType, snapshotThreshold = 1)
     val solo = "solo-0"
     store.create(solo, Seq(AccountType.created(10, "o")))
-    val soloDir = new File(s"${log.path}/events/bucket=${log.bucketOf(solo)}")
-    assert(soloDir.isDirectory)
+    val soloDir = new File(s"${log.path}/snapshots/bucket=${log.bucketOf(solo)}")
+    assert(soloDir.isDirectory && log.latestSnapshot(solo).nonEmpty)
 
-    // retention drops every event the snapshot covers; the rewrite deletes
-    // the bucket directory it emptied
-    assert(log.pruneSnapshotted(System.currentTimeMillis() + 86400000L) == 1L)
+    // a migration drops the stream's snapshots; the rewrite deletes the
+    // snapshot bucket directory it emptied
+    log.migrate(1, Set("AccountCreated"), evs => Some(evs.map(e => EventDetail(e.kind, e.body))))
     assert(!soloDir.exists(), "the emptied bucket directory is deleted")
-    assert(log.streamEvents(solo).count() == 0L)
-    assert(log.collectStream(solo).isEmpty)
+    assert(log.latestSnapshot(solo).isEmpty)
     val got = store.retrieve(solo)
-    assert(got.version == 1 && got.state.balance == 10 && got.eventsSinceSnapshot == 0)
+    assert(got.version == 3 && got.state.balance == 10 && got.eventsSinceSnapshot == 1)
   }
 }

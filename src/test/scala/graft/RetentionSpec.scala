@@ -65,6 +65,27 @@ class RetentionSpec extends AnyFunSuite {
     assert(log.pruneSnapshotted(1750000000000L) == 0L)
   }
 
+  test("a stream its snapshot covers entirely keeps its newest event: update lands at v+1") {
+    val dir = Files.createTempDirectory("graftretainhead").toFile.getAbsolutePath
+    val log = new EventLog(spark, dir, numBuckets = 4, ulidSeed = Some(63L))
+    val store = new EventStore(log, AccountType, snapshotThreshold = 1)
+    val id = "01HXRETAINHEAD0000000001"
+    store.create(id, Seq(AccountType.created(10, "o"), AccountType.deposited(5)),
+      nowMs = 1700000000000L)
+    store.update(id)(_ => Seq(AccountType.deposited(1)), nowMs = 1700000000001L)
+    val horizon = System.currentTimeMillis() + 86400000L
+
+    // the snapshot at v3 covers every event; v1 and v2 go, the head stays
+    assert(log.pruneSnapshotted(horizon) == 2L)
+    assert(log.streamEvents(id).select("aggregate_version").as[Int].collect().toSeq == Seq(3))
+    assert(store.update(id)(_ => Seq(AccountType.deposited(2))) == 4)
+    val got = store.retrieve(id)
+    assert(got.version == 4 && got.state.balance == 18)
+    assert(log.pruneSnapshotted(horizon) == 1L, "v3 goes once v4 is the head")
+    assert(log.pruneSnapshotted(horizon) == 0L)
+    assert(store.update(id)(_ => Seq(AccountType.deposited(3))) == 5)
+  }
+
   test("property: stitched == raw rehydration on randomized unpruned logs") {
     // random stream shapes: event counts 1..7 across the snapshot threshold,
     // so groups cover every case — no snapshot, snapshot at head (covered
@@ -99,8 +120,8 @@ class RetentionSpec extends AnyFunSuite {
     }
     val before = store.rehydrateAllStitched().collect().toMap
     val dropped = log.pruneSnapshotted(1750000000000L)
-    assert(dropped == 30L, s"dropped $dropped")
-    assert(log.activeEvents.count() == 0L, "all events snapshot-covered")
+    assert(dropped == 20L, s"dropped $dropped")
+    assert(log.activeEvents.count() == 10L, "every stream keeps its snapshot-covered head")
     assert(store.rehydrateAllStitched().collect().toMap == before)
     assert(store.retrieve(f"01HXRETAINM${3}%015d").version == 3)
     // rewrite claims completed; replaced files reclaimable
