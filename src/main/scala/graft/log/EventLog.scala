@@ -2,7 +2,7 @@ package graft.log
 
 import graft.Checkpoints.Ownable
 import graft.Checkpoints
-import graft.core.{EventSchema, EventRow, SnapshotRow, Ulid}
+import graft.core.{CreateIfAbsent, EventSchema, EventRow, SnapshotRow, Ulid}
 import graft.functions.Fnv1a32
 import java.sql.Timestamp
 import java.util.concurrent.ConcurrentHashMap
@@ -61,9 +61,10 @@ object DiscriminatorPolicy {
 
 /** How writers exclude each other (reads are identical in both modes):
   *  - [[CommitMode.Lock]]: the single-writer lock-file section — correct on
-  *    POSIX/HDFS, where atomic create-if-absent is guaranteed;
+  *    POSIX/HDFS, where its stale-lock break is an exclusive take;
   *  - [[CommitMode.Manifest]]: the [[ManifestCommitLog]] claim chain — the
-  *    object-store-safe protocol whose only primitive is conditional put.
+  *    object-store-safe protocol. Both rest on one primitive, atomic
+  *    create-if-absent ([[graft.core.CreateIfAbsent]]).
   *
   * Every write — the appends (`append`, `bulkImport`, `appendBulk`,
   * `appendNoOpFences`), the rewrites and migration — commits through one
@@ -281,18 +282,16 @@ class EventLog(
     // loop that just paid manifest.refresh() — on object stores the listing
     // is the dominant commit-path cost, and claims() would repeat it
     val claims = if (refreshed) manifest.cachedClaims() else manifest.claims()
-    val pending = claims.filterNot(_.done).map(c => s"c${c.n}")
+    val pending = claims.filterNot(_.done).map(c => ManifestCommitLog.token(c.n))
     val replaced = manifest.replacedRelnames().toSeq
     var out = df
     if (pending.nonEmpty)
-      out = out.where(!regexp_extract(input_file_name(), "/(c\\d+)-[^/]*$", 1)
-        .isin(pending: _*))
+      out = out.where(!ManifestCommitLog.tokenCol(input_file_name()).isin(pending: _*))
     if (replaced.nonEmpty)
       // table+bucket-qualified (last three segments): one partitioned write
       // reuses a part-file basename across bucket dirs, and events/snapshots
       // share one chain, so shorter keys are ambiguous
-      out = out.where(!regexp_extract(input_file_name(), "/([^/]+/bucket=[^/]+/[^/]+)$", 1)
-        .isin(replaced: _*))
+      out = out.where(!ManifestCommitLog.relnameCol(input_file_name()).isin(replaced: _*))
     out
   }
 
@@ -838,27 +837,16 @@ class EventLog(
     * copy-on-write rewrite per affected bucket (a join against the migrated
     * stream set — never an `isin` list or a per-stream job), and all
     * fences+copies land in ONE append. Job count is bounded by the bucket
-    * count, not the stream count (MigrationScaleSpec pins this).
+    * count, not the stream count (MigrationScaleSpec pins this). The
+    * per-stream outcomes come back to the driver under
+    * [[EventLog.collectMigrated]]'s cap.
     */
   def migrate(revision: Int, targetKinds: Set[String],
       handler: Seq[EventRow] => Option[Seq[EventDetail]],
       nowMs: => Long = System.currentTimeMillis(),
-      dense: Boolean = false): Seq[MigratedStream] = {
-    import spark.implicits._
-    val migrated = migrateDistributed(revision, targetKinds, handler, nowMs, dense)
-    // compat guard, same contract as EventStore.migrate: this API returns a
-    // driver-side Seq, so the COLLECT (never the committed migration) aborts
-    // past graft.migrate.collectMax — a 10⁷-stream kind must use
-    // migrateDistributed and keep the outcome frame distributed
-    val cap = spark.conf.get("graft.migrate.collectMax", "100000").toInt
-    val out = migrated.limit(cap + 1).collect()
-    if (out.length > cap) throw new IllegalStateException(
-      s"EventLog.migrate touched more than graft.migrate.collectMax=$cap " +
-        "streams — this compat API collects every per-stream outcome to the " +
-        "driver; the migration itself committed, but for backfill-scale runs " +
-        "use migrateDistributed and keep the outcome frame distributed")
-    out.toSeq.sortBy(_.aggregateId)
-  }
+      dense: Boolean = false): Seq[MigratedStream] =
+    EventLog.collectMigrated(
+      migrateDistributed(revision, targetKinds, handler, nowMs, dense), "EventLog.migrate")
 
   /** Distributed M2: as [[migrate]] but returns the per-stream outcome as a
     * Dataset, so a migration touching 10⁸ streams never materializes its
@@ -1208,7 +1196,7 @@ class EventLog(
       // one rewrites (almost) nothing. Counted per file too: the rewrite
       // skips files a pending rival rewrite holds, and their rows stay.
       val doomed = committedView(eventsWithBucket)
-        .withColumn("file", regexp_extract(input_file_name(), "/([^/]+/bucket=[^/]+/[^/]+)$", 1))
+        .withColumn("file", ManifestCommitLog.relnameCol(input_file_name()))
         .filter(col("id") < bound)
         .join(heads, col("aggregate_id") === col("p_id"))
         .filter(col("aggregate_version") <= col("p_v") && col("aggregate_version") < col("p_h"))
@@ -1572,7 +1560,7 @@ class EventLog(
           val c = claim(t + 1)
           won = manifest.tryClaim(c)
           if (won) {
-            stage(Some(s"c${c.n}"))
+            stage(Some(ManifestCommitLog.token(c.n)))
             phase(s"$op: markDone")(manifest.markDone(c.n))
           }
           won
@@ -1812,7 +1800,7 @@ class EventLog(
   private def liveFiles(table: String,
       buckets: Seq[Int]): (Seq[String], Map[String, Long]) = {
     val pending = manifest.cachedClaims().filterNot(_.done)
-    val tokens = pending.map(c => s"c${c.n}-")
+    val pendingNs = pending.map(_.n).toSet
     val stale = manifest.replacedRelnames()
     // disk truth, not the cache: the cache remembers claims prune already
     // condemned, and a condemned rewrite (no trace on disk) holds nothing.
@@ -1827,7 +1815,8 @@ class EventLog(
       val dir = new Path(s"$table/bucket=$b")
       if (!fs.exists(dir)) Nil
       else fs.listStatus(dir).toSeq.map(_.getPath)
-        .filter(p => p.getName.endsWith(".parquet") && !tokens.exists(p.getName.startsWith))
+        .filter(p => p.getName.endsWith(".parquet") &&
+          !ManifestCommitLog.tokenClaim(p.getName).exists(pendingNs))
         .map(_.toString)
         .filterNot(p => stale.contains(ManifestCommitLog.relname(p)))
     }.sorted
@@ -1838,7 +1827,7 @@ class EventLog(
   private def heldError(held: Map[String, Long]): ConcurrentModificationException =
     new ConcurrentModificationException(
       s"${held.size} input file(s) held by pending rewrite claim(s) " +
-        held.values.toSeq.distinct.sorted.map(n => s"c$n").mkString(", ") +
+        held.values.toSeq.distinct.sorted.map(ManifestCommitLog.token).mkString(", ") +
         " — retry once it completes or manifest.prune condemns it")
 
   /** The manifest half of a rewrite, after the claim: `f` over the live
@@ -1939,6 +1928,24 @@ object EventLog {
 
   private val locks = new ConcurrentHashMap[String, Object]()
 
+  /** The compat guard of `EventLog.migrate` and `EventStore.migrate`
+    * (`api` names the caller in the error): both return a driver-side Seq,
+    * so the COLLECT — never the committed migration — aborts past
+    * `graft.migrate.collectMax` (default 100000 streams). A 10⁷-stream kind
+    * must use `migrateDistributed` and keep the outcome frame distributed.
+    */
+  private[graft] def collectMigrated(migrated: Dataset[MigratedStream],
+      api: String): Seq[MigratedStream] = {
+    val cap = migrated.sparkSession.conf.get("graft.migrate.collectMax", "100000").toInt
+    val out = migrated.limit(cap + 1).collect()
+    if (out.length > cap) throw new IllegalStateException(
+      s"$api touched more than graft.migrate.collectMax=$cap " +
+        "streams — this compat API collects every per-stream outcome to the " +
+        "driver; the migration itself committed, but for backfill-scale runs " +
+        "use EventLog.migrateDistributed and keep the outcome frame distributed")
+    out.toSeq.sortBy(_.aggregateId)
+  }
+
   /** The qualified log paths whose commit lock this thread holds. */
   private val held = ThreadLocal.withInitial[java.util.Set[String]](() => new java.util.HashSet[String]())
 
@@ -1953,15 +1960,13 @@ object EventLog {
 
   /** The single-writer commit section. Two layers:
     *  - a JVM-level monitor (writers inside one driver serialize cheaply);
-    *  - a filesystem lock file created with atomic create-if-absent, so
-    *    writers in SEPARATE drivers on shared storage also exclude each
-    *    other. The primitive is scheme-aware: `O_CREAT|O_EXCL` via
-    *    `File.createNewFile` on local paths (Hadoop's local
-    *    ChecksumFileSystem `create(overwrite=false)` is exists-then-create,
-    *    NOT atomic), `FileSystem.create(overwrite=false)` elsewhere (atomic
-    *    on HDFS). Stale locks (holder died) are broken after
-    *    [[StaleLockMs]]. On object stores without atomic create, use
-    *    manifest mode — the claim chain IS the commit section there.
+    *  - a lock file `.graft.commit.lock` made by
+    *    [[graft.core.CreateIfAbsent]], so writers in SEPARATE drivers on
+    *    shared storage also exclude each other. A failed create — a lost
+    *    race or an IO error — retries until [[LockAcquireTimeoutMs]].
+    *    Stale locks (holder died) are broken after [[StaleLockMs]] by a
+    *    rename, an exclusive take only on `file` and HDFS; on object
+    *    stores use manifest mode — the claim chain IS the commit section.
     * Re-entrant: a thread that already holds the lock runs `f` at once, so
     * a maintenance op holding it can commit through the commit section.
     */
@@ -1979,16 +1984,11 @@ object EventLog {
       val lockFile = new org.apache.hadoop.fs.Path(qualified, ".graft.commit.lock")
       fs.mkdirs(qualified)
       val deadline = System.currentTimeMillis() + LockAcquireTimeoutMs
-      def tryCreate(): Boolean =
-        if (fs.getScheme == "file")
-          try new java.io.File(lockFile.toUri.getPath).createNewFile()
-          catch { case _: java.io.IOException => false }
-        else
-          try { fs.create(lockFile, false).close(); true }
-          catch { case _: java.io.IOException => false }
       var acquired = false
       while (!acquired) {
-        acquired = tryCreate()
+        // an IO error is retried like a lost race, until the deadline
+        acquired = try CreateIfAbsent(fs, lockFile, "")
+          catch { case _: java.io.IOException => false }
         if (!acquired) {
           val age =
             try System.currentTimeMillis() - fs.getFileStatus(lockFile).getModificationTime

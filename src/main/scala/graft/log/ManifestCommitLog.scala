@@ -1,8 +1,10 @@
 package graft.log
 
+import graft.core.CreateIfAbsent
 import java.net.{URLDecoder, URLEncoder}
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.functions.regexp_extract
 import scala.collection.concurrent.TrieMap
 
 /** One committed (or reserved) commit: manifest number, per-stream version
@@ -44,9 +46,10 @@ object CommitClaim {
 
 /** The object-store-safe commit protocol (README roadmap #1): a claim chain
   * under `<path>/_graft_commit/` where commit `N` is the file `v{N}.tsv`,
-  * created with create-if-absent. That single primitive — atomic on
-  * HDFS/POSIX `O_CREAT|O_EXCL`, a conditional PUT (`If-None-Match: *`) on
-  * object stores — serializes writers without any wall-clock lock:
+  * created with [[graft.core.CreateIfAbsent]]: link(2) on `file`, a
+  * no-overwrite rename on HDFS, a conditional PUT (`If-None-Match: *`) on
+  * object stores. That single primitive serializes writers without any
+  * wall-clock lock:
   *
   *  1. a writer reads the chain tip `N` and computes each touched stream's
   *     head as `max(parquet head, highest claimed head in the chain)`;
@@ -208,52 +211,11 @@ class ManifestCommitLog(spark: SparkSession, logPath: String) {
     cache.values.flatMap(_.streamsRef).toSeq.distinct
       .map(n => new Path(dir, n).toString)
 
-  /** Atomic create-if-absent WITH full content — the chain's one consensus
-    * primitive, used for claims and for the per-claim fate file. Local
-    * filesystems get a hard link (POSIX link(2) fails EEXIST — note plain
-    * rename(2) OVERWRITES an existing destination, so rename is NOT a valid
-    * primitive here); HDFS gets rename, which is atomic and refuses existing
-    * destinations; object stores swap this for a conditional PUT
-    * (`If-None-Match: *`), which uploads the body atomically. The content is
-    * fully written to a writer-private temp file first, so no reader can
-    * ever observe a half-written file. False = the path already existed
-    * (someone else won). Any OTHER IO failure PROPAGATES: a transient error
-    * (object-store 503, HDFS hiccup) is not a lost race, and callers treat
-    * `false` as a consensus outcome — mapping an error to `false` would let
-    * prune condemn a claim (and delete its staged files) without ever
-    * winning the fate, while the still-alive writer wins `done` concurrently.
-    */
-  private def atomicCreate(p: Path, content: String): Boolean = {
-    val f = fs
-    if (!f.exists(dir)) f.mkdirs(dir)
-    if (f.exists(p)) return false // cheap pre-check before writing the temp
-    val tmp = new Path(dir, s".${p.getName}.tmp.${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-    try {
-      if (f.getScheme == "file") {
-        try {
-          java.nio.file.Files.createLink(
-            java.nio.file.Paths.get(p.toUri.getPath),
-            java.nio.file.Paths.get(tmp.toUri.getPath))
-          true
-        } catch {
-          // link(2)'s EEXIST is THE lost-race signal; everything else is an
-          // IO error and must not masquerade as one
-          case _: java.nio.file.FileAlreadyExistsException => false
-        }
-      } else {
-        // HadoopFS rename: false (HDFS) or FileAlreadyExistsException (some
-        // stores) when the destination exists; other failures throw
-        try f.rename(tmp, p)
-        catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
-      }
-    } finally f.delete(tmp, false): Unit // raw link target cleaned up either way
-  }
-
   /** Step 3: conditional create of claim `n`. False = lost the race. */
   def tryClaim(claim: CommitClaim): Boolean = {
-    if (!atomicCreate(claimPath(claim.n), render(claim))) return false
+    val f = fs
+    if (!f.exists(dir)) f.mkdirs(dir)
+    if (!CreateIfAbsent(f, claimPath(claim.n), render(claim))) return false
     cache.put(claim.n, claim)
     true
   }
@@ -321,7 +283,7 @@ class ManifestCommitLog(spark: SparkSession, logPath: String) {
       // markers are never created by this version, so pre-existing is the
       // only way one can be observed; no check is needed after the win.
       if (f.exists(legacyCondemnedPath(n))) refuseCondemned()
-      if (atomicCreate(fatePath(n), "done")) {
+      if (CreateIfAbsent(f, fatePath(n), "done")) {
         // prune deletes the claim file BEFORE the fate file, so winning the
         // fate race against an already-cleaned claim is possible — re-check
         // and retract. Nothing can have trusted the retracted fate: status()
@@ -335,7 +297,7 @@ class ManifestCommitLog(spark: SparkSession, logPath: String) {
         case None =>
           // the fate vanished between the failed create and the read: a
           // prune is mid-cleanup (the claim check above re-classifies next
-          // lap). atomicCreate PROPAGATES transient IO errors, so None here
+          // lap). CreateIfAbsent PROPAGATES transient IO errors, so None here
           // is never an error in disguise — loop, bounded as a safety valve.
           if (attempts >= 5) throw new java.io.IOException(
             s"claim $n: fate file keeps vanishing after $attempts attempts — " +
@@ -473,7 +435,7 @@ class ManifestCommitLog(spark: SparkSession, logPath: String) {
       val resolution: Int =
         if (c.done) 0
         else if (!f.exists(claimPath(c.n))) 2 // rival finished; nothing of ours left
-        else if (atomicCreate(fatePath(c.n), "condemned")) {
+        else if (CreateIfAbsent(f, fatePath(c.n), "condemned")) {
           // symmetric with markDone's post-win re-check: the claim can
           // vanish between the exists probe and the create (a rival
           // forgetting a committed claim deletes claim first, fate last) —
@@ -586,10 +548,10 @@ class ManifestCommitLog(spark: SparkSession, logPath: String) {
           .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
           .foreach { d =>
             f.listStatus(d.getPath)
-              .filter(_.getPath.getName.startsWith(s"c$n-"))
+              .filter(_.getPath.getName.startsWith(s"${token(n)}-"))
               .foreach(st => f.delete(st.getPath, false): Unit)
           }
-        f.delete(new Path(root, s".commit-tmp/c$n"), true): Unit
+        f.delete(new Path(root, s".commit-tmp/${token(n)}"), true): Unit
       }
     }
 
@@ -621,6 +583,26 @@ object ManifestCommitLog {
     */
   def relname(p: String): String =
     p.split('/').takeRight(3).mkString("/")
+
+  /** [[relname]] of a file-name Column (`input_file_name()`). */
+  private[graft] def relnameCol(file: Column): Column =
+    regexp_extract(file, "/([^/]+/bucket=[^/]+/[^/]+)$", 1)
+
+  /** Claim `n`'s token `c{N}`: it names the claim's staging directory
+    * `.commit-tmp/c{N}` and prefixes its data files, `c{N}-<name>`.
+    */
+  private[graft] def token(n: Long): String = s"c$n"
+
+  /** The claim of a token-prefixed data file; None when tokenless (Lock). */
+  private[graft] def tokenClaim(file: String): Option[Long] =
+    file.substring(file.lastIndexOf('/') + 1) match {
+      case TokenRe(n) => Some(n.toLong)
+      case _ => None
+    }
+
+  /** [[token]] of a file-name Column, "" when tokenless. */
+  private[graft] def tokenCol(file: Column): Column = regexp_extract(file, "/(c\\d+)-[^/]*$", 1)
+  private val TokenRe = "c(\\d+)-.*".r
 
   /** Streams per bulk claim above which reservations move to a parquet
     * sidecar (tunable via `-Dgraft.bulkClaim.inlineMax=`; tests shrink it).

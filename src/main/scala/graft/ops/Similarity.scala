@@ -396,9 +396,10 @@ object Similarity {
   // into lost vectors (e.g. an append landing in `cells` after recluster
   // snapshotted its read but before the swap is simply dropped by the
   // rewrite). Every mutating entry point takes this single exclusive fence;
-  // probes never do. The fence is the chain's own consensus primitive
-  // (atomic create-if-absent: POSIX link(2), HDFS rename, conditional PUT),
-  // held for the duration of the mutation. A crashed holder leaves the
+  // probes never do. The fence is the marker `_mutating`, created with the
+  // claim chain's own primitive, graft.core.CreateIfAbsent (link(2), HDFS
+  // rename, conditional PUT), naming the holder's op, and held for the
+  // duration of the mutation. A crashed holder leaves the
   // marker behind — deliberately: silently expiring a lease under a live
   // slow recluster would be worse; the operator (or a maintenance cron
   // that knows the scheduler is the only launcher) clears it with
@@ -430,97 +431,19 @@ object Similarity {
     if (!fs.exists(root)) fs.mkdirs(root)
     val marker = mutationMarker(path)
     val content = s"$op pid=${ProcessHandle.current().pid()} at=${java.time.Instant.now()}"
-    def holderOp: Option[String] =
+    def holder: Option[String] =
       try {
         val in = fs.open(marker)
-        val body0 = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        Some(body0.split(" pid=").head)
+        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString) finally in.close()
       } catch { case scala.util.control.NonFatal(_) => None }
-    if (reclaimSameOp && fs.exists(marker) && holderOp.contains(op))
+    if (reclaimSameOp && fs.exists(marker) && holder.exists(_.split(" pid=").head == op))
       fs.delete(marker, false): Unit
-    val won = {
-      if (fs.exists(marker)) false
-      else if (fs.getScheme == "file") {
-        // link(2) fails EEXIST atomically; rename(2) would overwrite
-        val tmp = new Path(root, s"._mutating.tmp.${java.util.UUID.randomUUID()}")
-        val out = fs.create(tmp, true)
-        try out.write(content.getBytes("UTF-8")) finally out.close()
-        try {
-          try {
-            java.nio.file.Files.createLink(
-              java.nio.file.Paths.get(marker.toUri.getPath),
-              java.nio.file.Paths.get(tmp.toUri.getPath))
-            true
-          } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-        } finally fs.delete(tmp, false): Unit
-      } else {
-        // create(overwrite = false) IS the no-overwrite consensus primitive
-        // everywhere else: an atomic namespace op on HDFS, and the op that
-        // maps to a conditional (If-None-Match) PUT on object-store
-        // connectors that have one. rename(tmp, marker) is NOT safe there —
-        // S3A implements rename as copy-over, so two racers could both
-        // "win" (ADVICE r12). A create that succeeds but fails mid-write
-        // leaves a partial marker behind — same recovery as a crashed
-        // holder: breakIndexMutation.
-        //
-        // ADVICE r13: on a plain object store WITHOUT conditional create
-        // (e.g. S3A before fs.s3a.create.conditional.enabled, Hadoop
-        // >= 3.4.1), create(false) degrades to last-writer-wins and two
-        // racers can both believe they hold the fence. Probe the
-        // connector's published capability and warn LOUDLY once per
-        // filesystem when mutual exclusion is not actually guaranteed —
-        // not a refusal, because capability names vary across connector
-        // versions and a false negative would brick working deployments.
-        warnIfNonAtomicCreate(fs, root)
-        try {
-          val out = fs.create(marker, false)
-          try out.write(content.getBytes("UTF-8")) finally out.close()
-          true
-        } catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-          case _: java.nio.file.FileAlreadyExistsException => false
-        }
-      }
-    }
-    if (!won) {
-      val holder =
-        try {
-          val in = fs.open(marker)
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        } catch { case scala.util.control.NonFatal(_) => "<unreadable>" }
+    if (!graft.core.CreateIfAbsent(fs, marker, content))
       throw new java.util.ConcurrentModificationException(
-        s"index at $path is being mutated [$holder]; retry after it finishes, " +
-          "or clear a crashed holder's fence with Similarity.breakIndexMutation")
-    }
+        s"index at $path is being mutated [${holder.getOrElse("<unreadable>")}]; " +
+          "retry after it finishes, or clear a crashed holder's fence with " +
+          "Similarity.breakIndexMutation")
     try body finally fs.delete(marker, false)
-  }
-
-  /** Warn-once-per-filesystem when the fence's create-if-absent primitive
-    * is not namespace-atomic on this store: HDFS-family schemes are (the
-    * create is a namenode op), object stores are only with conditional PUT
-    * — the capability S3A publishes once `fs.s3a.create.conditional.enabled`
-    * is on (Hadoop >= 3.4.1). Unknown capability names return false per the
-    * `hasPathCapability` contract, so a capable connector that predates the
-    * published name still warns — noisy-safe, never silently unsafe.
-    */
-  private val warnedFenceFs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def warnIfNonAtomicCreate(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Unit = {
-    val hdfsLike = Set("hdfs", "viewfs", "webhdfs", "ofs", "o3fs")
-    if (hdfsLike.contains(fs.getScheme)) return
-    val capable =
-      try Seq("fs.capability.create.conditional.overwrite",
-          "fs.capability.conditional.create").exists(fs.hasPathCapability(root, _))
-      catch { case scala.util.control.NonFatal(_) => false }
-    if (!capable && warnedFenceFs.add(String.valueOf(fs.getUri)))
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"index mutation fence on ${fs.getUri} (scheme ${fs.getScheme}): " +
-          "this filesystem does not advertise atomic conditional create — " +
-          "two concurrent mutators could BOTH acquire the fence. On S3A " +
-          "enable fs.s3a.create.conditional.enabled (Hadoop >= 3.4.1); " +
-          "otherwise serialize mutations externally")
   }
 
   /** Operator escape hatch: clear a fence left by a CRASHED mutator. Never
@@ -541,12 +464,13 @@ object Similarity {
   // list was taken before the swap read paths that no longer existed.
   // Geometry now versions: recluster stages `centroids@N+1` / `cells@N+1`
   // next to the live version, then publishes with ONE atomic marker create
-  // (`_geom.N+1` — the same create-if-absent primitive as the mutation
-  // fence), and RETAINS version N until the NEXT recluster. A reader that
-  // resolved version N keeps reading N's immutable files to completion —
-  // snapshot isolation with a one-recluster-cycle grace window, no
-  // maintenance-window coordination. Builds keep the legacy unversioned
-  // layout (`cells`/`centroids`, version 0); the first recluster migrates.
+  // (`_geom.N+1`, an empty marker created while the mutation fence is
+  // held, so no rival races it), and RETAINS version N until the NEXT
+  // recluster. A reader that resolved version N keeps reading N's
+  // immutable files to completion — snapshot isolation with a
+  // one-recluster-cycle grace window, no maintenance-window coordination.
+  // Builds keep the legacy unversioned layout (`cells`/`centroids`,
+  // version 0); the first recluster migrates.
 
   /** Current geometry version: max published `_geom.N` marker; None =
     * legacy unversioned layout.

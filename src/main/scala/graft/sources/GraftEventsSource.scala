@@ -110,18 +110,16 @@ class GraftEventsTable(
     val logRoot = paths0.headOption.map(p =>
       p.stripSuffix("/").stripSuffix("/events").stripSuffix("/snapshots"))
     logRoot.flatMap { root =>
-      val claims = new graft.log.ManifestCommitLog(sparkSession0, root).claims()
-      val pending = claims.filterNot(_.done).map(c => s"c${c.n}-")
-      val replaced = claims
-        .filter(c => c.done && c.kind == graft.log.CommitClaim.KindRewrite)
-        .flatMap(_.replaced).map(graft.log.ManifestCommitLog.relname).toSet
+      val chain = new graft.log.ManifestCommitLog(sparkSession0, root)
+      val pending = chain.claims().filterNot(_.done).map(_.n).toSet
+      val replaced = chain.replacedRelnames()
       if (pending.isEmpty && replaced.isEmpty) None
       // rel = table+bucket-qualified "<table>/bucket=N/<basename>"
       // (basenames recur across bucket dirs within one partitioned write,
-      // and events/snapshots share one chain); pending prefixes apply to
-      // the basename half
+      // and events/snapshots share one chain); the claim token is the
+      // basename's prefix
       else Some(rel => replaced.contains(rel) ||
-        pending.exists(rel.substring(rel.lastIndexOf('/') + 1).startsWith))
+        graft.log.ManifestCommitLog.tokenClaim(rel).exists(pending))
     }
   }
 

@@ -206,14 +206,7 @@ class EventStore[T](
         }
       log.saveSnapshots(snaps.toDF())
     }
-    val cap = log.spark.conf.get("graft.migrate.collectMax", "100000").toInt
-    val out = migrated.limit(cap + 1).collect()
-    if (out.length > cap) throw new IllegalStateException(
-      s"EventStore.migrate touched more than graft.migrate.collectMax=$cap " +
-        "streams — this compat API collects every per-stream outcome to the " +
-        "driver; the migration itself committed, but for backfill-scale runs " +
-        "use log.migrateDistributed and keep the outcome frame distributed")
-    out.toSeq.sortBy(_.aggregateId)
+    graft.log.EventLog.collectMigrated(migrated, "EventStore.migrate")
   }
 
   /** M4 consistent-projection rebuild: optionally fence every stream with a

@@ -312,8 +312,6 @@ class Projector(
 }
 
 object Projector {
-  private val TokenRe = ".*/(c(\\d+))-[^/]*$".r
-
   /** Driver-side existence + mtime snapshot for a micro-batch's source
     * files (batch-sized, bounded by the source's maxFilesPerTrigger). Lock
     * mode runs on local/HDFS schemes where mtimes are real; manifest mode
@@ -370,7 +368,7 @@ object Projector {
       waitMs: Long): Set[String] = {
     if (log.commitMode != graft.log.CommitMode.Manifest || files.isEmpty)
       return Set.empty
-    val tokened = files.collect { case f @ TokenRe(_, n) => f -> n.toLong }
+    val tokened = files.flatMap(f => graft.log.ManifestCommitLog.tokenClaim(f).map(f -> _))
     val conf = log.spark.sessionState.newHadoopConf()
     val dropped = scala.collection.mutable.Set.empty[String]
     var unresolved = tokened
